@@ -49,25 +49,13 @@ object GraftSession {
       .map(_ * 1024L * 1024L)
       .getOrElse(64L * 1024 * 1024)
 
-  /** GRAFT_AQE normalized to a valid boolean — "1"/"yes"/"on" count as
-    * true, "0"/"no"/"off" as false, anything unparseable falls back to
-    * the default (r22, r21 ADVICE: a raw forward of "1" threw an
-    * opaque Spark config error instead of enabling AQE). */
-  private def aqeEnabled: String =
-    sys.env.get("GRAFT_AQE").map(_.trim.toLowerCase) match {
-      case Some("true") | Some("1") | Some("yes") | Some("on") => "true"
-      case Some("false") | Some("0") | Some("no") | Some("off") => "false"
-      case _ => "true"
-    }
-
   /** Apply the engine's tuning to any builder (cluster entry point). */
   def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions)
-      // GRAFT_AQE: dev-loop A/B knob (StageAudit experiments); the
-      // production posture is AQE on — runtime coalescing, dynamic
-      // broadcast and skew splitting are the mechanisms this engine
-      // leans on instead of hand-tuned hints.
-      .config("spark.sql.adaptive.enabled", aqeEnabled)
+      // AQE on: runtime coalescing, dynamic broadcast and skew
+      // splitting are the mechanisms this engine leans on instead of
+      // hand-tuned hints.
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisoryPartitionBytes)

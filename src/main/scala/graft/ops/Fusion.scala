@@ -242,7 +242,7 @@ object Fusion {
     * collects FROM the checkpoint blocks (no lineage re-run); only an
     * overflowing pool re-executes its lineage, and that second pass
     * is the distributed prune that never collects the corpus. The
-    * probe blocks are freed either way (`freeLocalCheckpoint`). */
+    * probe blocks are freed either way (`Pinned.free`). */
   def mmrRerankLarge(candidates: DataFrame, id: String, vecCol: String,
       lambda: Double = 0.7, k: Int = 10, scoreCol: String = "score",
       maxPool: Int = 10000, nPlanes: Int = 5, seed: Long = 42L): DataFrame = {
@@ -271,7 +271,7 @@ object Fusion {
         mmrRerank(prunedPage(ranked, id, vecCol, scoreCol, perCell, nPlanes,
           seed), id, vecCol, lambda, k, scoreCol, maxPool)
       }
-    } finally NearDup.freeLocalCheckpoint(probe)
+    } finally Pinned.free(probe)
   }
 
   /** The distributed prune stage of `mmrRerankLarge`: LSH-cell the

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    one node-count long;
   *  - each iteration's rank table is `localCheckpoint`ed to truncate
   *    lineage and the PREVIOUS iteration's blocks are explicitly
-  *    unpersisted (see `NearDup.freeLocalCheckpoint`);
+  *    unpersisted (see `Pinned.free`);
   *  - ranks are rounded to `roundTo` decimals each iteration: floating
   *    sums are order-dependent, so an unrounded loop would drift
   *    across engines/partitionings — rounding at 1e-9 against ~1e-16
@@ -74,8 +74,8 @@ object Graph {
             nodes.schema("node").dataType),
           org.apache.spark.sql.types.StructField("pagerank",
             org.apache.spark.sql.types.DoubleType))))
-      NearDup.freeLocalCheckpoint(e)
-      NearDup.freeLocalCheckpoint(nodes)
+      Pinned.free(e)
+      Pinned.free(nodes)
       return out
     }
     // Loop discipline mirrors connectedComponents (see its scaladoc;
@@ -119,12 +119,12 @@ object Graph {
         .repartition(loopParts, col("src"))
         .sortWithinPartitions(col("src"))
         .localCheckpoint()
-      NearDup.freeLocalCheckpoint(e)
+      Pinned.free(e)
       nodesByKey = nodes
         .repartition(loopParts, col("node"))
         .sortWithinPartitions(col("node"))
         .localCheckpoint()
-      NearDup.freeLocalCheckpoint(nodes)
+      Pinned.free(nodes)
 
       val base = lit((1.0 - damping) / n)
       ranks = nodesByKey
@@ -158,7 +158,7 @@ object Graph {
             round(base + lit(damping) * coalesce(col("__in"), lit(0.0)),
               roundTo).as("rank"))
           .localCheckpoint()
-        NearDup.freeLocalCheckpoint(ranks)
+        Pinned.free(ranks)
         ranks = next
       }
       ok = true
@@ -168,12 +168,12 @@ object Graph {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAutoBcast)
       // success frees the stationary tables only (the final rank pin
       // backs the returned frame — its consumer releases it); failure
-      // must free everything still pinned. freeLocalCheckpoint is
+      // must free everything still pinned. Pinned.free is
       // unpersist-based, so double-freeing is a harmless no-op.
       if (ok) Seq(weighted, nodesByKey).filter(_ != null)
-        .foreach(NearDup.freeLocalCheckpoint)
+        .foreach(Pinned.free)
       else Seq(e, nodes, weighted, nodesByKey, ranks).filter(_ != null)
-        .foreach(NearDup.freeLocalCheckpoint)
+        .foreach(Pinned.free)
     }
     // Final 6dp projection via EXACT INTEGER arithmetic (r18): the
     // ranks sit on the per-iteration 1e-9 grid, so ~1/1000 of them

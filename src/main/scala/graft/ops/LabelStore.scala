@@ -73,10 +73,6 @@ object LabelStore {
       buckets: Int = 64, maxIterations: Int = 20,
       maxBroadcastSubNodes: Long = 10000000L): Unit = {
     require(buckets >= 1, s"LabelStore.merge: buckets=$buckets")
-    def dbg(phase: String): Unit = if (sys.env.contains("GRAFT_LS_DEBUG"))
-      println(s"LS $phase jobs=" +
-        spark.sparkContext.statusTracker.getJobIdsForGroup(null).length)
-    dbg("enter")
     // A pair-less batch is a guaranteed no-op in BOTH branches — no
     // store yet ⇒ nothing to bootstrap (and a partitioned parquet
     // write of zero rows emits only _SUCCESS, bricking later reads on
@@ -84,15 +80,15 @@ object LabelStore {
     // without this guard the quiet tick would still pay a full
     // pass-through rewrite of the corpus-sized label table.
     if (newPairs.isEmpty) return
-    dbg("isEmpty")
     // recover BOTH swap flavors before reading: a crashed whole-store
     // swap promotes its backup, a crashed bucket swap rolls back —
     // either way the read below sees one consistent pre-merge store
     graft.io.Sinks.recoverSwap(spark, path)
     graft.io.Sinks.recoverBucketSwap(spark, path)
     val existing = graft.io.Sinks.readStateOrBackup(spark, path)
-    dbg("read")
-    // the CC result is localCheckpoint-pinned; released after the swap
+    // the CC result is localCheckpoint-pinned; the swap consumes it,
+    // then the finally releases its blocks (one label-table pin per
+    // streaming tick otherwise)
     var pinnedCc: Option[DataFrame] = None
     // AQE is paused for the whole merge: every multi-row relation in
     // here is batch-bounded by construction (batch nodes, touched
@@ -143,7 +139,6 @@ object LabelStore {
         val touchedBuckets = touched
           .select(pmod(xxhash64(col("component")), lit(buckets.toLong)))
           .distinct().collect().map(_.getLong(0))
-        dbg("buckets")
         val star = stored
           .filter(col("comp_bucket").isin(touchedBuckets: _*))
           .join(broadcast(touched), Seq("component"), "left_semi")
@@ -175,7 +170,6 @@ object LabelStore {
             coalesce(col("lb.component"), col(colB)).as(colB))
         val sub = NearDup.connectedComponents(
           star.unionByName(contracted), colA, colB, maxIterations)
-        dbg("cc")
         pinnedCc = Some(sub)
         // 4. rewrite ONLY the affected buckets (r16): the touched
         // components' old buckets plus wherever the re-converged
@@ -225,13 +219,6 @@ object LabelStore {
           .filter(col("comp_bucket").isin(affected: _*))
           .select(col("node"), col("component"))
           .join(antiBuild, Seq("node"), "left_anti")
-        // evidence hook (r22): the merge-internal anti-join shape is
-        // not visible in q94's final store-read plan — dump it on
-        // demand so the broadcast-vs-fallback claim is checkable
-        if (sys.env.contains("GRAFT_LS_EXPLAIN"))
-          println("LS passThrough plan:\n" + passThrough.queryExecution
-            .explainString(org.apache.spark.sql.execution.ExplainMode
-              .fromString("formatted")))
         val content = passThrough
           .unionByName(sub.select(col("node"), col("component")))
           .withColumn("comp_bucket",
@@ -240,11 +227,10 @@ object LabelStore {
         graft.io.Sinks.swapBuckets(spark, path, content, "comp_bucket",
           affected)
     }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    dbg("write")
-    // the swap consumed the pinned CC labels — release their blocks
-    // (one label-table pin per streaming tick otherwise)
-    pinnedCc.foreach(NearDup.freeLocalCheckpoint)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      pinnedCc.foreach(Pinned.free)
+    }
   }
 
   /** Compact the label store: rewrite every `comp_bucket` partition

@@ -134,7 +134,7 @@ object NearDup {
       }: _*)).as("__band"))
   }
 
-  /** Materialize a signature table once (eager localCheckpoint) so the
+  /** The signature table is materialized once (`Pinned.pin`) so the
     * band arms and both self-join sides read blocks instead of
     * re-running the signature subtree. The fused sha kernel is a
     * map-only projection with no exchange for ReuseExchange to dedup,
@@ -142,37 +142,17 @@ object NearDup {
     * StageAudit measured 4 kernel passes at nBands=2 when AQE
     * broadcasts the band build side (optimization guide §2.3: decide
     * over materialized small rows, don't recompute the heavy pass).
-    * Cost: one (id + numHashes longs) row per doc at any scale, a
-    * Pinned-tracked block set the harness releases once the query's
-    * result is consumed. A frame that is already checkpoint-backed
-    * (LogicalRDD — e.g. the streaming sink's pinned batch sigs)
-    * passes through untouched rather than paying a second copy. */
-  private[ops] def pinSigs(sigs: DataFrame): DataFrame = {
-    // pass-through when the frame is already checkpoint-backed, ALSO
-    // under a chain of projections/filters (r22, r21 ADVICE: a
-    // column-pruned view of pinned batch sigs must not pay a second
-    // full copy — the projection over blocks is cheap to re-read).
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
-    def checkpointRooted(p: LogicalPlan): Boolean = p match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case pr: Project => checkpointRooted(pr.child)
-      case f: Filter => checkpointRooted(f.child)
-      case a: SubqueryAlias => checkpointRooted(a.child)
-      case _ => false
-    }
-    if (checkpointRooted(sigs.queryExecution.logical)) sigs
-    else Pinned.track(sigs.localCheckpoint(true))
-  }
-
-  /** NOTE (construction-time execution): this and the other
-    * `pinSigs`-backed entry points (`lshCandidatePairsIncremental`,
+    * Cost: one (id + numHashes longs) row per doc at any scale.
+    *
+    * NOTE (construction-time execution): this and the other pinning
+    * entry points (`lshCandidatePairsIncremental`,
     * `estimatedJaccardPairs`) materialize the signature table with an
     * EAGER localCheckpoint when the plan is merely CONSTRUCTED —
     * building the frame runs Spark jobs and pins executor blocks
     * until the consumer (or harness) calls `Pinned.releaseAll()`. */
   def lshCandidatePairs(sigs: DataFrame, id: String,
       numHashes: Int = 4, rowsPerBand: Int = 2): DataFrame = {
-    val bands = bandedSignatures(pinSigs(sigs), id, numHashes, rowsPerBand,
+    val bands = bandedSignatures(Pinned.pin(sigs), id, numHashes, rowsPerBand,
       "lshCandidatePairs")
     val a = bands.as("a")
     val b = bands.as("b")
@@ -289,7 +269,7 @@ object NearDup {
     // materialize-once (the lshCandidatePairs treatment): both join
     // sides — and on the wide path both join-backs — read blocks
     // instead of re-running the signature kernel
-    val sigsMat = pinSigs(sigs)
+    val sigsMat = Pinned.pin(sigs)
     if (numHashes <= 8) {
       // NARROW signatures (the oracle-checkable 4-hash width): the
       // signature columns RIDE the band explode, so the agreement
@@ -360,7 +340,7 @@ object NearDup {
     // materializations (disjoint inputs) — overlap them instead of
     // paying two serial checkpoint jobs
     val (newPinned, corpusPinned) = Par.concurrently(newSigs.sparkSession)(
-      pinSigs(newSigs))(pinSigs(corpusSigs))
+      Pinned.pin(newSigs))(Pinned.pin(corpusSigs))
     val fresh = bandedSignatures(newPinned, id, numHashes, rowsPerBand,
       "lshCandidatePairsIncremental")
     val all = bandedSignatures(corpusPinned, id, numHashes, rowsPerBand,
@@ -651,20 +631,6 @@ object NearDup {
       pairs: DataFrame): DataFrame =
     df.join(pairs.select(col("doc_b").as(id)).distinct(), Seq(id), "left_anti")
 
-  /** Release the materialized blocks behind a `localCheckpoint`ed
-    * DataFrame. `Dataset.unpersist` only covers cache-manager entries;
-    * a local checkpoint persists the underlying RDD directly, so the
-    * blocks live until the ContextCleaner notices the RDD is garbage —
-    * at 100 TB label tables that lag is real memory/disk pressure
-    * across iterations. The checkpointed plan is a LogicalRDD leaf;
-    * unpersist its RDD explicitly. */
-  private[graft] def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Connected components over a candidate-pair graph by iterative
     * min-label propagation (hash-min) — the grouping step of
     * transitive corpus dedup (CCNet/RefinedWeb-style), with no graph
@@ -808,7 +774,7 @@ object NearDup {
       edgesByDst = edges.repartition(loopParts, col("dst"))
         .sortWithinPartitions(col("dst"))
         .localCheckpoint()
-      freeLocalCheckpoint(edges)
+      Pinned.free(edges)
       // initialization already IS the first hash-min round: label(x) =
       // min(x, min neighbor) from one groupBy over the checkpointed
       // edges — same single shuffle a distinct-nodes init would cost,
@@ -845,7 +811,6 @@ object NearDup {
       var done = false
       while (!done) {
         iter += 1
-        val iterStart = System.nanoTime()
         require(iter <= maxIterations,
           s"connectedComponents: no fixpoint after $maxIterations iterations " +
             "— raise maxIterations (component diameter exceeds 2^n bound)")
@@ -944,19 +909,13 @@ object NearDup {
         val counted = computed.mapPartitions { rows =>
           rows.map { r => if (r.get(1) != r.get(2)) changed.add(1L); r }
         }(org.apache.spark.sql.Encoders.row(computed.schema))
-        if (sys.env.contains("GRAFT_CC_EXPLAIN") && iter == 2)
-          println("CC round plan:\n" + counted.queryExecution.executedPlan)
         val next = counted.localCheckpoint() // eager: one job, fills `changed`
-        freeLocalCheckpoint(checkpointed)
+        Pinned.free(checkpointed)
         checkpointed = next
         labels = next.select(col("node"), col("component"))
         delta = next.filter(col("component") =!= col("__prev"))
           .select(col("node"), col("component"))
         prevChanged = changed.value
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"CC iter=$iter changed=$prevChanged jobs=" +
-            spark.sparkContext.statusTracker.getJobIdsForGroup(null).length +
-            f" wall=${(System.nanoTime() - iterStart) / 1e9}%.3fs")
         done = prevChanged == 0L
       }
       ok = true
@@ -967,11 +926,11 @@ object NearDup {
       // success frees the edge table only (the final label pin backs
       // the returned frame — its consumer releases it, the 4dd2f81
       // discipline); failure must free everything still pinned.
-      // freeLocalCheckpoint is unpersist-based, so re-freeing `edges`
+      // Pinned.free is unpersist-based, so re-freeing `edges`
       // after the in-try free is a harmless no-op.
-      if (ok) freeLocalCheckpoint(edgesByDst)
+      if (ok) Pinned.free(edgesByDst)
       else Seq(edges, edgesByDst, checkpointed).filter(_ != null)
-        .foreach(freeLocalCheckpoint)
+        .foreach(Pinned.free)
     }
     Pinned.track(labels)
   }

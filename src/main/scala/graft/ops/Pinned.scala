@@ -1,26 +1,36 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Registry of the localCheckpoint blocks that back RETURNED
-  * DataFrames.
+/** The one owner of `localCheckpoint` pins: [[pin]] makes them,
+  * [[free]] releases their blocks. There are two kinds.
   *
-  * Ops that pin an intermediate and free it before returning
-  * (`NearDup.freeLocalCheckpoint` at every loop step) need nothing
-  * here. Ops whose RESULT is checkpoint-backed — `Graph.pageRank`'s
-  * final rank table, `NearDup.connectedComponents`' final labels,
-  * `TextAnalysis.ppxBands`' scored LM table — cannot free before
-  * returning: a local checkpoint truncates lineage, so its blocks
-  * must outlive the last consumer read. Their contract is "the
-  * consumer releases it", and this object is how a long-lived
-  * consumer does that without tracking frames by hand.
+  * TRACKED pins are released by the harness. [[pin]] materializes a
+  * reused intermediate once (a signature table, an NB model, a funnel
+  * frontier, an exact top-k) and registers it here; the same goes for
+  * results whose blocks back the RETURNED frame — `Graph.pageRank`'s
+  * rank table and `NearDup.connectedComponents`' labels, which
+  * [[track]] registers directly. An op cannot free these before
+  * returning: a local checkpoint truncates lineage, so its blocks must
+  * outlive the last consumer read. `Bench.runOnce` and the `Verify`
+  * loop call [[releaseAll]] after every query's result is written.
   *
-  * `spark.catalog.clearCache()` does NOT cover these blocks: they are
-  * RDD-level persists, not cache-manager entries — which is exactly
-  * how a bench suite that clears the cache between passes still
-  * accumulated one pinned copy of the q155 LM table per pass for the
-  * JVM lifetime (r17 ADVICE). `Bench.runOnce` and the `Verify` loop
-  * now drain this registry after every query's result is written.
+  * SELF-FREED pins never reach the registry. A site that pins and is
+  * done with the frame before it returns — the CC and PageRank loop
+  * steps, Fusion's MMR probe, Bpe's histograms, the Streams sinks —
+  * calls `localCheckpoint` itself and frees the same frame with
+  * [[free]] in a `finally`, so a failure leaks nothing. The one
+  * consumer that frees a tracked result early is `LabelStore.merge`:
+  * the CC labels it merges are released in its `finally`, once the
+  * bucket swap has consumed them.
+  *
+  * `spark.catalog.clearCache()` does NOT cover these blocks, and
+  * neither does `Dataset.unpersist()`: they are RDD-level persists,
+  * not cache-manager entries — which is exactly how a bench suite that
+  * clears the cache between passes still accumulated one pinned copy
+  * of the q155 LM table per pass for the JVM lifetime (r17 ADVICE).
   *
   * Releasing is unpersist-based: double-release, or releasing a frame
   * some other op already freed (LabelStore frees the CC labels it
@@ -42,6 +52,45 @@ object Pinned {
   private val reg =
     ThreadLocal.withInitial[java.util.ArrayDeque[java.lang.ref.WeakReference[DataFrame]]](
       () => new java.util.ArrayDeque[java.lang.ref.WeakReference[DataFrame]]())
+
+  /** Materialize `df` once (eager `localCheckpoint`) and track it, so
+    * every later consumer reads blocks instead of re-running its
+    * lineage. Building the frame therefore runs a Spark job at plan
+    * CONSTRUCTION time, and the blocks stay pinned until the harness
+    * calls [[releaseAll]].
+    *
+    * A frame that is already checkpoint-backed passes through
+    * unchanged — also under a chain of projections and aliases (r22,
+    * r21 ADVICE: a column-pruned view of pinned batch signatures must
+    * not pay a second full copy). A filter is NOT passed through: a
+    * gate over pinned rows (q178's langid filter) feeds several
+    * consumers, and each would re-run its predicate. "Checkpoint-
+    * backed" means the leaf RDD really is checkpointed: a
+    * `foreachBatch` micro-batch and a `createDataFrame(rdd, schema)`
+    * frame are `LogicalRDD`s too, but re-reading them re-runs their
+    * lineage. */
+  private[graft] def pin(df: DataFrame): DataFrame = {
+    def checkpointRooted(p: LogicalPlan): Boolean = p match {
+      case lr: LogicalRDD => lr.rdd.isCheckpointed
+      case pr: Project => checkpointRooted(pr.child)
+      case a: SubqueryAlias => checkpointRooted(a.child)
+      case _ => false
+    }
+    if (checkpointRooted(df.queryExecution.logical)) df
+    else track(df.localCheckpoint(true))
+  }
+
+  /** Release the blocks behind a `localCheckpoint`ed frame (or any
+    * frame over one). The checkpointed plan is a `LogicalRDD` leaf
+    * whose RDD was persisted directly, so the blocks otherwise live
+    * until the ContextCleaner notices the RDD is garbage — at 100 TB
+    * label tables that lag is real memory/disk pressure across
+    * iterations. */
+  private[graft] def free(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Track a checkpoint-backed result frame; returns it unchanged.
     * The registry holds WEAK references: a thread that never drains
@@ -100,7 +149,7 @@ object Pinned {
     var ref = q.poll()
     while (ref != null) {
       val df = ref.get()
-      if (df != null) NearDup.freeLocalCheckpoint(df)
+      if (df != null) free(df)
       ref = q.poll()
     }
   }

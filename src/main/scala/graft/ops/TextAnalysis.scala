@@ -361,12 +361,9 @@ object TextAnalysis {
     // materialize the scored table ONCE: the percentile pass and the
     // banded output both read it, and without the checkpoint the
     // whole LM scoring lineage (pair explode + count joins) runs
-    // twice (the MMR pool-collected-once discipline). Long-lived
-    // sessions release the blocks after consuming the result via
-    // `releasePpxBands` — Dataset.unpersist does not cover
-    // local-checkpoint blocks (NearDup.freeLocalCheckpoint).
-    val scored =
-      Pinned.track(bigramLogProb(score, corpus, id, text).localCheckpoint(true))
+    // twice (the MMR pool-collected-once discipline). The harness
+    // releases the blocks after consuming the result.
+    val scored = Pinned.pin(bigramLogProb(score, corpus, id, text))
     val cutsRow = scored.agg(expr(
       s"percentile(avg_logprob, array($pLow, $pHigh))")).head()
     if (cutsRow.isNullAt(0)) {
@@ -387,11 +384,6 @@ object TextAnalysis {
           .otherwise("tail"))
     }
   }
-
-  /** Free the materialized LM-score blocks behind a `ppxBands` result
-    * once it has been fully consumed (collected / written). */
-  def releasePpxBands(banded: org.apache.spark.sql.DataFrame): Unit =
-    NearDup.freeLocalCheckpoint(banded)
 
   /** Gopher-style repetition/quality gate (Rae et al. 2021, arXiv:
     * 2112.11446, Table A1 spirit): per document —

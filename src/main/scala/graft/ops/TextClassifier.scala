@@ -73,25 +73,18 @@ object TextClassifier {
       .withColumn("oov_ll",
         log(lit(alpha) / (col("tot_c") + lit(alpha) * col("vocab"))))
 
-  /** Materialize a bounded intermediate once (eager localCheckpoint,
-    * Pinned-tracked, LogicalRDD pass-through). The trainers' count
-    * table feeds classTok, the vocab distinct, vTot AND the grid's
-    * probe side — and the class-level broadcasts are built on
-    * CONCURRENT broadcast-future jobs that cannot reuse each other's
-    * in-flight exchanges, so unpinned the heavy tokenize+count pass
-    * ran up to 4× per model (r22 StageAudit: two racing copies of the
-    * widen exchange and of the count chain inside one training).
-    * Counts are observed (label, term) pairs — never corpus-sized. */
-  private def pinned(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ => Pinned.track(df.localCheckpoint(true))
-    }
-
   def trainNaiveBayes(docs: DataFrame, labelCol: Column, text: Column,
       alpha: Double = 1.0): DataFrame = {
     require(alpha > 0, s"alpha must be > 0 (got $alpha)")
-    val counts = pinned(tokenCounts(docs, labelCol, text))
+    // the count table feeds classTok, the vocab distinct, vTot AND
+    // the grid's probe side — and the class-level broadcasts are built
+    // on CONCURRENT broadcast-future jobs that cannot reuse each
+    // other's in-flight exchanges, so unpinned the heavy
+    // tokenize+count pass ran up to 4× per model (r22 StageAudit: two
+    // racing copies of the widen exchange and of the count chain
+    // inside one training). Counts are observed (label, term) pairs —
+    // never corpus-sized.
+    val counts = Pinned.pin(tokenCounts(docs, labelCol, text))
     val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
     val classDocs = docs.select(labelCol.as("label"))
       .groupBy("label").agg(count(lit(1)).as("n_docs_c"))
@@ -139,7 +132,7 @@ object TextClassifier {
   def trainNaiveBayesSparse(docs: DataFrame, labelCol: Column, text: Column,
       alpha: Double = 1.0): DataFrame = {
     require(alpha > 0, s"alpha must be > 0 (got $alpha)")
-    val counts = pinned(tokenCounts(docs, labelCol, text))
+    val counts = Pinned.pin(tokenCounts(docs, labelCol, text)) // see trainNaiveBayes
     val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
     val classDocs = docs.select(labelCol.as("label"))
       .groupBy("label").agg(count(lit(1)).as("n_docs_c"))
@@ -202,8 +195,8 @@ object TextClassifier {
     require(alpha > 0, s"alpha must be > 0 (got $alpha)")
     // stats feed the term counts, the doc-count rows and n_docs — pin
     // once so the merged-batch aggregation (and each batch's tokenize
-    // underneath it) runs once, not once per consumer (see `pinned`)
-    val stats = pinned(statsIn)
+    // underneath it) runs once, not once per consumer
+    val stats = Pinned.pin(statsIn)
     val counts = stats.filter(col("term") =!= "")
     val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
     val classDocs = stats.filter(col("term") === "")
@@ -230,7 +223,7 @@ object TextClassifier {
     * scales with observed pairs, never vocab×classes. */
   def trainFromStatsSparse(statsIn: DataFrame, alpha: Double = 1.0): DataFrame = {
     require(alpha > 0, s"alpha must be > 0 (got $alpha)")
-    val stats = pinned(statsIn) // see trainFromStats
+    val stats = Pinned.pin(statsIn) // see trainFromStats
     val counts = stats.filter(col("term") =!= "")
     val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
     val classDocs = stats.filter(col("term") === "")
@@ -270,25 +263,19 @@ object TextClassifier {
     * [[scoreNaiveBayesManyClasses]]: same semantics, no TF replicate
     * (spec-pinned equivalent to within one 1e-6 rounding-grid step).
     */
-  /** Materialize a model table once (eager localCheckpoint) so the
-    * scorers' TWO model consumers — the broadcast class table and the
-    * (label, term) join probe — read blocks instead of each re-running
-    * the whole training chain (r22; guide §2.3: decide over
-    * materialized small rows, don't recompute the heavy pass).
-    * StageAudit measured the tokenize+count pass of training AND the
-    * TF pass of scoring each running twice per scored query — ~16 s
-    * of the q165 funnel's 19.6 s task CPU. The model is
-    * |vocab|×|classes| rows dense, observed pairs sparse — never
-    * corpus-sized (the object scaladoc), so the pin is cheap at any
-    * scale. Pinned-tracked: the harness releases the blocks after the
-    * query's result is consumed; a frame that is already
-    * checkpoint-backed (LogicalRDD — e.g. a model reread from a
-    * store) passes through untouched. */
-  private def pinModel(model: DataFrame): DataFrame = pinned(model)
-
   def scoreNaiveBayes(held: DataFrame, idCol: Column, text: Column,
       modelIn: DataFrame): DataFrame = {
-    val model = pinModel(modelIn)
+    // the model is materialized once so its TWO consumers — the
+    // broadcast class table and the (label, term) join probe — read
+    // blocks instead of each re-running the whole training chain
+    // (r22; guide §2.3: decide over materialized small rows, don't
+    // recompute the heavy pass). StageAudit measured the
+    // tokenize+count pass of training AND the TF pass of scoring each
+    // running twice per scored query — ~16 s of the q165 funnel's
+    // 19.6 s task CPU. The model is |vocab|×|classes| rows dense,
+    // observed pairs sparse — never corpus-sized (the object
+    // scaladoc), so the pin is cheap at any scale.
+    val model = Pinned.pin(modelIn)
     // tokenize + map-side TF aggregation is the heavy map pass of
     // scoring — widen it past a single-row-group scan (Par scaladoc)
     val tf = Par.widen(held)
@@ -368,7 +355,7 @@ object TextClassifier {
     * ulp of a grid midpoint; pick one shape per deployment. */
   def scoreNaiveBayesManyClasses(held: DataFrame, idCol: Column,
       text: Column, modelIn: DataFrame): DataFrame = {
-    val model = pinModel(modelIn) // see scoreNaiveBayes — same 2 consumers
+    val model = Pinned.pin(modelIn) // see scoreNaiveBayes — same 2 consumers
     val tf = Par.widen(held)
       .select(idCol.as("id"), explode(tokens(text)).as("term"))
       .filter(col("term") =!= "")
@@ -510,7 +497,7 @@ object TextClassifier {
     // chain duplicated inside one q143 pass). The cell table is pinned
     // (bounded by |classes|²); the derived sums are exact integers, so
     // the report is byte-identical.
-    val cells = pinned(joined
+    val cells = Pinned.pin(joined
       .groupBy(col("true_label"), col("pred_label"))
       .agg(count(lit(1)).as("__n")))
     // r22 (guide §2.4, the funnel fold): the three per-label counts

@@ -229,11 +229,11 @@ object PcaQueries {
       // round-trip chains — overlap them.
       val ((truth, cSkew), (std, cStd)) = graft.ops.Par.concurrently(s)({
         graft.ops.Par.concurrently(s)({
-          graft.ops.Pinned.track(
+          graft.ops.Pinned.pin(
             RecallReport.exactTopK(emb, "vec_id", "embedding",
               emb.where(col("vec_id") < 20)
                 .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-              "qid", "qv", k = 10).localCheckpoint(true))
+              "qid", "qv", k = 10))
         })(Ivf.seedCentroids(skew, "vec_id", "skewed", 8))
       })({
         val std = Pca.standardize(skew, "skewed", "z")

@@ -331,13 +331,11 @@ object PipelineQueries {
       // unpinned, every consumer re-ran the whole C4 regex chain.
       // Pinned-tracked: the harness releases the blocks after the
       // result is consumed.
-      def pin(df: DataFrame): DataFrame =
-        graft.ops.Pinned.track(df.localCheckpoint(true))
-      val s1 = pin(graft.ops.C4Clean.clean(planted, "text")
+      val s1 = graft.ops.Pinned.pin(graft.ops.C4Clean.clean(planted, "text")
         .select(col("doc_id"), col("text")))
       val kp = graft.ops.TextAnalysis.gopherReport(s1, "doc_id", col("text"))
         .where(col("keep")).select(col("doc_id"))
-      val s2 = pin(s1.join(kp, "doc_id"))
+      val s2 = graft.ops.Pinned.pin(s1.join(kp, "doc_id"))
       val dd = s2.groupBy(sha2(col("text"), 256))
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
       val s3 = s2.join(dd, "doc_id")
@@ -513,8 +511,6 @@ object PipelineQueries {
       // per downstream branch — the materialization a production
       // funnel does between stages anyway. Pinned-tracked: the
       // harness releases the blocks after the result is consumed.
-      def pin(df: DataFrame): DataFrame =
-        graft.ops.Pinned.track(df.localCheckpoint(true))
       // r22 (guide §2.6): the NB gate's model trains on the RAW
       // labeled corpus — zero data dependency on the C4/Gopher chain —
       // yet ran strictly after it, serializing two heavy tokenize
@@ -522,23 +518,23 @@ object PipelineQueries {
       // of sequential evaluation (independent inputs), and the model
       // branch's pins are adopted by this thread (Par.concurrently).
       val ((s1, s2), model) = graft.ops.Par.concurrently(s)({
-        val s1 = pin(graft.ops.C4Clean.clean(planted, "text")
+        val s1 = graft.ops.Pinned.pin(graft.ops.C4Clean.clean(planted, "text")
           .select(col("doc_id"), col("text")))
         val kp = graft.ops.TextAnalysis.gopherReport(s1, "doc_id", col("text"))
           .where(col("keep")).select(col("doc_id"))
-        (s1, pin(s1.join(kp, "doc_id")))
+        (s1, graft.ops.Pinned.pin(s1.join(kp, "doc_id")))
       })({
         // q148's gate verbatim: model trained on the RAW labeled
         // corpus, applied to the funnel's CLEANED survivors. The grid
-        // is pinned HERE (not left for the scorer's pinModel, which
+        // is pinned HERE (not left for the scorer's pin, which
         // passes a checkpoint-backed frame through): the model's own
         // materialization — class tables, broadcasts, grid join — also
         // rides this branch instead of the post-join critical path.
-        pin(graft.ops.TextClassifier.trainNaiveBayes(
+        graft.ops.Pinned.pin(graft.ops.TextClassifier.trainNaiveBayes(
           t(s, d, "documents").filter(col("doc_id") % 7 =!= 0),
           col("source"), col("text")))
       })
-      val s3 = pin(graft.ops.TextClassifier.classifierGate(
+      val s3 = graft.ops.Pinned.pin(graft.ops.TextClassifier.classifierGate(
           s2, col("doc_id"), col("text"), model,
           (0 to 9).map(i => s"src$i"), minScore = -3.75)
         .select(col("doc_id"), col("text")))
@@ -547,7 +543,7 @@ object PipelineQueries {
       // r22: pin s4 too — it feeds the minhash/LSH build, the s5 join
       // side and its own stage count (3 consumers), each of which
       // previously re-ran the dedup join from s3.
-      val s4 = pin(s3.join(dd, "doc_id"))
+      val s4 = graft.ops.Pinned.pin(s3.join(dd, "doc_id"))
       val sigs = graft.ops.NearDup.minhashSignaturesFused(
         s4, "doc_id", col("text"))
       val labels = graft.ops.NearDup.connectedComponents(
@@ -679,15 +675,13 @@ object PipelineQueries {
       // s2 join and its stage count (3 consumers, each re-running the
       // stopword-profile tokenize), s2 feeds the dedup build, the s3
       // arm and its count.
-      def pin(df: DataFrame): DataFrame =
-        graft.ops.Pinned.track(df.localCheckpoint(true))
-      val s1 = pin(graft.ops.C4Clean.clean(planted, "text")
+      val s1 = graft.ops.Pinned.pin(graft.ops.C4Clean.clean(planted, "text")
         .select(col("doc_id"), col("text")))
-      val s1b = pin(
+      val s1b = graft.ops.Pinned.pin(
         graft.ops.TextAnalysis.langIdGate(s1, col("text"), Seq("en")))
       val kp = graft.ops.TextAnalysis.gopherReport(s1b, "doc_id", col("text"))
         .where(col("keep")).select(col("doc_id"))
-      val s2 = pin(s1b.join(kp, "doc_id"))
+      val s2 = graft.ops.Pinned.pin(s1b.join(kp, "doc_id"))
       val dd = s2.groupBy(sha2(col("text"), 256))
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
       val s3 = s2.join(dd, "doc_id")
@@ -844,9 +838,8 @@ object PipelineQueries {
       // limit(maxColl + 1): the +1 keeps the cap check able to SEE an
       // overflow (a plain limit(maxColl) would truncate silently and
       // the count below would read exactly maxColl)
-      val withRid = graft.ops.Pinned.track(collIds.limit(maxColl + 1)
-        .withColumn("rid", (row_number().over(w) - 1).cast("long"))
-        .localCheckpoint(true))
+      val withRid = graft.ops.Pinned.pin(collIds.limit(maxColl + 1)
+        .withColumn("rid", (row_number().over(w) - 1).cast("long")))
       val nColl = withRid.count()
       require(nColl <= maxColl, s"q177: collection has $nColl rows — " +
         s"the surrogate-rank page is capped at $maxColl (meeting-" +

@@ -311,9 +311,8 @@ object PqQueries {
       // before, but column pruning reduced that to the same scan —
       // same rows, identical checkpointed (qid, id) set) — overlap.
       val (mod, truth) = graft.ops.Par.concurrently(s)(model(e))({
-        graft.ops.Pinned.track(
-          Pq.l2TopK(e, "vec_id", col("embedding"), queries, "qid", "qv", 10)
-            .localCheckpoint(true))
+        graft.ops.Pinned.pin(
+          Pq.l2TopK(e, "vec_id", col("embedding"), queries, "qid", "qv", 10))
       })
       val rep = Pq.encode(e, col("embedding"), mod, "pq_codes")
         .withColumn("pq_dec", Pq.decode(col("pq_codes"), mod))
@@ -617,9 +616,8 @@ object PqQueries {
           Pq.trainCodebooksAdaptive(e, "vec_id", "embedding",
             M, K, iters = 2))
       })({
-        graft.ops.Pinned.track(
-          Pq.l2TopK(e, "vec_id", col("embedding"), queries, "qid", "qv", 10)
-            .localCheckpoint(true))
+        graft.ops.Pinned.pin(
+          Pq.l2TopK(e, "vec_id", col("embedding"), queries, "qid", "qv", 10))
       })
       val rep = Pq.encode(
           Pq.encode(e, col("embedding"), mod, "__pq"),

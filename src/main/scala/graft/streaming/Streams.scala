@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
+import graft.ops.Pinned
 
 /** §2.9: the reference's cron micro-batch as Structured Streaming.
   * The reference has no event-time semantics to preserve (time is just
@@ -200,6 +201,33 @@ object Streams {
         ()
       }
 
+  /** The replay guard every marker-guarded sink below shares: an
+    * Append-mode `AvailableNow` stream whose `foreachBatch` runs
+    * `body(batch, batchId)` only when `markerDir/_committed_batch_<id>`
+    * is absent, then creates that marker. foreachBatch is
+    * AT-LEAST-ONCE, so a crash between the body's side effects and the
+    * marker replays the body with the same batchId; each body keeps
+    * its writes idempotent (per-batch partition overwrites), and the
+    * marker makes the common fully-processed replay a no-op. A body
+    * must not `return`: a non-local return from a closure throws. */
+  private def markedSink(df: DataFrame, checkpoint: String,
+      markerDir: String)(body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val marker = new org.apache.hadoop.fs.Path(
+          s"$markerDir/_committed_batch_$batchId")
+        val mfs = marker.getFileSystem(
+          batch.sparkSession.sparkContext.hadoopConfiguration)
+        if (!mfs.exists(marker)) {
+          body(batch, batchId)
+          mfs.create(marker, true).close()
+        }
+        ()
+      }
+
   /** Streaming near-dup dedup against the on-disk signature store —
     * the production daily-ingest loop as one `foreachBatch` sink.
     * Each micro-batch of documents is minhash-signed (map-only),
@@ -233,40 +261,34 @@ object Streams {
   def lshDedupSink(docs: DataFrame, id: String, text: String,
       storePath: String, pairsPath: String, checkpoint: String,
       buckets: Int = 64, labelsPath: Option[String] = None): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$pairsPath/_committed_batch_$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        // no `return` here: a non-local return from a closure throws
-        if (!mfs.exists(marker)) {
-          val sigs = graft.ops.NearDup
-            .minhashSignaturesFused(batch, id, col(text))
-          // localCheckpoint: sign once, reuse for probe AND append
-          val pinned = sigs.localCheckpoint(true)
-          // a crashed store rewrite must read as "store present, use
-          // the backup" — not as a first tick, which would silently
-          // drop all dedup history
-          graft.io.Sinks.recoverSwap(spark, storePath)
-          val fs = new org.apache.hadoop.fs.Path(storePath)
-            .getFileSystem(hconf)
-          val pairs =
-            if (fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-              graft.ops.NearDup.probeSignatureStore(spark, storePath, pinned,
-                id, buckets = buckets)
-            else // first tick: no corpus yet, batch joins only itself
-              graft.ops.NearDup.lshCandidatePairs(pinned, id)
-          // pin only when the label merge makes pairs dual-consumer —
-          // the probe join must not run twice, but a labels-off sink
-          // has a single consumer and should not pay eager
-          // materialization + block-manager pinning per tick
-          val pinnedPairs =
-            if (labelsPath.isDefined) pairs.localCheckpoint(true) else pairs
+    markedSink(docs, checkpoint, pairsPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val sigs = graft.ops.NearDup
+        .minhashSignaturesFused(batch, id, col(text))
+      // localCheckpoint: sign once, reuse for probe AND append. Both
+      // pins are freed in a finally: a failed probe, write or merge
+      // must not leak a batch of blocks per retried tick.
+      val pinned = sigs.localCheckpoint(true)
+      try {
+        // a crashed store rewrite must read as "store present, use the
+        // backup" — not as a first tick, which would silently drop all
+        // dedup history
+        graft.io.Sinks.recoverSwap(spark, storePath)
+        val fs = new org.apache.hadoop.fs.Path(storePath)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val pairs =
+          if (fs.exists(new org.apache.hadoop.fs.Path(storePath)))
+            graft.ops.NearDup.probeSignatureStore(spark, storePath, pinned,
+              id, buckets = buckets)
+          else // first tick: no corpus yet, batch joins only itself
+            graft.ops.NearDup.lshCandidatePairs(pinned, id)
+        // pin only when the label merge makes pairs dual-consumer — the
+        // probe join must not run twice, but a labels-off sink has a
+        // single consumer and should not pay eager materialization +
+        // block-manager pinning per tick
+        val pinnedPairs =
+          if (labelsPath.isDefined) pairs.localCheckpoint(true) else pairs
+        try {
           // per-batch PARTITION dir + overwrite = replay-idempotent;
           // readers of pairsPath gain a trailing `batch` provenance
           // column (partition-discovered), pair columns unchanged
@@ -275,18 +297,15 @@ object Streams {
           labelsPath.foreach { lp =>
             graft.ops.LabelStore.merge(spark, lp, pinnedPairs,
               buckets = buckets)
-            // Dataset.unpersist is a no-op on localCheckpoint pins
-            // (RDD blocks, not cache-manager entries) — free directly
-            // or each tick leaks one batch of candidate-pair blocks
-            graft.ops.NearDup.freeLocalCheckpoint(pinnedPairs)
           }
-          graft.ops.NearDup.appendSignatureStore(pinned, id, storePath,
-            buckets = buckets)
-          graft.ops.NearDup.freeLocalCheckpoint(pinned)
-          mfs.create(marker, true).close()
+        } finally {
+          // never free the unpinned `pairs`: its leaves include `pinned`
+          if (labelsPath.isDefined) Pinned.free(pinnedPairs)
         }
-        ()
-      }
+        graft.ops.NearDup.appendSignatureStore(pinned, id, storePath,
+          buckets = buckets)
+      } finally Pinned.free(pinned)
+    }
 
   /** Streaming NB scoring against a FIXED pre-trained model: classify
     * each micro-batch and append predictions to a per-batch partition
@@ -302,23 +321,11 @@ object Streams {
   def classifyScoreSink(docs: DataFrame, id: String, text: String,
       model: DataFrame, predsPath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$predsPath/_committed_batch_$batchId")
-        val mfs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!mfs.exists(marker)) {
-          graft.ops.TextClassifier
-            .classifyNaiveBayes(batch, col(id), col(text), model)
-            .write.mode("overwrite").parquet(s"$predsPath/batch=$batchId")
-          mfs.create(marker, true).close()
-        }
-        ()
-      }
+    markedSink(docs, checkpoint, predsPath) { (batch, batchId) =>
+      graft.ops.TextClassifier
+        .classifyNaiveBayes(batch, col(id), col(text), model)
+        .write.mode("overwrite").parquet(s"$predsPath/batch=$batchId")
+    }
 
   /** Prequential (test-then-train) online NB loop over a LABELED doc
     * stream: each micro-batch is first SCORED against the model built
@@ -343,50 +350,38 @@ object Streams {
   def nbOnlineSink(docs: DataFrame, id: String, text: String,
       labelCol: String, statsPath: String, predsPath: String,
       checkpoint: String, alpha: Double = 1.0): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$statsPath/_committed_batch_$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        if (!mfs.exists(marker)) {
-          val statsDir = new org.apache.hadoop.fs.Path(statsPath)
-          val fs = statsDir.getFileSystem(hconf)
-          // schema inference needs ≥1 real data file — the dir can hold
-          // only `_committed_batch_*` markers (hidden to the reader) or
-          // a partial first partition after a crash mid-write
-          val priorStats =
-            if (fs.exists(statsDir) && fs.listStatus(statsDir).exists { st =>
-                st.getPath.getName.startsWith("batch=") &&
-                  fs.listStatus(st.getPath)
-                    .exists(_.getPath.getName.endsWith(".parquet"))
-              })
-              Some(spark.read.parquet(statsPath)
-                .filter(col("batch") < batchId)
-                .select("label", "term", "n"))
-            else None
-          // score FIRST (test-then-train), against earlier ticks only
-          priorStats.filter(s => !s.isEmpty).foreach { s =>
-            // sparse rebuild: per-tick model cost scales with the
-            // store's observed (label, term) pairs, never
-            // vocab×classes (drop-in by the cross-trainer pin)
-            val model = graft.ops.TextClassifier.trainFromStatsSparse(
-              graft.ops.TextClassifier.mergeNbStats(s), alpha)
-            graft.ops.TextClassifier
-              .classifyNaiveBayes(batch, col(id), col(text), model)
-              .write.mode("overwrite").parquet(s"$predsPath/batch=$batchId")
-          }
-          graft.ops.TextClassifier
-            .nbSufficientStats(batch, col(labelCol), col(text))
-            .write.mode("overwrite").parquet(s"$statsPath/batch=$batchId")
-          mfs.create(marker, true).close()
-        }
-        ()
+    markedSink(docs, checkpoint, statsPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val statsDir = new org.apache.hadoop.fs.Path(statsPath)
+      val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // schema inference needs ≥1 real data file — the dir can hold
+      // only `_committed_batch_*` markers (hidden to the reader) or a
+      // partial first partition after a crash mid-write
+      val priorStats =
+        if (fs.exists(statsDir) && fs.listStatus(statsDir).exists { st =>
+            st.getPath.getName.startsWith("batch=") &&
+              fs.listStatus(st.getPath)
+                .exists(_.getPath.getName.endsWith(".parquet"))
+          })
+          Some(spark.read.parquet(statsPath)
+            .filter(col("batch") < batchId)
+            .select("label", "term", "n"))
+        else None
+      // score FIRST (test-then-train), against earlier ticks only
+      priorStats.filter(s => !s.isEmpty).foreach { s =>
+        // sparse rebuild: per-tick model cost scales with the store's
+        // observed (label, term) pairs, never vocab×classes (drop-in
+        // by the cross-trainer pin)
+        val model = graft.ops.TextClassifier.trainFromStatsSparse(
+          graft.ops.TextClassifier.mergeNbStats(s), alpha)
+        graft.ops.TextClassifier
+          .classifyNaiveBayes(batch, col(id), col(text), model)
+          .write.mode("overwrite").parquet(s"$predsPath/batch=$batchId")
       }
+      graft.ops.TextClassifier
+        .nbSufficientStats(batch, col(labelCol), col(text))
+        .write.mode("overwrite").parquet(s"$statsPath/batch=$batchId")
+    }
 
   /** Streaming PCA: fold each micro-batch of embeddings into a
     * per-tick moments log — one O(dim²) sufficient-statistics row per
@@ -401,27 +396,14 @@ object Streams {
     * (the nbOnlineSink discipline); the marker is a fast-path skip. */
   def pcaMomentsSink(embeddings: DataFrame, vec: String, storePath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storePath/_committed_batch_$batchId")
-        val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!mfs.exists(marker)) {
-          // an all-null/empty tick contributes nothing — mark and move
-          // on rather than letting moments' empty-input require kill
-          // the query
-          if (!batch.where(col(vec).isNotNull).isEmpty) {
-            graft.vector.Pca.momentsDf(batch, vec)
-              .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          }
-          mfs.create(marker, true).close()
-        }
-        ()
+    markedSink(embeddings, checkpoint, storePath) { (batch, batchId) =>
+      // an all-null/empty tick contributes nothing — mark and move on
+      // rather than letting moments' empty-input require kill the query
+      if (!batch.where(col(vec).isNotNull).isEmpty) {
+        graft.vector.Pca.momentsDf(batch, vec)
+          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
       }
+    }
 
   /** Streaming BPE: fold each micro-batch of documents into a
     * per-tick word-histogram log (`storePath/batch=<id>/`, vocab-sized
@@ -433,35 +415,22 @@ object Streams {
     * the marker is a fast-path skip; an empty tick writes nothing. */
   def bpeHistogramSink(docs: DataFrame, textCol: String, storePath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storePath/_committed_batch_$batchId")
-        val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!mfs.exists(marker)) {
-          // mirror Bpe.updateHistogramStore's contract exactly (r18
-          // ADVICE): cheap batch-level null probe first, then the
-          // empty-HISTOGRAM no-op against a checkpointed aggregation —
-          // a non-null but all-whitespace tick must write NOTHING, not
-          // a 0-row batch=N partition
-          if (!batch.where(col(textCol).isNotNull).isEmpty) {
-            val hist = graft.ops.Bpe.wordHistogramStats(batch, textCol)
-              .localCheckpoint(true)
-            try {
-              if (!hist.isEmpty) {
-                hist.write.mode("overwrite")
-                  .parquet(s"$storePath/batch=$batchId")
-              }
-            } finally hist.unpersist()
+    markedSink(docs, checkpoint, storePath) { (batch, batchId) =>
+      // mirror Bpe.updateHistogramStore's contract exactly (r18
+      // ADVICE): cheap batch-level null probe first, then the
+      // empty-HISTOGRAM no-op against a checkpointed aggregation — a
+      // non-null but all-whitespace tick must write NOTHING, not a
+      // 0-row batch=N partition
+      if (!batch.where(col(textCol).isNotNull).isEmpty) {
+        val hist = graft.ops.Bpe.wordHistogramStats(batch, textCol)
+          .localCheckpoint(true)
+        try {
+          if (!hist.isEmpty) {
+            hist.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
           }
-          mfs.create(marker, true).close()
-        }
-        ()
+        } finally Pinned.free(hist)
       }
+    }
 
   /** Streaming IVF-PQ index ingest: each micro-batch of vectors is
     * cell-assigned, PQ-encoded, and written under
@@ -476,28 +445,16 @@ object Streams {
   def pqIndexSink(vectors: DataFrame, id: String, vec: String,
       model: graft.vector.Pq.PqModel, cents: Array[Array[Float]],
       storePath: String, checkpoint: String): DataStreamWriter[Row] =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storePath/_committed_batch_$batchId")
-        val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!mfs.exists(marker)) {
-          val live = batch.where(col(vec).isNotNull)
-          if (!live.isEmpty) {
-            // same row builder as Pq.writeIndexStore: the streamed and
-            // batch stores share one schema by construction
-            graft.vector.Pq.encodedCellRows(live, id, vec, model, cents)
-              .write.mode("overwrite").partitionBy("ivf_cell")
-              .parquet(s"$storePath/batch=$batchId")
-          }
-          mfs.create(marker, true).close()
-        }
-        ()
+    markedSink(vectors, checkpoint, storePath) { (batch, batchId) =>
+      val live = batch.where(col(vec).isNotNull)
+      if (!live.isEmpty) {
+        // same row builder as Pq.writeIndexStore: the streamed and
+        // batch stores share one schema by construction
+        graft.vector.Pq.encodedCellRows(live, id, vec, model, cents)
+          .write.mode("overwrite").partitionBy("ivf_cell")
+          .parquet(s"$storePath/batch=$batchId")
       }
+    }
 
   /** Drain a streaming query synchronously (test/cron-tick helper). */
   def runToCompletion(q: StreamingQuery): Unit = {

@@ -126,7 +126,6 @@ object ScaleSmoke {
       // would instead blow up pairs quadratically and measure dup
       // density, not the CC machinery; an interleaved separator token
       // shares shingles WITHIN a copy and collapses band buckets).
-      // Run with GRAFT_CC_DEBUG=1 to see iterations-to-fixpoint.
       val docTagged = (0 until scale).map { k =>
         docs.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
           regexp_replace(col("text"), "(\\S+)", s"c$k$$1").as("text"))

@@ -21,9 +21,8 @@ import graft.ops.NearDup
   * Generates documents/embeddings at 100× sf0.1 under target/sf10
   * (GenScale's tagging discipline: per-copy word prefixes keep copies
   * shingle-disjoint, per-copy embedding perturbation breaks top-k
-  * ties; ~140 MB, inside the repo). Run with GRAFT_CC_DEBUG=1 to see
-  * CC iterations-to-fixpoint per run:
-  * `GRAFT_CC_DEBUG=1 sbt "runMain graft.tools.Sf10Probe"`.
+  * ties; ~140 MB, inside the repo). Run:
+  * `sbt "runMain graft.tools.Sf10Probe"`.
   */
 object Sf10Probe {
 

@@ -208,6 +208,38 @@ class BpeSpec extends AnyFunSuite {
     assert(fromStore() == oneShot)
   }
 
+  test("histogram store, distributed trainer and bpeHistogramSink free their checkpoint blocks") {
+    // Dataset.unpersist() does not free a localCheckpoint's blocks (they
+    // are RDD-level persists, not cache-manager entries): each call
+    // here must leave getPersistentRDDs at its baseline
+    import graft.streaming.Streams
+    val sc = spark.sparkContext
+    def leaked(base: Set[Int]): Set[Int] = {
+      // unpersist is async (blocking=false): poll briefly
+      val deadline = System.nanoTime() + 10_000_000_000L
+      def extra = sc.getPersistentRDDs.keySet.toSet -- base
+      while (extra.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      extra
+    }
+    val dir = TestSpark.tempDir("bpefree")
+    val docs = Seq((1L, "low lower lowest"), (2L, "new newer low"))
+      .toDF("doc_id", "text")
+    val base = sc.getPersistentRDDs.keySet.toSet
+    // first fold writes the store, the second merges into it
+    Bpe.updateHistogramStore(spark, s"$dir/store", docs, "text")
+    Bpe.updateHistogramStore(spark, s"$dir/store", docs, "text")
+    assert(spark.read.parquet(s"$dir/store").count() > 0)
+    assert(leaked(base).isEmpty, "updateHistogramStore leaked its histogram")
+    assert(Bpe.trainMergesDistributed(Bpe.wordHistogramStats(docs, "text"), 3)
+      .nonEmpty)
+    assert(leaked(base).isEmpty, "trainMergesDistributed leaked its histogram")
+    docs.coalesce(1).write.parquet(s"$dir/in/f=0")
+    Streams.bpeHistogramSink(Streams.fileStream(spark, s"$dir/in/*/", docs.schema),
+      "text", s"$dir/sink", s"$dir/ckpt").start().awaitTermination()
+    assert(spark.read.parquet(s"$dir/sink").count() > 0)
+    assert(leaked(base).isEmpty, "one bpeHistogramSink tick leaked its histogram")
+  }
+
   test("histogram truncation is deterministic under ties") {
     val df = Seq("b b a a", "c c").toDF("text")
     // all of a/b/c have count 2; topM=2 keeps (a, b) by word asc

@@ -289,7 +289,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // release hook never throws on a consumed result
     val banded = TextAnalysis.ppxBands(df, corpus, "doc_id", col("text"))
     banded.count()
-    TextAnalysis.releasePpxBands(banded)
+    graft.ops.Pinned.free(banded)
   }
 
   test("Pinned registry: checkpoint-backed results are tracked and releaseAll unpersists their blocks") {
@@ -361,6 +361,50 @@ class CorpusOpsSpec extends AnyFunSuite {
     while (stillPinned2.nonEmpty && System.nanoTime() < deadline2)
       Thread.sleep(100)
     assert(stillPinned2.isEmpty, s"failed-branch pins leaked: $stillPinned2")
+  }
+
+  test("Pinned.pin: a micro-batch or createDataFrame frame is pinned; a pinned frame's projection passes through") {
+    import graft.ops.Pinned
+    val sc = spark.sparkContext
+    // the persistent RDDs one pin adds, plus whether it returned its
+    // input unchanged; a new pin is freed again right away
+    def pinAdds(df: org.apache.spark.sql.DataFrame): (Set[Int], Boolean) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val p = Pinned.pin(df)
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      if (!(p eq df)) Pinned.free(p)
+      (added, p eq df)
+    }
+    // a foreachBatch micro-batch is a LogicalRDD whose RDD is NOT
+    // checkpointed: re-reading it re-runs the stream's source scan
+    val dir = TestSpark.tempDir("pinbatch")
+    val docs = (1L to 10L).map(i => (i, s"tok$i")).toDF("doc_id", "text")
+    docs.coalesce(1).write.parquet(s"$dir/in/f=0")
+    @volatile var inBatch: Option[(Set[Int], Boolean)] = None
+    spark.readStream.schema(docs.schema).parquet(s"$dir/in/*/")
+      .writeStream
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        inBatch = Some(pinAdds(batch.select(col("doc_id"))))
+        ()
+      }
+      .start().awaitTermination()
+    val (batchAdded, batchPassed) = inBatch.get
+    assert(batchAdded.nonEmpty && !batchPassed,
+      "a projection of a micro-batch must be pinned")
+    // GlobalOrder's output shape: a LogicalRDD over an uncheckpointed RDD
+    val rddFrame = spark.createDataFrame(docs.rdd, docs.schema)
+    val (rddAdded, rddPassed) = pinAdds(rddFrame)
+    assert(rddAdded.nonEmpty && !rddPassed,
+      "a createDataFrame(rdd, schema) frame must be pinned")
+    // already checkpoint-backed: a projection over the blocks passes
+    // through without a second copy
+    val pinned = Pinned.pin(docs)
+    val (viewAdded, viewPassed) = pinAdds(pinned.select(col("doc_id")))
+    assert(viewAdded.isEmpty && viewPassed,
+      "a projection of a pinned frame must pass through")
+    Pinned.free(pinned)
   }
 
   // ---- source gating ----

@@ -207,6 +207,6 @@ class EndToEndSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == oneShot && survivors.nonEmpty &&
       survivors.size < all.count())
-    graft.ops.NearDup.freeLocalCheckpoint(all)
+    graft.ops.Pinned.free(all)
   }
 }

@@ -197,7 +197,7 @@ class PlanSpec extends AnyFunSuite {
     assert(sp.linesIterator.exists(l =>
       l.contains("*(") && l.contains("minhash_sig")), sp.take(1500))
     // the pairs query consumes ONE materialized signature table (r21:
-    // pinSigs localCheckpoints it so the kernel runs once, not once
+    // Pinned.pin localCheckpoints it so the kernel runs once, not once
     // per band arm per join side) — the pairs plan reads the
     // checkpoint blocks (ExistingRDD), never re-runs the kernel, and
     // holds no cache-manager entry. r22: the band arms are ONE
@@ -265,7 +265,7 @@ class PlanSpec extends AnyFunSuite {
         case s: SortExec if s.output.map(_.name).contains("src") => s }
       assert(edgeSorts.isEmpty,
         s"edge side re-sorted — LogicalRDD lost its ordering:\n$phys")
-      graft.ops.NearDup.freeLocalCheckpoint(edges)
+      graft.ops.Pinned.free(edges)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
