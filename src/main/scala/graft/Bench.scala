@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against
@@ -331,6 +332,11 @@ object Bench {
     }
 
     var coldTotal = 0.0
+    // Janino compiles during each query's timed passes (full record
+    // only): after the warmup pass every code body should come from
+    // Spark's codegen cache (GraftSession.compileOnce), so a nonzero
+    // row names a query whose generated code differs pass to pass.
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     // GRAFT_BENCH_ONLY=<regex>: dev-loop subset runs (targeted quiet
     // re-measures of flagged rows without paying the full suite). The
     // driver never sets it — its runs stay full-suite.
@@ -341,7 +347,9 @@ object Bench {
     val results = queryList.zipWithIndex.map { case ((name, fn), i) =>
       if (i == midAt && i > 0) sentinel() // middle
       coldTotal += runOnce(name, fn) // untimed warmup (cold) pass
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       var best = Seq.fill(TimedPasses)(runOnce(name, fn)).min
+      compiles += name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0)
       // per-query contention retry: 3× over the last-quiet reference
       // is almost always the box, not the code — one more pass usually
       // lands in a quieter window. Still 3× after the retry → flag the
@@ -478,10 +486,13 @@ object Bench {
     val retimedJson = retimed
       .map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
       .mkString("{", ",", "}")
+    val compilesJson = compiles
+      .map { case (k, v) => jsonStr(k) + ":" + v }
+      .mkString("{", ",", "}")
     def line(qs: Iterable[(String, Double)], prec: Int): String = {
       val dict = qs.map { case (k, v) => s"\"" + k + "\":" + num(v, prec) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$dict,"sf":"$sfDir","method":"warmup+min-of-$TimedPasses","cold_total":${num(coldTotal, 3)},"calib":$calibJson,"mem_calib":$memCalibJson,"cpu_stat":$cpuStat,"loadavg":$loadJson,"load_gate":$gateJson,"ref_rows":${reference.size},"contended_rows":$contendedJson,"retimed":$retimedJson,"errors":$errJson}"""
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$dict,"sf":"$sfDir","method":"warmup+min-of-$TimedPasses","cold_total":${num(coldTotal, 3)},"calib":$calibJson,"mem_calib":$memCalibJson,"cpu_stat":$cpuStat,"loadavg":$loadJson,"load_gate":$gateJson,"ref_rows":${reference.size},"contended_rows":$contendedJson,"retimed":$retimedJson,"codegen_compiles":$compilesJson,"errors":$errJson}"""
     }
     // Full-precision, full-name line goes to a file; stdout gets a
     // COMPACT summary guaranteed to FIT the driver's ~2000-char stdout

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+import graft.GraftSession
 import graft.queries.Registry
 
 /** Regenerates the plan appendix of PLANS.md:
@@ -13,9 +13,8 @@ object DumpPlans {
     "q47_asof_join")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors,
+      appName = "graft-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     (if (args.nonEmpty) args.toSeq else headline).foreach { name =>
       val df = Registry.byName(name).fn(spark, "/root/testdata/sf0.001")

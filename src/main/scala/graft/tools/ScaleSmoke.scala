@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.ops.{NearDup, Chunking}
 
 /** Scale-cliff smoke: replicates sf0.1 tables in-memory (id-offset
@@ -19,10 +20,9 @@ object ScaleSmoke {
       .reduce(_.unionByName(_))
 
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors,
+      appName = "graft-scale-smoke")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("WARN")
     val d = "/root/testdata/sf0.1"
     def T(name: String)(f: => Long): Unit = {

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.ops.{CorpusReports, LineDedup, Redact}
 
 /** 100× scale datum for the round-11 ops (PII scrub, line dedup,
@@ -21,9 +21,8 @@ object ScrubScaleProbe {
 
   def main(a: Array[String]): Unit = {
     val sf10 = a.headOption.getOrElse("target/sf10")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors,
+      appName = "graft-scrub-scale-probe")
     spark.sparkContext.setLogLevel("WARN")
     def T(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

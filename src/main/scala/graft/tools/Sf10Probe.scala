@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.ops.NearDup
 
 /** sf10 datum for the ITERATIVE families — the two-orders-above-
@@ -30,9 +31,8 @@ object Sf10Probe {
     val copies = a.headOption.map(_.toInt).getOrElse(100)
     val out = "target/sf10"
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors,
+      appName = "graft-sf10-probe")
     spark.sparkContext.setLogLevel("WARN")
     def T(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

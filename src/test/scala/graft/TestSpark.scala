@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
+    val s = GraftSession.compileOnce(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .withExtensions(new GraftExtensions)
