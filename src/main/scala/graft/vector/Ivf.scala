@@ -11,52 +11,26 @@ import org.apache.spark.sql.functions._
   * distribution, so recall holds on clustered corpora with far fewer
   * probes.
   *
-  * Scale shape: training aggregates k×dim values through a distributed
-  * per-(cell,dimension) average — only the centroid table (k×dim
-  * doubles, driver-bounded by construction) ever leaves the executors.
-  * Assignment is a per-row O(k·dim) map against broadcast centroids.
-  * At 100 TB the collection is written partitioned/bucketed BY
-  * `ivf_cell`, so a probe prunes to nProbe partitions' files — the
-  * same pruning story as the LSH bucket column.
+  * Training: a cell table is the m = 1 case of `Pq.PqModel`, so the
+  * flow is Pq's — a seed rule, then `Pq.lloydOnce` × iters.
+  * `seedCentroids` is the id-prefix rule with no rounds (the seeding
+  * the oracle queries replay); `trainCentroids` is k-means‖ seeds plus
+  * grid-snapped Lloyd rounds (spec-covered, not oracle-replayed). Only
+  * the centroid table (k×dim doubles, driver-bounded by construction)
+  * ever leaves the executors. Assignment is a per-row O(k·dim) map
+  * against broadcast centroids. At 100 TB the collection is written
+  * partitioned/bucketed BY `ivf_cell`, so a probe prunes to nProbe
+  * partitions' files — the same pruning story as the LSH bucket
+  * column.
   */
 object Ivf {
 
-  /** Nearest-centroid id by squared L2, first-wins on ties (matches
-    * the SQL `ORDER BY d2, cid` tie-break in q58's oracle). */
-  private def nearestCell(v: Seq[Float], cents: Array[Array[Float]]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < cents.length) {
-      var d = 0.0
-      var i = 0
-      val cent = cents(c)
-      val n = math.min(v.length, cent.length)
-      // double subtraction/square (not float-rounded) — matches the
-      // oracle's CAST-to-DOUBLE arithmetic exactly
-      while (i < n) { val t = v(i).toDouble - cent(i).toDouble; d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** The query's nProbe nearest cells (driver-side: k is small). */
+  /** The query's nProbe nearest cells by squared L2, ties → the
+    * smaller cell id (driver-side: k is small). */
   def nearestCells(query: Array[Float], cents: Array[Array[Float]],
       nProbe: Int): Seq[Int] =
     cents.indices
-      .map { c =>
-        var d = 0.0
-        var i = 0
-        // min-dim guard: the row-side assignment truncates on a
-        // dimension mismatch (embedder change); the query path must
-        // not be the one place that throws instead
-        val n = math.min(query.length, cents(c).length)
-        while (i < n) {
-          val t = query(i).toDouble - cents(c)(i).toDouble; d += t * t; i += 1
-        }
-        (c, d)
-      }
+      .map(c => (c, Pq.sqDist(query, 0, cents(c))))
       .sortBy { case (c, d) => (d, c) }
       .take(nProbe).map(_._1)
 
@@ -93,7 +67,7 @@ object Ivf {
       coarse: Array[Array[Float]]): Array[Int] =
     Array.tabulate(fine.length) { f =>
       if (f < coarse.length) f
-      else nearestCell(scala.collection.immutable.ArraySeq.unsafeWrapArray(fine(f)), coarse)
+      else nearestCells(fine(f), coarse, 1).head
     }
 
   /** Two-level (coarse→fine) cell assignment: route each row to its
@@ -170,138 +144,25 @@ object Ivf {
   }
 
   /** Deterministic id-prefix seed centroids — the reproducible-across-
-    * engines seeding the oracle queries share (`vec_id < k`). The
-    * collect is driver-bounded by an explicit, documented cap: k×dim
-    * floats (default cap 65 536 seeds ≈ 100 MB at dim 384). Beyond
-    * the cap, keep centroids distributed — `assignCellsTwoLevelDist`
-    * takes the fine table as a DataFrame and needs only the √k coarse
-    * prefix collected. */
-  def seedCentroids(df: DataFrame, id: String, vec: String, k: Int,
-      maxCollect: Int = 65536): Array[Array[Float]] = {
-    require(k <= maxCollect,
-      s"seedCentroids: k=$k exceeds the driver-collect cap $maxCollect; " +
-        "use assignCellsTwoLevelDist with the fine table as a DataFrame")
-    // collect the ≤k seed rows unsorted and sort on the driver (r22):
-    // a distributed orderBy over a bounded frame costs a range-sample
-    // job + a sort exchange per call (same rows, same id order)
-    df.filter(col(id) < k).select(col(id).cast("long"), col(vec))
-      .collect().sortBy(_.getLong(0)).map(_.getSeq[Float](1).toArray)
-  }
+    * engines seeding the oracle queries share (`vec_id < k`): the rows
+    * with a non-null vector in that window, ascending id; fewer than k
+    * of them fails loudly. The collect is driver-bounded by an explicit
+    * cap of 65 536 seeds (≈ 100 MB at dim 384). Beyond the cap, keep
+    * centroids distributed — `assignCellsTwoLevelDist` takes the fine
+    * table as a DataFrame and needs only the √k coarse prefix
+    * collected. */
+  def seedCentroids(df: DataFrame, id: String, vec: String,
+      k: Int): Array[Array[Float]] =
+    Pq.trainCodebooks(df, id, vec, 1, k, iters = 0).codebooks.head
 
-  private def minDistUdf(sofar: Array[Array[Float]]) = udf { (v: Seq[Float]) =>
-    if (v == null) -1.0
-    else sofar.map { c =>
-      var d = 0.0; var i = 0
-      val n = math.min(v.length, c.length)
-      while (i < n) { val t = v(i).toDouble - c(i).toDouble; d += t * t; i += 1 }
-      d
-    }.min
-  }
-
-  /** Deterministic k-means with a k-means‖-style init (Bahmani et al.
-    * 2012): the smallest-id vector seeds round 0, then TWO passes of
-    * d²-weighted oversampling — each pass scores every row's squared
-    * distance to the candidate set and keeps rows where a hash-derived
-    * uniform (`xxhash64(id, pass)`, engine-reproducible, no RNG state)
-    * falls below ℓ·d²/Σd² with ℓ = 4k — and a greedy farthest-first
-    * pass over the ≈2ℓ collected candidates finishes on the driver
-    * (O(|C|·k·dim) driver flops; |C| is ℓ-bounded, not N). Init cost
-    * is a CONSTANT number of Spark jobs (seed + 2×(agg, collect)) —
-    * the previous farthest-first init ran k−1 sequential
-    * orderBy-limit(1) actions, O(k) full scans, a driver-latency wall
-    * once k is corpus-scaled. Then `iters` Lloyd rounds: assign (map)
-    * → per-(cell, dimension) average (posexplode + partial agg); only
-    * k×dim values ever return to the driver. A cell that loses all
-    * members keeps its previous centroid (standard empty-cluster
-    * fallback). */
+  /** Deterministic k-means: k-means‖ seeds (a constant number of Spark
+    * jobs whatever k — see `Pq.kmeansParSeeds`), then `iters`
+    * grid-snapped Lloyd rounds; a cell that loses all members keeps its
+    * previous centroid. Dims past the smallest-id row's length are
+    * ignored, like assignment does. */
   def trainCentroids(df: DataFrame, id: String, vec: String, k: Int,
-      iters: Int = 5): Array[Array[Float]] = {
-    require(k >= 1, "k must be positive")
-    // the seed must skip null vectors like the top-up pass does — the
-    // module's contract elsewhere is "null vector keeps a null cell",
-    // and the min-id row being a failed embed must not NPE training
-    val firstRows = df.filter(col(vec).isNotNull).orderBy(col(id)).limit(1)
-      .select(col(id).cast("long"), col(vec)).collect()
-    require(firstRows.nonEmpty,
-      "trainCentroids: empty input DataFrame (or all vectors null)")
-    val seed0 = (firstRows(0).getLong(0), firstRows(0).getSeq[Float](1).toArray)
-    val cand = scala.collection.mutable.LinkedHashMap(seed0)
-    val ell = 4L * k
-    var pass = 1
-    while (pass <= 2) {
-      val minD = minDistUdf(cand.valuesIterator.toArray)
-      val scored = df
-        .select(col(id).cast("long").as("__id"), col(vec).as("__v"))
-        .withColumn("__d", minD(col("__v")))
-        .filter(col("__d") > 0) // null vectors (-1) and exact members (0)
-      val sumRow = scored.agg(sum(col("__d"))).head()
-      val sumD = if (sumRow.isNullAt(0)) 0.0 else sumRow.getDouble(0)
-      if (sumD > 0) {
-        val u = pmod(xxhash64(col("__id"), lit(pass)), lit(1000000L)) / 1000000.0
-        val picked = scored
-          .filter(u < least(lit(1.0), lit(ell.toDouble) * col("__d") / lit(sumD)))
-          .select(col("__id"), col("__v")).collect()
-        picked.sortBy(_.getLong(0)).foreach { r =>
-          cand.getOrElseUpdate(r.getLong(0), r.getSeq[Float](1).toArray)
-        }
-      }
-      pass += 1
-    }
-    if (cand.size < k) {
-      // degenerate corpus (fewer sampled candidates than k): top up
-      // with the smallest ids not yet held — one bounded collect
-      df.select(col(id).cast("long").as("__id"), col(vec).as("__v"))
-        .filter(col("__v").isNotNull)
-        .orderBy(col("__id")).limit(k + cand.size).collect()
-        .foreach(r => cand.getOrElseUpdate(r.getLong(0), r.getSeq[Float](1).toArray))
-    }
-    // greedy farthest-first over the candidate pool, seeded at seed0:
-    // deterministic (ties → smaller id), spreads the k picks across
-    // clusters the same way the old per-point farthest-first did
-    // ascending id (seed0 IS the smallest id, so it stays first);
-    // equal-distance ties then resolve to the smaller id
-    val pool = cand.toArray.sortBy(_._1)
-    val chosen = scala.collection.mutable.ArrayBuffer(seed0._2)
-    val inSet = scala.collection.mutable.Set(seed0._1)
-    val best = scala.collection.mutable.HashMap[Long, Double]() // min d² to chosen
-    while (chosen.size < k && inSet.size < pool.length) {
-      val last = chosen.last
-      var pickId = -1L
-      var pickD = -1.0
-      var pickV: Array[Float] = null
-      pool.foreach { case (pid, pv) =>
-        if (!inSet.contains(pid)) {
-          var d = 0.0; var i = 0
-          val n = math.min(pv.length, last.length)
-          while (i < n) { val t = pv(i).toDouble - last(i).toDouble; d += t * t; i += 1 }
-          val m = math.min(best.getOrElse(pid, Double.MaxValue), d)
-          best(pid) = m
-          if (m > pickD) { pickD = m; pickId = pid; pickV = pv }
-        }
-      }
-      if (pickId < 0) inSet ++= pool.map(_._1) // exhausted
-      else { chosen += pickV; inSet += pickId; best.remove(pickId) }
-    }
-    var cents: Array[Array[Float]] =
-      if (chosen.size >= k) chosen.take(k).toArray
-      else Array.tabulate(k)(i => chosen(i % chosen.size).clone())
-    var it = 0
-    while (it < iters) {
-      val assigned = assignCells(df.select(col(vec)), col(vec), cents)
-      val means = assigned
-        .select(col("ivf_cell"), posexplode(col(vec)).as(Seq("__pos", "__x")))
-        .groupBy(col("ivf_cell"), col("__pos"))
-        .agg(avg(col("__x")).as("__m"))
-        .collect()
-      val next = cents.map(_.clone())
-      means.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2).toFloat
-      }
-      cents = next
-      it += 1
-    }
-    cents
-  }
+      iters: Int = 5): Array[Array[Float]] =
+    Pq.trainCodebooksKmeansPar(df, id, vec, 1, k, iters).codebooks.head
 
   /** IVF top-k: score only the nProbe nearest cells' members. With
     * nProbe = k this degenerates to exact brute force (recall 1.0). */

@@ -22,18 +22,33 @@ import org.apache.spark.sql.functions._
   * m×k lookup table turns every candidate distance into m array reads
   * — no float vector is ever touched at scan time.
   *
-  * Determinism (the oracle contract): codebooks are either id-prefix
-  * seeds (`seedCodebooks`, the q87/q58 `vec_id < k` rule) or seeds
-  * refined by Lloyd rounds whose centroid means are snapped to a
-  * round-6 grid and cast to float32 (`trainCodebooks`) — both engines
-  * compute means within ~1e-13 of each other, the grid snap makes
-  * them bit-identical (the q19 CAST-AS-REAL discipline), and every
-  * argmin breaks ties toward the smaller code id. DuckDB re-derives
-  * codes, LUTs, and ADC rankings exactly (q166–q169).
+  * The k-means engine, for PQ and IVF alike: an IVF cell table is the
+  * m = 1 case of `PqModel`, so every trainer is one seed rule followed
+  * by `lloydOnce` × iters.
   *
-  * Scale shape: training is one posexplode + per-(subspace, code,
-  * dim) partial-agg pass per Lloyd round (map-side combined; only
-  * m·k·dsub = D·k doubles ever reach the driver); encoding is
+  *  - seed rules: the id-prefix window `offset <= id < offset + k`
+  *    (`trainCodebooks`, `Ivf.seedCentroids`, the q87/q58 rule), the
+  *    strided ids `⌊c·(maxId+1)/k⌋` (`trainCodebooksAdaptive`), both
+  *    row filters of the one seed collect `seedModel`; and k-means‖
+  *    (`kmeansParSeeds`, per subspace, for `trainCodebooksKmeansPar`
+  *    and `Ivf.trainCentroids`);
+  *  - `lloydOnce`: encode, posexplode, a mean per (subspace, code,
+  *    dim), snapped to the round-6 grid and cast to float32.
+  *
+  * Determinism (the oracle contract): both engines compute the means
+  * within ~1e-13 of each other and the grid snap makes them
+  * bit-identical (the q19 CAST-AS-REAL discipline); every argmin
+  * breaks ties toward the smaller code id. DuckDB re-derives the
+  * id-prefix and strided models, codes, LUTs and ADC rankings exactly
+  * (q166–q169, q174). The k-means‖ rule samples with Spark's
+  * xxhash64, which DuckDB cannot re-derive: its trainers are
+  * deterministic and partition-invariant (PqSpec, IvfSpec) but not
+  * oracle-replayed.
+  *
+  * Scale shape: a Lloyd round is one posexplode + per-(subspace, code,
+  * dim) partial-agg pass over all m subspaces at once (map-side
+  * combined; only m·k·dsub = D·k doubles ever reach the driver), so a
+  * round costs the same jobs whatever m and the seed rule; encoding is
   * map-only against broadcast codebooks; ADC scoring is map-only
   * against a broadcast m×k LUT. Nothing here shuffles the corpus.
   */
@@ -49,48 +64,143 @@ object Pq {
       codebooks.map(_.map(_.toSeq).toSeq).toSeq
   }
 
-  /** Deterministic id-window seed codebooks: subspace s's codebook is
-    * the s-th dsub-slice of the `seedIdOffset <= id < seedIdOffset+k`
-    * rows (ascending id) — the `Ivf.seedCentroids` rule sliced per
-    * subspace, reproducible by any engine. Rows with null vectors are
-    * skipped. `seedIdOffset` exists for RESIDUAL training: the rows
-    * that seeded the coarse centroids have exactly-zero residuals, and
-    * k duplicate zero codes make every argmin an exact tie — which an
-    * engine whose per-group summation order varies (DuckDB hash agg)
-    * does not resolve deterministically. Seeding past them keeps all
-    * codes distinct, restoring the q87 no-exact-ties regime. */
-  def seedCodebooks(df: DataFrame, id: String, vec: String, m: Int,
-      k: Int, seedIdOffset: Long = 0L): PqModel = {
-    require(m >= 1, "seedCodebooks: m must be >= 1")
-    // collect the ≤k seed rows unsorted and sort on the driver (r22):
-    // a distributed orderBy over a k-row frame costs a range-sample
-    // job + a sort exchange per trainer call — pure driver latency
-    // for a bounded collect (same rows, same ascending-id order)
-    val seeds = df
-      .filter(col(vec).isNotNull && col(id) >= seedIdOffset &&
-        col(id) < seedIdOffset + k)
+  /** Driver-collect cap of one seed set: k×dim floats, ≈ 100 MB at
+    * dim 384. Beyond it, keep centroids distributed —
+    * `Ivf.assignCellsTwoLevelDist` takes the fine table as a DataFrame
+    * and needs only the √k coarse prefix collected. */
+  private val MaxCollect = 65536
+
+  /** Decimal places every centroid mean and ranked distance is
+    * rounded to before it is compared (see the header). */
+  private val Grid = 6
+
+  /** Squared L2 in double precision, index order, between `b` and the
+    * window of `a` starting at `off`, over the dims both have (the
+    * truncation guard: a dimension mismatch from an embedder change
+    * degrades instead of throwing). The driver-side and UDF twin of
+    * the `NearestCell` / `PqEncode` kernels' arithmetic. */
+  private[vector] def sqDist(a: Array[Float], off: Int,
+      b: Array[Float]): Double = {
+    val n = math.min(b.length, math.max(0, a.length - off))
+    var d = 0.0
+    var j = 0
+    while (j < n) {
+      val t = a(off + j).toDouble - b(j).toDouble
+      d += t * t
+      j += 1
+    }
+    d
+  }
+
+  /** The one seed collect: the `rows` with a non-null vector (`window`
+    * names the rule in the failure message), collected unsorted and
+    * sorted by id on the driver — a distributed orderBy over a k-row
+    * frame would cost a range-sample job + a sort exchange per call —
+    * then exactly k seeds, sliced into m subspaces. `rows` is
+    * evaluated after the shape checks, so a bad k fails before any
+    * job runs. */
+  private def seedModel(df: DataFrame, id: String, vec: String, m: Int,
+      k: Int, window: String)(rows: => Column): PqModel = {
+    require(m >= 1 && k >= 1, s"seed: m=$m and k=$k must be >= 1")
+    require(k <= MaxCollect,
+      s"seed: k=$k exceeds the driver-collect cap $MaxCollect; " +
+        "use Ivf.assignCellsTwoLevelDist with the fine table as a DataFrame")
+    val seeds = df.filter(col(vec).isNotNull && rows)
       .select(col(id).cast("long"), col(vec))
       .collect().sortBy(_.getLong(0)).map(_.getSeq[Float](1).toArray)
     require(seeds.length == k,
-      s"seedCodebooks: only ${seeds.length} of $k id-window seeds present")
+      s"seed: only ${seeds.length} of $k rows in the $window window " +
+        "hold a non-null vector")
     val dim = seeds.head.length
-    require(dim % m == 0, s"seedCodebooks: dim $dim not divisible by m=$m")
+    require(dim % m == 0, s"seed: dim $dim not divisible by m=$m")
     val dsub = dim / m
     PqModel(dsub, Array.tabulate(m, k) { (s, c) =>
       java.util.Arrays.copyOfRange(seeds(c), s * dsub, (s + 1) * dsub)
     })
   }
 
+  /** The k-means‖ seed rule (Bahmani et al. 2012) for one subspace:
+    * `seed0` (the smallest-id row) seeds round 0, then TWO passes of
+    * d²-weighted oversampling — each pass scores every row's squared
+    * distance to the candidate set and keeps rows where a hash-derived
+    * uniform (`xxhash64(id, pass)`, no RNG state) falls below
+    * ℓ·d²/Σd² with ℓ = 4k — and a greedy farthest-first pass over the
+    * ≈2ℓ collected candidates finishes on the driver (O(|C|·k·dim)
+    * driver flops; |C| is ℓ-bounded, not N). A CONSTANT number of
+    * Spark jobs (2×(agg, collect), plus one top-up collect on a corpus
+    * with fewer candidates than k) whatever k. Seeds are padded or cut
+    * to `seed0`'s length. */
+  private def kmeansParSeeds(df: DataFrame, id: String, vec: String,
+      k: Int, seed0: (Long, Array[Float])): Array[Array[Float]] = {
+    val cand = scala.collection.mutable.LinkedHashMap(seed0)
+    val ell = 4L * k
+    var pass = 1
+    while (pass <= 2) {
+      val sofar = cand.valuesIterator.toArray
+      val minD = udf { (v: Seq[Float]) =>
+        if (v == null) -1.0
+        else { val a = v.toArray; sofar.map(sqDist(a, 0, _)).min }
+      }
+      val scored = df
+        .select(col(id).cast("long").as("__id"), col(vec).as("__v"))
+        .withColumn("__d", minD(col("__v")))
+        .filter(col("__d") > 0) // null vectors (-1) and exact members (0)
+      val sumRow = scored.agg(sum(col("__d"))).head()
+      val sumD = if (sumRow.isNullAt(0)) 0.0 else sumRow.getDouble(0)
+      if (sumD > 0) {
+        val u = pmod(xxhash64(col("__id"), lit(pass)), lit(1000000L)) / 1000000.0
+        val picked = scored
+          .filter(u < least(lit(1.0), lit(ell.toDouble) * col("__d") / lit(sumD)))
+          .select(col("__id"), col("__v")).collect()
+        picked.sortBy(_.getLong(0)).foreach { r =>
+          cand.getOrElseUpdate(r.getLong(0), r.getSeq[Float](1).toArray)
+        }
+      }
+      pass += 1
+    }
+    if (cand.size < k) {
+      // degenerate corpus (fewer sampled candidates than k): top up
+      // with the smallest ids not yet held — one bounded collect
+      df.select(col(id).cast("long").as("__id"), col(vec).as("__v"))
+        .filter(col("__v").isNotNull)
+        .orderBy(col("__id")).limit(k + cand.size).collect()
+        .foreach(r => cand.getOrElseUpdate(r.getLong(0), r.getSeq[Float](1).toArray))
+    }
+    // greedy farthest-first over the candidate pool in ascending id
+    // (seed0 IS the smallest id, so it stays first): deterministic,
+    // equal-distance ties resolve to the smaller id
+    val pool = cand.toArray.sortBy(_._1)
+    val chosen = scala.collection.mutable.ArrayBuffer(seed0._2)
+    val inSet = scala.collection.mutable.Set(seed0._1)
+    val best = scala.collection.mutable.HashMap[Long, Double]() // min d² to chosen
+    while (chosen.size < k && inSet.size < pool.length) {
+      val last = chosen.last
+      var pickId = -1L
+      var pickD = -1.0
+      var pickV: Array[Float] = null
+      pool.foreach { case (pid, pv) =>
+        if (!inSet.contains(pid)) {
+          val d = math.min(best.getOrElse(pid, Double.MaxValue), sqDist(pv, 0, last))
+          best(pid) = d
+          if (d > pickD) { pickD = d; pickId = pid; pickV = pv }
+        }
+      }
+      if (pickId < 0) inSet ++= pool.map(_._1) // exhausted
+      else { chosen += pickV; inSet += pickId; best.remove(pickId) }
+    }
+    val dsub = seed0._2.length
+    Array.tabulate(k)(i => java.util.Arrays.copyOf(chosen(i % chosen.size), dsub))
+  }
+
   /** One distributed Lloyd round over ALL m subspaces in a single
-    * pass: encode under the current model (map-only), posexplode each
-    * vector once, and partial-aggregate per (subspace, code, local
-    * dim) means — m·k·dsub = dim·k cells total, a bounded collect.
-    * New centroid values are `round(mean, grid)` cast to float32 so
-    * both engines land on identical bits; a code that captured no
-    * rows keeps its previous centroid (the standard empty-cluster
-    * fallback, `Ivf.trainCentroids` discipline). */
-  def lloydOnce(df: DataFrame, vec: String, model: PqModel,
-      grid: Int = 6): PqModel = {
+    * pass — the only Lloyd round in the engine: encode under the
+    * current model (map-only), posexplode each vector once, and
+    * partial-aggregate per (subspace, code, local dim) means —
+    * m·k·dsub = dim·k cells total, a bounded collect. New centroid
+    * values are `round(mean, Grid)` cast to float32 so both engines
+    * land on identical bits; a code that captured no rows keeps its
+    * previous centroid (the standard empty-cluster fallback). */
+  private def lloydOnce(df: DataFrame, vec: String, model: PqModel): PqModel = {
     val dsub = model.dsub
     val enc = encode(df.filter(col(vec).isNotNull), col(vec), model, "__codes")
     val means = enc
@@ -112,102 +222,87 @@ object Pq {
     val next = model.codebooks.map(_.map(_.clone()))
     means.foreach { r =>
       // decimal → nearest DOUBLE → nearest FLOAT, in that order: the
-      // exact arithmetic of DuckDB's CAST(round(mu, grid) AS REAL).
+      // exact arithmetic of DuckDB's CAST(round(mu, 6) AS REAL).
       // BigDecimal.toFloat directly would skip the double hop and can
       // double-round differently at float boundary values.
       next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
         BigDecimal(r.getDouble(3))
-          .setScale(grid, BigDecimal.RoundingMode.HALF_UP).toDouble.toFloat
+          .setScale(Grid, BigDecimal.RoundingMode.HALF_UP).toDouble.toFloat
     }
     model.copy(codebooks = next)
   }
 
-  /** Seed + `iters` Lloyd rounds (grid-snapped — see `lloydOnce`).
-    * This path is the cross-engine-reproducible one the oracles
-    * replay; `trainCodebooksAdaptive` spreads the seeds across the
-    * corpus (still replayable), and `trainCodebooksKmeansPar` is the
-    * full k-means‖ production path (spec-covered, not oracle-
-    * replayable — its d²-weighted sampling hashes with Spark's
-    * xxhash64, which DuckDB cannot re-derive). */
-  def trainCodebooks(df: DataFrame, id: String, vec: String, m: Int,
-      k: Int, iters: Int = 1, grid: Int = 6,
-      seedIdOffset: Long = 0L): PqModel = {
-    var mod = seedCodebooks(df, id, vec, m, k, seedIdOffset)
-    var i = 0
-    while (i < iters) { mod = lloydOnce(df, vec, mod, grid); i += 1 }
-    mod
-  }
+  private def lloyd(df: DataFrame, vec: String, seeds: PqModel,
+      iters: Int): PqModel =
+    (0 until iters).foldLeft(seeds)((mod, _) => lloydOnce(df, vec, mod))
 
-  /** Strided seed codebooks — the corpus-ADAPTIVE, still oracle-
-    * replayable seeding: seed c is the row at id `⌊c·(maxId+1)/k⌋`,
-    * spreading the k seeds across the whole id range instead of the
-    * first-k prefix window (whose rows need not represent the corpus
-    * at all — the r19 layout report showed codebook quality, not
-    * layout, is the measured recall bottleneck). One bounded agg (max
-    * id) + one k-row filtered collect; no sort, no shuffle. Requires
-    * every strided target id to hold a non-null vector (the fixture's
-    * dense-id contract; fails loudly otherwise). */
-  def stridedSeedCodebooks(df: DataFrame, id: String, vec: String,
-      m: Int, k: Int): PqModel = {
-    require(m >= 1 && k >= 1, "stridedSeedCodebooks: m and k must be >= 1")
-    val live = df.filter(col(vec).isNotNull)
-    val maxId = live.agg(max(col(id).cast("long"))).head().getLong(0)
-    val n = maxId + 1
-    val targets = Array.tabulate(k)(c => (c.toLong * n) / k)
-    require(targets.distinct.length == k,
-      s"stridedSeedCodebooks: id range $n too small for $k strided seeds")
-    // driver-side sort of the k strided rows (see seedCodebooks)
-    val seeds = live.filter(col(id).isin(targets: _*))
-      .select(col(id).cast("long"), col(vec))
-      .collect().sortBy(_.getLong(0)).map(_.getSeq[Float](1).toArray)
-    require(seeds.length == k,
-      s"stridedSeedCodebooks: only ${seeds.length} of $k strided target " +
-        "ids hold a non-null vector (dense-id contract)")
-    val dim = seeds.head.length
-    require(dim % m == 0,
-      s"stridedSeedCodebooks: dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    PqModel(dsub, Array.tabulate(m, k) { (s, c) =>
-      java.util.Arrays.copyOfRange(seeds(c), s * dsub, (s + 1) * dsub)
-    })
-  }
+  /** Id-prefix seeds + `iters` Lloyd rounds: subspace s's seed
+    * codebook is the s-th dsub-slice of the `seedIdOffset <= id <
+    * seedIdOffset + k` rows in ascending id (`iters = 0` returns the
+    * seeds). The cross-engine-reproducible path the oracles replay.
+    * `seedIdOffset` exists for RESIDUAL training: the rows that seeded
+    * the coarse centroids have exactly-zero residuals, and k duplicate
+    * zero codes make every argmin an exact tie — which an engine whose
+    * per-group summation order varies (DuckDB hash agg) does not
+    * resolve deterministically. Seeding past them keeps all codes
+    * distinct, restoring the q87 no-exact-ties regime. */
+  def trainCodebooks(df: DataFrame, id: String, vec: String, m: Int,
+      k: Int, iters: Int = 1, seedIdOffset: Long = 0L): PqModel =
+    lloyd(df, vec, seedModel(df, id, vec, m, k,
+        s"id-prefix [$seedIdOffset, ${seedIdOffset + k})")(
+      col(id) >= seedIdOffset && col(id) < seedIdOffset + k), iters)
 
   /** Corpus-adaptive codebooks under the oracle contract: strided
-    * seeds + `iters` grid-snapped Lloyd rounds. Everything DuckDB can
-    * replay (q174), and measurably better codebooks than the prefix
-    * window — the q174 report prices the delta per query. */
+    * seeds — seed c is the row at id `⌊c·(maxId+1)/k⌋`, spreading the
+    * k seeds across the whole id range instead of the first-k prefix
+    * window (whose rows need not represent the corpus at all; the q172
+    * layout report showed codebook quality, not layout, is the
+    * measured recall bottleneck) — + `iters` Lloyd rounds. One bounded
+    * agg (max id) + the k-row seed collect; no sort, no shuffle. Every
+    * strided target id must hold a non-null vector (the fixture's
+    * dense-id contract; fails loudly otherwise). DuckDB replays it
+    * (q174), and the q174 report prices the delta per query. */
   def trainCodebooksAdaptive(df: DataFrame, id: String, vec: String,
-      m: Int, k: Int, iters: Int = 2, grid: Int = 6): PqModel = {
-    var mod = stridedSeedCodebooks(df, id, vec, m, k)
-    var i = 0
-    while (i < iters) { mod = lloydOnce(df, vec, mod, grid); i += 1 }
-    mod
-  }
+      m: Int, k: Int, iters: Int = 2): PqModel =
+    lloyd(df, vec, seedModel(df, id, vec, m, k, "strided") {
+      val n = df.filter(col(vec).isNotNull)
+        .agg(max(col(id).cast("long"))).head().getLong(0) + 1
+      val targets = Array.tabulate(k)(c => (c.toLong * n) / k)
+      require(targets.distinct.length == k,
+        s"trainCodebooksAdaptive: id range $n too small for $k strided seeds")
+      col(id).isin(targets: _*)
+    }, iters)
 
-  /** The PRODUCTION codebook trainer: full k-means‖ per subspace —
-    * each subspace's dsub-dim slice column trains its own k centroids
-    * through `Ivf.trainCentroids` (d²-weighted oversampling init +
-    * Lloyd, constant Spark jobs per subspace, only k·dsub doubles to
-    * the driver per subspace). Deterministic and partition-invariant
-    * (spec-pinned), but NOT DuckDB-replayable: the init samples with
-    * Spark's xxhash64, which the oracle engine cannot re-derive — so
-    * this path is spec-covered (PqSpec) while `trainCodebooksAdaptive`
-    * carries the oracle (q174), the same split as Ivf.trainCentroids
-    * itself (VectorQueries q58 note / IvfSpec). */
+  /** The PRODUCTION codebook trainer: k-means‖ seeds per subspace
+    * (each from the subspace's dsub-dim slice, all rooted at the
+    * smallest-id row), then `iters` Lloyd rounds over all m subspaces
+    * at once. Deterministic and partition-invariant (spec-pinned), but
+    * NOT DuckDB-replayable (see the header) — so this path is
+    * spec-covered (PqSpec) while `trainCodebooksAdaptive` carries the
+    * oracle (q174). Dims past the smallest-id row's length are
+    * ignored, like `encode` does. */
   def trainCodebooksKmeansPar(df: DataFrame, id: String, vec: String,
       m: Int, k: Int, iters: Int = 3): PqModel = {
-    require(m >= 1, "trainCodebooksKmeansPar: m must be >= 1")
-    val live = df.filter(col(vec).isNotNull)
-    val dim = live.select(size(col(vec))).head().getInt(0)
-    require(dim % m == 0,
-      s"trainCodebooksKmeansPar: dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    val codebooks = Array.tabulate(m) { s =>
-      val sliced = live.select(col(id),
+    require(m >= 1 && k >= 1,
+      s"trainCodebooksKmeansPar: m=$m and k=$k must be >= 1")
+    // the seed must skip null vectors — the module's contract
+    // elsewhere is "null vector keeps a null cell", and the min-id row
+    // being a failed embed must not NPE training
+    val first = df.filter(col(vec).isNotNull).orderBy(col(id)).limit(1)
+      .select(col(id).cast("long"), col(vec)).collect()
+    require(first.nonEmpty,
+      "trainCodebooksKmeansPar: empty input DataFrame (or all vectors null)")
+    val (id0, row0) = (first(0).getLong(0), first(0).getSeq[Float](1).toArray)
+    require(row0.length % m == 0,
+      s"trainCodebooksKmeansPar: dim ${row0.length} not divisible by m=$m")
+    val dsub = row0.length / m
+    val seeds = PqModel(dsub, Array.tabulate(m) { s =>
+      val sliced = df.select(col(id),
         slice(col(vec), s * dsub + 1, dsub).as("__slice"))
-      Ivf.trainCentroids(sliced, id, "__slice", k, iters)
-    }
-    PqModel(dsub, codebooks)
+      kmeansParSeeds(sliced, id, "__slice", k,
+        id0 -> java.util.Arrays.copyOfRange(row0, s * dsub, (s + 1) * dsub))
+    })
+    lloyd(df, vec, seeds, iters)
   }
 
   /** Attach the PQ code column (array<int>, length m) — map-only,
@@ -230,29 +325,11 @@ object Pq {
 
   /** Per-query ADC lookup table, flattened [s·k + c] → ‖q_s − cb[s][c]‖²
     * (doubles, index-order accumulation — the kernel arithmetic). */
-  def adcLutFlat(query: Array[Float], model: PqModel): Array[Double] = {
-    val lut = new Array[Double](model.m * model.k)
-    var s = 0
-    while (s < model.m) {
-      val off = s * model.dsub
-      var c = 0
-      while (c < model.k) {
-        val cent = model.codebooks(s)(c)
-        val n = math.min(cent.length, math.max(0, query.length - off))
-        var d = 0.0
-        var j = 0
-        while (j < n) {
-          val t = query(off + j).toDouble - cent(j).toDouble
-          d += t * t
-          j += 1
-        }
-        lut(s * model.k + c) = d
-        c += 1
-      }
-      s += 1
+  def adcLutFlat(query: Array[Float], model: PqModel): Array[Double] =
+    Array.tabulate(model.m * model.k) { i =>
+      val s = i / model.k
+      sqDist(query, s * model.dsub, model.codebooks(s)(i % model.k))
     }
-    lut
-  }
 
   /** ADC squared distance of a code column against a broadcast LUT:
     * m array reads + m adds per row, no float vector touched. */
@@ -340,14 +417,13 @@ object Pq {
     * `trainCodebooks`, run on the residual column. Seeds start PAST
     * the coarse-centroid rows (`id >= |cents|`): the centroid rows'
     * residuals are exactly zero, and duplicate zero codes degenerate
-    * every argmin into an exact tie (see `seedCodebooks`). */
+    * every argmin into an exact tie (see `trainCodebooks`). */
   def trainResidualCodebooks(df: DataFrame, id: String, vec: String,
-      cents: Array[Array[Float]], m: Int, k: Int, iters: Int = 1,
-      grid: Int = 6): PqModel = {
+      cents: Array[Array[Float]], m: Int, k: Int, iters: Int = 1): PqModel = {
     val withRes = Ivf.assignCells(df.filter(col(vec).isNotNull),
         col(vec), cents)
       .withColumn("__res", residualCol(col(vec), cents, col("ivf_cell")))
-    trainCodebooks(withRes, id, "__res", m, k, iters, grid,
+    trainCodebooks(withRes, id, "__res", m, k, iters,
       seedIdOffset = cents.length.toLong)
   }
 
@@ -532,15 +608,15 @@ object Pq {
     * scored frontier instead of re-scanning per point — and per-query
     * ADC LUTs come from joining the broadcast codebook table. Exact
     * float ground truth via `l2TopK`. Determinism: the probe routing
-    * argmin ranks on round-`grid` cell distances (the objectiveGrid
+    * argmin ranks on round-`Grid` cell distances (the objectiveGrid
     * discipline — group-summed doubles differ ~1e-15 across engines),
-    * ADC ranks on round-`grid` distances with id tie-breaks.
+    * ADC ranks on round-`Grid` distances with id tie-breaks.
     * Output one row per nProbe:
     * (n_probe, scanned_rows, n_exact, n_hits, recall). */
   def ivfPqRecallSweep(df: DataFrame, id: String, vec: String,
       queries: DataFrame, qid: String, qvec: String, kTop: Int,
-      model: PqModel, cents: Array[Array[Float]], nProbes: Seq[Int],
-      grid: Int = 6): DataFrame = {
+      model: PqModel, cents: Array[Array[Float]],
+      nProbes: Seq[Int]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1),
       "ivfPqRecallSweep: nProbes must be >= 1")
@@ -571,7 +647,7 @@ object Pq {
     val qcd = qDims.join(broadcast(centDf), Seq("__p"))
       .groupBy(col("__qid"), col("__cid"))
       .agg(round(sum((col("__qx") - col("__cx")) *
-        (col("__qx") - col("__cx"))), grid).as("__qd2"))
+        (col("__qx") - col("__cx"))), Grid).as("__qd2"))
     val wq = Window.partitionBy(col("__qid"))
       .orderBy(col("__qd2"), col("__cid"))
     val prank = qcd.withColumn("__rk", row_number().over(wq))
@@ -598,7 +674,7 @@ object Pq {
         posexplode(col("__codes")).as(Seq("__s", "__c")))
       .join(broadcast(lut), Seq("__qid", "__s", "__c"))
       .groupBy(col("__qid"), col(id), col("__rk"))
-      .agg(round(sum(col("__ld2")), grid).as("adc_d2"))
+      .agg(round(sum(col("__ld2")), Grid).as("adc_d2"))
     val npDf = spark.createDataFrame(nProbes.map(Tuple1(_))).toDF("n_probe")
     val candNp = adc.join(broadcast(npDf), col("__rk") <= col("n_probe"))
     val wr = Window.partitionBy(col("n_probe"), col("__qid"))

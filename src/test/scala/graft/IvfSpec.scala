@@ -90,21 +90,8 @@ class IvfSpec extends AnyFunSuite {
     // orderBy.limit(1) actions — job count must not grow with k
     val (df, _) = clustered
     df.cache(); df.count()
-    def jobsFor(k: Int): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        Ivf.trainCentroids(df, "vec_id", "embedding", k, iters = 2)
-        Thread.sleep(300) // let the async listener bus drain
-      } finally spark.sparkContext.removeSparkListener(l)
-      counter.get()
-    }
+    def jobsFor(k: Int): Int = TestSpark.jobsDuring(
+      Ivf.trainCentroids(df, "vec_id", "embedding", k, iters = 2))
     val j3 = jobsFor(3)
     val j12 = jobsFor(12)
     assert(j12 == j3, s"init jobs grew with k: k=3 -> $j3, k=12 -> $j12")
@@ -186,10 +173,32 @@ class IvfSpec extends AnyFunSuite {
   test("seedCentroids enforces the documented driver-collect cap") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val e = intercept[IllegalArgumentException] {
-      Ivf.seedCentroids(emb, "vec_id", "embedding", k = 100, maxCollect = 50)
+      Ivf.seedCentroids(emb, "vec_id", "embedding", k = 65537)
     }
     assert(e.getMessage.contains("assignCellsTwoLevelDist"))
     assert(Ivf.seedCentroids(emb, "vec_id", "embedding", 8).length == 8)
+  }
+
+  test("seedCentroids skips a null vector in its window and fails loudly below k seeds") {
+    // row 0 is a failed embed: the window then holds 2 usable rows of 3
+    val df = (0 until 10).map { i =>
+      (i.toLong, if (i == 0) null else Array(i.toFloat, 1f))
+    }.toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Ivf.seedCentroids(df, "vec_id", "embedding", k = 3)
+    }
+    assert(e.getMessage.contains("id-prefix [0, 3)"), e.getMessage)
+  }
+
+  test("training over a mixed-dim corpus degrades like encode (no crash on over-length vectors)") {
+    // the embedder-change case: one row grew extra dims. Assignment
+    // truncates; training must ignore the positions past the model's
+    // dim instead of writing past the end of a centroid
+    val rnd = new scala.util.Random(7)
+    val mixed = ((0 until 60).map(i => (i.toLong, Array.fill(4)(rnd.nextFloat()))) :+
+      ((60L, Array.fill(6)(rnd.nextFloat())))).toDF("vec_id", "embedding")
+    val cents = Ivf.trainCentroids(mixed, "vec_id", "embedding", k = 3, iters = 2)
+    assert(cents.length == 3 && cents.forall(_.length == 4))
   }
 
   test("empty-cell fallback: k larger than distinct points keeps previous centroid") {

@@ -141,9 +141,28 @@ class PqSpec extends AnyFunSuite {
         .select(Pq.l2Sq(col("embedding"),
           Pq.decode(col("__codes"), mod)).as("se"))
         .agg(sum(col("se"))).head().getDouble(0)
-    val seedOnly = Pq.seedCodebooks(df, "vec_id", "embedding", m, k)
+    val seedOnly = Pq.trainCodebooks(df, "vec_id", "embedding", m, k, iters = 0)
     assert(mse(kp) < mse(seedOnly),
       s"kmeansPar MSE ${mse(kp)} not below raw-seed MSE ${mse(seedOnly)}")
+  }
+
+  test("a Lloyd round costs the same jobs whatever the seed rule and m") {
+    // every trainer runs the one shared round over all m subspaces at
+    // once: two more rounds add the same jobs to the id-prefix PQ
+    // trainer, the k-means‖ PQ trainer and the IVF (m = 1) trainer
+    val rnd = new scala.util.Random(5)
+    val big = (0 until 400).map(i => (i.toLong, Array.fill(dim)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    def roundJobs(train: Int => Unit): Int =
+      TestSpark.jobsDuring(train(3)) - TestSpark.jobsDuring(train(1))
+    val prefix = roundJobs(i =>
+      Pq.trainCodebooks(big, "vec_id", "embedding", m, k, iters = i))
+    val kmeansPar = roundJobs(i =>
+      Pq.trainCodebooksKmeansPar(big, "vec_id", "embedding", m, k, iters = i))
+    val ivf = roundJobs(i =>
+      Ivf.trainCentroids(big, "vec_id", "embedding", k, iters = i))
+    assert(prefix > 0 && kmeansPar == prefix && ivf == prefix,
+      s"jobs for two more rounds: id-prefix $prefix, k-means‖ $kmeansPar, IVF $ivf")
   }
 
   test("ivfPqRecallSweep: scanned rows strictly grow, full-probe hits == full-scan PQ recall") {
@@ -191,7 +210,7 @@ class PqSpec extends AnyFunSuite {
     }
     // under pure seeds, the c-th seed row's nearest subspace centroid
     // is itself (d2 = 0) in every subspace
-    val seedModel = Pq.seedCodebooks(df, "vec_id", "embedding", m, k)
+    val seedModel = Pq.trainCodebooks(df, "vec_id", "embedding", m, k, iters = 0)
     val selfCodes = Pq.encode(df.where(col("vec_id") < k),
         col("embedding"), seedModel)
       .select(col("vec_id"), col("pq_codes")).collect()
@@ -482,7 +501,7 @@ class PqSpec extends AnyFunSuite {
 
   test("model geometry validations reject bad shapes") {
     intercept[IllegalArgumentException] {
-      Pq.seedCodebooks(df, "vec_id", "embedding", 5, k) // 16 % 5 != 0
+      Pq.trainCodebooks(df, "vec_id", "embedding", 5, k, iters = 0) // 16 % 5 != 0
     }
     intercept[IllegalArgumentException] {
       Pq.pqTopK(df, "vec_id", "embedding", rows(0)._2.toArray, 0, model)

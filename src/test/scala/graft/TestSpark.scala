@@ -19,6 +19,24 @@ object TestSpark {
     s
   }
 
+  /** Spark jobs started while `body` runs. The listener bus is
+    * asynchronous, so it is given time to drain before the count. */
+  def jobsDuring(body: => Unit): Int = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      Thread.sleep(300)
+    } finally spark.sparkContext.removeSparkListener(l)
+    counter.get()
+  }
+
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
