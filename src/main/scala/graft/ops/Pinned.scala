@@ -19,9 +19,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * SELF-FREED pins never reach the registry. A site that pins and is
   * done with the frame before it returns — the CC and PageRank loop
-  * steps, Fusion's MMR probe, Bpe's histograms, the Streams sinks —
-  * calls `localCheckpoint` itself and frees the same frame with
-  * [[free]] in a `finally`, so a failure leaks nothing. The one
+  * steps, Fusion's MMR probe, Bpe's histograms, and the Streams sinks
+  * (`lshDedupSink`'s signatures and pairs, `nbOnlineSink`'s merged
+  * stats and model) — calls `localCheckpoint` itself and frees the
+  * same frame with [[free]] in a `finally`, so a failure leaks
+  * nothing. Handing such a frame to an op that pins its input costs
+  * no second job: [[pin]] passes checkpointed frames through. The one
   * consumer that frees a tracked result early is `LabelStore.merge`:
   * the CC labels it merges are released in its `finally`, once the
   * bucket swap has consumed them.

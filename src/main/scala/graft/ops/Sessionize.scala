@@ -17,10 +17,8 @@ import org.apache.spark.sql.functions._
   * stream) bound the single-task work at that key's event count, the
   * same bound any per-key sessionization has.
   *
-  * The streaming twin is `streaming.Streams.sessionizeStream`
-  * (flatMapGroupsWithState); StreamsSpec pins batch ≡ stream on an
-  * in-order replay, and PropertySpec pins this batch form against a
-  * driver-side naive model on random event soups.
+  * PropertySpec pins this form against a driver-side naive model on
+  * random event soups.
   *
   * Output: (key, session_id, n, start_ms, end_ms) ordered by
   * (key, session_id) — q36's exact shape.

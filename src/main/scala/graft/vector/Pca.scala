@@ -201,7 +201,7 @@ object Pca {
 
   /** One-pass (n, Σx, upper-triangular ΣxxT) over non-null vectors —
     * the persistable sufficient statistic (`momentsDf`, the incremental
-    * store, the streaming sink). See `foldMoments` for determinism and
+    * store). See `foldMoments` for determinism and
     * the byte-budgeted fan-in. */
   private[vector] def moments(df: DataFrame, vec: String): Partial =
     foldMoments(df, vec, center = null, xtxMode = XtxTri)
@@ -320,26 +320,11 @@ object Pca {
   def momentsDf(df: DataFrame, vec: String): DataFrame =
     partialDf(df.sparkSession, moments(df, vec))
 
-  /** Fit from persisted moments: either the single-row swap store
-    * (`updateMomentsStore`) or the per-tick `batch=`-partitioned log
-    * (`Streams.pcaMomentsSink`). Multi-row inputs MUST carry a
-    * `batch` column — rows merge in ascending batch order, so the
-    * result is deterministic and independent of file listing order.
-    * One O(dim²) row per tick is collected; the row count is the tick
-    * count, never the corpus. */
-  def fitFromMoments(m: DataFrame, k: Int = -1): PcaModel = {
-    val p =
-      if (m.columns.contains("batch")) {
-        val rows = m.select(col("batch").cast("long"), col("n"),
-          col("sum"), col("xtx")).collect()
-        require(rows.nonEmpty, "moments log is empty")
-        rows.sortBy(_.getLong(0))
-          .map(r => (r.getLong(1), r.getSeq[Double](2).toArray,
-            r.getSeq[Double](3).toArray): Partial)
-          .reduceLeft(mergePartial)
-      } else partialOf(m)
-    fitPartial(p, k)
-  }
+  /** Fit from persisted moments: the one (n, sum, xtx) row that
+    * `momentsDf` and `updateMomentsStore` write. One O(dim²) row is
+    * collected, never the corpus. */
+  def fitFromMoments(m: DataFrame, k: Int = -1): PcaModel =
+    fitPartial(partialOf(m), k)
 
   /** Fold one batch's moments into the store at `storePath` (created
     * on first use) behind the K1 staging swap, store-then-batch merge
@@ -350,8 +335,8 @@ object Pca {
   def updateMomentsStore(spark: SparkSession, storePath: String,
       batch: DataFrame, vec: String): Unit = {
     graft.io.Sinks.recoverSwap(spark, storePath)
-    // an empty/all-null batch folds to nothing — a no-op, matching the
-    // streaming sink's empty-tick contract, not a crashed refresh
+    // an empty/all-null batch folds to nothing — a no-op, not a
+    // crashed refresh
     if (batch.where(col(vec).isNotNull).isEmpty) return
     val batchP = moments(batch, vec)
     val fs = new org.apache.hadoop.fs.Path(storePath)
@@ -432,31 +417,19 @@ object Pca {
     df.withColumn(as, f(col(vec)))
   }
 
-  /** `standardize` from a persisted moments store/log (the
+  /** `standardize` from a persisted moments row (the
     * `fitFromMoments` twin): per-dim mean and variance come from the
-    * stored (n, Σx, ΣxxT) sufficient statistic — one O(dim²) row per
-    * tick, never a corpus rescan. The store is an UNCENTERED
-    * statistic, so the variance here is the one-pass E[x²]−E[x]² form
-    * (noise ~1e-12 — fine for scaling an ANN index, NOT for a hashed
-    * round-6 grid; the oracle-hashed q156 path uses the two-pass
-    * centered `standardize`). */
+    * stored (n, Σx, ΣxxT) sufficient statistic — one O(dim²) row,
+    * never a corpus rescan, and no eigensolve. The store is an
+    * UNCENTERED statistic, so the variance here is the one-pass
+    * E[x²]−E[x]² form (noise ~1e-12 — fine for scaling an ANN index,
+    * NOT for a hashed round-6 grid; the oracle-hashed q156 path uses
+    * the two-pass centered `standardize`). */
   def standardizeFromMoments(m: DataFrame, df: DataFrame, vec: String,
       as: String = "standardized", eps: Double = 1e-12): DataFrame = {
-    val model = fitFromMoments(m)
-    val mean = model.mean
-    val d = model.dim
-    // per-dim variance = covariance trace terms; recover via a k=dim
-    // refit is wasteful — read the diagonal from the merged partial
-    val p =
-      if (m.columns.contains("batch")) {
-        val rows = m.select(col("batch").cast("long"), col("n"),
-          col("sum"), col("xtx")).collect()
-        rows.sortBy(_.getLong(0))
-          .map(r => (r.getLong(1), r.getSeq[Double](2).toArray,
-            r.getSeq[Double](3).toArray): Partial)
-          .reduceLeft(mergePartial)
-      } else partialOf(m)
-    val (n, s, x) = p
+    val (n, s, x) = partialOf(m)
+    val d = s.length
+    val mean = s.map(_ / n)
     val std = Array.tabulate(d) { j =>
       val v = triAt(x, d, j, j) / n - (s(j) / n) * (s(j) / n)
       if (v > eps) math.sqrt(v) else 1.0

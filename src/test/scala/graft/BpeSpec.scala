@@ -171,73 +171,22 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.loadMerges(spark, store).isEmpty)
   }
 
-  test("bpeHistogramSink: streamed histogram log trains like the one-shot fit; empty tick no-op; replay redelivers nothing") {
-    import graft.streaming.Streams
-    val dir = TestSpark.tempDir("bpestream")
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val parity = abs(xxhash64(col("doc_id"))) % 3
-    (0 until 3).foreach { k =>
-      docs.filter(parity === k).coalesce(1).write.parquet(s"$dir/in/f=$k")
-    }
-    // one all-null tick AND one all-whitespace tick: each must write
-    // nothing (no 0-row batch=N partition — the store's documented
-    // empty-histogram no-op, r18 ADVICE) and not kill the query
-    Seq((999999L, null: String)).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$dir/in/f=3")
-    Seq((999998L, "  \t  ")).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$dir/in/f=4")
-    val schema = spark.read.parquet(s"$dir/in/f=0").schema
-    val q = Streams.bpeHistogramSink(
-      Streams.fileStream(spark, s"$dir/in/*/", schema, maxFilesPerTrigger = 1),
-      "text", s"$dir/store", s"$dir/ckpt").start()
-    q.awaitTermination()
-    val oneShot = Bpe.fitFromCorpus(docs, "text", 16)
-    def fromStore() = Bpe.trainFromHistogram(
-      Bpe.mergeHistograms(spark.read.parquet(s"$dir/store")
-        .select("word", "cnt")), 16)
-    assert(fromStore() == oneShot)
-    // neither the null tick nor the whitespace tick wrote a partition
-    assert(spark.read.parquet(s"$dir/store").select("batch").distinct()
-      .count() == 3)
-    // same checkpoint re-run: nothing redelivered, store unchanged
-    val q2 = Streams.bpeHistogramSink(
-      Streams.fileStream(spark, s"$dir/in/*/", schema, maxFilesPerTrigger = 1),
-      "text", s"$dir/store", s"$dir/ckpt").start()
-    q2.awaitTermination()
-    assert(fromStore() == oneShot)
-  }
-
-  test("histogram store, distributed trainer and bpeHistogramSink free their checkpoint blocks") {
+  test("histogram store and distributed trainer free their checkpoint blocks") {
     // Dataset.unpersist() does not free a localCheckpoint's blocks (they
     // are RDD-level persists, not cache-manager entries): each call
     // here must leave getPersistentRDDs at its baseline
-    import graft.streaming.Streams
-    val sc = spark.sparkContext
-    def leaked(base: Set[Int]): Set[Int] = {
-      // unpersist is async (blocking=false): poll briefly
-      val deadline = System.nanoTime() + 10_000_000_000L
-      def extra = sc.getPersistentRDDs.keySet.toSet -- base
-      while (extra.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      extra
-    }
     val dir = TestSpark.tempDir("bpefree")
     val docs = Seq((1L, "low lower lowest"), (2L, "new newer low"))
       .toDF("doc_id", "text")
-    val base = sc.getPersistentRDDs.keySet.toSet
+    val base = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // first fold writes the store, the second merges into it
     Bpe.updateHistogramStore(spark, s"$dir/store", docs, "text")
     Bpe.updateHistogramStore(spark, s"$dir/store", docs, "text")
     assert(spark.read.parquet(s"$dir/store").count() > 0)
-    assert(leaked(base).isEmpty, "updateHistogramStore leaked its histogram")
+    assert(TestSpark.persistedSince(base).isEmpty, "updateHistogramStore leaked its histogram")
     assert(Bpe.trainMergesDistributed(Bpe.wordHistogramStats(docs, "text"), 3)
       .nonEmpty)
-    assert(leaked(base).isEmpty, "trainMergesDistributed leaked its histogram")
-    docs.coalesce(1).write.parquet(s"$dir/in/f=0")
-    Streams.bpeHistogramSink(Streams.fileStream(spark, s"$dir/in/*/", docs.schema),
-      "text", s"$dir/sink", s"$dir/ckpt").start().awaitTermination()
-    assert(spark.read.parquet(s"$dir/sink").count() > 0)
-    assert(leaked(base).isEmpty, "one bpeHistogramSink tick leaked its histogram")
+    assert(TestSpark.persistedSince(base).isEmpty, "trainMergesDistributed leaked its histogram")
   }
 
   test("histogram truncation is deterministic under ties") {

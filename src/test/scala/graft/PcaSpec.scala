@@ -180,14 +180,6 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("incremental: batch-merged moments fit equals the one-shot fit") {
-    val all = synth()
-    val batches = all.grouped(16).toSeq
-    val log = batches.zipWithIndex.map { case (b, k) =>
-      Pca.momentsDf(b.toDF("vec_id", "embedding"), "embedding")
-        .withColumn("batch", lit(k.toLong))
-    }.reduce(_ unionByName _)
-    assertModelsClose(Pca.fitFromMoments(log), model)
-    // single-row path (no batch column) round-trips too
     assertModelsClose(
       Pca.fitFromMoments(Pca.momentsDf(df, "embedding")), model)
   }
@@ -205,43 +197,6 @@ class PcaSpec extends AnyFunSuite {
     Pca.updateMomentsStore(spark, dir,
       Seq((999L, null: Seq[Float])).toDF("vec_id", "embedding"), "embedding")
     assertModelsClose(Pca.fitFromMoments(spark.read.parquet(dir)), model)
-  }
-
-  test("pcaMomentsSink: streamed moments log fits like the batch fit; empty tick is a no-op") {
-    import graft.streaming.Streams
-    val dir = TestSpark.tempDir("pcastream")
-    val batches = synth().grouped(16).toSeq
-    batches.zipWithIndex.foreach { case (b, k) =>
-      b.toDF("vec_id", "embedding").coalesce(1).write.parquet(s"$dir/in/f=$k")
-    }
-    // one all-null tick: must produce no moments row and not kill the query
-    Seq((999L, null: Seq[Float])).toDF("vec_id", "embedding")
-      .coalesce(1).write.parquet(s"$dir/in/f=${batches.size}")
-    val schema = spark.read.parquet(s"$dir/in/f=0").schema
-    val stream = Streams.fileStream(spark, s"$dir/in/*/", schema,
-      maxFilesPerTrigger = 1)
-    val q = Streams.pcaMomentsSink(stream, "embedding", s"$dir/store",
-      s"$dir/ckpt").start()
-    q.awaitTermination()
-    val log = spark.read.parquet(s"$dir/store")
-    assert(log.count() == batches.size.toLong) // the null tick wrote nothing
-    assertModelsClose(Pca.fitFromMoments(log), model)
-    // re-running with the same checkpoint re-delivers nothing: store unchanged
-    val q2 = Streams.pcaMomentsSink(
-      Streams.fileStream(spark, s"$dir/in/*/", schema, maxFilesPerTrigger = 1),
-      "embedding", s"$dir/store", s"$dir/ckpt").start()
-    q2.awaitTermination()
-    assertModelsClose(Pca.fitFromMoments(spark.read.parquet(s"$dir/store")), model)
-    // per-batch partition overwrite: a crash-window replay of one tick
-    // rewrites the identical row instead of double-counting (file
-    // pickup order is the source's business — replay whatever tick
-    // actually landed as batch=0)
-    val row0 = spark.read.parquet(s"$dir/store")
-      .where(col("batch") === 0).select("n", "sum", "xtx").cache()
-    assert(row0.count() == 1)
-    row0.write.mode("overwrite").parquet(s"$dir/store/batch=0")
-    row0.unpersist()
-    assertModelsClose(Pca.fitFromMoments(spark.read.parquet(s"$dir/store")), model)
   }
 
   // ---- r18: the q150 hash-fragility pins (centered covariance) ----
@@ -341,11 +296,8 @@ class PcaSpec extends AnyFunSuite {
   test("standardizeFromMoments: the store-backed z-scoring matches the two-pass direct path") {
     val direct = Pca.standardize(df, "embedding", "z")
       .orderBy("vec_id").select(col("z")).as[Seq[Double]].collect()
-    val log = synth().grouped(16).toSeq.zipWithIndex.map { case (b, k) =>
-      Pca.momentsDf(b.toDF("vec_id", "embedding"), "embedding")
-        .withColumn("batch", lit(k.toLong))
-    }.reduce(_ unionByName _)
-    val stored = Pca.standardizeFromMoments(log, df, "embedding", "z")
+    val stored = Pca.standardizeFromMoments(Pca.momentsDf(df, "embedding"),
+        df, "embedding", "z")
       .orderBy("vec_id").select(col("z")).as[Seq[Double]].collect()
     direct.zip(stored).zipWithIndex.foreach { case ((a, b), r) =>
       a.zip(b).foreach { case (x, y) =>

@@ -8,144 +8,6 @@ class StreamsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def eventsDf = (0 until 500).map { i =>
-    (i.toLong, i % 7L,
-      java.sql.Timestamp.valueOf(s"2024-01-01 ${"%02d".format(i % 24)}:0${i % 6}:00"),
-      Seq("click", "view", "purchase")(i % 3), (i % 50).toDouble)
-  }.toDF("event_id", "user_id", "tstamp", "event_type", "value")
-
-  test("hourlyTypeCounts: streaming over files == same transform in batch") {
-    val dir = TestSpark.tempDir("evts")
-    eventsDf.write.mode("overwrite").parquet(s"$dir/in")
-    val batch = Streams.hourlyTypeCounts(eventsDf).orderBy("hour_ms", "event_type")
-      .collect().toSeq
-    val stream = Streams.fileStream(spark, s"$dir/in", eventsDf.schema,
-      maxFilesPerTrigger = 2)
-    val q = Streams.hourlyTypeCounts(stream).writeStream
-      .outputMode("complete").format("memory").queryName("hourly").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("hourly").orderBy("hour_ms", "event_type")
-      .collect().toSeq
-    assert(streamed == batch)
-  }
-
-  test("qualityMonitor: streaming over files == same transform in batch; gate splits sources") {
-    val dir = TestSpark.tempDir("qmon")
-    val docs = (0 until 120).map { i =>
-      val src = if (i % 2 == 0) "clean" else "spam"
-      // spam docs are one token repeated (dup frac ~1, fails the gate)
-      val text = if (src == "clean") s"alpha beta gamma delta epsilon zeta eta theta iota kappa t$i"
-        else "dup " * 12
-      (i.toLong, java.sql.Timestamp.valueOf(s"2024-01-01 ${"%02d".format(i % 4)}:10:00"),
-        src, text)
-    }.toDF("doc_id", "tstamp", "src", "text")
-    docs.write.mode("overwrite").parquet(s"$dir/in")
-    def monitor(df: org.apache.spark.sql.DataFrame) =
-      Streams.qualityMonitor(df, "tstamp", col("src"), col("text"))
-    val batch = monitor(docs).orderBy("window_ms", "source").collect().toSeq
-    val stream = Streams.fileStream(spark, s"$dir/in", docs.schema,
-      maxFilesPerTrigger = 2)
-    val q = monitor(stream).writeStream
-      .outputMode("complete").format("memory").queryName("qmon").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("qmon").orderBy("window_ms", "source").collect().toSeq
-    assert(streamed == batch)
-    // the gate separates the planted cohorts completely
-    val byS = batch.groupBy(_.getString(1))
-    assert(byS("clean").forall(_.getDouble(5) == 1.0))
-    assert(byS("spam").forall(_.getDouble(5) == 0.0))
-    assert(batch.map(_.getLong(2)).sum == 120L)
-  }
-
-  test("sessionizeStream closes sessions on gap arrival across micro-batches") {
-    val dir = TestSpark.tempDir("sess")
-    def f(rows: Seq[(Long, String)], path: String) =
-      rows.toDF("user_id", "ts_s")
-        .withColumn("tstamp", col("ts_s").cast("timestamp")).drop("ts_s")
-        .coalesce(1).write.parquet(path)
-    // batch 1: user 1 burst (one session); batch 2: an event far past
-    // the gap → session A must close inline when B opens
-    f(Seq((1L, "2024-01-01 10:00:00"), (1L, "2024-01-01 10:05:00")), s"$dir/in/f=1")
-    f(Seq((1L, "2024-01-01 12:00:00")), s"$dir/in/f=2")
-    val schema = spark.read.parquet(s"$dir/in/f=1").schema
-    val stream = Streams.fileStream(spark, s"$dir/in/*/", schema,
-      maxFilesPerTrigger = 1)
-    val sessions = Streams.sessionizeStream(spark, stream, "user_id", "tstamp")
-    val q = sessions.writeStream
-      .outputMode("append").format("memory").queryName("sessions")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val closed = spark.table("sessions").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    // only session A is closed (B has no successor and the watermark
-    // never passes its end+gap — it stays open in state)
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
-    val t1 = java.sql.Timestamp.valueOf("2024-01-01 10:05:00").getTime
-    assert(closed == Seq((1L, t0, t1, 2L)), s"got $closed")
-  }
-
-  test("sessionizeStream: a cross-batch straggler far before the open session is NOT folded in") {
-    val dir = TestSpark.tempDir("sesslate")
-    def f(rows: Seq[(Long, String)], path: String) =
-      rows.toDF("user_id", "ts_s")
-        .withColumn("tstamp", col("ts_s").cast("timestamp")).drop("ts_s")
-        .coalesce(1).write.parquet(path)
-    // batch 1 opens a session at 10:00; batch 2 delivers a late event
-    // at 08:00 — more than the 30-min gap BEFORE the session start.
-    // The old t <= end+gap guard silently merged it (count 2, start
-    // still 10:00); it must surface as its own closed session instead.
-    f(Seq((7L, "2024-01-01 10:00:00")), s"$dir/in/f=1")
-    f(Seq((7L, "2024-01-01 08:00:00")), s"$dir/in/f=2")
-    val schema = spark.read.parquet(s"$dir/in/f=1").schema
-    val stream = Streams.fileStream(spark, s"$dir/in/*/", schema,
-      maxFilesPerTrigger = 1)
-    val sessions = Streams.sessionizeStream(spark, stream, "user_id", "tstamp",
-      watermark = "12 hours")
-    val q = sessions.writeStream
-      .outputMode("append").format("memory").queryName("sess_late")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val closed = spark.table("sess_late").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val t8 = java.sql.Timestamp.valueOf("2024-01-01 08:00:00").getTime
-    assert(closed == Seq((7L, t8, t8, 1L)), s"got $closed")
-  }
-
-  test("sessionizeStream: co-batch stragglers merge into ONE late session, not singletons") {
-    val dir = TestSpark.tempDir("sessgroup")
-    def f(rows: Seq[(Long, String)], path: String) =
-      rows.toDF("user_id", "ts_s")
-        .withColumn("tstamp", col("ts_s").cast("timestamp")).drop("ts_s")
-        .coalesce(1).write.parquet(path)
-    // batch 1 opens a session at 12:00; batch 2 delivers THREE late
-    // events at 08:00/08:10/08:20 — within the 30-min gap of each
-    // other, all more than gap before the open session. They form one
-    // late session of 3 (batch semantics), not three fragments.
-    f(Seq((9L, "2024-01-01 12:00:00")), s"$dir/in/f=1")
-    f(Seq((9L, "2024-01-01 08:00:00"), (9L, "2024-01-01 08:10:00"),
-      (9L, "2024-01-01 08:20:00")), s"$dir/in/f=2")
-    val schema = spark.read.parquet(s"$dir/in/f=1").schema
-    val stream = Streams.fileStream(spark, s"$dir/in/*/", schema,
-      maxFilesPerTrigger = 1)
-    val sessions = Streams.sessionizeStream(spark, stream, "user_id", "tstamp",
-      watermark = "12 hours")
-    val q = sessions.writeStream
-      .outputMode("append").format("memory").queryName("sess_group")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val closed = spark.table("sess_group").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val t8 = java.sql.Timestamp.valueOf("2024-01-01 08:00:00").getTime
-    val t820 = java.sql.Timestamp.valueOf("2024-01-01 08:20:00").getTime
-    assert(closed == Seq((9L, t8, t820, 3L)), s"got $closed")
-  }
-
   test("stream-static decontamination: arriving docs drop on benchmark overlap") {
     // decontaminate as a streaming stage: the benchmark shingle set is
     // a STATIC broadcastable side; each micro-batch of arriving corpus
@@ -227,21 +89,6 @@ class StreamsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == labels)
   }
 
-  test("dedupStream drops duplicate ids even with differing timestamps") {
-    val dir = TestSpark.tempDir("dup")
-    // re-arrivals carry a LATER timestamp (re-crawled article) — id-only
-    // dedup must still drop them
-    val reArrivals = eventsDf.limit(100).withColumn("tstamp",
-      org.apache.spark.sql.functions.expr("tstamp + INTERVAL 1 MINUTE"))
-    val dup = eventsDf.union(reArrivals)
-    dup.write.mode("overwrite").parquet(s"$dir/in")
-    val stream = Streams.fileStream(spark, s"$dir/in", dup.schema)
-    val q = Streams.dedupStream(stream, "event_id", "tstamp").writeStream
-      .outputMode("append").format("memory").queryName("dedup").start()
-    q.processAllAvailable(); q.stop()
-    assert(spark.table("dedup").count() == 500)
-  }
-
   test("streaming chunk-summarize: per-meeting micro-batches merge into state") {
     val dir = TestSpark.tempDir("ssum")
     // one parquet file per meeting → maxFilesPerTrigger=1 gives one
@@ -270,103 +117,6 @@ class StreamsSpec extends AnyFunSuite {
     // 120 segs / 50 → 3 chunks + rollup, per meeting
     assert(state.count() == 8)
     assert(state.filter(col("chunk_id") === -1).count() == 2)
-  }
-
-  test("foreachBatch mergeSink upserts micro-batches into parquet state") {
-    val dir = TestSpark.tempDir("msink")
-    eventsDf.limit(50).write.mode("overwrite").parquet(s"$dir/in")
-    val stream = Streams.fileStream(spark, s"$dir/in", eventsDf.schema,
-      maxFilesPerTrigger = 1)
-    val q = Streams.mergeSink(stream, s"$dir/state", Seq("event_id"),
-      s"$dir/ckpt").start()
-    q.awaitTermination()
-    assert(spark.read.parquet(s"$dir/state").count() == 50)
-    // second identical run: idempotent state (fresh checkpoint, same keys)
-    val stream2 = Streams.fileStream(spark, s"$dir/in", eventsDf.schema)
-    val q2 = Streams.mergeSink(stream2, s"$dir/state", Seq("event_id"),
-      s"$dir/ckpt2").start()
-    q2.awaitTermination()
-    assert(spark.read.parquet(s"$dir/state").count() == 50)
-  }
-
-  test("sessionizeStream == Sessionize.byGap on randomized in-order flows") {
-    // The batch twin (ops/Sessionize, q36's gap logic) is property-
-    // pinned against a naive model; this ties the STREAM twin to it on
-    // randomized inputs. All real events arrive in batch 1 (the
-    // within-batch gap-grouping is the exact regime); batch 2 carries
-    // one far-future sentinel per user so every real session closes
-    // (inline or by watermark timeout) — sessions compare as sets of
-    // (user, start, end, n), the stream output having no session ids.
-    val rnd = new scala.util.Random(20260814)
-    (1 to 4).foreach { sample =>
-      val dir = TestSpark.tempDir(s"sessprop$sample")
-      val base = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
-      val events = (0 until 40 + rnd.nextInt(60)).map { i =>
-        (rnd.nextInt(3).toLong, base + rnd.nextInt(6 * 3600) * 1000L, i.toLong)
-      }
-      def write(rows: Seq[(Long, Long)], path: String) =
-        rows.toDF("user_id", "ms")
-          .withColumn("tstamp", timestamp_millis(col("ms"))).drop("ms")
-          .coalesce(1).write.parquet(path)
-      write(events.map(e => (e._1, e._2)), s"$dir/in/f=1")
-      val sentinelMs = base + 10L * 24 * 3600 * 1000
-      write((0L until 3L).map(u => (u, sentinelMs)), s"$dir/in/f=2")
-      val schema = spark.read.parquet(s"$dir/in/f=1").schema
-      val stream = Streams.fileStream(spark, s"$dir/in/*/", schema,
-        maxFilesPerTrigger = 1)
-      val q = Streams.sessionizeStream(spark, stream, "user_id", "tstamp")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(s"sessprop$sample")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val streamed = spark.table(s"sessprop$sample").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      val batch = graft.ops.Sessionize.byGap(
-          events.toDF("user_id", "ts_ms", "event_id"),
-          "user_id", "ts_ms", "event_id", gapMs = 30 * 60 * 1000L)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getLong(4), r.getLong(2)))
-        .toSet
-      assert(streamed == batch,
-        s"sample $sample: stream ${streamed.size} vs batch ${batch.size}")
-    }
-  }
-
-  test("classifyScoreSink: streamed predictions equal one-shot classify; replay-idempotent") {
-    val dir = TestSpark.tempDir("clsscore")
-    val train = Seq(("news", "mayor council budget vote tax"),
-      ("spam", "win prize click offer free")).toDF("label", "text")
-    val model = graft.ops.TextClassifier.trainNaiveBayes(
-      train, col("label"), col("text")).cache()
-    val held = (0 until 30).map { i =>
-      (i.toLong, if (i % 2 == 0) s"council budget vote w$i" else s"free prize click w$i")
-    }.toDF("doc_id", "text")
-    held.filter(col("doc_id") < 10).coalesce(1).write.parquet(s"$dir/in/f=1")
-    held.filter(col("doc_id") >= 10 && col("doc_id") < 20)
-      .coalesce(1).write.parquet(s"$dir/in/f=2")
-    held.filter(col("doc_id") >= 20).coalesce(1).write.parquet(s"$dir/in/f=3")
-    val stream = Streams.fileStream(spark, s"$dir/in/*/", held.schema,
-      maxFilesPerTrigger = 1)
-    val q = Streams.classifyScoreSink(stream, "doc_id", "text", model,
-      s"$dir/preds", s"$dir/ckpt").start()
-    q.processAllAvailable(); q.stop()
-    def predSet(df: org.apache.spark.sql.DataFrame) = df
-      .select("id", "pred_label", "score", "n_tokens").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSet
-    val streamed = predSet(spark.read.parquet(s"$dir/preds"))
-    val oneShot = predSet(graft.ops.TextClassifier.classifyNaiveBayes(
-      held, col("doc_id"), col("text"), model))
-    assert(streamed == oneShot && streamed.size == 30)
-    // replay with a fresh checkpoint: markers skip, nothing duplicated
-    val q2 = Streams.classifyScoreSink(
-      Streams.fileStream(spark, s"$dir/in/*/", held.schema, maxFilesPerTrigger = 1),
-      "doc_id", "text", model, s"$dir/preds", s"$dir/ckpt2").start()
-    q2.processAllAvailable(); q2.stop()
-    assert(predSet(spark.read.parquet(s"$dir/preds")) == oneShot)
-    model.unpersist()
   }
 
   test("nbOnlineSink: prequential test-then-train; log trains bit-equal to one-shot") {
@@ -433,5 +183,24 @@ class StreamsSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(got == want, s"batch $bid ($tok)")
     }
+  }
+
+  test("nbOnlineSink frees its merged stats and model after every tick") {
+    // the sink pins the merged stats and the model on the micro-batch
+    // thread, whose tracked-pin registry nothing drains: it must free
+    // both itself, or each scoring tick leaves two checkpoints behind
+    val dir = TestSpark.tempDir("nbfree")
+    val docs = Seq((1L, "news", "mayor council budget"), (2L, "spam", "win prize offer"))
+      .toDF("doc_id", "label", "text")
+    (1 to 3).foreach(k => docs.coalesce(1).write.parquet(s"$dir/in/f=$k"))
+    val base = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Streams.runToCompletion(Streams.nbOnlineSink(
+      Streams.fileStream(spark, s"$dir/in/*/", docs.schema, maxFilesPerTrigger = 1),
+      "doc_id", "text", "label", s"$dir/stats", s"$dir/preds",
+      s"$dir/ckpt").start())
+    // two scoring ticks ran (the first tick has no model to score with)
+    assert(spark.read.parquet(s"$dir/preds").select("batch").distinct().count() == 2)
+    val left = TestSpark.persistedSince(base)
+    assert(left.isEmpty, s"nbOnlineSink left persisted RDDs $left")
   }
 }

@@ -37,6 +37,17 @@ object TestSpark {
     counter.get()
   }
 
+  /** RDD ids persisted now that were not in `base`. Unpersist is
+    * asynchronous (blocking = false), so this polls for up to 10 s
+    * before it reports what is left. */
+  def persistedSince(base: Set[Int]): Set[Int] = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 10_000_000_000L
+    def extra = sc.getPersistentRDDs.keySet.toSet -- base
+    while (extra.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    extra
+  }
+
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
