@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Learned BPE subword tokenizer (Sennrich et al. 2016,
   * arXiv:1508.07909) — the trained twin of the regex token counter
-  * (`TextAnalysis.tokenCounts` / q146's fertility report). The engine
+  * (`TextAnalysis.tokenCount` / q146's fertility report). The engine
   * had "BPE-ish" heuristics; this is the real learned object: merge
   * rules fit on the corpus, then applied as a deterministic function.
   *

@@ -150,8 +150,9 @@ object Fusion {
     }.sortBy(c => (-c.rel, c.cid))
 
   /** The exact driver-side greedy over a parsed pool (pool already
-    * sorted by (rel DESC, id ASC) — `parseCands`). */
-  /** `objectiveGrid = Some(g)` snaps each candidate's MMR objective to
+    * sorted by (rel DESC, id ASC) — `parseCands`).
+    *
+    * `objectiveGrid = Some(g)` snaps each candidate's MMR objective to
     * the g-decimal grid (HALF_UP) before the argmax. The relevance
     * term's bits are already engine-identical (scoreCol is pre-rounded
     * upstream); only the redundancy cosine carries summation-order

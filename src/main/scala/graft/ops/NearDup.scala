@@ -88,24 +88,6 @@ object NearDup {
     exploded.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH banding over minhash signatures: docs sharing any band of
-    * rowsPerBand consecutive hashes become candidate pairs. The band
-    * join is an equi-join on the band key — shuffle-partitioned,
-    * skew-safe (bands are near-unique for non-duplicates).
-    *
-    * No cache pinned here; the recompute story depends on the
-    * signature variant upstream:
-    *  - `minhashSignatures` (explode+agg): the subtree ends in the
-    *    groupBy exchange, so every band arm / join side replays the
-    *    shuffle files via ReusedExchange — the sha pipeline runs once.
-    *  - `minhashSignaturesFused` (map-only projection): there is no
-    *    exchange to reuse, so the per-row kernel re-runs once per band
-    *    arm (nBands × 2 sides worst case). The kernel is cheap and
-    *    scan-bound, and profiling shows the fused total still beats
-    *    the agg path at nBands=2 — but for wide banding (rowsPerBand=1,
-    *    many arms) materialize the signature table first (write it, or
-    *    persist explicitly and unpersist after).
-    * Either way nothing leaks into a long-lived session. */
   /** Banded view of a signature table: one row per (doc, band), band
     * key = band index ++ that band's minhash columns. Shared by the
     * self-join, incremental, and on-disk-store paths so all three
@@ -134,7 +116,12 @@ object NearDup {
       }: _*)).as("__band"))
   }
 
-  /** The signature table is materialized once (`Pinned.pin`) so the
+  /** LSH banding over minhash signatures: docs sharing any band of
+    * rowsPerBand consecutive hashes become candidate pairs. The band
+    * join is an equi-join on the band key — shuffle-partitioned,
+    * skew-safe (bands are near-unique for non-duplicates).
+    *
+    * The signature table is materialized once (`Pinned.pin`) so the
     * band arms and both self-join sides read blocks instead of
     * re-running the signature subtree. The fused sha kernel is a
     * map-only projection with no exchange for ReuseExchange to dedup,
@@ -631,6 +618,19 @@ object NearDup {
       pairs: DataFrame): DataFrame =
     df.join(pairs.select(col("doc_b").as(id)).distinct(), Seq(id), "left_anti")
 
+  /** Test hook: observes each CC round's (iteration, pre-round delta
+    * size, shape — true = broadcast-delta) so a spec can assert the
+    * mid-loop shuffle→broadcast flip actually occurs at a given gate
+    * without env-var plumbing. None in production: one ThreadLocal
+    * read per ROUND (not per row), zero cost. Thread-local (r17,
+    * ADVICE): the CC loop runs on the calling thread, so a per-thread
+    * slot lets concurrent suites (or a production run during a test)
+    * each see only their own listener instead of clobbering a shared
+    * global. */
+  private[graft] val ccRoundListener:
+    ThreadLocal[Option[(Int, Long, Boolean) => Unit]] =
+    ThreadLocal.withInitial(() => None)
+
   /** Connected components over a candidate-pair graph by iterative
     * min-label propagation (hash-min) — the grouping step of
     * transitive corpus dedup (CCNet/RefinedWeb-style), with no graph
@@ -699,19 +699,6 @@ object NearDup {
     *
     * Returns one row per node appearing in `pairs`:
     * (node, component = min id reachable). */
-  /** Test hook: observes each CC round's (iteration, pre-round delta
-    * size, shape — true = broadcast-delta) so a spec can assert the
-    * mid-loop shuffle→broadcast flip actually occurs at a given gate
-    * without env-var plumbing. None in production: one ThreadLocal
-    * read per ROUND (not per row), zero cost. Thread-local (r17,
-    * ADVICE): the CC loop runs on the calling thread, so a per-thread
-    * slot lets concurrent suites (or a production run during a test)
-    * each see only their own listener instead of clobbering a shared
-    * global. */
-  private[graft] val ccRoundListener:
-    ThreadLocal[Option[(Int, Long, Boolean) => Unit]] =
-    ThreadLocal.withInitial(() => None)
-
   def connectedComponents(pairs: DataFrame, colA: String = "doc_a",
       colB: String = "doc_b", maxIterations: Int = 20,
       maxBroadcastDelta: Long = 250000L): DataFrame = {
@@ -1001,6 +988,21 @@ object NearDup {
       .drop("__rank", "component")
   }
 
+  /** 64-bit keys of every stride-1 window of `n` tokens, WITHOUT
+    * materializing the window strings: xxhash64 chains its arguments
+    * (each token hashed with the previous result as seed), so hashing
+    * the n token slots directly replaces building an O(n·token)
+    * string per position and hashing that (r22; guide §4 — the
+    * window-string construction was the q68/q77 hot projection).
+    * Key equality semantics are unchanged up to 64-bit collisions:
+    * identical token windows hash identically; two DISTINCT windows
+    * colliding needs a 64-bit collision — the same accepted trade as
+    * the old xxhash64(concat_ws(" ", window)) keys (tokens contain no
+    * whitespace, so the separator carried no extra information). */
+  private def hashedWindows(wcol: Column, n: Int): Column =
+    transform(sequence(lit(0), size(wcol) - lit(n)), i =>
+      xxhash64((0 until n).map(k => element_at(wcol, i + lit(k + 1))): _*))
+
   /** Cross-document repeated token-window report — the diagnostic
     * behind exact-substring dedup (Lee et al. 2022 "Deduplicating
     * Training Data Makes Language Models Better"): for every stride-1
@@ -1025,21 +1027,6 @@ object NearDup {
     * ~N²/2^65 ≈ 3·10^4 windows mislabeled "repeated" out of 10^12 —
     * the same accepted trade as `bigramNovelty`'s hashed keys.
     * Returns (id, n_rep, first_pos), docs with no repeats omitted. */
-  /** 64-bit keys of every stride-1 window of `n` tokens, WITHOUT
-    * materializing the window strings: xxhash64 chains its arguments
-    * (each token hashed with the previous result as seed), so hashing
-    * the n token slots directly replaces building an O(n·token)
-    * string per position and hashing that (r22; guide §4 — the
-    * window-string construction was the q68/q77 hot projection).
-    * Key equality semantics are unchanged up to 64-bit collisions:
-    * identical token windows hash identically; two DISTINCT windows
-    * colliding needs a 64-bit collision — the same accepted trade as
-    * the old xxhash64(concat_ws(" ", window)) keys (tokens contain no
-    * whitespace, so the separator carried no extra information). */
-  private def hashedWindows(wcol: Column, n: Int): Column =
-    transform(sequence(lit(0), size(wcol) - lit(n)), i =>
-      xxhash64((0 until n).map(k => element_at(wcol, i + lit(k + 1))): _*))
-
   def repeatedWindows(df: DataFrame, id: String, text: Column,
       w: Int = 8): DataFrame = {
     require(w >= 2, "repeatedWindows: w must be >= 2")

@@ -92,32 +92,6 @@ object SourceMix {
       .drop("__n")
   }
 
-  /** Per-source KL divergence D(P_source ‖ P_corpus) over the unigram
-    * distribution, add-one smoothed on the shared corpus vocabulary —
-    * the mixing diagnostic that tells you how far each source's
-    * language drifts from the blend you are training on. A source with
-    * near-zero KL is redundant with the mix; a high-KL source is the
-    * one whose up/down-weighting (`resampleByWeight`) actually moves
-    * the mixture, and a sudden KL jump on a recurring crawl is the
-    * domain-shift alarm. Smoothing puts both distributions on the full
-    * corpus vocabulary so every log ratio is finite:
-    * p_s(w) = (c_s(w)+1)/(n_s+V),  q(w) = (c(w)+1)/(n+V).
-    *
-    * Output: (source, n_tokens, kl) rounded to 6, one row per source.
-    *
-    * Scale shape: the naive full-support sum is a vocab × sources
-    * grid (every source must pay smoothing mass on every absent
-    * word), but the absent-word term collapses analytically — with
-    * p₀ = 1/(n_s+V) constant per source,
-    *   Σ_absent p₀·ln(p₀/q_w) = p₀·[(V−V_s)·ln p₀ − (S_all − S_s)]
-    * where S_all = Σ_vocab ln q_w is one global scalar and
-    * S_s = Σ_present ln q_w a per-source aggregate — so the op only
-    * ever touches (source, word) pairs that actually occur. Token
-    * counts are map-side-combining hash aggs; the one join is
-    * per-source counts ⋈ corpus counts keyed on the word (carries
-    * 8-byte counts, never text); grand totals broadcast as one row.
-    * Agrees with the literal grid to ~1e-15 relative (same doubles,
-    * regrouped), far inside the 6dp rounding. */
   /** Temperature-scaled multinomial source weights (the mBERT/XLM
     * exponentiated-smoothing rule, Devlin et al. 2019 / Conneau &
     * Lample 2019): sampling probability q_s ∝ p_s^alpha where p_s is
@@ -148,6 +122,32 @@ object SourceMix {
         round(q * col("__N"), 6).as("expected_docs"))
   }
 
+  /** Per-source KL divergence D(P_source ‖ P_corpus) over the unigram
+    * distribution, add-one smoothed on the shared corpus vocabulary —
+    * the mixing diagnostic that tells you how far each source's
+    * language drifts from the blend you are training on. A source with
+    * near-zero KL is redundant with the mix; a high-KL source is the
+    * one whose up/down-weighting (`resampleByWeight`) actually moves
+    * the mixture, and a sudden KL jump on a recurring crawl is the
+    * domain-shift alarm. Smoothing puts both distributions on the full
+    * corpus vocabulary so every log ratio is finite:
+    * p_s(w) = (c_s(w)+1)/(n_s+V),  q(w) = (c(w)+1)/(n+V).
+    *
+    * Output: (source, n_tokens, kl) rounded to 6, one row per source.
+    *
+    * Scale shape: the naive full-support sum is a vocab × sources
+    * grid (every source must pay smoothing mass on every absent
+    * word), but the absent-word term collapses analytically — with
+    * p₀ = 1/(n_s+V) constant per source,
+    *   Σ_absent p₀·ln(p₀/q_w) = p₀·[(V−V_s)·ln p₀ − (S_all − S_s)]
+    * where S_all = Σ_vocab ln q_w is one global scalar and
+    * S_s = Σ_present ln q_w a per-source aggregate — so the op only
+    * ever touches (source, word) pairs that actually occur. Token
+    * counts are map-side-combining hash aggs; the one join is
+    * per-source counts ⋈ corpus counts keyed on the word (carries
+    * 8-byte counts, never text); grand totals broadcast as one row.
+    * Agrees with the literal grid to ~1e-15 relative (same doubles,
+    * regrouped), far inside the 6dp rounding. */
   def klDivergence(df: DataFrame, source: Column, text: Column): DataFrame = {
     val toks = df.select(source.as("source"),
         explode(NearDup.tokens(text)).as("__wd"))

@@ -385,26 +385,6 @@ object TextAnalysis {
     }
   }
 
-  /** Gopher-style repetition/quality gate (Rae et al. 2021, arXiv:
-    * 2112.11446, Table A1 spirit): per document —
-    *  - mean word length (garbled text skews short or long),
-    *  - fraction of words containing an alphabetic character
-    *    (symbol/number spam),
-    *  - most-common-word share of all tokens and most-common-bigram
-    *    share of all bigrams (template/repetition spam — the
-    *    "fraction in top n-gram" family),
-    * plus the boolean `keep` gate over the documented thresholds.
-    * Empty tokens are excluded (the bigramLogProb discipline); docs
-    * with no non-empty tokens are absent from the output. All inputs
-    * to the gate are exact-integer ratios evaluated in double — the
-    * 6dp rounding is display-only, so the gate cannot flip across
-    * engines. Output: (id, n_tokens, mean_word_len, frac_alpha_words,
-    * top_word_frac, top_bigram_frac, keep).
-    *
-    * Scale shape: one token explode into a (id, word)-keyed map-side-
-    * combining agg, one bigram transform (no self-join) into the same
-    * shape, one per-doc hash agg each, one per-doc join — every term
-    * linear in tokens, no windows, no driver state. */
   /** The raw (unrounded) Gopher metrics both the per-doc report and
     * the funnel aggregate from: (id, n_tokens, __mwl, __fa, __twf,
     * __tbf nullable). Ratios of exact integer counts in double, so
@@ -463,6 +443,26 @@ object TextAnalysis {
     wordAgg.join(bigramAgg, Seq(id), "left")
   }
 
+  /** Gopher-style repetition/quality gate (Rae et al. 2021, arXiv:
+    * 2112.11446, Table A1 spirit): per document —
+    *  - mean word length (garbled text skews short or long),
+    *  - fraction of words containing an alphabetic character
+    *    (symbol/number spam),
+    *  - most-common-word share of all tokens and most-common-bigram
+    *    share of all bigrams (template/repetition spam — the
+    *    "fraction in top n-gram" family),
+    * plus the boolean `keep` gate over the documented thresholds.
+    * Empty tokens are excluded (the bigramLogProb discipline); docs
+    * with no non-empty tokens are absent from the output. All inputs
+    * to the gate are exact-integer ratios evaluated in double — the
+    * 6dp rounding is display-only, so the gate cannot flip across
+    * engines. Output: (id, n_tokens, mean_word_len, frac_alpha_words,
+    * top_word_frac, top_bigram_frac, keep).
+    *
+    * Scale shape: one token explode into a (id, word)-keyed map-side-
+    * combining agg, one bigram transform (no self-join) into the same
+    * shape, one per-doc hash agg each, one per-doc join — every term
+    * linear in tokens, no windows, no driver state. */
   def gopherReport(df: org.apache.spark.sql.DataFrame, id: String,
       text: Column, minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
       minAlphaFrac: Double = 0.8, maxTopWordFrac: Double = 0.2,

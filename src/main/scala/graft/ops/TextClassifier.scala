@@ -16,15 +16,22 @@ import org.apache.spark.sql.functions._
   * rounded to 6, ties broken on the rounded value then a total key).
   *
   * Why NB and not logistic regression: training is PURE COUNTING —
-  * one tokenize + two `groupBy`s, map-side combinable, no iteration,
-  * no driver-side state — so it keeps the full-pipeline property the
-  * engine's oracle gate needs (every step ANSI-SQL-expressible) while
-  * still being the shape production quality filters actually take at
-  * this scale (count tables stream; gradient loops don't).
+  * one tokenize + one `(label, term)` groupBy, map-side combinable, no
+  * iteration, no driver-side state — so it keeps the full-pipeline
+  * property the engine's oracle gate needs (every step
+  * ANSI-SQL-expressible) while still being the shape production
+  * quality filters actually take at this scale (count tables stream;
+  * gradient loops don't).
   *
-  * Scale posture (100 TB): the token explode and both count
-  * aggregations shuffle on bounded keys ((label, term) then label);
-  * the model grid is |vocab| × |classes| rows — classes are enumerable
+  * One pipeline: [[nbSufficientStats]] is the one count pass, one
+  * private builder turns its count table into the model (dense grid
+  * or observed rows) under all four trainers, and [[scoreNaiveBayes]]
+  * is the one scorer — so the smoothing formulas exist once.
+  *
+  * Scale posture (100 TB): the token explode shuffles once, on the
+  * bounded (label, term) key; the class tables are label-keyed
+  * aggregations of that count table, never of the corpus. The model
+  * grid is |vocab| × |classes| rows — classes are enumerable
   * (sources, languages, quality tiers), so the grid is a small
   * constant times the vocabulary and never corpus-sized. Scoring
   * aggregates each document's term frequencies FIRST (one row per
@@ -51,62 +58,13 @@ object TextClassifier {
     *
     * Priors count ALL training docs, including any that tokenize to
     * empty — a doc with no tokens is still evidence for its class.
+    *
+    * Exactly `trainFromStats(nbSufficientStats(docs, …), alpha)`: the
+    * corpus is read once, by the one count pass.
     */
-  /** Observed (label, term, n) token counts — the shared first stage
-    * of both trainers. */
-  private def tokenCounts(docs: DataFrame, labelCol: Column,
-      text: Column): DataFrame =
-    Par.widen(docs)
-      .select(labelCol.as("label"), explode(tokens(text)).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy("label", "term").agg(count(lit(1)).as("n"))
-
-  /** Append the three model quantities to any table carrying
-    * (n, tot_c, vocab, n_docs_c, n_docs) — THE smoothing formulas,
-    * defined once so all three trainers stay bit-identical. */
-  private def smoothedModel(grid: DataFrame, alpha: Double): DataFrame =
-    grid
-      .withColumn("log_cond",
-        log((col("n") + lit(alpha)) / (col("tot_c") + lit(alpha) * col("vocab"))))
-      .withColumn("log_prior",
-        log(col("n_docs_c").cast("double") / col("n_docs")))
-      .withColumn("oov_ll",
-        log(lit(alpha) / (col("tot_c") + lit(alpha) * col("vocab"))))
-
   def trainNaiveBayes(docs: DataFrame, labelCol: Column, text: Column,
-      alpha: Double = 1.0): DataFrame = {
-    require(alpha > 0, s"alpha must be > 0 (got $alpha)")
-    // the count table feeds classTok, the vocab distinct, vTot AND
-    // the grid's probe side — and the class-level broadcasts are built
-    // on CONCURRENT broadcast-future jobs that cannot reuse each
-    // other's in-flight exchanges, so unpinned the heavy
-    // tokenize+count pass ran up to 4× per model (r22 StageAudit: two
-    // racing copies of the widen exchange and of the count chain
-    // inside one training). Counts are observed (label, term) pairs —
-    // never corpus-sized.
-    val counts = Pinned.pin(tokenCounts(docs, labelCol, text))
-    val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
-    val classDocs = docs.select(labelCol.as("label"))
-      .groupBy("label").agg(count(lit(1)).as("n_docs_c"))
-    // classes: one row per label — bounded by construction, broadcast.
-    val classes = classTok.join(classDocs, "label")
-    val vocab = counts.select("term").distinct()
-    val vTot = vocab.agg(count(lit(1)).as("vocab"))     // single row
-    // n_docs = Σ n_docs_c (exact integer identity, null labels
-    // included as their own group): rides classDocs' label exchange
-    // instead of paying a second full scan+count of the corpus.
-    // coalesce: sum over zero rows is null where count(1) was 0 —
-    // only reachable on an empty corpus (model is empty either way)
-    val dTot = classDocs
-      .agg(coalesce(sum("n_docs_c"), lit(0L)).as("n_docs")) // single row
-    smoothedModel(
-      vocab.crossJoin(broadcast(classes))
-        .join(counts, Seq("label", "term"), "left")
-        .na.fill(0L, Seq("n"))
-        .crossJoin(broadcast(vTot))
-        .crossJoin(broadcast(dTot)),
-      alpha)
-  }
+      alpha: Double = 1.0): DataFrame =
+    trainFromStats(nbSufficientStats(docs, labelCol, text), alpha)
 
   /** [[trainNaiveBayes]] minus the dense-grid materialization — the
     * deployment trainer. The dense |vocab|×|classes| grid exists as
@@ -118,44 +76,33 @@ object TextClassifier {
     * join observed pairs back in is pure waste. This emits ONLY the
     * observed (label, term) rows, each carrying the same replicated
     * class-level quantities, and is bit-compatible with every
-    * consumer ([[scoreNaiveBayes]], [[scoreNaiveBayesManyClasses]],
-    * [[classifyNaiveBayes]], [[classifierGate]]): they read
-    * `filter(n > 0)` + a distinct class table, both of which this
-    * output satisfies identically (every class keeps ≥1 observed row
-    * — a token-less class is dropped by BOTH trainers). Spec-pinned
-    * row-equal to `trainNaiveBayes(...).filter(n > 0)` on the shared
-    * columns, and classify-bit-equal through the full scoring path.
+    * consumer ([[scoreNaiveBayes]], [[classifyNaiveBayes]],
+    * [[classifierGate]]): they read `filter(n > 0)` + a distinct class
+    * table, both of which this output satisfies identically (every
+    * class keeps ≥1 observed row — a token-less class is dropped by
+    * BOTH trainers). Spec-pinned row-equal to
+    * `trainNaiveBayes(...).filter(n > 0)` on the shared columns, and
+    * classify-bit-equal through the full scoring path.
     *
-    * Cost: one tokenize + the same two bounded-key groupBys; output
-    * rows = observed pairs ≈ the (label, term) count table itself —
-    * never vocab×classes. */
+    * Cost: the one count pass, then label-keyed aggregations of the
+    * count table; output rows = observed pairs ≈ the (label, term)
+    * count table itself — never vocab×classes. */
   def trainNaiveBayesSparse(docs: DataFrame, labelCol: Column, text: Column,
-      alpha: Double = 1.0): DataFrame = {
-    require(alpha > 0, s"alpha must be > 0 (got $alpha)")
-    val counts = Pinned.pin(tokenCounts(docs, labelCol, text)) // see trainNaiveBayes
-    val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
-    val classDocs = docs.select(labelCol.as("label"))
-      .groupBy("label").agg(count(lit(1)).as("n_docs_c"))
-    val classes = classTok.join(classDocs, "label")
-    val vTot = counts.select("term").distinct()
-      .agg(count(lit(1)).as("vocab"))                 // single row
-    // n_docs from the per-class counts (the trainNaiveBayes identity;
-    // coalesce for the empty-corpus null, same as there)
-    val dTot = classDocs
-      .agg(coalesce(sum("n_docs_c"), lit(0L)).as("n_docs")) // single row
-    smoothedModel(
-      counts.join(broadcast(classes), "label")
-        .crossJoin(broadcast(vTot))
-        .crossJoin(broadcast(dTot)),
-      alpha)
-  }
+      alpha: Double = 1.0): DataFrame =
+    trainFromStatsSparse(nbSufficientStats(docs, labelCol, text), alpha)
 
   /** Sufficient statistics of a batch for NB training, as ONE table:
     * token rows (label, term, n) plus a per-class doc-count row keyed
-    * by the RESERVED empty term (label, "", n_docs_c) — `tokens`
-    * filters empty strings, so "" can never collide with a real term.
-    * Statistics are exact integer counts, so the merge algebra is a
-    * plain keyed sum: commutative, associative, order-invariant.
+    * by the RESERVED empty term (label, "", n_docs_c) — empty strings
+    * are filtered out of the tokens, so "" can never collide with a
+    * real term. Statistics are exact integer counts, so the merge
+    * algebra is a plain keyed sum: commutative, associative,
+    * order-invariant.
+    *
+    * One pass: each doc explodes to its non-empty tokens plus one ""
+    * term, and one `(label, term)` count yields both kinds of row. A
+    * doc with null or blank text still emits its "" row, so it counts
+    * toward its class's prior.
     *
     * This is what makes NB the scale-right classifier for a 100 TB
     * corpus with daily ingest: the store is |vocab|×|classes| rows (a
@@ -167,13 +114,15 @@ object TextClassifier {
     * [[trainNaiveBayes]] on the concatenated corpus.
     */
   def nbSufficientStats(docs: DataFrame, labelCol: Column, text: Column): DataFrame = {
-    val tok = Par.widen(docs)
-      .select(labelCol.as("label"), explode(tokens(text)).as("term"))
-      .filter(col("term") =!= "")
+    // position 0 is the doc's "" row, any later "" an empty token;
+    // posexplode + filter stays in generated code (a lambda filter
+    // over the token array is interpreted per element, ~1.5× the CPU)
+    val terms = concat(array(lit("")),
+      coalesce(tokens(text), typedLit(Seq.empty[String])))
+    Par.widen(docs)
+      .select(labelCol.as("label"), posexplode(terms).as(Seq("__pos", "term")))
+      .filter(col("__pos") === 0 || col("term") =!= "")
       .groupBy("label", "term").agg(count(lit(1)).as("n"))
-    val docCounts = docs.select(labelCol.as("label"), lit("").as("term"))
-      .groupBy("label", "term").agg(count(lit(1)).as("n"))
-    tok.unionByName(docCounts)
   }
 
   /** Merge sufficient-statistics tables (batch increments and/or a
@@ -191,28 +140,8 @@ object TextClassifier {
     * token-less class has no conditionals and is dropped from the
     * grid); n_docs = doc rows across ALL labels, including token-less
     * ones — their docs still dilute every prior. */
-  def trainFromStats(statsIn: DataFrame, alpha: Double = 1.0): DataFrame = {
-    require(alpha > 0, s"alpha must be > 0 (got $alpha)")
-    // stats feed the term counts, the doc-count rows and n_docs — pin
-    // once so the merged-batch aggregation (and each batch's tokenize
-    // underneath it) runs once, not once per consumer
-    val stats = Pinned.pin(statsIn)
-    val counts = stats.filter(col("term") =!= "")
-    val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
-    val classDocs = stats.filter(col("term") === "")
-      .groupBy("label").agg(sum("n").as("n_docs_c"))
-    val classes = classTok.join(classDocs, "label")
-    val vocab = counts.select("term").distinct()
-    val vTot = vocab.agg(count(lit(1)).as("vocab"))
-    val dTot = stats.filter(col("term") === "").agg(sum("n").as("n_docs"))
-    smoothedModel(
-      vocab.crossJoin(broadcast(classes))
-        .join(counts, Seq("label", "term"), "left")
-        .na.fill(0L, Seq("n"))
-        .crossJoin(broadcast(vTot))
-        .crossJoin(broadcast(dTot)),
-      alpha)
-  }
+  def trainFromStats(statsIn: DataFrame, alpha: Double = 1.0): DataFrame =
+    fromStats(statsIn, alpha, dense = true)
 
   /** [[trainFromStats]] without the dense grid — observed rows only,
     * the [[trainNaiveBayesSparse]] of the incremental path. Same
@@ -221,22 +150,47 @@ object TextClassifier {
     * streaming prequential sink rebuilds its model from the stats
     * store EVERY tick — this is the rebuild it uses, so tick cost
     * scales with observed pairs, never vocab×classes. */
-  def trainFromStatsSparse(statsIn: DataFrame, alpha: Double = 1.0): DataFrame = {
+  def trainFromStatsSparse(statsIn: DataFrame, alpha: Double = 1.0): DataFrame =
+    fromStats(statsIn, alpha, dense = false)
+
+  /** The one model builder: class tables, vocab size and n_docs from a
+    * stats table, then THE smoothing formulas over either the dense
+    * |vocab|×|classes| grid or the observed rows only. */
+  private def fromStats(statsIn: DataFrame, alpha: Double,
+      dense: Boolean): DataFrame = {
     require(alpha > 0, s"alpha must be > 0 (got $alpha)")
-    val stats = Pinned.pin(statsIn) // see trainFromStats
+    // stats feed the term counts, the doc-count rows and n_docs, and
+    // the class-level broadcasts are built on CONCURRENT
+    // broadcast-future jobs that cannot reuse each other's in-flight
+    // exchanges — pin once so the count pass (and each batch's
+    // tokenize under a merge) runs once, not once per consumer (r22
+    // StageAudit: unpinned, the tokenize+count pass ran up to 4× per
+    // model). Stats are observed (label, term) pairs — never
+    // corpus-sized.
+    val stats = Pinned.pin(statsIn)
     val counts = stats.filter(col("term") =!= "")
+    val docRows = stats.filter(col("term") === "")
     val classTok = counts.groupBy("label").agg(sum("n").as("tot_c"))
-    val classDocs = stats.filter(col("term") === "")
-      .groupBy("label").agg(sum("n").as("n_docs_c"))
+    val classDocs = docRows.groupBy("label").agg(sum("n").as("n_docs_c"))
+    // classes: one row per label — bounded by construction, broadcast.
     val classes = classTok.join(classDocs, "label")
-    val vTot = counts.select("term").distinct()
-      .agg(count(lit(1)).as("vocab"))
-    val dTot = stats.filter(col("term") === "").agg(sum("n").as("n_docs"))
-    smoothedModel(
-      counts.join(broadcast(classes), "label")
-        .crossJoin(broadcast(vTot))
-        .crossJoin(broadcast(dTot)),
-      alpha)
+    val vocab = counts.select("term").distinct()
+    val vTot = vocab.agg(count(lit(1)).as("vocab"))     // single row
+    // coalesce: the sum over zero rows is null — only reachable on an
+    // empty corpus (the model is empty either way)
+    val dTot = docRows.agg(coalesce(sum("n"), lit(0L)).as("n_docs")) // single row
+    val grid =
+      if (dense) vocab.crossJoin(broadcast(classes))
+        .join(counts, Seq("label", "term"), "left")
+        .na.fill(0L, Seq("n"))
+      else counts.join(broadcast(classes), "label")
+    grid.crossJoin(broadcast(vTot)).crossJoin(broadcast(dTot))
+      .withColumn("log_cond",
+        log((col("n") + lit(alpha)) / (col("tot_c") + lit(alpha) * col("vocab"))))
+      .withColumn("log_prior",
+        log(col("n_docs_c").cast("double") / col("n_docs")))
+      .withColumn("oov_ll",
+        log(lit(alpha) / (col("tot_c") + lit(alpha) * col("vocab"))))
   }
 
   /** Per-class scores for each document: length-normalized smoothed
@@ -255,13 +209,10 @@ object TextClassifier {
     * Output: one row per (doc, class): id, label, score (rounded 6),
     * n_tokens.
     *
-    * Shape note for MANY-class deployments: this replicates each
-    * doc's TF rows |classes|× (broadcast nested-loop, then one
-    * keyed aggregation) — the right trade at quality-filter class
-    * counts (2–20: langid keep/drop, domain buckets). When |classes|
-    * reaches hundreds with a skewed vocabulary, use
-    * [[scoreNaiveBayesManyClasses]]: same semantics, no TF replicate
-    * (spec-pinned equivalent to within one 1e-6 rounding-grid step).
+    * Shape: this replicates each doc's TF rows |classes|× (broadcast
+    * nested-loop, then one keyed aggregation) — the right trade at
+    * quality-filter class counts (2–20: langid keep/drop, domain
+    * buckets).
     */
   def scoreNaiveBayes(held: DataFrame, idCol: Column, text: Column,
       modelIn: DataFrame): DataFrame = {
@@ -308,73 +259,12 @@ object TextClassifier {
     * then-total-key rank discipline, so both engines pick the same
     * class even when two scores are mathematically equal). */
   def classifyNaiveBayes(held: DataFrame, idCol: Column, text: Column,
-      model: DataFrame): DataFrame =
-    argmaxByScore(scoreNaiveBayes(held, idCol, text, model))
-
-  /** Argmax over [[scoreNaiveBayesManyClasses]] — the wide-class
-    * twin of [[classifyNaiveBayes]], same tie-break discipline. The
-    * two classifiers agree wherever the per-doc top-2 margin clears
-    * one 1e-6 rounding-grid step (the shapes' pinned score
-    * tolerance); at sub-grid margins either label is a legitimate
-    * rounded argmax — pick ONE shape per deployment. */
-  def classifyNaiveBayesManyClasses(held: DataFrame, idCol: Column,
-      text: Column, model: DataFrame): DataFrame =
-    argmaxByScore(scoreNaiveBayesManyClasses(held, idCol, text, model))
-
-  /** The q74 rounded-value-then-total-key argmax both classifiers
-    * share: highest ROUNDED score wins, ties break on label
-    * ascending — so both engines (and both scoring shapes) pick the
-    * same class even when two scores are mathematically equal. */
-  private def argmaxByScore(perClass: DataFrame): DataFrame = {
+      model: DataFrame): DataFrame = {
     val w = Window.partitionBy("id").orderBy(col("score").desc, col("label"))
-    perClass.withColumn("__rk", row_number().over(w))
+    scoreNaiveBayes(held, idCol, text, model)
+      .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1)
       .select(col("id"), col("label").as("pred_label"), col("score"), col("n_tokens"))
-  }
-
-  /** [[scoreNaiveBayes]] without the per-class TF replicate — the
-    * wide-class-count scale shape. Algebra: with ll_t = log_cond for
-    * observed (class, term) pairs and oov_ll_c otherwise,
-    *
-    *   Σ_t cnt_t·ll_t  =  Σ_observed cnt_t·(log_cond − oov_ll_c)
-    *                      + N·oov_ll_c            (N = Σ_t cnt_t)
-    *
-    * so the heavy TF table joins TERM-keyed to the observed model
-    * pairs only (rows ≈ Σ_t |classes observing t| — for a skewed web
-    * vocabulary far below |TF|×|classes|), aggregates per (doc,
-    * class), and the |docs|×|classes| output spine is built from the
-    * tiny per-doc token totals instead of the full TF rows. Classes
-    * a doc shares no vocabulary with fall out of the join entirely
-    * and take the pure-OOV score via the fill.
-    *
-    * Same output contract as [[scoreNaiveBayes]]; the floating-point
-    * GROUPING differs (one subtraction pulled out of the sum), so
-    * rounded scores agree to within one 1e-6 grid step rather than
-    * bit-exactly — spec-pinned on random corpora. Gates and argmax
-    * built on either shape agree except on a score pair within one
-    * ulp of a grid midpoint; pick one shape per deployment. */
-  def scoreNaiveBayesManyClasses(held: DataFrame, idCol: Column,
-      text: Column, modelIn: DataFrame): DataFrame = {
-    val model = Pinned.pin(modelIn) // see scoreNaiveBayes — same 2 consumers
-    val tf = Par.widen(held)
-      .select(idCol.as("id"), explode(tokens(text)).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy("id", "term").agg(count(lit(1)).as("cnt"))
-    val docN = tf.groupBy("id").agg(sum("cnt").as("n_tokens"))
-    val classes = model.select("label", "log_prior", "oov_ll").distinct()
-    val adj = tf
-      .join(model.filter(col("n") > 0)
-          .select(col("label"), col("term"), col("log_cond"), col("oov_ll")),
-        Seq("term"))
-      .groupBy("id", "label")
-      .agg(sum(col("cnt") * (col("log_cond") - col("oov_ll"))).as("adj"))
-    docN.crossJoin(broadcast(classes))
-      .join(adj, Seq("id", "label"), "left")
-      .na.fill(0.0, Seq("adj"))
-      .withColumn("avg_ll",
-        (col("adj") + col("n_tokens") * col("oov_ll")) / col("n_tokens"))
-      .withColumn("score", round(col("avg_ll") + col("log_prior") / col("n_tokens"), 6))
-      .select(col("id"), col("label"), col("score"), col("n_tokens"))
   }
 
   /** Held-out confusion matrix: join predictions back to true labels,

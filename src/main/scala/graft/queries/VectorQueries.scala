@@ -18,10 +18,6 @@ object VectorQueries {
     t(s, d, "embeddings").filter(col("vec_id") === id)
       .select(col("embedding")).head().getSeq[Float](0).toArray
 
-  /** Shared DuckDB CTE chain: corpus-scaled k-means cells → cell-
-    * bounded ranked kNN candidates (`r`: ia, ib, cos_sim, rank).
-    * q79 selects from it directly; q83's PageRank builds its edge
-    * list from it. */
   /** Two-level (coarse→fine) cell assignment, shared by q70/q79/q83/
     * q87 — the SQL mirror of `Ivf.assignCellsTwoLevel` under the
     * id-prefix seed rule: fine seeds are `vec_id < k`
@@ -75,6 +71,10 @@ object VectorQueries {
       fine, fine.take(graft.vector.Ivf.coarseCountFor(k)))
   }
 
+  /** Shared DuckDB CTE chain: corpus-scaled k-means cells → cell-
+    * bounded ranked kNN candidates (`r`: ia, ib, cos_sim, rank).
+    * q79 selects from it directly; q83's PageRank builds its edge
+    * list from it. */
   private[queries] val knnRankedCte: String =
     twoLevelCellCte + """,
       |nrm AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM vu GROUP BY vec_id),

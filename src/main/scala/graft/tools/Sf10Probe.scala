@@ -244,7 +244,7 @@ object Sf10Probe {
     // vocab×classes (the x100 tagging multiplies vocab ~100×, the
     // worst case for the dense shape); (c) scoring a FIXED batch
     // against a grown model costs the model scan, nothing
-    // corpus-shaped — both scoring shapes measured side by side.
+    // corpus-shaped.
     family("nb") {
       val batchDocs = docs1.filter(col("doc_id") < 5000).localCheckpoint()
       val nBatch = batchDocs.count()
@@ -267,10 +267,6 @@ object Sf10Probe {
           s"vocab=$vocab dense_grid_rows=${vocab * 20}")
         T(s"nb_classify_fixed_batch(replicate, n=$nBatch) vs $tag model") {
           graft.ops.TextClassifier.classifyNaiveBayes(
-            batchDocs, col("doc_id"), col("text"), model).count()
-        }
-        T(s"nb_score_fixed_batch(many_classes, n=$nBatch) vs $tag model") {
-          graft.ops.TextClassifier.scoreNaiveBayesManyClasses(
             batchDocs, col("doc_id"), col("text"), model).count()
         }
         model.unpersist() // x1 checkpoint must not shade the x100 timings

@@ -475,15 +475,6 @@ object Pq {
     }
   }
 
-  /** Write (append) the on-disk IVF-PQ index: (id, pq_codes)
-    * PARTITIONED BY ivf_cell — the 100 TB serving layout. A query's
-    * nProbe cells select a strict partition subset of the store's
-    * files (spec-pinned via inputFiles), the scanned rows are m small
-    * ints each, and the float column never ships: at dim 64 / m 8 the
-    * index is 32× smaller than the vectors it serves. Append-able per
-    * ingest batch (`mode=append` + one writer task per cell — the
-    * signature-store sliver discipline); `Sinks.recoverSwap` guards
-    * the crash window like every other store. */
   /** The index's row form: (id, ivf_cell, pq_codes), one writer task
     * per cell — shared by the batch writer and the streaming sink so
     * the two stores can never drift schema. */
@@ -496,6 +487,15 @@ object Pq {
       .select(col(id), col("ivf_cell"), col("pq_codes"))
       .repartition(cents.length, col("ivf_cell"))
 
+  /** Write (append) the on-disk IVF-PQ index: (id, pq_codes)
+    * PARTITIONED BY ivf_cell — the 100 TB serving layout. A query's
+    * nProbe cells select a strict partition subset of the store's
+    * files (spec-pinned via inputFiles), the scanned rows are m small
+    * ints each, and the float column never ships: at dim 64 / m 8 the
+    * index is 32× smaller than the vectors it serves. Append-able per
+    * ingest batch (`mode=append` + one writer task per cell — the
+    * signature-store sliver discipline); `Sinks.recoverSwap` guards
+    * the crash window like every other store. */
   def writeIndexStore(df: DataFrame, id: String, vec: String,
       model: PqModel, cents: Array[Array[Float]], path: String): Unit = {
     graft.io.Sinks.recoverSwap(df.sparkSession, path)

@@ -369,38 +369,34 @@ class PlanSpec extends AnyFunSuite {
     assert(tp.contains("BroadcastNestedLoopJoin"), tp.take(800))
   }
 
-  test("wide-class NB shape: class spine broadcasts, no cartesian, no TF replicate join") {
-    // scoreNaiveBayesManyClasses exists to keep the heavy TF table
-    // OUT of any per-class replicate. The model is CHECKPOINTED so
-    // the trainer's own replicate cannot satisfy the asserts, and the
-    // regression this pins (rewriting back to scoreNaiveBayes's
-    // tf.crossJoin(broadcast(classes))) also plans as a BNLJ — so the
-    // discriminating assertion is on the nested-loop join's OUTPUT:
-    // the spine replicates per-doc token TOTALS (id, n_tokens), never
-    // TF rows (which would carry `term`/`cnt` through the replicate).
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+  test("NB sufficient stats: one count pass, one exchange hash-partitioned on (label, term)") {
+    // token rows and per-class doc-count rows come out of ONE explode
+    // and ONE (label, term) aggregation — a second aggregation leg for
+    // the doc counts would add a second exchange (and a second scan).
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     // AQE off so the whole exchange tree is one inspectable plan
-    // (query stages are leaf wrappers that hide operators from
-    // collect) — the shuffledStringAttrs discipline.
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-      val m = graft.ops.TextClassifier.trainNaiveBayes(
-        docs, col("source"), col("text")).localCheckpoint()
-      val df = graft.ops.TextClassifier.scoreNaiveBayesManyClasses(
-        docs, col("doc_id"), col("text"), m)
-      val plan = df.queryExecution.executedPlan
-      assert(!plan.toString.contains("CartesianProduct"),
-        plan.toString.take(800))
-      val bnljs = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
-      assert(bnljs.size == 1, s"exactly the classes spine: ${bnljs.size} BNLJs")
-      val names = bnljs.head.output.map(_.name).toSet
-      assert(names.contains("n_tokens") && !names.contains("term")
-          && !names.contains("cnt"),
-        s"spine must replicate per-doc totals, not TF rows: $names")
-      m.unpersist()
+      // one range slice per core: Par.widen's gate stays shut, so the
+      // count's own exchange is the only one
+      val docs = spark.range(0, 64, 1, spark.sparkContext.defaultParallelism)
+        .select(concat(lit("c"), (col("id") % 3).cast("string")).as("label"),
+          concat(lit("w"), (col("id") % 5).cast("string"), lit(" x")).as("text"))
+      val plan = graft.ops.TextClassifier
+        .nbSufficientStats(docs, col("label"), col("text"))
+        .queryExecution.executedPlan
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, plan.toString.take(800))
+      exchanges.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.collect { case a: AttributeReference => a.name }
+            == Seq("label", "term"), plan.toString.take(800))
+        case other => fail(s"count exchange is not hash-partitioned: $other")
+      }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
