@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is the 100 TB shape: signature extraction becomes a map-only stage
   * feeding the LSH band join directly.
   *
-  * Semantics replicate `NearDup.minhashSignatures` exactly:
+  * Semantics replicate `NearDup.minhashSignaturesComposite` exactly:
   * tokens = split(lower(trim(text)), "\\s+") with Spark's lower/trim
   * (UTF8String simple case mapping; ASCII-space-only trim), word
   * `shingleSize`-grams joined by ' ', hash j = min over shingles of

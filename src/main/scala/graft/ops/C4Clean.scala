@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *      list; parameterized here, default empty)
   *
   * C4's remaining rules live elsewhere in the engine: the
-  * three-sentence-span corpus dedup is `NearDup.removeExactSubstrings`
+  * three-sentence-span corpus dedup is `NearDup.removeRepeatedWindows`
   * / `LineDedup.removeRepeatedLines`, and the langid ≥ 0.99 cut is
   * `TextAnalysis.langId`.
   *

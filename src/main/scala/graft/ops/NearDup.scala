@@ -19,39 +19,18 @@ object NearDup {
   /** Lowercased whitespace tokens. */
   def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
 
-  /** Word n-gram shingles (default bigrams). Callers must filter rows
-    * with fewer than n tokens. */
-  def shingles(text: Column, n: Int = 2): Column =
-    shinglesFromTokens(tokens(text), n)
-
   /** Shingles over an already-tokenized array column — lets pipelines
-    * tokenize once (regex split is the per-row hot spot) and reuse. */
+    * tokenize once (regex split is the per-row hot spot) and reuse.
+    * Callers must filter rows with fewer than n tokens. */
   def shinglesFromTokens(w: Column, n: Int): Column =
     transform(sequence(lit(0), size(w) - lit(n)), i =>
       concat_ws(" ", (0 until n).map(k => element_at(w, i + lit(k + 1))): _*))
 
   /** MinHash signatures: numHashes minima over sha256 slices of the
-    * shingle set. Explode → hash-agg min: partial aggregation makes
-    * this map-side-combining, so the shuffle carries one signature row
-    * per document, not one row per shingle. */
-  def minhashSignatures(df: DataFrame, id: String, text: Column,
-      numHashes: Int = 4, shingleSize: Int = 2): DataFrame = {
-    require(numHashes >= 1 && numHashes <= 5, "sha256 hex yields 5 12-char slices")
-    val exploded = df
-      .select(col(id), tokens(text).as("__w"))
-      .filter(size(col("__w")) >= shingleSize)
-      .select(col(id), explode(shinglesFromTokens(col("__w"), shingleSize)).as("__sh"))
-      .withColumn("__h", sha2(col("__sh"), 256))
-    val aggs = (0 until numHashes).map(j =>
-      min(substring(col("__h"), 1 + 12 * j, 12)).as(s"mh$j"))
-    exploded.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Fused per-row minhash (custom codegen Expression): signature
-    * extraction as a pure projection — no explode, no aggregation, no
-    * exchange. Same output as `minhashSignatures` (oracle-checked);
-    * prefer this at scale, fall back to the explode+agg composition
-    * when custom expressions are off the table. */
+    * shingle set, as a fused per-row codegen Expression — signature
+    * extraction is a pure projection: no explode, no aggregation, no
+    * exchange. Oracle-checked (q13), and bit-equal to the explode+agg
+    * `minhashSignaturesComposite` below (property-pinned). */
   def minhashSignaturesFused(df: DataFrame, id: String, text: Column,
       numHashes: Int = 4, shingleSize: Int = 2): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnBridge
@@ -72,26 +51,31 @@ object NearDup {
         .map(j => col(s"__mh.mh$j").as(s"mh$j")): _*)
   }
 
-  /** Production-fast minhash: xxhash64 per (seed, shingle) — ~an order
-    * of magnitude cheaper than sha256 and the right default at 100 TB.
-    * Not cross-engine reproducible (xxhash64 is Spark-internal), so the
-    * oracle-checked queries use the sha256 variant; band/LSH machinery
-    * is shared. */
-  def minhashSignaturesFast(df: DataFrame, id: String, text: Column,
-      numHashes: Int = 4, shingleSize: Int = 2): DataFrame = {
+  /** The original explode → hash-agg min form of
+    * `minhashSignaturesFused`, kept as the equivalence-spec reference
+    * model for the fused kernel (PropertySpec and OpsSpec pin
+    * fused == composite). Partial aggregation makes it
+    * map-side-combining: the shuffle carries one signature row per
+    * document, not one row per shingle. */
+  private[graft] def minhashSignaturesComposite(df: DataFrame, id: String,
+      text: Column, numHashes: Int = 4, shingleSize: Int = 2): DataFrame = {
+    require(numHashes >= 1 && numHashes <= 5, "sha256 hex yields 5 12-char slices")
     val exploded = df
       .select(col(id), tokens(text).as("__w"))
       .filter(size(col("__w")) >= shingleSize)
       .select(col(id), explode(shinglesFromTokens(col("__w"), shingleSize)).as("__sh"))
+      .withColumn("__h", sha2(col("__sh"), 256))
     val aggs = (0 until numHashes).map(j =>
-      min(xxhash64(lit(j), col("__sh"))).as(s"mh$j"))
+      min(substring(col("__h"), 1 + 12 * j, 12)).as(s"mh$j"))
     exploded.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Banded view of a signature table: one row per (doc, band), band
-    * key = band index ++ that band's minhash columns. Shared by the
-    * self-join, incremental, and on-disk-store paths so all three
-    * agree byte-for-byte on band keys.
+    * key = band index ++ that band's minhash columns, with the `carry`
+    * columns riding along between `__id` and `__band`. The one band-key
+    * construction behind the self-join, the estimate, the incremental
+    * probe and the on-disk store, so all of them agree byte-for-byte
+    * on band keys.
     *
     * One explode over an array of the nBands keys, NOT a union of
     * nBands per-band selects (r22 session 3): the union shape read
@@ -101,20 +85,43 @@ object NearDup {
     * exec). Band-key VALUES are identical (same concat per band), so
     * every downstream join/distinct is unchanged; only row order
     * within partitions differs (row-major instead of arm-major),
-    * which no consumer observes. */
-  private[ops] def bandedSignatures(sigs: DataFrame, id: String,
-      numHashes: Int, rowsPerBand: Int, caller: String): DataFrame = {
+    * which no consumer observes.
+    *
+    * `sigs` is by-name so that a caller's eager `Pinned.pin` runs only
+    * after the width check passes: a bad width throws before any job
+    * or pinned block. */
+  private def bandedSignatures(sigs: => DataFrame, id: String,
+      numHashes: Int, rowsPerBand: Int, caller: String,
+      carry: Seq[String] = Nil): DataFrame = {
     require(numHashes % rowsPerBand == 0,
       s"$caller: numHashes=$numHashes not divisible by " +
         s"rowsPerBand=$rowsPerBand — trailing hashes would be silently " +
         "dropped from banding (reduced recall)")
     val nBands = numHashes / rowsPerBand
-    sigs.select(col(id).as("__id"),
+    sigs.select(col(id).as("__id") +: carry.map(col) :+
       explode(array((0 until nBands).map { b =>
         val cols = (0 until rowsPerBand).map(i => col(s"mh${b * rowsPerBand + i}"))
         concat_ws("|", lit(b.toString) +: cols: _*)
-      }: _*)).as("__band"))
+      }: _*)).as("__band"): _*)
   }
+
+  /** The one-shot band self-join: every (a, b) row pair sharing a band
+    * key, each unordered pair once per shared band (a.__id < b.__id).
+    * Callers project from the `a`/`b` aliases and dedup. */
+  private def bandSelfJoin(banded: DataFrame): DataFrame =
+    banded.as("a").join(banded.as("b"),
+      col("a.__band") === col("b.__band") && col("a.__id") < col("b.__id"))
+
+  /** The incremental band probe: `fresh` (the new batch's band rows)
+    * joined against `others ∪ fresh` on the band key, so every pair
+    * has at least one new-batch side and `others` never joins itself.
+    * Pairs come back normalized (doc_a < doc_b) and distinct. */
+  private def probeJoin(fresh: DataFrame, others: DataFrame): DataFrame =
+    fresh.as("a").join(others.unionByName(fresh).as("b"),
+        col("a.__band") === col("b.__band") && col("a.__id") =!= col("b.__id"))
+      .select(least(col("a.__id"), col("b.__id")).as("doc_a"),
+        greatest(col("a.__id"), col("b.__id")).as("doc_b"))
+      .distinct()
 
   /** LSH banding over minhash signatures: docs sharing any band of
     * rowsPerBand consecutive hashes become candidate pairs. The band
@@ -139,11 +146,8 @@ object NearDup {
     * until the consumer (or harness) calls `Pinned.releaseAll()`. */
   def lshCandidatePairs(sigs: DataFrame, id: String,
       numHashes: Int = 4, rowsPerBand: Int = 2): DataFrame = {
-    val bands = bandedSignatures(Pinned.pin(sigs), id, numHashes, rowsPerBand,
-      "lshCandidatePairs")
-    val a = bands.as("a")
-    val b = bands.as("b")
-    a.join(b, col("a.__band") === col("b.__band") && col("a.__id") < col("b.__id"))
+    bandSelfJoin(bandedSignatures(Pinned.pin(sigs), id, numHashes,
+        rowsPerBand, "lshCandidatePairs"))
       .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"))
       .distinct()
   }
@@ -231,8 +235,8 @@ object NearDup {
     * minhash estimator (each component agrees with probability J, so
     * the mean of the agreement indicators is an unbiased Jaccard
     * estimate). With the oracle-checkable 4-hash signature the
-    * estimate is quartile-coarse; production widths (64–128 hashes,
-    * the `minhashSignaturesFast` path) tighten it to ±1/√h.
+    * estimate is quartile-coarse; wider signatures tighten it to
+    * ±1/√h.
     *
     * Why it earns its place at 100 TB: the estimate needs ONLY the
     * signatures already sitting in the store — candidate pairs get a
@@ -240,73 +244,31 @@ object NearDup {
     * re-shingling any document text. The exact-Jaccard refine joins
     * text-sized rows; this joins 40-byte signature rows, so the
     * post-LSH filter step stops touching the corpus entirely.
+    *
+    * Shape: the signature columns RIDE the band explode, so the
+    * agreement count is computed straight off the band self-join — no
+    * join back to the signature table, the candidate-generating
+    * exchanges collapse to the one band exchange (the pair distinct
+    * still adds its own), and the map-only signature subtree (the
+    * fused sha kernel) is pinned and evaluated once. Riding costs
+    * nBands copies of the signature per doc through the exchange —
+    * cheap at the ≤ 5 hashes the sha kernel yields. The band keys and
+    * the candidate set are `lshCandidatePairs`' own; a width not
+    * divisible by rowsPerBand throws, as there.
     * Output: (doc_a, doc_b, est_jaccard), est >= minEstimate. */
   def estimatedJaccardPairs(sigs: DataFrame, id: String,
       numHashes: Int = 4, rowsPerBand: Int = 2,
       minEstimate: Double = 0.0): DataFrame = {
-    // BEHAVIOR CHANGE (r14): non-divisible widths now throw where they
-    // previously ran with the trailing hashes silently dropped from
-    // banding — that silence was real recall loss. External callers
-    // relying on the lenient behavior must pad or trim numHashes.
-    require(numHashes % rowsPerBand == 0,
-      s"estimatedJaccardPairs: numHashes=$numHashes not divisible by " +
-        s"rowsPerBand=$rowsPerBand — trailing hashes would be silently " +
-        "dropped from banding (reduced recall)")
     val mhCols = (0 until numHashes).map(j => s"mh$j")
-    // materialize-once (the lshCandidatePairs treatment): both join
-    // sides — and on the wide path both join-backs — read blocks
-    // instead of re-running the signature kernel
-    val sigsMat = Pinned.pin(sigs)
-    if (numHashes <= 8) {
-      // NARROW signatures (the oracle-checkable 4-hash width): the
-      // signature columns RIDE the band explode, so the agreement
-      // count is computed straight off the band self-join — no join
-      // back to the signature table, the candidate-generating
-      // exchanges collapse to the one band exchange (the pair
-      // distinct still adds its own), and the map-only signature
-      // subtree (the fused sha kernel) is evaluated once instead of
-      // once per join branch. Riding costs nBands copies of the
-      // signature per doc through the exchange — cheap at ≤8 hashes.
-      // The band keys are the same byte construction as
-      // bandedSignatures, so the candidate set is identical to
-      // lshCandidatePairs'.
-      val nBands = numHashes / rowsPerBand
-      val bandKeys = array((0 until nBands).map { b =>
-        concat_ws("|", lit(b.toString) +:
-          (0 until rowsPerBand).map(i => col(s"mh${b * rowsPerBand + i}")): _*)
-      }: _*)
-      val banded = sigsMat.select(col(id).as("__id") +: mhCols.map(col) :+
-        explode(bandKeys).as("__band"): _*)
-      val a = banded.as("a")
-      val b = banded.as("b")
-      val agree = mhCols.map(c =>
-        when(col(s"a.$c") === col(s"b.$c"), 1).otherwise(0))
-        .reduce(_ + _)
-      a.join(b, col("a.__band") === col("b.__band") && col("a.__id") < col("b.__id"))
-        .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"),
-          round(agree.cast("double") / numHashes, 6).as("est_jaccard"))
-        .filter(col("est_jaccard") >= minEstimate)
-        .distinct()
-    } else {
-      // WIDE signatures (production 64–128 hashes): riding the full
-      // signature through every band copy would shuffle
-      // ~nBands × numHashes values per doc per side — far more bytes
-      // than the narrow (id, band) candidate join plus two
-      // one-row-per-id signature join-backs. Keep the join-back shape
-      // at width.
-      val pairs = lshCandidatePairs(sigsMat, id, numHashes, rowsPerBand)
-      val a = sigsMat.select(col(id).as("doc_a") +:
-        mhCols.map(c => col(c).as(s"__a_$c")): _*)
-      val b = sigsMat.select(col(id).as("doc_b") +:
-        mhCols.map(c => col(c).as(s"__b_$c")): _*)
-      val agree = mhCols.map(c =>
-        when(col(s"__a_$c") === col(s"__b_$c"), 1).otherwise(0))
-        .reduce(_ + _)
-      pairs.join(a, "doc_a").join(b, "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          round(agree.cast("double") / numHashes, 6).as("est_jaccard"))
-        .filter(col("est_jaccard") >= minEstimate)
-    }
+    val agree = mhCols.map(c =>
+      when(col(s"a.$c") === col(s"b.$c"), 1).otherwise(0))
+      .reduce(_ + _)
+    bandSelfJoin(bandedSignatures(Pinned.pin(sigs), id, numHashes,
+        rowsPerBand, "estimatedJaccardPairs", carry = mhCols))
+      .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"),
+        round(agree.cast("double") / numHashes, 6).as("est_jaccard"))
+      .filter(col("est_jaccard") >= minEstimate)
+      .distinct()
   }
 
   /** Incremental LSH: candidate pairs between a NEW batch and an
@@ -317,7 +279,9 @@ object NearDup {
     * corpus NEVER joins itself — per-run work scales with the batch,
     * not the corpus. Pairs are normalized (doc_a < doc_b) and each
     * has at least one new-batch side; pairs internal to the corpus
-    * were already emitted by the run that ingested them. */
+    * were already emitted by the run that ingested them. The join is
+    * `probeJoin`, the one `probeSignatureStore` runs against the
+    * on-disk store. */
   def lshCandidatePairsIncremental(corpusSigs: DataFrame, newSigs: DataFrame,
       id: String, numHashes: Int = 4, rowsPerBand: Int = 2): DataFrame = {
     // same materialize-once treatment as lshCandidatePairs: the batch
@@ -328,15 +292,11 @@ object NearDup {
     // paying two serial checkpoint jobs
     val (newPinned, corpusPinned) = Par.concurrently(newSigs.sparkSession)(
       Pinned.pin(newSigs))(Pinned.pin(corpusSigs))
-    val fresh = bandedSignatures(newPinned, id, numHashes, rowsPerBand,
-      "lshCandidatePairsIncremental")
-    val all = bandedSignatures(corpusPinned, id, numHashes, rowsPerBand,
-      "lshCandidatePairsIncremental").unionByName(fresh)
-    fresh.as("a").join(all.as("b"),
-        col("a.__band") === col("b.__band") && col("a.__id") =!= col("b.__id"))
-      .select(least(col("a.__id"), col("b.__id")).as("doc_a"),
-        greatest(col("a.__id"), col("b.__id")).as("doc_b"))
-      .distinct()
+    probeJoin(
+      bandedSignatures(newPinned, id, numHashes, rowsPerBand,
+        "lshCandidatePairsIncremental"),
+      bandedSignatures(corpusPinned, id, numHashes, rowsPerBand,
+        "lshCandidatePairsIncremental"))
   }
 
   /** Append a batch's BANDED signatures to the on-disk store backing
@@ -374,8 +334,8 @@ object NearDup {
 
   /** Probe the on-disk signature store with a new batch: candidate
     * pairs with at least one new-batch side, among store ∪ batch —
-    * `lshCandidatePairsIncremental` semantics with the corpus side
-    * read partition-pruned from disk. The batch's distinct band
+    * `lshCandidatePairsIncremental`'s `probeJoin` with the corpus
+    * side read partition-pruned from disk. The batch's distinct band
     * buckets (≤ `buckets` ints, driver-bounded by construction) gate
     * the scan via an `isin` partition filter, so the store read is a
     * strict file subset whenever the batch doesn't touch every
@@ -389,18 +349,12 @@ object NearDup {
     graft.io.Sinks.recoverSwap(spark, path)
     val fresh = bandedSignatures(newSigs, id, numHashes, rowsPerBand,
       "probeSignatureStore")
-      .withColumn("__bucket", pmod(xxhash64(col("__band")), lit(buckets.toLong)))
-    val touched = fresh.select(col("__bucket")).distinct()
+    val touched = fresh
+      .select(pmod(xxhash64(col("__band")), lit(buckets.toLong))).distinct()
       .collect().map(_.getLong(0))
-    val store = spark.read.parquet(path)
+    probeJoin(fresh, spark.read.parquet(path)
       .filter(col("band_bucket").isin(touched: _*))
-      .select(col(id).as("__id"), col("band").as("__band"))
-    val all = store.unionByName(fresh.select(col("__id"), col("__band")))
-    fresh.as("a").join(all.as("b"),
-        col("a.__band") === col("b.__band") && col("a.__id") =!= col("b.__id"))
-      .select(least(col("a.__id"), col("b.__id")).as("doc_a"),
-        greatest(col("a.__id"), col("b.__id")).as("doc_b"))
-      .distinct()
+      .select(col(id).as("__id"), col("band").as("__band")))
   }
 
   /** Compact the on-disk signature store: rewrite every `band_bucket`
@@ -589,11 +543,6 @@ object NearDup {
       .select(col("doc_a"), col("doc_b"), round(j, 6).as("jaccard"))
   }
 
-  /** Cosine over two float-array columns — the codegen'd Catalyst
-    * kernel (double accumulation in index order). */
-  def cosine(a: Column, b: Column): Column =
-    graft.vector.Similarity.cosineSim(a, b)
-
   /** Embedding near-dup pairs over a bounded candidate set: all pairs
     * with cosine >= threshold. O(n²) — gate with LSH buckets
     * (vector.Similarity) before calling this at scale; inputs larger
@@ -603,7 +552,7 @@ object NearDup {
     requireBounded(df, "cosineNearDupPairs", maxCandidates)
     val a = df.select(col(id).as("id_a"), vec.as("__va"))
     val b = df.select(col(id).as("id_b"), vec.as("__vb"))
-    val cos = cosine(col("__va"), col("__vb"))
+    val cos = graft.vector.Similarity.cosineSim(col("__va"), col("__vb"))
     a.join(b, col("id_a") < col("id_b"))
       .filter(cos >= threshold)
       .select(col("id_a"), col("id_b"), round(cos, 6).as("cos_sim"))
@@ -922,44 +871,22 @@ object NearDup {
     Pinned.track(labels)
   }
 
-  /** Transitive near-dup application: group candidate pairs into
-    * connected components and keep only each component's min-id
-    * representative — one survivor per duplicate CLUSTER, the policy
-    * large dedup runs (CCNet/RefinedWeb-style) use. Differs from the
-    * greedy `dropNearDuplicates` whenever two pairs meet only at
+  /** Apply component labels as the dedup decision: keep each
+    * component's representative (node == component, the min id), drop
+    * the other members; docs absent from the labels are singletons and
+    * always survive. One anti join against the label table.
+    *
+    * The labels are either one-shot — `connectedComponents(pairs)`,
+    * transitive corpus dedup (CCNet/RefinedWeb-style): one survivor per
+    * duplicate CLUSTER — or PERSISTED (`LabelStore.read`), the
+    * streaming loop's decision view: no pair replay, no CC run (the
+    * labels already encode every merge ever folded in). Differs from
+    * the greedy `dropNearDuplicates` whenever two pairs meet only at
     * their larger id: pairs {(a,c),(b,c)} put a,b,c in one component
     * (a~b holds transitively through c), so this keeps a alone, while
     * greedy keeps both a and b — greedy under-merges clusters whose
     * witnessing pairs were pruned (LSH reports a candidate SAMPLE of
     * each cluster's pairs, not its closure). */
-  def dropNearDuplicatesTransitive(df: DataFrame, id: String,
-      pairs: DataFrame, maxIterations: Int = 20): DataFrame =
-    dropNearDuplicatesFromLabels(df, id,
-      connectedComponents(pairs, maxIterations = maxIterations))
-
-  /** Transitive dedup with a cluster-representative POLICY: instead of
-    * min-id, keep the row maximizing `keepBy` within each duplicate
-    * component (large corpus runs often keep the longest or highest-
-    * quality doc). Ties break to the smaller id so the survivor is
-    * deterministic. Rows untouched by any pair are their own singleton
-    * component and always survive. One extra shuffle vs the min-id
-    * path (the per-component window); the window state is one row per
-    * component member — small, since components are duplicate
-    * clusters. */
-  def dropNearDuplicatesTransitiveBy(df: DataFrame, id: String,
-      pairs: DataFrame, keepBy: Column,
-      maxIterations: Int = 20): DataFrame =
-    dropNearDuplicatesFromLabelsBy(df, id,
-      connectedComponents(pairs, maxIterations = maxIterations), keepBy)
-
-  /** Apply PERSISTED component labels (`LabelStore.read`) as the dedup
-    * decision: keep each component's representative (node ==
-    * component, the min id), drop the other members; docs absent from
-    * the labels are singletons and always survive. The decision-time
-    * counterpart of `dropNearDuplicatesTransitive` for the streaming
-    * loop — one anti join against the label table, no pair replay, no
-    * CC run (the labels already encode every merge ever folded in).
-    */
   def dropNearDuplicatesFromLabels(df: DataFrame, id: String,
       labels: DataFrame): DataFrame = {
     val losers = labels
@@ -968,13 +895,15 @@ object NearDup {
     df.join(losers, Seq(id), "left_anti")
   }
 
-  /** Label-driven dedup with a cluster-representative POLICY: keep the
-    * row maximizing `keepBy` within each labeled component (ties to
-    * the smaller id). Same decision-from-the-store shape as
+  /** Label-driven dedup with a cluster-representative POLICY: instead
+    * of min-id, keep the row maximizing `keepBy` within each labeled
+    * component (large corpus runs often keep the longest or highest-
+    * quality doc); ties break to the smaller id so the survivor is
+    * deterministic. Rows absent from the labels are their own
+    * singleton component and always survive. Same labels as
     * `dropNearDuplicatesFromLabels`, one extra per-component window
     * (window state = component members — small, components are dup
-    * clusters). Also the shared tail of the one-shot
-    * `dropNearDuplicatesTransitiveBy`. */
+    * clusters). */
   def dropNearDuplicatesFromLabelsBy(df: DataFrame, id: String,
       labels: DataFrame, keepBy: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1002,6 +931,23 @@ object NearDup {
   private def hashedWindows(wcol: Column, n: Int): Column =
     transform(sequence(lit(0), size(wcol) - lit(n)), i =>
       xxhash64((0 until n).map(k => element_at(wcol, i + lit(k + 1))): _*))
+
+  /** The repeated-window pass shared by `repeatedWindows` and
+    * `removeRepeatedWindows`: over (id, __w token array) rows with at
+    * least `w` tokens, every stride-1 window occurrence (id, __pos,
+    * __wk = 64-bit window key) whose key occurs in >= 2 DISTINCT
+    * documents — posexplode, countDistinct gate, membership join. */
+  private def repeatedWindowHits(toks: DataFrame, id: String,
+      w: Int): DataFrame = {
+    val wins = toks.filter(size(col("__w")) >= w)
+      .select(col(id), posexplode(hashedWindows(col("__w"), w))
+        .as(Seq("__pos", "__wk")))
+    val rep = wins.groupBy(col("__wk"))
+      .agg(countDistinct(col(id)).as("__docs"))
+      .filter(col("__docs") >= 2)
+      .select(col("__wk"))
+    wins.join(rep, Seq("__wk"))
+  }
 
   /** Cross-document repeated token-window report — the diagnostic
     * behind exact-substring dedup (Lee et al. 2022 "Deduplicating
@@ -1032,15 +978,8 @@ object NearDup {
     require(w >= 2, "repeatedWindows: w must be >= 2")
     // widen once: the window kernel feeds both the doc-frequency agg
     // and the membership join side (guide §2.5 — see Par)
-    val toks = Par.widen(df).select(col(id), tokens(text).as("__w"))
-      .filter(size(col("__w")) >= w)
-    val wins = toks.select(col(id),
-      posexplode(hashedWindows(col("__w"), w)).as(Seq("__pos", "__wk")))
-    val rep = wins.groupBy(col("__wk"))
-      .agg(countDistinct(col(id)).as("__docs"))
-      .filter(col("__docs") >= 2)
-      .select(col("__wk"))
-    wins.join(rep, Seq("__wk"))
+    repeatedWindowHits(Par.widen(df).select(col(id), tokens(text).as("__w")),
+        id, w)
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_rep"),
         min(col("__pos")).cast("long").as("first_pos"))
@@ -1076,14 +1015,7 @@ object NearDup {
     val toks = src.select(col(id), tokens(text).as("__w"))
     val tok = toks.select(col(id),
       posexplode(col("__w")).as(Seq("__p", "__t")))
-    val wins = toks.filter(size(col("__w")) >= w)
-      .select(col(id), posexplode(hashedWindows(col("__w"), w))
-        .as(Seq("__pos", "__wk")))
-    val rep = wins.groupBy(col("__wk"))
-      .agg(countDistinct(col(id)).as("__docs"))
-      .filter(col("__docs") >= 2)
-      .select(col("__wk"))
-    val covered = wins.join(rep, Seq("__wk"))
+    val covered = repeatedWindowHits(toks, id, w)
       .select(col(id),
         explode(sequence(col("__pos"), col("__pos") + lit(w - 1))).as("__p"))
       .distinct()

@@ -459,10 +459,11 @@ object TextAnalysis {
     * engines. Output: (id, n_tokens, mean_word_len, frac_alpha_words,
     * top_word_frac, top_bigram_frac, keep).
     *
-    * Scale shape: one token explode into a (id, word)-keyed map-side-
-    * combining agg, one bigram transform (no self-join) into the same
-    * shape, one per-doc hash agg each, one per-doc join — every term
-    * linear in tokens, no windows, no driver state. */
+    * Scale shape: map-only — the fused `GopherStats` kernel through
+    * `gopherRawMetrics` (one per-doc projection), then a rounding
+    * projection; no explode, no aggregation, no join, no driver
+    * state. The only possible exchange is `Par.widen`'s round-robin
+    * repartition of a single-row-group scan. */
   def gopherReport(df: org.apache.spark.sql.DataFrame, id: String,
       text: Column, minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
       minAlphaFrac: Double = 0.8, maxTopWordFrac: Double = 0.2,

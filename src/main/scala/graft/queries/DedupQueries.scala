@@ -253,8 +253,8 @@ object DedupQueries {
       val base = NearDup.withMutatedCopies(t(s, d, "documents"), "doc_id", "text")
       val sigs = NearDup.minhashSignaturesFused(base, "doc_id", col("text"))
       val pairs = NearDup.lshCandidatePairs(sigs, "doc_id")
-      NearDup.dropNearDuplicatesTransitiveBy(base, "doc_id", pairs,
-          keepBy = length(col("text")))
+      NearDup.dropNearDuplicatesFromLabelsBy(base, "doc_id",
+          NearDup.connectedComponents(pairs), keepBy = length(col("text")))
         .select(col("doc_id")).orderBy(col("doc_id"))
     },
 

@@ -50,16 +50,16 @@ object ScaleSmoke {
 
     for (scale <- Seq(1, 10) if sections("replicate")) {
       val doc = replicate(docs.select("doc_id", "text"), "doc_id", scale, 10000000L)
-      // minhash signature volume (shingle explode → partial agg)
+      // minhash signature volume (fused sha kernel, map-only)
       T(s"minhash_sig x$scale") {
-        NearDup.minhashSignaturesFast(doc, "doc_id", col("text"))
+        NearDup.minhashSignaturesFused(doc, "doc_id", col("text"))
           .write.format("noop").mode("overwrite").save(); 0L
       }
       // LSH candidate pairs: the distinct-pairs volume grows with dup
       // density — replicated copies are mutual near-dups, the worst case
       val base = NearDup.withMutatedCopies(doc, "doc_id", "text")
       T(s"lsh_pairs x$scale") {
-        val sigs = NearDup.minhashSignaturesFast(base, "doc_id", col("text"))
+        val sigs = NearDup.minhashSignaturesFused(base, "doc_id", col("text"))
         val p = NearDup.lshCandidatePairs(sigs, "doc_id")
         p.write.format("noop").mode("overwrite").save(); 0L
       }
@@ -133,8 +133,9 @@ object ScaleSmoke {
       T(s"transitive_dedup x$scale") {
         val base = NearDup.withMutatedCopies(docTagged, "doc_id", "text")
         val pairs = NearDup.lshCandidatePairs(
-          NearDup.minhashSignaturesFast(base, "doc_id", col("text")), "doc_id")
-        NearDup.dropNearDuplicatesTransitive(base, "doc_id", pairs)
+          NearDup.minhashSignaturesFused(base, "doc_id", col("text")), "doc_id")
+        NearDup.dropNearDuplicatesFromLabels(base, "doc_id",
+            NearDup.connectedComponents(pairs))
           .write.format("noop").mode("overwrite").save(); 0L
       }
       // SemDeDup / kNN graph (q70/q79 shape): k GROWS with N so cell

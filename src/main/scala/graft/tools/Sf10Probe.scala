@@ -83,7 +83,8 @@ object Sf10Probe {
         NearDup.connectedComponents(pairs).count()
       }
       T(s"keep_best $tag") {
-        NearDup.dropNearDuplicatesTransitive(base, "doc_id", pairs).count()
+        NearDup.dropNearDuplicatesFromLabels(base, "doc_id",
+          NearDup.connectedComponents(pairs)).count()
       }
       pairs.unpersist()
     }

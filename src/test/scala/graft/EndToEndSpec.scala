@@ -142,8 +142,8 @@ class EndToEndSpec extends AnyFunSuite {
     val oneShotPairs = graft.ops.NearDup.lshCandidatePairs(
       graft.ops.NearDup.minhashSignaturesFused(all, "doc_id", col("text")),
       "doc_id")
-    val expected = graft.ops.NearDup
-      .dropNearDuplicatesTransitive(all, "doc_id", oneShotPairs)
+    val expected = graft.ops.NearDup.dropNearDuplicatesFromLabels(all,
+        "doc_id", graft.ops.NearDup.connectedComponents(oneShotPairs))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == expected && got.nonEmpty && got.size < all.count())
 
@@ -202,8 +202,9 @@ class EndToEndSpec extends AnyFunSuite {
     val survivors = graft.ops.NearDup.dropNearDuplicatesFromLabels(all,
       "doc_id", graft.ops.LabelStore.read(spark, labelStore))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val oneShot = graft.ops.NearDup.dropNearDuplicatesTransitive(all, "doc_id",
-      graft.ops.NearDup.lshCandidatePairs(sigs(all), "doc_id"))
+    val oneShot = graft.ops.NearDup.dropNearDuplicatesFromLabels(all, "doc_id",
+      graft.ops.NearDup.connectedComponents(
+        graft.ops.NearDup.lshCandidatePairs(sigs(all), "doc_id")))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == oneShot && survivors.nonEmpty &&
       survivors.size < all.count())

@@ -162,6 +162,12 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(run1.nonEmpty && run2.nonEmpty)
     assert((corpusPairs ++ run1 ++ run2) == full)
+    // 3) the store probe and the in-memory probe are one join: run1
+    // equals the incremental probe of b1 against the pinned corpus
+    val inMemory1 = graft.ops.NearDup.lshCandidatePairsIncremental(sigs(docs),
+        sigs(b1), "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(run1 == inMemory1)
   }
 
   test("label store: batch merges tile one-shot connected components") {
@@ -448,16 +454,18 @@ class GraphSpec extends AnyFunSuite {
     graft.ops.LabelStore.merge(spark, path,
       pairs.filter(col("doc_a") =!= 1L), buckets = 4)
     val labels = graft.ops.LabelStore.read(spark, path)
+    val oneShot = graft.ops.NearDup.connectedComponents(pairs)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids(graft.ops.NearDup.dropNearDuplicatesFromLabels(docs, "doc_id",
         labels)) ==
-      ids(graft.ops.NearDup.dropNearDuplicatesTransitive(docs, "doc_id", pairs)))
+      ids(graft.ops.NearDup.dropNearDuplicatesFromLabels(docs, "doc_id",
+        oneShot)))
     val byLen = ids(graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(docs,
       "doc_id", labels, length(col("text"))))
     assert(byLen ==
-      ids(graft.ops.NearDup.dropNearDuplicatesTransitiveBy(docs, "doc_id",
-        pairs, length(col("text")))))
+      ids(graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(docs, "doc_id",
+        oneShot, length(col("text")))))
     assert(byLen == Set(2L, 10L, 21L)) // longest per cluster + singleton
   }
 

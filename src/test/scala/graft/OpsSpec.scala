@@ -80,7 +80,7 @@ class OpsSpec extends AnyFunSuite {
     val df = Seq((1L, "the quick brown fox jumps"),
       (2L, "the quick brown fox jumps"),
       (3L, "completely different words entirely here")).toDF("doc_id", "text")
-    val sigs = NearDup.minhashSignatures(df, "doc_id", col("text"))
+    val sigs = NearDup.minhashSignaturesFused(df, "doc_id", col("text"))
       .orderBy("doc_id").collect()
     assert(sigs(0).toSeq.drop(1) == sigs(1).toSeq.drop(1))
     assert(sigs(0).toSeq.drop(1) != sigs(2).toSeq.drop(1))
@@ -92,25 +92,24 @@ class OpsSpec extends AnyFunSuite {
       .filter(col("doc_id") < 30)
     val base = NearDup.withMutatedCopies(docs, "doc_id", "text")
     val pairs = NearDup.lshCandidatePairs(
-      NearDup.minhashSignatures(base, "doc_id", col("text")), "doc_id")
+      NearDup.minhashSignaturesFused(base, "doc_id", col("text")), "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val mutPairs = (0L until 30L).map(i => (i, i + 1000000L)).toSet
     // truncation keeps most shingles: expect the vast majority found
     assert((mutPairs -- pairs).size <= 6, s"missed too many: ${mutPairs -- pairs}")
   }
 
-  test("fast (xxhash64) minhash: same dedup semantics as sha variant") {
-    val df = Seq((1L, "the quick brown fox jumps"),
-      (2L, "the quick brown fox jumps"),
-      (3L, "completely different words entirely here")).toDF("doc_id", "text")
-    val sigs = NearDup.minhashSignaturesFast(df, "doc_id", col("text"))
-      .orderBy("doc_id").collect()
-    assert(sigs(0).toSeq.drop(1) == sigs(1).toSeq.drop(1))
-    assert(sigs(0).toSeq.drop(1) != sigs(2).toSeq.drop(1))
-    val pairs = NearDup.lshCandidatePairs(
-      NearDup.minhashSignaturesFast(df, "doc_id", col("text")), "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.toSeq == Seq((1L, 2L)))
+  test("LSH: a width not divisible by rowsPerBand throws before pinning") {
+    graft.ops.Pinned.releaseAll()
+    val sigs = Seq((1L, "a", "b", "c", "d"), (2L, "a", "b", "c", "e"))
+      .toDF("doc_id", "mh0", "mh1", "mh2", "mh3")
+    intercept[IllegalArgumentException] {
+      NearDup.lshCandidatePairs(sigs, "doc_id", rowsPerBand = 3)
+    }
+    intercept[IllegalArgumentException] {
+      NearDup.estimatedJaccardPairs(sigs, "doc_id", rowsPerBand = 3)
+    }
+    assert(graft.ops.Pinned.trackedCount == 0)
   }
 
   test("dropNearDuplicates removes the mutated copies, keeps originals") {
@@ -119,7 +118,7 @@ class OpsSpec extends AnyFunSuite {
       .filter(col("doc_id") < 20)
     val base = NearDup.withMutatedCopies(docs, "doc_id", "text")
     val pairs = NearDup.lshCandidatePairs(
-      NearDup.minhashSignatures(base, "doc_id", col("text")), "doc_id")
+      NearDup.minhashSignaturesFused(base, "doc_id", col("text")), "doc_id")
     val kept = NearDup.dropNearDuplicates(base, "doc_id", pairs)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val all = base.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -267,17 +266,18 @@ class OpsSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
     // chain {1,2,3,4} collapses to ONE survivor: max quality 0.9 held
     // by 2 and 4, tie broken to the smaller id → 2; singleton 9 stays
-    val keptBy = NearDup.dropNearDuplicatesTransitiveBy(
-        docs, "doc_id", pairs, keepBy = col("quality"))
+    val labels = NearDup.connectedComponents(pairs)
+    val keptBy = NearDup.dropNearDuplicatesFromLabelsBy(
+        docs, "doc_id", labels, keepBy = col("quality"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptBy == Set(2L, 9L))
     // default policy on the same graph keeps min id
-    val keptMin = NearDup.dropNearDuplicatesTransitive(docs, "doc_id", pairs)
+    val keptMin = NearDup.dropNearDuplicatesFromLabels(docs, "doc_id", labels)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptMin == Set(1L, 9L))
     // schema is preserved (policy column retained, no helper columns)
-    val cols = NearDup.dropNearDuplicatesTransitiveBy(
-      docs, "doc_id", pairs, keepBy = col("quality")).columns.toSeq
+    val cols = NearDup.dropNearDuplicatesFromLabelsBy(
+      docs, "doc_id", labels, keepBy = col("quality")).columns.toSeq
     assert(cols == Seq("doc_id", "text", "quality"))
   }
 
@@ -372,7 +372,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("fused MinHashSig expression equals the explode+agg formulation") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val viaAgg = NearDup.minhashSignatures(docs, "doc_id", col("text"))
+    val viaAgg = NearDup.minhashSignaturesComposite(docs, "doc_id", col("text"))
       .orderBy("doc_id").collect().toSeq
     val viaExpr = NearDup.minhashSignaturesFused(docs, "doc_id", col("text"))
       .orderBy("doc_id").collect().toSeq
@@ -382,7 +382,7 @@ class OpsSpec extends AnyFunSuite {
     val crafted = Seq((1L, ""), (2L, "solo"), (3L, "\tA  b\nc "),
       (4L, "UPPER case MiXeD"), (5L, "😀 emoji 😀 emoji pair"))
       .toDF("doc_id", "text")
-    val a = NearDup.minhashSignatures(crafted, "doc_id", col("text"))
+    val a = NearDup.minhashSignaturesComposite(crafted, "doc_id", col("text"))
       .orderBy("doc_id").collect().toSeq
     val e = NearDup.minhashSignaturesFused(crafted, "doc_id", col("text"))
       .orderBy("doc_id").collect().toSeq

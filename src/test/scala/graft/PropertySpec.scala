@@ -48,7 +48,7 @@ class PropertySpec extends AnyFunSuite {
     check(Prop.forAll(Gen.listOfN(12, gen)) { texts =>
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val a = NearDup.minhashSignatures(df, "doc_id", col("text"))
+      val a = NearDup.minhashSignaturesComposite(df, "doc_id", col("text"))
         .orderBy("doc_id").collect().toSeq
       val b = NearDup.minhashSignaturesFused(df, "doc_id", col("text"))
         .orderBy("doc_id").collect().toSeq
@@ -171,8 +171,8 @@ class PropertySpec extends AnyFunSuite {
         val ids = 0L until n
         val want = ids.filter(i => comp.get(i).forall(_ == i)).toSet
         val df = ids.map(i => (i, s"doc$i")).toDF("doc_id", "text")
-        val kept = NearDup.dropNearDuplicatesTransitive(
-            df, "doc_id", pairs.toDF("doc_a", "doc_b"))
+        val kept = NearDup.dropNearDuplicatesFromLabels(df, "doc_id",
+            NearDup.connectedComponents(pairs.toDF("doc_a", "doc_b")))
           .select("doc_id").collect().map(_.getLong(0)).toSet
         kept == want
       }
@@ -1199,10 +1199,10 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: estimatedJaccardPairs == naive band+agreement model, both widths") {
-    // numHashes=4 exercises the narrow signature-riding branch,
-    // numHashes=16 the wide join-back branch — ONE model checks both,
-    // so the hybrid split cannot make the two shapes drift apart.
-    // Tiny hash alphabet forces band collisions and partial agreement.
+    // One shape (signatures ride the band self-join) at two widths:
+    // numHashes=4 is the oracle-checked width, numHashes=16 has eight
+    // bands. Tiny hash alphabet forces band collisions and partial
+    // agreement.
     val hash = Gen.oneOf("aa", "bb", "cc")
     val gen = for {
       numHashes <- Gen.oneOf(4, 16)
