@@ -14,8 +14,7 @@ import org.apache.spark.sql.SparkSession
   * - AQE (on by default in Spark 4; asserted here): runtime re-plan
   *   gives post-shuffle coalescing, dynamic broadcast of
   *   smaller-than-expected sides, and skew-join splitting — the
-  *   mechanisms this engine leans on instead of hand-tuned hints
-  *   (see ops/Skew for the explicit salting fallback).
+  *   mechanisms this engine leans on instead of hand-tuned hints.
   * - `spark.sql.files.maxPartitionBytes` (256 MB): bigger scan splits
   *   than the 128 MB default — parquet decode is cheap relative to
   *   task scheduling at 100 TB file counts; halves the task count of
@@ -76,7 +75,7 @@ object GraftSession {
     * can raise it (256 MB is a sane batch-ETL figure); the 64 MB local
     * default is Spark's own advisory default, NOT a local[32]-only
     * tune — the value never sees the local core count. */
-  def advisoryPartitionBytes: Long =
+  private def advisoryPartitionBytes: Long =
     sys.env.get("GRAFT_ADVISORY_SHUFFLE_MB")
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .filter(_ > 0) // 0/negative would fail session construction (r22)
@@ -85,7 +84,7 @@ object GraftSession {
 
   /** Compile each generated code body once per JVM (class doc, last
     * three bullets). Applied by `tuned` and by the test session. */
-  def compileOnce(b: SparkSession.Builder): SparkSession.Builder =
+  private[graft] def compileOnce(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.cache.maxEntries", 4000)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.useIdInClassName", "false")

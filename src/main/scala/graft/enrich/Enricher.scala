@@ -1,6 +1,5 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Dataset, Encoder}
 import graft.model.Schemas.Segment
 
 /** U1–U4 (SURVEY.md §2.11): the reference's four model-invoking
@@ -11,12 +10,12 @@ import graft.model.Schemas.Segment
   * core never depends on a service, so every pipeline is testable and
   * the oracle stays meaningful.
   *
-  * Execution model (SURVEY §4.1 O4): enrichment runs via
-  * `mapPartitions` with a per-partition instance from a serializable
-  * factory — model/connection init amortizes across a partition, the
-  * way the reference loads Whisper once per process. Errors are
-  * captured per row (dead-letter column), never task failures
-  * (mirrors the reference's try/except-continue, summarize.py:180-186).
+  * Execution model (SURVEY §4.1 O4): the pipeline stages run these
+  * via `mapPartitions` with a per-partition instance from a
+  * serializable factory — model/connection init amortizes across a
+  * partition, the way the reference loads Whisper once per process.
+  * A row whose call throws is skipped, never a task failure (mirrors
+  * the reference's try/except-continue, summarize.py:180-186).
   */
 object Enricher {
 
@@ -26,7 +25,7 @@ object Enricher {
   }
 
   /** U2 — chat/LLM completion (generic string→string adapter). */
-  trait ChatModel extends Serializable {
+  private[graft] trait ChatModel extends Serializable {
     def complete(prompt: String): String
   }
 
@@ -72,7 +71,7 @@ object Enricher {
   /** Deterministic stub LLM: "summarizes" by keeping the first
     * `keep` tokens and appending a content hash — stable, content-
     * sensitive, and obviously-not-a-real-model in outputs. */
-  final class StubChatModel(keep: Int = 8) extends ChatModel {
+  private[graft] final class StubChatModel(keep: Int = 8) extends ChatModel {
     override def complete(prompt: String): String = {
       val toks = Option(prompt).getOrElse("").trim.split("\\s+").take(keep)
       val h = java.security.MessageDigest.getInstance("SHA-256")
@@ -111,45 +110,6 @@ object Enricher {
       (s"title $base", s"content for $base " * 10)
     }
   }
-
-  /** Dead-letter row: result xor error, input key carried through. */
-  final case class Enriched[T](key: String, result: Option[T], error: Option[String])
-
-  /** Enrichment with per-row error capture (the reference's
-    * try/except-continue, summarize.py:180-186): a failing row becomes
-    * an `Enriched(key, None, Some(error))` — never a task failure, so
-    * one poison document can't kill a 100 TB job. Split downstream
-    * with `.filter(_.result.isDefined)` / route errors to a
-    * dead-letter sink. */
-  def enrichPartitionsSafe[I, M, O](ds: Dataset[I], factory: () => M,
-      keyOf: I => String)(f: (M, I) => O)(
-      implicit enc: Encoder[Enriched[O]]): Dataset[Enriched[O]] =
-    ds.mapPartitions { it =>
-      val model = factory()
-      it.map { i =>
-        // key extraction itself may throw on a poison row — capture it
-        // once, outside the enrichment try, with its own fallback
-        val key =
-          try keyOf(i)
-          catch { case scala.util.control.NonFatal(e) => s"<keyOf failed: ${e.getClass.getSimpleName}>" }
-        try Enriched(key, Some(f(model, i)), None)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            Enriched[O](key, None,
-              Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-        }
-      }
-    }(enc)
-
-  /** Run an enrichment over a Dataset with a per-partition instance
-    * (factory invoked once per partition; heavy init amortized) and
-    * per-row error capture. */
-  def enrichPartitions[I, M, O: Encoder](ds: Dataset[I], factory: () => M)(
-      f: (M, I) => O): Dataset[O] =
-    ds.mapPartitions { it =>
-      val model = factory()
-      it.map(i => f(model, i))
-    }(implicitly[Encoder[O]])
 
   /** Per-partition token-bucket throttle (the reference's politeness
     * sleeps, transcribe_council.py:83 / newscrawler.py:434, made

@@ -34,10 +34,6 @@ object Functions {
     when(t === "", lit("Unknown Time")).otherwise(t)
   }
 
-  /** F2 — onclick URL extraction (ref transcribe_council.py:54-58). */
-  def onclickUrl(c: Column): Column =
-    concat(lit("https:"), regexp_extract(c, "window\\.open\\('([^']+)'", 1))
-
   /** F3 — protocol-relative fixup (ref transcribe_council.py:61-62). */
   def fixProtocolRelative(c: Column): Column =
     when(c.startsWith("//"), concat(lit("https:"), c)).otherwise(c)
@@ -67,16 +63,12 @@ object Functions {
   def sha16(c: Column): Column = substring(sha2(c.cast("string"), 256), 1, 16)
 
   /** F9 — lowercase + whitespace normalize (ref newscrawler.py:303). */
-  def normWs(c: Column): Column = regexp_replace(trim(c), "\\s+", " ")
+  private def normWs(c: Column): Column = regexp_replace(trim(c), "\\s+", " ")
   def normText(c: Column): Column = lower(normWs(c))
 
   /** F10 — truncate with ellipsis (ref newscrawler.py:400). */
   def preview(c: Column, n: Int = 200): Column =
     when(length(c) > n, concat(substring(c, 1, n), lit("..."))).otherwise(c)
-
-  /** F11 — filename sanitize (ref newscrawler.py:405-406). */
-  def sanitizeFilename(c: Column, max: Int = 50): Column =
-    substring(rtrim(regexp_replace(c, "[^A-Za-z0-9 _-]", "")), 1, max)
 
   /** F12 — RFC-2822 → unix seconds, null on failure
     * (ref article_vectorize.py:29-42). Matches python email.utils
@@ -93,19 +85,6 @@ object Functions {
 
   /** F13 — timestamp → unix seconds (ref vectorize.py:95). */
   def toUnix(c: Column): Column = unix_timestamp(c)
-
-  /** F14 — current UTC ISO timestamp (ref newscrawler.py:399); takes the
-    * instant as a parameter so tests/oracles stay deterministic. */
-  def isoUtc(c: Column): Column =
-    date_format(c, "yyyy-MM-dd'T'HH:mm:ssXXX")
-
-  /** F15 — date prefix with today fallback (ref newscrawler.py:404).
-    * The reference's `published[:10] if published else today` treats
-    * the EMPTY string as falsy too (real feeds emit published="") —
-    * so both null and '' fall back, not just null. */
-  def datePrefix(c: Column): Column =
-    when(c.isNull || length(c) === 0, current_date().cast("string"))
-      .otherwise(substring(c, 1, 10))
 
   /** F16 — composite id concat (ref vectorize.py:99). */
   def idConcat(cols: Column*): Column = concat_ws(":", cols: _*)
@@ -131,19 +110,4 @@ object Functions {
     * article_vectorize.py:89). */
   def frontmatterBody(doc: Column): Column =
     trim(regexp_extract(doc, "(?s)^---\\r?\\n.*?\\r?\\n---\\r?\\n?(.*)$", 1))
-
-  /** F18 — JSON line parse: from_json with explicit schema. */
-  def jsonLine(c: Column, schema: org.apache.spark.sql.types.StructType): Column =
-    from_json(c, schema)
-
-  /** F19 — id coalesce with positional fallback
-    * (ref article_vectorize.py:249). The positional arm requires an
-    * explicit order column at scale — callers pass one in. */
-  def idCoalesce(id: Column, url: Column, pos: Column): Column =
-    coalesce(id, url, concat(lit("article_"), pos.cast("string")))
-
-  /** F20 — empty-value prune on a metadata map
-    * (ref article_vectorize.py:245). */
-  def pruneEmpty(m: Column): Column =
-    map_filter(m, (_, v) => v.isNotNull && v =!= "")
 }

@@ -63,7 +63,7 @@ case class GopherStats(child: Expression)
     copy(child = newChild)
 }
 
-object GopherStatsKernel {
+private[expr] object GopherStatsKernel {
 
   private def hasLetter(w: String): Boolean = {
     var i = 0

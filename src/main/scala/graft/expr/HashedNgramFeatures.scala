@@ -51,7 +51,7 @@ case class HashedNgramFeatures(child: Expression, buckets: Long)
     copy(child = newChild)
 }
 
-object HashedNgramFeaturesKernel {
+private[expr] object HashedNgramFeaturesKernel {
 
   def compute(v: UTF8String, buckets: Long): ArrayData = {
     // Spark-exact normalization, shared with MinHashSigKernel:

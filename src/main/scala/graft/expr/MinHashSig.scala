@@ -58,7 +58,7 @@ case class MinHashSig(child: Expression, numHashes: Int, shingleSize: Int)
     copy(child = newChild)
 }
 
-object MinHashSigKernel {
+private[expr] object MinHashSigKernel {
 
   private val hexDigits = "0123456789abcdef".toCharArray
 

@@ -52,7 +52,7 @@ case class RepetitionStats(child: Expression)
     copy(child = newChild)
 }
 
-object RepetitionStatsKernel {
+private[expr] object RepetitionStatsKernel {
 
   def compute(v: UTF8String): InternalRow = {
     // Spark-exact normalization + split, shared with SimHashFpKernel

@@ -52,7 +52,7 @@ case class SimHashFp(child: Expression, bits: Int)
     copy(child = newChild)
 }
 
-object SimHashFpKernel {
+private[expr] object SimHashFpKernel {
 
   def compute(v: UTF8String, bits: Int): Long = {
     // Spark-exact normalization, shared with MinHashSigKernel — and

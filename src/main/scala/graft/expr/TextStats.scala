@@ -55,7 +55,7 @@ case class TextStats(child: Expression, stopwords: Seq[String])
     copy(child = newChild)
 }
 
-object TextStatsKernel {
+private[expr] object TextStatsKernel {
 
   /** Java regex \s — six ASCII code points. */
   private def isWs(cp: Int): Boolean =

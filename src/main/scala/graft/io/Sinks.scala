@@ -326,15 +326,15 @@ object Sinks {
       .foreach(s => fs.delete(new Path(path + s), true))
   }
 
-  /** Shared maintenance body for the bucket-partitioned swap-managed
+  /** Shared compaction body for the bucket-partitioned swap-managed
     * stores (signature store, label store): recover an interrupted
-    * swap, optionally anti-join a delete feed on `idCol`, and rewrite
-    * the store with one writer per bucket, leaving ≤1 file per bucket
-    * directory. The bucket count comes from the partition-directory
-    * listing — a driver filesystem call, not an extra full-store scan
-    * action. Throws if no state (nor backup) exists at `path`. */
-  def rewriteBucketed(spark: SparkSession, path: String, bucketCol: String,
-      antiJoin: Option[(DataFrame, String)] = None): Unit = {
+    * swap and rewrite the store with one writer per bucket, leaving
+    * ≤1 file per bucket directory. The bucket count comes from the
+    * partition-directory listing — a driver filesystem call, not an
+    * extra full-store scan action. Throws if no state (nor backup)
+    * exists at `path`. */
+  def rewriteBucketed(spark: SparkSession, path: String,
+      bucketCol: String): Unit = {
     recoverSwap(spark, path)
     recoverBucketSwap(spark, path)
     val fs = new Path(path)
@@ -344,29 +344,10 @@ object Sinks {
         s"rewriteBucketed: no state at $path")
     val buckets = math.max(1, fs.listStatus(new Path(path)).count(s =>
       s.isDirectory && s.getPath.getName.startsWith(bucketCol + "=")))
-    val store = spark.read.parquet(path)
-    val kept = antiJoin match {
-      case Some((ids, idCol)) => store.join(
-        ids.select(org.apache.spark.sql.functions.col(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-      case None => store
-    }
-    overwriteInPlace(
-      kept.repartition(buckets, org.apache.spark.sql.functions.col(bucketCol)),
+    overwriteInPlace(spark.read.parquet(path)
+        .repartition(buckets, org.apache.spark.sql.functions.col(bucketCol)),
       path, partitionBy = Seq(bucketCol))
   }
-
-  /** JSONL sink (ref orient='records' lines=True writes). */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  /** K2/K3/K5 — per-entity files: partition the write by the entity
-    * key so each entity's rows land in its own directory (the
-    * distributed analog of one-file-per-video; a 100 TB write stays
-    * parallel, no driver-side file loop). */
-  def writePerEntity(df: DataFrame, keyCol: String, path: String,
-      format: String = "json"): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(keyCol).format(format).save(path)
 
   /** Compaction: rewrite a parquet state/collection path into
     * ~targetBytes files (incremental MERGE runs accumulate small
@@ -385,16 +366,14 @@ object Sinks {
     * article_vectorize.py:360-363): updates win, survivors carry over,
     * swap in place. Reads the existing state if present. */
   def mergeInto(spark: SparkSession, statePath: String, updates: DataFrame,
-      key: Seq[String], deletions: Option[DataFrame] = None): DataFrame = {
+      key: Seq[String]): DataFrame = {
     val merged = readStateOrBackup(spark, statePath) match {
       case Some(state) => Dedup.mergeById(state, updates, key)
       case None => updates
     }
-    // CDC deletions ride the same single rewrite as the upserts
-    val kept = deletions.fold(merged)(d => merged.join(d, key, "left_anti"))
     // overwriteInPlace materializes into staging BEFORE swapping, so
     // the plan still reads the old state files while executing
-    overwriteInPlace(kept, statePath)
+    overwriteInPlace(merged, statePath)
     spark.read.parquet(statePath)
   }
 }

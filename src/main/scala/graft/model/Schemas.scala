@@ -1,11 +1,7 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
-/** Typed row models + explicit StructTypes for the reference's on-disk
-  * formats (SURVEY.md §1.2, FIXTURES.md §A). Explicit schemas — never
-  * inference — so reads are deterministic and pruning-friendly at scale
-  * (a schema-inferred JSON read is a full extra pass over 100 TB).
+/** Typed row models for the reference's on-disk formats (SURVEY.md
+  * §1.2, FIXTURES.md §A).
   */
 object Schemas {
 
@@ -20,16 +16,6 @@ object Schemas {
       minutes: Option[String],
       box_link: Option[String])
 
-  val meetingSchema: StructType = StructType(Seq(
-    StructField("title", StringType),
-    StructField("date", TimestampType),
-    StructField("time", StringType),
-    StructField("video_page", StringType),
-    StructField("video", StringType),
-    StructField("agenda", StringType),
-    StructField("minutes", StringType),
-    StructField("box_link", StringType)))
-
   /** Whisper transcript segment (ref transcribe_council.py:89; fields
     * consumed downstream per summarize.py:23-24, 143-154). */
   case class Segment(
@@ -39,64 +25,4 @@ object Schemas {
       text: String,
       no_speech_prob: Double,
       file: String)
-
-  val segmentSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("start", DoubleType),
-    StructField("end", DoubleType),
-    StructField("text", StringType),
-    StructField("no_speech_prob", DoubleType)))
-
-  /** .summary chunk row (ref summarize.py:140-156). */
-  case class SummaryChunk(
-      summary: String,
-      quotes: Seq[String],
-      names: Seq[String],
-      start_time: Double,
-      end_time: Double,
-      start_id: Long,
-      end_id: Long,
-      file: String)
-
-  val summarySchema: StructType = StructType(Seq(
-    StructField("summary", StringType),
-    StructField("quotes", ArrayType(StringType)),
-    StructField("names", ArrayType(StringType)),
-    StructField("start_time", DoubleType),
-    StructField("end_time", DoubleType),
-    StructField("start_id", LongType),
-    StructField("end_id", LongType)))
-
-  /** articles.json record (ref newscrawler.py:393-401). */
-  case class Article(
-      id: String,
-      source: String,
-      url: String,
-      title: String,
-      published: Option[String],
-      saved_at: Option[String],
-      content_preview: Option[String])
-
-  val articleSchema: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("source", StringType),
-    StructField("url", StringType),
-    StructField("title", StringType),
-    StructField("published", StringType),
-    StructField("saved_at", StringType),
-    StructField("content_preview", StringType)))
-
-  /** Vector-collection row (ref vectorize.py:94-99: id, document,
-    * flat metadata, 384-dim normalized embedding). */
-  case class VectorDoc(
-      id: String,
-      document: String,
-      metadata: Map[String, String],
-      embedding: Array[Float])
-
-  val vectorDocSchema: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("document", StringType),
-    StructField("metadata", MapType(StringType, StringType)),
-    StructField("embedding", ArrayType(FloatType))))
 }

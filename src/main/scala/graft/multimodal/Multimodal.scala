@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal columns for training-data pipelines: image/audio/video
-  * as opaque `binary` payloads with typed metadata. The decode /
-  * feature-extract step is a clearly-marked STUB (no media libs in
+  * as opaque `binary` payloads with typed metadata. The decode
+  * step is a clearly-marked STUB (no media libs in
   * this environment) — but the Spark-side plumbing is real: schema,
   * batch-shaped partition execution, deterministic outputs, frame
   * explosion. A real deployment swaps `MediaDecoder` for an adapter
@@ -56,39 +56,6 @@ object Multimodal {
         Row.fromSeq(row.toSeq :+ Row(f, w, h, ms))
       }
     }(enc)
-  }
-
-  /** STUB resize: real deployments call their image lib here; the stub
-    * rewrites the metadata deterministically (aspect-preserving fit
-    * into maxDim) so downstream layout logic is testable. */
-  def resizeMeta(meta: org.apache.spark.sql.Column, maxDim: Int)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val w = meta.getField("width")
-    val h = meta.getField("height")
-    val scale = lit(maxDim) / greatest(w, h).cast("double")
-    val clamp = when(scale < 1.0, scale).otherwise(lit(1.0))
-    struct(
-      meta.getField("format").as("format"),
-      floor(w * clamp).cast("int").as("width"),
-      floor(h * clamp).cast("int").as("height"),
-      meta.getField("duration_ms").as("duration_ms"))
-  }
-
-  /** STUB feature extraction: payload bytes → deterministic embedding
-    * (feature-hash over the payload digest). Real deployments swap in
-    * a vision/audio encoder behind the same signature; partition
-    * execution and schema stay identical. */
-  def withFeatures(df: DataFrame, payloadCol: String, dim: Int = 64,
-      as: String = "features"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val embedder = new graft.vector.HashEmbedder(dim)
-    val f = udf { (payload: Array[Byte]) =>
-      val d = graft.expr.Sha.sha256()
-        .digest(if (payload == null) Array.emptyByteArray else payload)
-      embedder.embed(d.map("%02x".format(_)).mkString(" "))
-    }
-    df.withColumn(as, f(col(payloadCol)))
   }
 
   /** Frame sampling: one output row per sampled frame index — the

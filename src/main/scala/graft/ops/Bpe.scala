@@ -29,12 +29,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: the histogram is ONE shuffle with map-side combine —
   * the only corpus-sized stage at any SF; truncation bounds everything
   * after it by construction (topM × max word length, like
-  * `Ivf.seedCentroids`' documented collect cap). Training itself is
-  * either a driver loop over that bounded array (`trainMerges`) or,
-  * when the histogram must stay distributed, `trainMergesDistributed`:
-  * per step one bounded-size pair-count aggregation + a 1-row collect,
-  * with the token state recomputed map-side from the immutable word
-  * column each step (no iterative lineage growth). Applying the
+  * `Ivf.seedCentroids`' documented collect cap). Training itself is a
+  * driver loop over that bounded array (`trainMerges`). Applying the
   * learned merges to a corpus is map-only against a broadcast of
   * ≤ numMerges string pairs. Corpus-level token statistics (q158/q159)
   * are computed from histograms joined to the per-word tokenization —
@@ -68,8 +64,8 @@ object Bpe {
     * and DuckDB's ORDER BY both implement. Java String.compareTo is
     * UTF-16 code-UNIT order, which disagrees above the BMP (an emoji
     * sorts below U+FFFD in UTF-16 but above it in UTF-8), so the
-    * driver trainer's tie-break must not use it: the distributed
-    * trainer and the oracle would pick the other pair. */
+    * driver trainer's tie-break must not use it: the oracle would
+    * pick the other pair. */
   private def utf8Less(a: String, b: String): Boolean =
     java.util.Arrays.compareUnsigned(
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -79,7 +75,7 @@ object Bpe {
     * most frequent words (count desc, word asc). One shuffle,
     * map-side combined; the TakeOrdered limit keeps the result
     * driver-safe at any corpus size. */
-  def wordHistogram(df: DataFrame, textCol: String,
+  private[graft] def wordHistogram(df: DataFrame, textCol: String,
       topM: Int = DefaultTopM): DataFrame =
     df.select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
       .filter(col("word") =!= "")
@@ -94,7 +90,7 @@ object Bpe {
 
   /** Greedy left-to-right single-merge application: replace every
     * non-overlapping adjacent (left, right) in token order. */
-  def mergeOnce(toks: IndexedSeq[String], left: String,
+  private[graft] def mergeOnce(toks: IndexedSeq[String], left: String,
       right: String): IndexedSeq[String] = {
     val out = Vector.newBuilder[String]
     var i = 0
@@ -109,7 +105,7 @@ object Bpe {
 
   /** Apply learned merges in order to one word. Deterministic for any
     * word, seen in training or not. */
-  def tokenizeWord(word: String,
+  private[graft] def tokenizeWord(word: String,
       merges: Seq[(String, String)]): IndexedSeq[String] = {
     var toks: IndexedSeq[String] = charTokens(word)
     merges.foreach { case (l, r) =>
@@ -122,7 +118,7 @@ object Bpe {
   /** Driver-side training over a bounded (word, count) histogram —
     * O(topM · maxWordLen) per step. Stops early when no pair remains
     * (all words reduced to single tokens). */
-  def trainMerges(hist: Seq[(String, Long)], numMerges: Int): Seq[Merge] = {
+  private[graft] def trainMerges(hist: Seq[(String, Long)], numMerges: Int): Seq[Merge] = {
     var state: Array[IndexedSeq[String]] =
       hist.map { case (w, _) => charTokens(w) }.toArray
     val cnt = hist.map(_._2).toArray
@@ -145,7 +141,7 @@ object Bpe {
       if (pairs.isEmpty) done = true
       else {
         // (count desc, left asc, right asc) in UTF-8 BINARY order —
-        // the oracle's ORDER BY and the distributed trainer's orderBy
+        // the oracle's ORDER BY
         var bl: String = null; var br: String = null; var bc = 0L
         pairs.foreach { case ((pl, pr), pc) =>
           val better = bl == null || pc > bc || (pc == bc &&
@@ -163,53 +159,6 @@ object Bpe {
       }
     }
     merges.result()
-  }
-
-  /** Distributed trainer — the form for when even the truncated
-    * histogram should stay off the driver (topM raised into the
-    * millions). Per step: recompute token state map-side from the
-    * immutable word column (lineage stays one map deep), aggregate
-    * pair counts (rows bounded by Σ word length over the histogram),
-    * collect exactly ONE row. Produces bit-identical merges to
-    * `trainMerges` (BpeSpec pins it). */
-  def trainMergesDistributed(histDf: DataFrame, numMerges: Int): Seq[Merge] = {
-    val spark = histDf.sparkSession
-    val hist = histDf.select(col("word"), col("cnt").cast("long"))
-      .localCheckpoint(true) // reused numMerges times: cut to blocks
-    try {
-    val merges = Seq.newBuilder[Merge]
-    var learned = Vector.empty[(String, String)]
-    var step = 1
-    var done = false
-    while (step <= numMerges && !done) {
-      val cur = learned
-      val tokUdf = udf((w: String) => tokenizeWord(w, cur))
-      val best = hist
-        .select(col("cnt"), tokUdf(col("word")).as("toks"))
-        // single-token words emit no pairs — and Spark's
-        // sequence(1, 0) DESCENDS rather than returning empty, so the
-        // guard must come before the transform, not inside it
-        .filter(size(col("toks")) > 1)
-        .select(col("cnt"), explode(expr(
-          "transform(sequence(1, size(toks) - 1), i -> struct(toks[i-1] AS l, toks[i] AS r))"))
-          .as("pr"))
-        .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
-        .agg(sum("cnt").as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val row = best.head
-        val (l, r, c) = (row.getString(0), row.getString(1), row.getLong(2))
-        merges += Merge(step, l, r, c)
-        learned = learned :+ ((l, r))
-        step += 1
-      }
-    }
-    merges.result()
-    // checkpoint blocks must not outlive a THROWING train either — a
-    // long-lived session retrying failed fits would accumulate them
-    } finally Pinned.free(hist)
   }
 
   /** UNtruncated (word, cnt) — the BPE sufficient statistic. Unlike
@@ -231,7 +180,7 @@ object Bpe {
   /** Fit-time truncation of a (possibly merged) histogram: the same
     * deterministic (count desc, word asc) top-M rule wordHistogram
     * applies inline. */
-  def truncateHistogram(histDf: DataFrame, topM: Int = DefaultTopM): DataFrame =
+  private def truncateHistogram(histDf: DataFrame, topM: Int = DefaultTopM): DataFrame =
     histDf.orderBy(col("cnt").desc, col("word")).limit(topM)
 
   /** Train from a stored/merged histogram: truncate → bounded collect
@@ -245,33 +194,6 @@ object Bpe {
       .map(r => (r.getString(0), r.getLong(1)))
     trainMerges(scala.collection.immutable.ArraySeq.unsafeWrapArray(hist),
       numMerges)
-  }
-
-  /** Fold a batch into a persisted histogram store (K1 staging swap,
-    * crash-recoverable — the Pca.updateMomentsStore idiom). The store
-    * is vocab-sized: each fold costs one count pass over the BATCH
-    * plus a rewrite of the vocab table, never a corpus re-read. An
-    * empty batch is a no-op. */
-  def updateHistogramStore(spark: SparkSession, storePath: String,
-      batch: DataFrame, textCol: String): Unit = {
-    graft.io.Sinks.recoverSwap(spark, storePath)
-    // cheap batch-level null probe first; then the empty-HISTOGRAM
-    // no-op (an all-whitespace batch contributes nothing and must not
-    // rewrite the whole vocab store) checked against a CHECKPOINTED
-    // histogram so the aggregation executes exactly once — isEmpty
-    // and the merged write both read the materialized blocks
-    if (batch.where(col(textCol).isNotNull).isEmpty) return
-    val batchH = wordHistogramStats(batch, textCol).localCheckpoint(true)
-    try {
-      if (batchH.isEmpty) return
-      val fs = new org.apache.hadoop.fs.Path(storePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val merged =
-        if (fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-          mergeHistograms(spark.read.parquet(storePath), batchH)
-        else batchH
-      graft.io.Sinks.overwriteInPlace(merged, storePath)
-    } finally Pinned.free(batchH)
   }
 
   /** Fit on a corpus, returning BOTH the collected histogram and the
@@ -323,7 +245,7 @@ object Bpe {
   }
 
   /** Persist the learned merge table as an on-disk store (K1 staging
-    * swap, crash-recoverable — the `updateHistogramStore` idiom). The
+    * swap, crash-recoverable). The
     * table is numMerges rows, so the write is trivially bounded; the
     * point is restartability: a tokenize job (q162's pack composite)
     * can load the vocab a training run produced yesterday instead of
@@ -358,39 +280,5 @@ object Bpe {
       merges: Seq[(String, String)]): DataFrame = {
     val tokUdf = udf((w: String) => tokenizeWord(w, merges))
     histDf.withColumn("toks", tokUdf(col("word")))
-  }
-
-  /** Corpus tokenization — doc id + token array, map-only at any
-    * corpus size (the merges are a broadcast-sized closure constant;
-    * no shuffle, no join). For token STATISTICS prefer the histogram
-    * path (tokenizeHistogram) — this exists for downstream per-doc
-    * consumers (packing, fertility-per-doc).
-    *
-    * Words repeat heavily in natural corpora, so the per-word merge
-    * replay is memoized in a per-task map (the closure deserializes
-    * fresh per task — single-writer, no races), capped so an
-    * adversarial vocabulary degrades to recompute instead of OOM.
-    * Case-folding happens OUTSIDE the udf via Spark's own
-    * `lower(trim(...))` — the identical function the histogram side
-    * applies, so the two paths cannot diverge on locale-sensitive
-    * mappings (JVM String.toLowerCase is locale-dependent, and
-    * Spark's own non-ASCII slow path has its own rules: matching them
-    * by construction beats matching them by argument). */
-  def tokenize(df: DataFrame, textCol: String,
-      merges: Seq[(String, String)], as: String = "bpe_tokens"): DataFrame = {
-    // created OUTSIDE the lambda: serialized empty with the closure,
-    // deserialized once per task — so the memo spans all of a task's
-    // rows, not just one
-    val memo = new scala.collection.mutable.HashMap[String, IndexedSeq[String]]
-    val tokUdf = udf { (lowered: String) =>
-      if (lowered == null) null
-      else lowered.split("\\s+")
-        .toIndexedSeq.filter(_.nonEmpty).flatMap { w =>
-          if (memo.size < (1 << 20))
-            memo.getOrElseUpdate(w, tokenizeWord(w, merges))
-          else memo.getOrElse(w, tokenizeWord(w, merges))
-        }
-    }
-    df.withColumn(as, tokUdf(lower(trim(col(textCol)))))
   }
 }

@@ -57,13 +57,9 @@ object C4Clean {
   private def keptLines(text: Column, minLineWords: Int): Column =
     filter(split(text, "\n"), l => lineKept(l, minLineWords))
 
-  /** The line-cleaned text column: kept lines re-joined with \n. */
-  def cleanedText(text: Column, minLineWords: Int = 5): Column =
-    array_join(keptLines(text, minLineWords), "\n")
-
   /** Sentence-count proxy shared with the oracle: occurrences of
     * . ! or ? in the (cleaned) text. */
-  def sentenceCount(text: Column): Column =
+  private def sentenceCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[.!?]"), lit(0)))
 
   /** The P4 bad-word predicate — defined ONCE for the page gate and

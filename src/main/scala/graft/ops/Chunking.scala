@@ -19,7 +19,7 @@ object Chunking {
   /** W1 — assign `chunk_id` = consecutive windows of `size` rows per
     * `partKey`, ordered by `orderCol` (ref summarize.py:110-118:
     * `range(0, len(jsons), 100)`). */
-  def assignChunks(df: DataFrame, partKey: Seq[Column], orderCol: Column,
+  private def assignChunks(df: DataFrame, partKey: Seq[Column], orderCol: Column,
       size: Int = 100, as: String = "chunk_id"): DataFrame = {
     val w = Window.partitionBy(partKey: _*).orderBy(orderCol)
     df.withColumn(as, floor((row_number().over(w) - lit(1)) / lit(size)))
@@ -35,7 +35,7 @@ object Chunking {
     * `when(keep, struct)` implements the filter; array_sort on
     * (order, text) structs restores order inside each group.
     */
-  def orderedConcat(orderCol: Column, textCol: Column, keep: Column = lit(true),
+  private[graft] def orderedConcat(orderCol: Column, textCol: Column, keep: Column = lit(true),
       sep: String = " "): Column =
     array_join(
       transform(

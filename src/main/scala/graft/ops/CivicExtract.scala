@@ -35,10 +35,4 @@ object CivicExtract {
   /** Double-quoted spans (FocusedSummary's quotes output). */
   def quotedSpans(text: Column): Column =
     regexp_extract_all(text, lit("\"([^\"]{2,200})\""), lit(1))
-
-  /** Capitalized-run proper-name candidates (ExtractProperNames's
-    * deterministic core; ≥2 words to cut sentence-initial noise). */
-  def properNameCandidates(text: Column): Column =
-    array_distinct(regexp_extract_all(text,
-      lit("\\b[A-Z][a-z]+(?:\\s+[A-Z][a-z]+)+\\b"), lit(0)))
 }

@@ -7,9 +7,7 @@ import org.apache.spark.sql.functions._
   * current snapshot of a document table, classify every id as
   * added / removed / changed / unchanged — the audit report every
   * training-data refresh needs before retraining ("what actually
-  * moved?"), and the driver of selective recompute (the embedding
-  * analog is `pipeline/IncrementalEmbed`; this is the corpus-level
-  * generalization).
+  * moved?"), and the driver of selective recompute.
   *
   * Scale shape: content equality is decided on `sha16(content)` —
   * both snapshots project to (id, 16-hex digest, group key) BEFORE
@@ -23,7 +21,7 @@ object CorpusDiff {
   /** Per-id diff: (id, status, group) where `group` is `by` coalesced
     * across the two snapshots (changed/removed report the OLD side's
     * group; added has only the new side). */
-  def diff(oldDf: DataFrame, newDf: DataFrame, id: String,
+  private[graft] def diff(oldDf: DataFrame, newDf: DataFrame, id: String,
       content: Column, by: Column): DataFrame = {
     val o = oldDf.select(col(id),
       graft.expr.Functions.sha16(content).as("__oh"), by.as("__ob"))

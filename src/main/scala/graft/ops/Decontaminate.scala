@@ -139,15 +139,4 @@ object Decontaminate {
       .filter(cos >= threshold)
       .select(col("train_id"), col("test_id"), round(cos, 6).as("cos_sim"))
   }
-
-  /** Drop contaminated documents outright (anti join on the report).
-    * `minShared` tunes aggressiveness: 1 = drop on any overlap. */
-  def decontaminate(corpus: DataFrame, id: String, text: Column,
-      benchmark: DataFrame, benchText: Column, n: Int = 3,
-      minShared: Long = 1L): DataFrame = {
-    val flagged = contaminationReport(corpus, id, text, benchmark, benchText, n)
-      .filter(col("n_shared") >= minShared)
-      .select(col(id))
-    corpus.join(flagged, Seq(id), "left_anti")
-  }
 }

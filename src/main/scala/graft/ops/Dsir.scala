@@ -78,7 +78,7 @@ object Dsir {
     * MinHashSig pattern); bit-equivalence to the Column composite
     * below is property-pinned, and q92's DuckDB oracle re-derives
     * the same buckets independently. */
-  def hashedNgramFeatures(text: Column, buckets: Int): Column = {
+  private[graft] def hashedNgramFeatures(text: Column, buckets: Int): Column = {
     import org.apache.spark.sql.graftshim.ColumnBridge
     ColumnBridge.column(graft.expr.HashedNgramFeatures(
       ColumnBridge.expression(text), buckets.toLong))

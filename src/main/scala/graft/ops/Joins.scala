@@ -35,14 +35,4 @@ object Joins {
     urls.withColumn("__base", Functions.basename(col(urlCol)))
       .join(broadcast(listing), col("__base") === col(nameCol), joinType)
       .drop("__base")
-
-  /** J3 literal form — `haystack.contains(needle)` theta join. Plans
-    * as a broadcast nested-loop join: O(|probe|·|build|) predicate
-    * evaluations. Correct, but ONLY for genuinely small build sides
-    * where no equi-key can be derived; prefer `derivedKeyJoin`
-    * (SURVEY §7.5.4). */
-  def containsThetaJoin(probe: DataFrame, build: DataFrame,
-      haystack: Column, needle: Column,
-      joinType: String = "inner"): DataFrame =
-    probe.join(broadcast(build), haystack.contains(needle), joinType)
 }

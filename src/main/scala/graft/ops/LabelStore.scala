@@ -247,32 +247,6 @@ object LabelStore {
   def compact(spark: SparkSession, path: String): Unit =
     graft.io.Sinks.rewriteBucketed(spark, path, "comp_bucket")
 
-  /** RETENTION: drop the label rows of documents that left the
-    * corpus. Labels are cluster NAMES, not pointers that must resolve
-    * — a surviving member may keep a label equal to a departed
-    * document's id, and every decision op still works (keep iff
-    * node == component for `FromLabels`; the policy window groups by
-    * the label VALUE for `FromLabelsBy`), so deleting departed rows
-    * never rewires anyone else's label (spec-asserted). What pruning
-    * deliberately does NOT do is re-split components bridged only
-    * through departed docs — connectivity evidence is consumed at
-    * merge time, as in any union-find; a true un-merge would need the
-    * pairs log replayed, which the store exists to avoid. Retention
-    * story: rows live while their document can still be a dedup
-    * SURVIVOR or needs a drop decision; prune on the same
-    * delete/expiry feed as `NearDup.pruneSignatureStore` (and compact
-    * on the same cadence — both are one full-store rewrite behind the
-    * K1 swap). One sharp edge: a departed id can REAPPEAR as a node
-    * row after a later merge touches its component (its id is still a
-    * label value, so it is an endpoint of the star subgraph the merge
-    * re-converges). That row is inert — no signature remains to pair
-    * against it — so pruning is periodic feed-driven cleanup, not a
-    * one-shot guarantee. */
-  def prune(spark: SparkSession, path: String,
-      removedIds: DataFrame, idCol: String): Unit =
-    graft.io.Sinks.rewriteBucketed(spark, path, "comp_bucket",
-      antiJoin = Some((removedIds.select(col(idCol).as("node")), "node")))
-
   /** The current labels: (node, component), crash-recovering through
     * the K1 backup like any swap-managed state — and rolling back an
     * interrupted bucket swap first, so a reader never sees a

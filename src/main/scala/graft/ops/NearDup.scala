@@ -376,22 +376,6 @@ object NearDup {
       path: String): Unit =
     graft.io.Sinks.rewriteBucketed(spark, path, "band_bucket")
 
-  /** RETENTION for the signature store: delete the rows of documents
-    * that left the corpus. The store is a SET of per-document band
-    * rows, so pruning by id is exactly equivalent to a store that
-    * never ingested those documents (spec-asserted probe
-    * equivalence) — signatures carry no cross-document state, unlike
-    * the label store's component structure. The retention story is
-    * therefore: rows live as long as their document is an eligible
-    * dedup target; a delete/expiry feed drives `pruneSignatureStore`;
-    * `compactSignatureStore` (same full-store rewrite cost — run them
-    * together) bounds the file count between prunes. Anti join on the
-    * id, one writer per bucket, K1 staging swap. */
-  def pruneSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, removedIds: DataFrame, id: String): Unit =
-    graft.io.Sinks.rewriteBucketed(spark, path, "band_bucket",
-      antiJoin = Some((removedIds.select(col(id)), id)))
-
   /** SimHash over the token multiset, `bits` wide (16 or 64). Word
     * hash = first bits/4 sha256 nibbles (nibble 1 most significant);
     * each bit votes ±1 across the document's words; bit set iff the
@@ -557,15 +541,6 @@ object NearDup {
       .filter(cos >= threshold)
       .select(col("id_a"), col("id_b"), round(cos, 6).as("cos_sim"))
   }
-
-  /** Apply candidate pairs as a dedup: drop every row that appears as
-    * the LARGER id of any pair (keep-min-id policy). Greedy rather
-    * than connected-components: for chains a~b~c it keeps a and drops
-    * b,c — the standard corpus-dedup policy (transitive near-dup is
-    * treated as dup). One anti join on the id. */
-  def dropNearDuplicates(df: DataFrame, id: String,
-      pairs: DataFrame): DataFrame =
-    df.join(pairs.select(col("doc_b").as(id)).distinct(), Seq(id), "left_anti")
 
   /** Test hook: observes each CC round's (iteration, pre-round delta
     * size, shape — true = broadcast-delta) so a spec can assert the
@@ -871,39 +846,21 @@ object NearDup {
     Pinned.track(labels)
   }
 
-  /** Apply component labels as the dedup decision: keep each
-    * component's representative (node == component, the min id), drop
-    * the other members; docs absent from the labels are singletons and
-    * always survive. One anti join against the label table.
+  /** Apply component labels as the dedup decision, keeping the row
+    * that maximizes `keepBy` within each labeled component (large
+    * corpus runs often keep the longest or highest-quality doc); ties
+    * break to the smaller id so the survivor is deterministic. Rows
+    * absent from the labels are their own singleton component and
+    * always survive. `keepBy = -col(id)` keeps each component's
+    * min-id member present in `df`.
     *
     * The labels are either one-shot — `connectedComponents(pairs)`,
     * transitive corpus dedup (CCNet/RefinedWeb-style): one survivor per
     * duplicate CLUSTER — or PERSISTED (`LabelStore.read`), the
     * streaming loop's decision view: no pair replay, no CC run (the
-    * labels already encode every merge ever folded in). Differs from
-    * the greedy `dropNearDuplicates` whenever two pairs meet only at
-    * their larger id: pairs {(a,c),(b,c)} put a,b,c in one component
-    * (a~b holds transitively through c), so this keeps a alone, while
-    * greedy keeps both a and b — greedy under-merges clusters whose
-    * witnessing pairs were pruned (LSH reports a candidate SAMPLE of
-    * each cluster's pairs, not its closure). */
-  def dropNearDuplicatesFromLabels(df: DataFrame, id: String,
-      labels: DataFrame): DataFrame = {
-    val losers = labels
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(id))
-    df.join(losers, Seq(id), "left_anti")
-  }
-
-  /** Label-driven dedup with a cluster-representative POLICY: instead
-    * of min-id, keep the row maximizing `keepBy` within each labeled
-    * component (large corpus runs often keep the longest or highest-
-    * quality doc); ties break to the smaller id so the survivor is
-    * deterministic. Rows absent from the labels are their own
-    * singleton component and always survive. Same labels as
-    * `dropNearDuplicatesFromLabels`, one extra per-component window
-    * (window state = component members — small, components are dup
-    * clusters). */
+    * labels already encode every merge ever folded in). One
+    * per-component window (window state = component members — small,
+    * components are dup clusters). */
   def dropNearDuplicatesFromLabelsBy(df: DataFrame, id: String,
       labels: DataFrame, keepBy: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window

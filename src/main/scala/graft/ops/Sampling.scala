@@ -16,12 +16,6 @@ object Sampling {
   def hashBucket(key: Column): Column =
     conv(substring(sha2(key.cast("string"), 256), 1, 4), 16, 10).cast("long")
 
-  /** Keep ~fraction of rows, deterministically by key. */
-  def deterministicSample(df: DataFrame, key: Column, fraction: Double): DataFrame = {
-    require(fraction >= 0 && fraction <= 1)
-    df.filter(hashBucket(key) < (fraction * 65536).toLong)
-  }
-
   /** Deterministic per-group quota sampling (source balancing): keep
     * at most `quota` rows per group, selected by sha256-hash order of
     * the key — a stable uniform shuffle, so the kept subset is

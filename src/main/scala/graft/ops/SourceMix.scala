@@ -77,8 +77,8 @@ object SourceMix {
     * independent of partitioning. */
   def resampleByWeight(df: DataFrame, key: Column, weight: Column,
       copyCol: String = "copy"): DataFrame = {
-    // SALTED hash: the unsalted bucket is the same one splitLabel /
-    // deterministicSample use, so "resample half" on the same key
+    // SALTED hash: the unsalted bucket is the same one splitLabel
+    // uses, so "resample half" on the same key
     // would keep exactly a hash-space prefix — 100% of one split and
     // 0% of another — instead of halving each (the gumbelTopK salt
     // rationale)

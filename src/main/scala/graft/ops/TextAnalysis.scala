@@ -53,11 +53,11 @@ object TextAnalysis {
     df.filter(langId(text).isin(keep: _*))
 
   /** Punctuation/symbol count. */
-  def punctCount(text: Column): Column =
+  private[graft] def punctCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[^A-Za-z0-9\\s]"), lit(0))).cast("long")
 
   /** Non-whitespace character count. */
-  def charCountNoWs(text: Column): Column =
+  private[graft] def charCountNoWs(text: Column): Column =
     length(regexp_replace(text, "\\s", "")).cast("long")
 
   /** Quality bucket from token count + stopword evidence (the
@@ -154,11 +154,11 @@ object TextAnalysis {
     * array-producing expression inlined into the shingle lambda
     * re-evaluates per element access (O(n²) regex splits per row; this
     * exact mistake made the repetition query 15× slower). */
-  def dupTokenFrac(w: Column): Column =
+  private[graft] def dupTokenFrac(w: Column): Column =
     when(size(w) <= 0, lit(0.0))
       .otherwise(lit(1.0) - size(array_distinct(w)) / size(w).cast("double"))
 
-  def dupBigramFrac(w: Column): Column = {
+  private[graft] def dupBigramFrac(w: Column): Column = {
     val g = NearDup.shinglesFromTokens(w, 2)
     // guard on the TOKEN count (CaseWhen is lazy per row): under 2
     // tokens the shingle sequence(0, size-2) would be degenerate —

@@ -214,7 +214,7 @@ object TextClassifier {
     * quality-filter class counts (2–20: langid keep/drop, domain
     * buckets).
     */
-  def scoreNaiveBayes(held: DataFrame, idCol: Column, text: Column,
+  private[graft] def scoreNaiveBayes(held: DataFrame, idCol: Column, text: Column,
       modelIn: DataFrame): DataFrame = {
     // the model is materialized once so its TWO consumers — the
     // broadcast class table and the (label, term) join probe — read

@@ -6,7 +6,7 @@ import graft.enrich.Enricher
 import graft.expr.Functions
 import graft.model.Schemas
 import graft.ops.{Chunking, Dedup, Joins, Relevance}
-import graft.vector.{Embedder, Similarity}
+import graft.vector.Embedder
 
 /** The reference's six-stage pipeline (SURVEY.md §0, §3) composed from
   * the engine's operators. Each stage is a pure DataFrame→DataFrame
@@ -191,9 +191,4 @@ object CouncilPipeline {
           lit("end_id"), col("end_id").cast("string")).as("metadata"),
         col("embedding"))
   }
-
-  /** Query side of the vector collection: top-k by cosine. */
-  def searchCollection(collection: DataFrame, embedder: Embedder,
-      queryText: String, k: Int): DataFrame =
-    Similarity.topK(collection, "id", "embedding", embedder.embed(queryText), k)
 }

@@ -164,10 +164,7 @@ object PcaQueries {
     // restores ~0.65 at the identical probe budget — measured at all
     // three SFs. Everything is SQL-expressible END TO END (per-dim
     // mu/sigma, float casts, seed cells, probes, round-6 cosine), so
-    // the whole raw-vs-standardized comparison full-hashes; the
-    // ROTATED face of the same claim (full `whiten`, eigenbasis not
-    // SQL-expressible) is pinned engine-side in PcaSpec against the
-    // same planted fixture.
+    // the whole raw-vs-standardized comparison full-hashes.
     Q("q156_standardized_ivf_recall",
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings
          |     WHERE embedding IS NOT NULL),

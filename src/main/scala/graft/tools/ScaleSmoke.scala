@@ -134,8 +134,8 @@ object ScaleSmoke {
         val base = NearDup.withMutatedCopies(docTagged, "doc_id", "text")
         val pairs = NearDup.lshCandidatePairs(
           NearDup.minhashSignaturesFused(base, "doc_id", col("text")), "doc_id")
-        NearDup.dropNearDuplicatesFromLabels(base, "doc_id",
-            NearDup.connectedComponents(pairs))
+        NearDup.dropNearDuplicatesFromLabelsBy(base, "doc_id",
+            NearDup.connectedComponents(pairs), -col("doc_id"))
           .write.format("noop").mode("overwrite").save(); 0L
       }
       // SemDeDup / kNN graph (q70/q79 shape): k GROWS with N so cell
@@ -224,7 +224,7 @@ object ScaleSmoke {
     // REPORTS rather than asserts; the hard thresholds live in
     // SimilaritySpec's planted-cluster tests.
     if (sections("recall")) {
-      import graft.vector.{Ivf, RecallReport}
+      import graft.vector.{Pq, RecallReport}
       val queries = emb.filter(col("vec_id") % 157 === 3)
         .limit(32).select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       // the Q·N exact ground truth is the dominant cost and identical
@@ -241,7 +241,8 @@ object ScaleSmoke {
           exact = Some(exact)))
         println(f"RECALL lsh@10 mean=$mean%.3f min=$min%.3f"); 0L
       }
-      val cents = Ivf.trainCentroids(emb, "vec_id", "embedding", k = 16, iters = 2)
+      val cents = Pq.trainCodebooksKmeansPar(emb, "vec_id", "embedding",
+        m = 1, k = 16, iters = 2).codebooks.head
       for (nProbe <- Seq(2, 4)) {
         T(s"recall_ivf nProbe=$nProbe") {
           val (mean, min) = stats(RecallReport.ivfRecallAtK(emb, "vec_id",

@@ -83,8 +83,8 @@ object Sf10Probe {
         NearDup.connectedComponents(pairs).count()
       }
       T(s"keep_best $tag") {
-        NearDup.dropNearDuplicatesFromLabels(base, "doc_id",
-          NearDup.connectedComponents(pairs)).count()
+        NearDup.dropNearDuplicatesFromLabelsBy(base, "doc_id",
+          NearDup.connectedComponents(pairs), -col("doc_id")).count()
       }
       pairs.unpersist()
     }
@@ -275,44 +275,22 @@ object Sf10Probe {
       batchDocs.unpersist()
     }
 
-    // ---- q150-q152: PCA moments at 1× and 100×, incremental fold ----
-    // Claims under test: `fit` is ONE scan pass (x1→x100 must scale
+    // ---- q150-q152: PCA moments at 1× and 100× ----
+    // Claim under test: `fit` is ONE scan pass (x1→x100 must scale
     // no worse than row-linear — an accidental explode or per-row
-    // d² shuffle would blow up 100×); folding a FIXED batch into the
-    // moments store costs the batch pass + an O(dim²) row rewrite,
-    // corpus-INDEPENDENT; refitting from the store never rescans.
+    // d² shuffle would blow up 100×).
     family("pca") {
       for ((corpus, tag) <- Seq((emb1, "x1"), (emb100, s"x$copies"))) {
         T(s"pca_fit $tag") {
           graft.vector.Pca.fit(corpus, "embedding").n
         }
       }
-      val batchEmb = emb1.filter(col("vec_id") < 500).localCheckpoint()
-      val nb = batchEmb.count()
-      val store = s"$out/pca_moments"
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(store), true)
-      T(s"pca_store_init(x$copies corpus)") {
-        graft.vector.Pca.updateMomentsStore(spark, store, emb100, "embedding")
-        1L
-      }
-      T(s"pca_store_fold_fixed_batch(n=$nb)") {
-        graft.vector.Pca.updateMomentsStore(spark, store, batchEmb, "embedding")
-        1L
-      }
-      T("pca_fit_from_store") {
-        graft.vector.Pca.fitFromMoments(spark.read.parquet(store)).n
-      }
-      batchEmb.unpersist()
     }
 
     // ---- q157-q160: BPE training at 1× and 100× ----
     // Claims under test: the word histogram is the ONLY corpus-sized
     // stage (x1→x100 no worse than row-linear); training over the
-    // truncated histogram is corpus-independent (driver loop) or
-    // histogram-bounded (distributed); tokenizing a fixed batch
-    // against an x100-trained vocab costs the batch, not the corpus.
+    // truncated histogram is corpus-independent (driver loop).
     // The x100 corpus prefixes every word per copy (c1…c99), so its
     // vocab is ~100× wider — the truncation path actually binds.
     family("bpe") {
@@ -324,18 +302,6 @@ object Sf10Probe {
           graft.ops.Bpe.fitFromCorpus(corpus, "text", 16).size.toLong
         }
       }
-      T(s"bpe_train_distributed(16 merges) x$copies") {
-        graft.ops.Bpe.trainMergesDistributed(
-          graft.ops.Bpe.wordHistogram(docs100, "text"), 16).size.toLong
-      }
-      val merges100 = graft.ops.Bpe.fitFromCorpus(docs100, "text", 16)
-        .map(m => (m.left, m.right))
-      val batchDocs = docs1.filter(col("doc_id") < 5000).localCheckpoint()
-      val nbd = batchDocs.count()
-      T(s"bpe_tokenize_fixed_batch(n=$nbd) vs x$copies vocab") {
-        graft.ops.Bpe.tokenize(batchDocs, "text", merges100).count()
-      }
-      batchDocs.unpersist()
     }
 
     // ---- q166-q169: product quantization at 1× and 100× ----

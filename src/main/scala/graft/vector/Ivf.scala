@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * Training: a cell table is the m = 1 case of `Pq.PqModel`, so the
   * flow is Pq's — a seed rule, then `Pq.lloydOnce` × iters.
   * `seedCentroids` is the id-prefix rule with no rounds (the seeding
-  * the oracle queries replay); `trainCentroids` is k-means‖ seeds plus
-  * grid-snapped Lloyd rounds (spec-covered, not oracle-replayed). Only
+  * the oracle queries replay); `Pq.trainCodebooksKmeansPar` with
+  * m = 1 is k-means‖ seeds plus grid-snapped Lloyd rounds. Only
   * the centroid table (k×dim doubles, driver-bounded by construction)
   * ever leaves the executors. Assignment is a per-row O(k·dim) map
   * against broadcast centroids. At 100 TB the collection is written
@@ -63,7 +63,7 @@ object Ivf {
     * fine centroid, so no row can be routed to a memberless group —
     * and the rest map to their nearest coarse centroid (ties → the
     * smaller coarse id, matching the SQL `ORDER BY d2, gid`). */
-  def fineToCoarse(fine: Array[Array[Float]],
+  private[graft] def fineToCoarse(fine: Array[Array[Float]],
       coarse: Array[Array[Float]]): Array[Int] =
     Array.tabulate(fine.length) { f =>
       if (f < coarse.length) f
@@ -154,15 +154,6 @@ object Ivf {
   def seedCentroids(df: DataFrame, id: String, vec: String,
       k: Int): Array[Array[Float]] =
     Pq.trainCodebooks(df, id, vec, 1, k, iters = 0).codebooks.head
-
-  /** Deterministic k-means: k-means‖ seeds (a constant number of Spark
-    * jobs whatever k — see `Pq.kmeansParSeeds`), then `iters`
-    * grid-snapped Lloyd rounds; a cell that loses all members keeps its
-    * previous centroid. Dims past the smallest-id row's length are
-    * ignored, like assignment does. */
-  def trainCentroids(df: DataFrame, id: String, vec: String, k: Int,
-      iters: Int = 5): Array[Array[Float]] =
-    Pq.trainCodebooksKmeansPar(df, id, vec, 1, k, iters).codebooks.head
 
   /** IVF top-k: score only the nProbe nearest cells' members. With
     * nProbe = k this degenerates to exact brute force (recall 1.0). */

@@ -59,7 +59,7 @@ case class NearestCell(child: Expression, fine: Array[Array[Float]],
 object NearestCell {
 
   /** Static kernel shared by interpreted eval and generated code. */
-  def assign(v: ArrayData, fine: Array[Array[Float]],
+  private[vector] def assign(v: ArrayData, fine: Array[Array[Float]],
       coarse: Array[Array[Float]], members: Array[Array[Int]]): Int =
     if (coarse == null) scan(v, fine, null)
     else scan(v, fine, members(scan(v, coarse, null)))

@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -18,21 +18,12 @@ final case class PcaModel(
     dim: Int,
     mean: Array[Double],
     eigenvalues: Array[Double],
-    components: Array[Array[Double]],
-    totalVariance: Double) {
+    components: Array[Array[Double]]) {
 
   require(components.length == eigenvalues.length,
     s"components (${components.length}) vs eigenvalues (${eigenvalues.length})")
 
   def k: Int = eigenvalues.length
-
-  /** Per-component share of TOTAL variance (the covariance trace,
-    * carried on the model) — so a truncated k < dim model reports its
-    * honest coverage, not shares of only the kept components. */
-  def varianceExplained: Array[Double] = {
-    if (totalVariance <= 0) eigenvalues.map(_ => 0.0)
-    else eigenvalues.map(_ / totalVariance)
-  }
 
   /** Driver-side projection of one raw vector (e.g. a query vector)
     * into component space: components · (v − mean). */
@@ -49,9 +40,9 @@ final case class PcaModel(
 }
 
 /** Embedding decorrelation: distributed second-moment computation, a
-  * driver-side eigendecomposition, and map-only projection / whitening
-  * (the standard pre-ANN transform — decorrelate, optionally reduce
-  * rank, equalize per-axis variance so L2 ≈ Mahalanobis).
+  * driver-side eigendecomposition, and map-only projection and
+  * standardization (the standard pre-ANN transforms — decorrelate,
+  * optionally reduce rank, equalize per-axis scale).
   *
   * Scale shape (the part that must survive 100 TB):
   *  - `moments` is ONE pass over the data: each partition folds its
@@ -64,7 +55,7 @@ final case class PcaModel(
   *    engine never does).
   *  - the eigendecomposition is O(dim³) on the DRIVER — dim is a model
   *    constant (64–4096), not data-scaled.
-  *  - `project`/`whiten` are map-only against the closure-captured
+  *  - `project` is map-only against the closure-captured
   *    model (O(k·dim) doubles rides the task binary); no shuffle, no
   *    per-row allocation beyond the output array.
   */
@@ -200,9 +191,8 @@ object Pca {
   }
 
   /** One-pass (n, Σx, upper-triangular ΣxxT) over non-null vectors —
-    * the persistable sufficient statistic (`momentsDf`, the incremental
-    * store). See `foldMoments` for determinism and
-    * the byte-budgeted fan-in. */
+    * the sufficient statistic `fit` eigensolves. See `foldMoments` for
+    * determinism and the byte-budgeted fan-in. */
   private[vector] def moments(df: DataFrame, vec: String): Partial =
     foldMoments(df, vec, center = null, xtxMode = XtxTri)
 
@@ -277,79 +267,14 @@ object Pca {
       if (v(best) < 0) { i = 0; while (i < d) { v(i) = -v(i); i += 1 } }
       v
     }.toArray
-    // total variance = covariance trace, from the moments directly —
-    // a truncated model still knows what it left behind
-    var trace = 0.0
-    var i = 0
-    while (i < d) { trace += triAt(x, d, i, i) / n - mean(i) * mean(i); i += 1 }
-    PcaModel(n, d, mean, eigenvalues, components, math.max(trace, 0.0))
+    PcaModel(n, d, mean, eigenvalues, components)
   }
 
-  // ---- incremental fit: the persistable moments row ----
-  // (n, Σx, upper-tri ΣxxT) is a sufficient statistic for `fit`, and
-  // mergePartial is its exact merge algebra — so a continuously-
-  // arriving corpus refreshes its PCA by folding each batch's one-row
-  // moments into a parquet store and re-running the O(dim³) driver
-  // eigensolve, never rescanning history. Same shape as the NB
-  // classifier's sufficient-statistics store (TextClassifier
-  // .trainFromStats): stats merge exactly; only the tiny model refits.
-
-  private val momentsSchema = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("sum",
-      org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false),
-      nullable = false),
-    StructField("xtx",
-      org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false),
-      nullable = false)))
-
-  private def partialDf(spark: SparkSession, p: Partial): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        Seq(Row(p._1, p._2.toSeq, p._3.toSeq)), 1), momentsSchema)
-
-  private def partialOf(m: DataFrame): Partial = {
-    val rows = m.select(col("n"), col("sum"), col("xtx")).collect()
-    require(rows.length == 1,
-      s"moments store must hold exactly one row, got ${rows.length}")
-    val r = rows(0)
-    (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray)
-  }
-
-  /** The persistable face of `moments`: one (n, sum, xtx) row. */
-  def momentsDf(df: DataFrame, vec: String): DataFrame =
-    partialDf(df.sparkSession, moments(df, vec))
-
-  /** Fit from persisted moments: the one (n, sum, xtx) row that
-    * `momentsDf` and `updateMomentsStore` write. One O(dim²) row is
-    * collected, never the corpus. */
-  def fitFromMoments(m: DataFrame, k: Int = -1): PcaModel =
-    fitPartial(partialOf(m), k)
-
-  /** Fold one batch's moments into the store at `storePath` (created
-    * on first use) behind the K1 staging swap, store-then-batch merge
-    * order. Store cost is O(dim²) bytes TOTAL — the rewrite is trivial
-    * at any corpus size; crash mid-swap leaves the old row intact
-    * (`Sinks.overwriteInPlace` / `recoverSwap`). Single-writer, like
-    * every swap-managed store in the engine. */
-  def updateMomentsStore(spark: SparkSession, storePath: String,
-      batch: DataFrame, vec: String): Unit = {
-    graft.io.Sinks.recoverSwap(spark, storePath)
-    // an empty/all-null batch folds to nothing — a no-op, not a
-    // crashed refresh
-    if (batch.where(col(vec).isNotNull).isEmpty) return
-    val batchP = moments(batch, vec)
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-        mergePartial(partialOf(spark.read.parquet(storePath)), batchP)
-      else batchP
-    graft.io.Sinks.overwriteInPlace(partialDf(spark, merged), storePath)
-  }
-
-  private def transformUdf(model: PcaModel, scale: Array[Double]) =
-    udf { (v: Seq[Float]) =>
+  /** Map-only projection into component space: components·(v − mean).
+    * Null vectors (dead-lettered embeds) project to null. */
+  def project(df: DataFrame, vec: String, model: PcaModel,
+      as: String = "pca"): DataFrame = {
+    val f = udf { (v: Seq[Float]) =>
       if (v == null) null
       else {
         require(v.length == model.dim,
@@ -361,26 +286,13 @@ object Pca {
           var acc = 0.0
           var i = 0
           while (i < model.dim) { acc += row(i) * (v(i) - model.mean(i)); i += 1 }
-          out(r) = acc * scale(r)
+          out(r) = acc
           r += 1
         }
         out
       }
     }
-
-  /** Map-only projection into component space: components·(v − mean).
-    * Null vectors (dead-lettered embeds) project to null. */
-  def project(df: DataFrame, vec: String, model: PcaModel,
-      as: String = "pca"): DataFrame =
-    df.withColumn(as, transformUdf(model, Array.fill(model.k)(1.0))(col(vec)))
-
-  /** Whitening: per-component 1/√λ scaling on top of `project`, so the
-    * output has identity covariance (components with λ ≤ eps pass
-    * through unscaled rather than exploding to ±∞). */
-  def whiten(df: DataFrame, vec: String, model: PcaModel,
-      as: String = "whitened", eps: Double = 1e-12): DataFrame = {
-    val scale = model.eigenvalues.map(l => if (l > eps) 1.0 / math.sqrt(l) else 1.0)
-    df.withColumn(as, transformUdf(model, scale)(col(vec)))
+    df.withColumn(as, f(col(vec)))
   }
 
   /** Per-dimension standardization (z-scoring / DIAGONAL whitening):
@@ -390,11 +302,10 @@ object Pca {
     * triangle). The cheap member of the decorrelation family: it
     * equalizes per-axis scale without rotating, which is exactly what
     * an ANN index needs when the corruption is per-dimension gain
-    * (full `whiten` additionally kills cross-correlations but its
-    * eigenbasis is not SQL-expressible — q156 hashes this face, the
-    * PcaSpec recall pin covers the rotated one). Dimensions with
-    * σ² ≤ eps pass through unscaled rather than exploding (the
-    * `whiten` discipline); null vectors standardize to null. */
+    * (full PCA whitening would also remove cross-correlations, but its
+    * eigenbasis is not SQL-expressible — q156 hashes this face).
+    * Dimensions with σ² ≤ eps pass through unscaled rather than
+    * exploding; null vectors standardize to null. */
   def standardize(df: DataFrame, vec: String, as: String = "standardized",
       eps: Double = 1e-12): DataFrame = {
     val (_, mean) = meanPass(df, vec)
@@ -415,53 +326,5 @@ object Pca {
       }
     }
     df.withColumn(as, f(col(vec)))
-  }
-
-  /** `standardize` from a persisted moments row (the
-    * `fitFromMoments` twin): per-dim mean and variance come from the
-    * stored (n, Σx, ΣxxT) sufficient statistic — one O(dim²) row,
-    * never a corpus rescan, and no eigensolve. The store is an
-    * UNCENTERED statistic, so the variance here is the one-pass
-    * E[x²]−E[x]² form (noise ~1e-12 — fine for scaling an ANN index,
-    * NOT for a hashed round-6 grid; the oracle-hashed q156 path uses
-    * the two-pass centered `standardize`). */
-  def standardizeFromMoments(m: DataFrame, df: DataFrame, vec: String,
-      as: String = "standardized", eps: Double = 1e-12): DataFrame = {
-    val (n, s, x) = partialOf(m)
-    val d = s.length
-    val mean = s.map(_ / n)
-    val std = Array.tabulate(d) { j =>
-      val v = triAt(x, d, j, j) / n - (s(j) / n) * (s(j) / n)
-      if (v > eps) math.sqrt(v) else 1.0
-    }
-    val f = udf { (v: Seq[Float]) =>
-      if (v == null) null
-      else {
-        require(v.length == d, s"vector dim ${v.length} != fitted dim $d")
-        Array.tabulate(d)(j => (v(j).toDouble - mean(j)) / std(j))
-      }
-    }
-    df.withColumn(as, f(col(vec)))
-  }
-
-  /** Eigenvalue spectrum report: per-component variance and the
-    * cumulative explained fraction — the k-picking curve. Shares are
-    * of TOTAL variance (the trace carried on the model), so a
-    * truncated fit's curve honestly tops out below 1.0. */
-  def spectrum(spark: SparkSession, model: PcaModel): DataFrame = {
-    val tot = model.totalVariance
-    var cum = 0.0
-    val rows = model.eigenvalues.zipWithIndex.map { case (l, i) =>
-      cum += l
-      Row((i + 1).toLong, l,
-        if (tot > 0) l / tot else 0.0,
-        if (tot > 0) cum / tot else 0.0)
-    }
-    val schema = StructType(Seq(
-      StructField("component", LongType, nullable = false),
-      StructField("eigenvalue", DoubleType, nullable = false),
-      StructField("var_explained", DoubleType, nullable = false),
-      StructField("cum_var_explained", DoubleType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
   }
 }

@@ -30,8 +30,7 @@ import org.apache.spark.sql.functions._
   *    (`trainCodebooks`, `Ivf.seedCentroids`, the q87/q58 rule), the
   *    strided ids `⌊c·(maxId+1)/k⌋` (`trainCodebooksAdaptive`), both
   *    row filters of the one seed collect `seedModel`; and k-means‖
-  *    (`kmeansParSeeds`, per subspace, for `trainCodebooksKmeansPar`
-  *    and `Ivf.trainCentroids`);
+  *    (`kmeansParSeeds`, per subspace, for `trainCodebooksKmeansPar`);
   *  - `lloydOnce`: encode, posexplode, a mean per (subspace, code,
   *    dim), snapped to the round-6 grid and cast to float32.
   *
@@ -273,7 +272,7 @@ object Pq {
       col(id).isin(targets: _*)
     }, iters)
 
-  /** The PRODUCTION codebook trainer: k-means‖ seeds per subspace
+  /** The k-means‖ codebook trainer: k-means‖ seeds per subspace
     * (each from the subspace's dsub-dim slice, all rooted at the
     * smallest-id row), then `iters` Lloyd rounds over all m subspaces
     * at once. Deterministic and partition-invariant (spec-pinned), but
@@ -281,7 +280,7 @@ object Pq {
     * spec-covered (PqSpec) while `trainCodebooksAdaptive` carries the
     * oracle (q174). Dims past the smallest-id row's length are
     * ignored, like `encode` does. */
-  def trainCodebooksKmeansPar(df: DataFrame, id: String, vec: String,
+  private[graft] def trainCodebooksKmeansPar(df: DataFrame, id: String, vec: String,
       m: Int, k: Int, iters: Int = 3): PqModel = {
     require(m >= 1 && k >= 1,
       s"trainCodebooksKmeansPar: m=$m and k=$k must be >= 1")
@@ -325,7 +324,7 @@ object Pq {
 
   /** Per-query ADC lookup table, flattened [s·k + c] → ‖q_s − cb[s][c]‖²
     * (doubles, index-order accumulation — the kernel arithmetic). */
-  def adcLutFlat(query: Array[Float], model: PqModel): Array[Double] =
+  private[graft] def adcLutFlat(query: Array[Float], model: PqModel): Array[Double] =
     Array.tabulate(model.m * model.k) { i =>
       val s = i / model.k
       sqDist(query, s * model.dsub, model.codebooks(s)(i % model.k))
@@ -333,7 +332,7 @@ object Pq {
 
   /** ADC squared distance of a code column against a broadcast LUT:
     * m array reads + m adds per row, no float vector touched. */
-  def adcDist(codes: Column, lutFlat: Seq[Double], k: Int): Column =
+  private[graft] def adcDist(codes: Column, lutFlat: Seq[Double], k: Int): Column =
     aggregate(
       transform(codes, (c, s) =>
         element_at(typedlit(lutFlat), s * lit(k) + c + lit(1))),

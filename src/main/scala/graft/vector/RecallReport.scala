@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * of ground truth, which is why this runs on a query SAMPLE, not the
   * full query log). Per-query top-k uses a row_number window: the
   * shuffle key is the query id, fine at sample cardinality (the q54
-  * treatment; an eval with millions of queries would salt first —
-  * `ops.Skew.saltedTwoPhase`).
+  * treatment; an eval with millions of queries would salt the query
+  * id first).
   *
   * Scoring matches `Similarity.topK` bit-for-bit (round-6 cosine,
   * id tie-break), so per-query rows equal the single-query paths
@@ -67,7 +67,7 @@ object RecallReport {
 
   /** Recall@k of the LSH path (`Similarity.annTopK`) over a query
     * sample: (qid, n_exact, n_hits, recall), one row per query. */
-  def lshRecallAtK(corpus: DataFrame, id: String, vec: String,
+  private[graft] def lshRecallAtK(corpus: DataFrame, id: String, vec: String,
       queries: DataFrame, qid: String, qvec: String, k: Int,
       nPlanes: Int = 8, seed: Long = 42L, multiProbe: Boolean = true,
       exact: Option[DataFrame] = None): DataFrame = {

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * (one shuffle, hash-partitioned by cell), and the pairwise cosine
   * work is bounded by cluster size — k is the knob that keeps
   * per-cell membership ~N/k so the quadratic term never sees the full
-  * corpus. The same keep-smallest-id policy as `NearDup
-  * .dropNearDuplicates`; chain `NearDup.connectedComponents` over
+  * corpus. `dropSemanticDuplicates` keeps the smallest id of each
+  * pair (greedy); chain `NearDup.connectedComponents` over
   * `semanticDuplicatePairs` when transitive grouping is wanted.
   */
 object SemDedup {
@@ -41,16 +41,16 @@ object SemDedup {
     * (cell, id_a, id_b, cos_sim), id_a < id_b. Array form = flat
     * quantizer; pass a [[TwoLevelQuantizer]] when k is corpus-scaled
     * (see [[Quantizer]]). */
-  def semanticDuplicatePairs(df: DataFrame, id: String, vec: String,
+  private[graft] def semanticDuplicatePairs(df: DataFrame, id: String, vec: String,
       cents: Array[Array[Float]], threshold: Double,
       cellCol: String): DataFrame =
     semanticDuplicatePairs(df, id, vec, FlatQuantizer(cents), threshold, cellCol)
 
-  def semanticDuplicatePairs(df: DataFrame, id: String, vec: String,
+  private[graft] def semanticDuplicatePairs(df: DataFrame, id: String, vec: String,
       cents: Array[Array[Float]], threshold: Double): DataFrame =
     semanticDuplicatePairs(df, id, vec, FlatQuantizer(cents), threshold, "ivf_cell")
 
-  def semanticDuplicatePairs(df: DataFrame, id: String, vec: String,
+  private[graft] def semanticDuplicatePairs(df: DataFrame, id: String, vec: String,
       quant: Quantizer, threshold: Double,
       cellCol: String = "ivf_cell"): DataFrame = {
     // Par.widen: cell assignment + the within-cell pairwise cosine are

@@ -81,14 +81,6 @@ object Similarity {
     df.withColumn(as, f(col(vec)))
   }
 
-  /** Metadata-filtered top-k (the vector store's `where` clause,
-    * query-side of SURVEY §2.10): the predicate prunes BEFORE scoring,
-    * so it pushes into the collection scan — on a metadata-partitioned
-    * collection this is partition pruning, not a post-filter. */
-  def filteredTopK(df: DataFrame, id: String, vec: String,
-      query: Array[Float], k: Int, predicate: Column): DataFrame =
-    topK(df.filter(predicate), id, vec, query, k)
-
   /** ANN top-k: score only rows in the query's bucket (plus optional
     * hamming-1 neighbor buckets for recall). */
   def annTopK(df: DataFrame, id: String, vec: String, query: Array[Float],

@@ -125,24 +125,23 @@ trait AdapterContracts { self: AnyFunSuite =>
     }
   }
 
-  /** The seam itself: a THROWING adapter must dead-letter per row —
+  /** The seam itself: a THROWING adapter must lose only its own row —
     * never fail the task — and healthy rows around it must survive.
-    * This is the property that makes a poison document a row in an
-    * errors column instead of a dead 100 TB job. */
-  def deadLetterContract(name: String): Unit = {
-    test(s"adapter contract [$name]: throwing adapter dead-letters per row") {
+    * This is the property that makes a poison document a skipped row
+    * instead of a dead 100 TB job (the reference's try/except-continue,
+    * run through the transcription stage's per-row capture). */
+  def poisonRowContract(name: String): Unit = {
+    test(s"adapter contract [$name]: throwing adapter skips its row, never the task") {
       val spark = TestSpark.spark
       import spark.implicits._
-      val rows = Seq("ok-1", "poison", "ok-2").toDS()
-      val out = Enricher.enrichPartitionsSafe(rows,
-          () => new AdapterContractSpec.PoisonThrowingModel,
-          (s: String) => s)((m, s) => m.complete(s))
-        .collect().sortBy(_.key)
-      assert(out.length == 3, "every input row must come back out")
-      assert(out.count(_.result.isDefined) == 2, "healthy rows must survive")
-      val dead = out.find(_.key == "poison").get
-      assert(dead.result.isEmpty && dead.error.exists(_.contains("model exploded")),
-        "poison row must carry its error, not kill the task")
+      val meetings = Seq("https://c/v/ok-1.mp4", "https://c/v/poison.mp4",
+        "https://c/v/ok-2.mp4").toDF("video")
+      val files = graft.pipeline.CouncilPipeline.transcribePending(meetings,
+          Seq.empty[String].toDF("name"),
+          () => new AdapterContractSpec.PoisonThrowingTranscriber)
+        .select("file").distinct().collect().map(_.getString(0)).toSet
+      assert(files == Set("ok-1.mp4", "ok-2.mp4"),
+        "healthy rows must survive and the poison row must be skipped")
     }
   }
 }
@@ -150,9 +149,10 @@ trait AdapterContracts { self: AnyFunSuite =>
 object AdapterContractSpec {
   /** Top-level so the task closure serializes the model alone, not the
     * enclosing suite. */
-  final class PoisonThrowingModel extends Enricher.ChatModel {
-    override def complete(p: String): String =
-      if (p.contains("poison")) sys.error("model exploded") else s"sum:$p"
+  final class PoisonThrowingTranscriber extends Enricher.Transcriber {
+    override def transcribe(key: String, media: Array[Byte]): Seq[graft.model.Schemas.Segment] =
+      if (key.contains("poison")) sys.error("model exploded")
+      else new StubTranscriber(2).transcribe(key, media)
   }
 }
 
@@ -163,5 +163,5 @@ class AdapterContractSpec extends AnyFunSuite with AdapterContracts {
   transcriberContract("StubTranscriber", () => new StubTranscriber())
   summarizerContract("StubSummarizer", () => new StubSummarizer())
   textExtractorContract("StubTextExtractor", () => new StubTextExtractor())
-  deadLetterContract("enrichPartitionsSafe")
+  poisonRowContract("transcribePending")
 }

@@ -81,14 +81,6 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.trainMerges(Nil, 4).isEmpty)
   }
 
-  test("distributed trainer produces bit-identical merges") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val hist = Bpe.wordHistogram(docs, "text")
-    val driver = Bpe.fitFromCorpus(docs, "text", 16)
-    val dist = Bpe.trainMergesDistributed(hist, 16)
-    assert(dist == driver)
-  }
-
   test("partitioning sweep: merges invariant under 1/4/16 partitions") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val base = Bpe.fitFromCorpus(docs, "text", 8)
@@ -109,43 +101,6 @@ class BpeSpec extends AnyFunSuite {
     // unseen word: still deterministic, applies what matches
     val t = Bpe.tokenizeWord("bananarama", merges)
     assert(t.mkString == "bananarama", "tokens must re-concatenate to the word")
-  }
-
-  test("corpus tokenize path agrees with the histogram path") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val merges = Bpe.fitFromCorpus(docs, "text", 16).map(m => (m.left, m.right))
-    // per-token counts from exploding per-doc corpus tokenization…
-    val corpus = Bpe.tokenize(docs, "text", merges)
-      .select(explode(col("bpe_tokens")).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // …equal the histogram-weighted counts (what q158 hashes)
-    val hist = Bpe.tokenizeHistogram(Bpe.wordHistogram(docs, "text"), merges)
-      .select(col("cnt"), explode(col("toks")).as("token"))
-      .groupBy("token").agg(sum("cnt").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(corpus == hist)
-  }
-
-  test("histogram store: folds ≡ one-shot, empty tick no-op, train parity") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val store = TestSpark.tempDir("bpe-store") + "/hist"
-    val parity = abs(xxhash64(col("doc_id"))) % 2
-    Bpe.updateHistogramStore(spark, store, docs.filter(parity === 0), "text")
-    Bpe.updateHistogramStore(spark, store, docs.filter(parity === 1), "text")
-    Bpe.updateHistogramStore(spark, store, docs.limit(0), "text") // no-op
-    // non-null but all-whitespace text: empty histogram, also a no-op
-    // (must not rewrite — or create — a store)
-    Bpe.updateHistogramStore(spark, store,
-      Seq((777777L, "   ")).toDF("doc_id", "text"), "text")
-    val fromStore = spark.read.parquet(store)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val oneShot = Bpe.wordHistogramStats(docs, "text")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fromStore == oneShot)
-    // and the full incremental fit reproduces the one-shot merges
-    assert(Bpe.trainFromHistogram(spark.read.parquet(store), 16)
-      == Bpe.fitFromCorpus(docs, "text", 16))
   }
 
   test("merge store: loadMerges(save(m)) == m, and tokenization from the store is identical") {
@@ -169,24 +124,6 @@ class BpeSpec extends AnyFunSuite {
     // zero-merge corpora persist an empty (but well-formed) table
     Bpe.saveMerges(spark, store, Seq.empty)
     assert(Bpe.loadMerges(spark, store).isEmpty)
-  }
-
-  test("histogram store and distributed trainer free their checkpoint blocks") {
-    // Dataset.unpersist() does not free a localCheckpoint's blocks (they
-    // are RDD-level persists, not cache-manager entries): each call
-    // here must leave getPersistentRDDs at its baseline
-    val dir = TestSpark.tempDir("bpefree")
-    val docs = Seq((1L, "low lower lowest"), (2L, "new newer low"))
-      .toDF("doc_id", "text")
-    val base = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    // first fold writes the store, the second merges into it
-    Bpe.updateHistogramStore(spark, s"$dir/store", docs, "text")
-    Bpe.updateHistogramStore(spark, s"$dir/store", docs, "text")
-    assert(spark.read.parquet(s"$dir/store").count() > 0)
-    assert(TestSpark.persistedSince(base).isEmpty, "updateHistogramStore leaked its histogram")
-    assert(Bpe.trainMergesDistributed(Bpe.wordHistogramStats(docs, "text"), 3)
-      .nonEmpty)
-    assert(TestSpark.persistedSince(base).isEmpty, "trainMergesDistributed leaked its histogram")
   }
 
   test("histogram truncation is deterministic under ties") {

@@ -446,7 +446,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(SourceMix.resampleByWeight(df, col("id"), lit(0.0)).count() == 0)
     // weight 1.25: 1 copy always, +1 exactly when the SALTED bucket
     // lands under 16384 (the salt decorrelates resampling from
-    // splitLabel/deterministicSample, which share the unsalted hash)
+    // splitLabel, which uses the unsalted hash)
     val got = SourceMix.resampleByWeight(df, col("id"), lit(1.25))
       .groupBy("id").count()
     val expected = df.select(col("id"),

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.enrich.Enricher
-import graft.io.{Sinks, Sources}
-import graft.model.Schemas
+import graft.expr.Functions
+import graft.io.Sinks
 import graft.pipeline.CouncilPipeline
-import graft.vector.HashEmbedder
+import graft.vector.{HashEmbedder, Similarity}
 
 /** Full six-stage integration: every stage boundary goes through real
   * file IO (JSONL state, per-entity partitioned writes, frontmatter
@@ -30,8 +30,8 @@ class EndToEndSpec extends AnyFunSuite {
     val previous = Seq(("https://c/v/m1.mp4", "box-m1"))
       .toDF("video", "box_link")
     val meetings = CouncilPipeline.refreshMeetings(scraped, previous)
-    Sinks.writeJsonl(meetings.select("title", "date", "video", "box_link"),
-      s"$root/data.jsonl")
+    meetings.select("title", "date", "video", "box_link")
+      .write.mode("overwrite").json(s"$root/data.jsonl")
     val meetingsBack = spark.read
       .schema("title STRING, date TIMESTAMP, video STRING, box_link STRING")
       .json(s"$root/data.jsonl")
@@ -40,7 +40,7 @@ class EndToEndSpec extends AnyFunSuite {
     // -- stage 1b: transcribe pending (none inventoried yet)
     val segs = CouncilPipeline.transcribePending(meetingsBack,
       Seq.empty[String].toDF("name"), () => new Enricher.StubTranscriber(120))
-    Sinks.writePerEntity(segs, "file", s"$root/segments")
+    segs.write.mode("overwrite").partitionBy("file").json(s"$root/segments")
     val segsBack = spark.read
       .schema("id LONG, start DOUBLE, end DOUBLE, text STRING, no_speech_prob DOUBLE")
       .json(s"$root/segments") // partition column `file` recovered from layout
@@ -50,7 +50,7 @@ class EndToEndSpec extends AnyFunSuite {
     val summaries = CouncilPipeline.summarize(
       segsBack.select("file", "id", "text", "no_speech_prob", "start", "end"),
       () => new Enricher.StubSummarizer, chunkSize = 50)
-    Sinks.writePerEntity(summaries, "file", s"$root/summaries")
+    summaries.write.mode("overwrite").partitionBy("file").json(s"$root/summaries")
     val sumBack = spark.read
       .schema("chunk_id LONG, summary STRING, quotes ARRAY<STRING>, " +
         "names ARRAY<STRING>, start_time DOUBLE, end_time DOUBLE, " +
@@ -77,8 +77,10 @@ class EndToEndSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$mdDir/${r.getAs[String]("id")}.md"), doc)
     }
-    val mdBack = spark.read.format("frontmatter")
-      .option("keys", "source,url").load(mdDir)
+    val mdBack = spark.read.option("wholetext", "true").text(mdDir)
+      .select(Functions.frontmatterValue(col("value"), "source").as("source"),
+        Functions.frontmatterValue(col("value"), "url").as("url"),
+        Functions.frontmatterBody(col("value")).as("content"))
     assert(mdBack.count() == 2)
 
     // -- stage 6: articles join the same collection via MERGE
@@ -92,8 +94,8 @@ class EndToEndSpec extends AnyFunSuite {
 
     // -- query side: self-search returns the exact chunk
     val probe = sumBack.filter(col("chunk_id") === 1).head.getAs[String]("summary")
-    val hit = CouncilPipeline.searchCollection(
-      spark.read.parquet(s"$root/collection"), embedder, probe, 1).head
+    val hit = Similarity.topK(spark.read.parquet(s"$root/collection"),
+      "id", "embedding", embedder.embed(probe), 1).head
     assert(hit.getDouble(1) == 1.0)
 
     // -- incremental: re-running transcription now finds zero work
@@ -135,15 +137,16 @@ class EndToEndSpec extends AnyFunSuite {
     // a non-representative member of its component
     val labels = graft.ops.LabelStore.read(spark, s"$dir/labels")
     val survivors = graft.ops.NearDup
-      .dropNearDuplicatesFromLabels(all, "doc_id", labels)
+      .dropNearDuplicatesFromLabelsBy(all, "doc_id", labels, -col("doc_id"))
     val got = survivors.select("doc_id").collect().map(_.getLong(0)).toSet
 
     // ground truth: one-shot over the full corpus
     val oneShotPairs = graft.ops.NearDup.lshCandidatePairs(
       graft.ops.NearDup.minhashSignaturesFused(all, "doc_id", col("text")),
       "doc_id")
-    val expected = graft.ops.NearDup.dropNearDuplicatesFromLabels(all,
-        "doc_id", graft.ops.NearDup.connectedComponents(oneShotPairs))
+    val expected = graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(all,
+        "doc_id", graft.ops.NearDup.connectedComponents(oneShotPairs),
+        -col("doc_id"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == expected && got.nonEmpty && got.size < all.count())
 
@@ -199,12 +202,12 @@ class EndToEndSpec extends AnyFunSuite {
         graft.ops.LabelStore.compact(spark, labelStore)
       }
     }
-    val survivors = graft.ops.NearDup.dropNearDuplicatesFromLabels(all,
-      "doc_id", graft.ops.LabelStore.read(spark, labelStore))
+    val survivors = graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(all,
+      "doc_id", graft.ops.LabelStore.read(spark, labelStore), -col("doc_id"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val oneShot = graft.ops.NearDup.dropNearDuplicatesFromLabels(all, "doc_id",
+    val oneShot = graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(all, "doc_id",
       graft.ops.NearDup.connectedComponents(
-        graft.ops.NearDup.lshCandidatePairs(sigs(all), "doc_id")))
+        graft.ops.NearDup.lshCandidatePairs(sigs(all), "doc_id")), -col("doc_id"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == oneShot && survivors.nonEmpty &&
       survivors.size < all.count())

@@ -26,39 +26,6 @@ class EnrichMultimodalSpec extends AnyFunSuite {
     assert(m.complete("a b c d e") != m.complete("a b c d f"))
   }
 
-  test("enrichPartitions instantiates per partition and maps rows") {
-    val ds = spark.range(100).repartition(4).as[Long]
-    val out = Enricher.enrichPartitions(ds, () => new Enricher.StubChatModel)(
-      (m, i) => m.complete(s"n$i"))
-    assert(out.count() == 100)
-    assert(out.distinct().count() == 100)
-  }
-
-  test("enrichPartitionsSafe captures poison rows as dead letters") {
-    val ds = spark.range(10).as[Long]
-    val out = Enricher.enrichPartitionsSafe(ds, () => new Enricher.StubChatModel,
-      (i: Long) => s"k$i") { (m, i) =>
-      if (i == 7L) throw new IllegalStateException("poison doc")
-      m.complete(s"n$i")
-    }
-    val rows = out.collect()
-    assert(rows.count(_.result.isDefined) == 9)
-    val dead = rows.filter(_.error.isDefined)
-    assert(dead.map(_.key).toSeq == Seq("k7"))
-    assert(dead.head.error.get.contains("poison doc"))
-  }
-
-  test("enrichPartitionsSafe survives a throwing keyOf (poison key)") {
-    val ds = spark.range(5).as[Long]
-    val out = Enricher.enrichPartitionsSafe(ds, () => new Enricher.StubChatModel,
-      (i: Long) => if (i == 3L) throw new NullPointerException("bad key") else s"k$i") {
-      (m, i) => m.complete(s"n$i")
-    }
-    val rows = out.collect()
-    assert(rows.length == 5) // no task failure
-    assert(rows.count(_.key.startsWith("<keyOf failed")) == 1)
-  }
-
   test("multimodal: stub decode is deterministic with typed meta schema") {
     val df = Seq((1L, "payload one"), (2L, "payload two"))
       .toDF("id", "text").withColumn("payload", col("text").cast("binary"))
@@ -69,34 +36,6 @@ class EnrichMultimodalSpec extends AnyFunSuite {
     val again = Multimodal.withDecodedMeta(df, "payload",
       () => new Multimodal.StubDecoder)
     assert(out.collect().toSeq == again.collect().toSeq)
-  }
-
-  test("resize stub preserves aspect, never upscales") {
-    val df = Seq((1L, "big"), (2L, "small")).toDF("id", "text")
-      .withColumn("payload", col("text").cast("binary"))
-    val meta = Multimodal.withDecodedMeta(df, "payload",
-      () => new Multimodal.StubDecoder)
-    val resized = meta.select(col("media_meta"),
-      Multimodal.resizeMeta(col("media_meta"), 128).as("r")).collect()
-    resized.foreach { row =>
-      val (w0, h0) = (row.getStruct(0).getInt(1), row.getStruct(0).getInt(2))
-      val (w1, h1) = (row.getStruct(1).getInt(1), row.getStruct(1).getInt(2))
-      assert(math.max(w1, h1) <= 128 || (w1 == w0 && h1 == h0))
-      assert(w1 <= w0 && h1 <= h0) // never upscale
-    }
-  }
-
-  test("feature-extract stub yields normalized deterministic vectors") {
-    val df = Seq((1L, "payload one"), (2L, "payload two"))
-      .toDF("id", "text").withColumn("payload", col("text").cast("binary"))
-    val f1 = Multimodal.withFeatures(df, "payload").select("features")
-      .collect().map(_.getSeq[Float](0))
-    val f2 = Multimodal.withFeatures(df, "payload").select("features")
-      .collect().map(_.getSeq[Float](0))
-    assert(f1.toSeq.map(_.toSeq) == f2.toSeq.map(_.toSeq))
-    assert(f1(0).toSeq != f1(1).toSeq)
-    val norm = math.sqrt(f1(0).map(x => x.toDouble * x).sum)
-    assert(math.abs(norm - 1.0) < 1e-5)
   }
 
   test("frame sampling explodes one row per interval") {

@@ -51,23 +51,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(onS(long, c => preview(c)) == "x" * 200 + "...")
   }
 
-  test("F11 sanitize keeps alnum/space/dash/underscore, caps 50") {
-    assert(onS("a b!@#c-d_e", c => sanitizeFilename(c)) == "a bc-d_e")
-    assert(onS("q" * 80, c => sanitizeFilename(c)) == "q" * 50)
-  }
-
-  test("F15 datePrefix: empty string is falsy like the reference, not a '' prefix") {
-    import spark.implicits._
-    val today = java.time.LocalDate.now.toString
-    val got = Seq(("2024-08-06T10:00:00", ""), (null.asInstanceOf[String], "x"))
-      .toDF("a", "b")
-      .select(datePrefix(col("a")), datePrefix(lit("")), datePrefix(lit(null).cast("string")))
-      .head
-    assert(got.getString(0) == "2024-08-06")
-    assert(got.getString(1) == today) // '' falls back (ref: if published)
-    assert(got.getString(2) == today)
-  }
-
   test("F12 rfc2822 parses valid, null on garbage") {
     assert(onS("Tue, 06 Aug 2024 12:34:56 +0000", rfc2822ToUnix) == 1722947696L)
     // without day-name prefix too (RFC 2822 makes it optional)
@@ -92,11 +75,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(onS("TBD", extractMeetingTime) == "Unknown Time")
   }
 
-  test("F2 onclick URL extraction") {
-    assert(onS("""<a onclick="window.open('//x/v.mp4','_blank')">""", onclickUrl)
-      == "https://x/v.mp4")
-  }
-
   test("F17 frontmatter build/parse round-trip") {
     forAllStr2 { (rawS: String, rawT: String) =>
       // values are single-line and trimmed (the reference strips on
@@ -116,14 +94,15 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("F20 pruneEmpty drops null/empty map values") {
-    val df = Seq(1).toDF("x").select(
-      map(lit("a"), lit("v"), lit("b"), lit(""), lit("c"), lit(null).cast("string")).as("m"))
-    val m = df.select(pruneEmpty(col("m"))).head.getMap[String, String](0)
-    assert(m == Map("a" -> "v"))
+  test("F17 frontmatter parse tolerates CRLF documents (Windows-authored corpus)") {
+    val doc = "---\r\nsource: feedX\r\n---\r\nbody here"
+    val row = Seq(doc).toDF("d").select(
+      frontmatterValue(col("d"), "source"), frontmatterBody(col("d"))).head
+    assert(row.getString(0) == "feedX")
+    assert(row.getString(1) == "body here")
   }
 
-  test("civic extractors pull ordinances, dockets, addresses, quotes, names") {
+  test("civic extractors pull ordinances, dockets, addresses, quotes") {
     import graft.ops.CivicExtract._
     val body = """Council passed Ordinance No. 12,345 and ordinance 67 today.
       |Docket no. 24-101 was continued. Mary Jones of 1200 Canal Street
@@ -131,13 +110,11 @@ class FunctionsSpec extends AnyFunSuite {
     val df = Seq(body).toDF("s")
     val r = df.select(
       ordinanceNumbers(col("s")), docketNumbers(col("s")),
-      streetAddresses(col("s")), quotedSpans(col("s")),
-      properNameCandidates(col("s"))).head
+      streetAddresses(col("s")), quotedSpans(col("s"))).head
     assert(r.getSeq[String](0) == Seq("12,345", "67"))
     assert(r.getSeq[String](1) == Seq("24-101"))
     assert(r.getSeq[String](2) == Seq("1200 Canal Street", "45 Broad Ave"))
     assert(r.getSeq[String](3) == Seq("we need action now"))
-    assert(r.getSeq[String](4).contains("Mary Jones"))
   }
 
   test("rolling hash matches the reduce recurrence; empty is null") {

@@ -457,10 +457,10 @@ class GraphSpec extends AnyFunSuite {
     val oneShot = graft.ops.NearDup.connectedComponents(pairs)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids(graft.ops.NearDup.dropNearDuplicatesFromLabels(docs, "doc_id",
-        labels)) ==
-      ids(graft.ops.NearDup.dropNearDuplicatesFromLabels(docs, "doc_id",
-        oneShot)))
+    assert(ids(graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(docs, "doc_id",
+        labels, -col("doc_id"))) ==
+      ids(graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(docs, "doc_id",
+        oneShot, -col("doc_id"))))
     val byLen = ids(graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(docs,
       "doc_id", labels, length(col("text"))))
     assert(byLen ==
@@ -568,62 +568,6 @@ class GraphSpec extends AnyFunSuite {
     val got = graft.ops.Graph.componentSizeDistribution(labels)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map(4L -> ((1L, 4L)), 2L -> ((2L, 4L))))
-  }
-
-  test("signature-store retention: prune ≡ a store that never ingested the departed docs") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val base = graft.ops.NearDup.withMutatedCopies(docs, "doc_id", "text")
-    val keepSide = base.filter(col("doc_id") % 3 =!= 0)
-    val dropSide = base.filter(col("doc_id") % 3 === 0)
-    val probeBatch = base.filter(col("doc_id") >= 1000000)
-    def sigs(df: org.apache.spark.sql.DataFrame) =
-      graft.ops.NearDup.minhashSignaturesFused(df, "doc_id", col("text"))
-    val buckets = 8
-    // store A: everything ingested, then the %3 docs depart
-    val a = s"${TestSpark.tempDir("lshprune")}/a"
-    graft.ops.NearDup.appendSignatureStore(sigs(base), "doc_id", a, buckets = buckets)
-    graft.ops.NearDup.pruneSignatureStore(spark, a,
-      dropSide.select(col("doc_id")), "doc_id")
-    // store B: the departed docs never existed
-    val b = s"${TestSpark.tempDir("lshprune")}/b"
-    graft.ops.NearDup.appendSignatureStore(sigs(keepSide), "doc_id", b, buckets = buckets)
-    def probe(dir: String) = graft.ops.NearDup.probeSignatureStore(spark, dir,
-      sigs(probeBatch), "doc_id", buckets = buckets)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pa = probe(a)
-    assert(pa == probe(b), "pruned store must probe like a never-ingested one")
-    assert(pa.nonEmpty, "probe must still find the surviving pairs")
-  }
-
-  test("label-store retention: pruned rows gone, survivors' labels untouched") {
-    val path = s"${TestSpark.tempDir("lsprune")}/labels"
-    // one chain component {1,2,3,4} and one pair {20,21}
-    graft.ops.LabelStore.merge(spark, path,
-      Seq((1L, 2L), (2L, 3L), (3L, 4L), (20L, 21L)).toDF("doc_a", "doc_b"),
-      buckets = 4)
-    def labels() = graft.ops.LabelStore.read(spark, path)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val before = labels()
-    assert(before((1L, 1L)) && before((4L, 1L)))
-    // doc 1 departs — it is the component MIN, the sharpest case:
-    // survivors keep component=1 (labels are names, not pointers)
-    graft.ops.LabelStore.prune(spark, path,
-      Seq(1L).toDF("doc_id"), "doc_id")
-    val after = labels()
-    assert(!after.exists(_._1 == 1L), "departed node row must be gone")
-    assert(after == before.filterNot(_._1 == 1L),
-      "no survivor's label may change on prune")
-    // decision ops still work against the pruned store: 2 survives
-    // (min REMAINING member? no — keep rule is node == component, so
-    // the cluster named by a departed min temporarily keeps nobody;
-    // the policy variant still keeps exactly one)
-    import org.apache.spark.sql.functions.length
-    val docs = Seq((2L, "bb"), (3L, "ccc"), (4L, "d"), (20L, "t"), (21L, "u"))
-      .toDF("doc_id", "text")
-    val kept = graft.ops.NearDup.dropNearDuplicatesFromLabelsBy(docs, "doc_id",
-        graft.ops.LabelStore.read(spark, path), length(col("text")))
-      .collect().map(_.getLong(0)).toSet
-    assert(kept == Set(3L, 20L), s"policy keep-best per labeled cluster: $kept")
   }
 
   test("label-store compaction: read-equivalent, ≤1 file per bucket, merge-compatible") {

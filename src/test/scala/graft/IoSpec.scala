@@ -1,109 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.io.{Sinks, Sources}
+import graft.io.Sinks
 
 class IoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private val schema = StructType(Seq(
-    StructField("id", LongType), StructField("v", StringType)))
-
-  test("jsonl write/read round-trip with explicit schema") {
-    val dir = TestSpark.tempDir("jsonl")
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    Sinks.writeJsonl(df, s"$dir/t")
-    val back = Sources.readJsonl(spark, s"$dir/t", schema)
-    assert(back.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      == Seq((1L, "a"), (2L, "b")))
-  }
-
-  test("json-array read (articles.json shape)") {
-    val dir = TestSpark.tempDir("jarr")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/articles.json"),
-      """[{"id": 1, "v": "x"}, {"id": 2, "v": "y"}]""")
-    val back = Sources.readJsonArray(spark, s"$dir/articles.json", schema)
-    assert(back.count() == 2)
-    assert(back.orderBy("id").head.getString(1) == "x")
-  }
-
-  test("frontmatter md directory read parses keys, body, filename") {
-    val dir = TestSpark.tempDir("md")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/a1.md"),
-      "---\nsource: feedX\ntitle: Hello\n---\nBody line 1\nBody line 2")
-    val back = Sources.readFrontmatterMd(spark, dir, Seq("source", "title"))
-    val r = back.head
-    assert(r.getAs[String]("source") == "feedX")
-    assert(r.getAs[String]("title") == "Hello")
-    assert(r.getAs[String]("content") == "Body line 1\nBody line 2")
-    assert(r.getAs[String]("filename") == "a1.md")
-  }
-
-  test("K2/K3 writePerEntity: one directory per entity, key recovered on read") {
-    // ref transcribe_council.py:88-89 — one transcript file per video;
-    // the distributed analog is a partitioned write: file=<entity>/ dirs
-    val dir = TestSpark.tempDir("perent")
-    val segs = Seq(
-      ("m1.mp4", 0L, "alpha"), ("m1.mp4", 1L, "beta"), ("m2.mp4", 0L, "gamma"))
-      .toDF("file", "id", "text")
-    Sinks.writePerEntity(segs, "file", s"$dir/segments")
-    // layout: each entity has its own directory, nothing else at top level
-    val dirs = new java.io.File(s"$dir/segments").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirs == Seq("file=m1.mp4", "file=m2.mp4"))
-    // round-trip: partition column comes back from the layout, rows intact
-    val back = spark.read
-      .schema("id LONG, text STRING").json(s"$dir/segments")
-    assert(back.columns.contains("file"))
-    assert(back.orderBy("file", "id").collect()
-      .map(r => (r.getAs[String]("file"), r.getAs[Long]("id"), r.getAs[String]("text"))).toSeq
-      == Seq(("m1.mp4", 0L, "alpha"), ("m1.mp4", 1L, "beta"), ("m2.mp4", 0L, "gamma")))
-    // overwrite mode: a rewrite replaces, not appends
-    Sinks.writePerEntity(segs.filter(col("file") === "m1.mp4"), "file", s"$dir/segments")
-    assert(spark.read.schema("id LONG, text STRING").json(s"$dir/segments").count() == 2)
-  }
-
-  test("S10 fetchBlobs: deterministic payloads, dead-letter rows, feeds multimodal") {
-    val urls = Seq("https://c/v/m1.mp4", "https://c/v/m2.mp4",
-      "https://c/v/unreachable.mp4").toDF("video")
-    val out = graft.io.Fetch.fetchBlobs(urls, col("video"),
-      () => new graft.io.Fetch.StubBlobFetcher(64))
-    val rows = out.orderBy("url").collect()
-    assert(rows.length == 3)
-    // exactly one of payload/fetch_error set per row
-    assert(rows.forall(r =>
-      (r.getAs[Array[Byte]]("payload") == null) != (r.getAs[String]("fetch_error") == null)))
-    val dead = rows.filter(_.getAs[String]("fetch_error") != null)
-    assert(dead.map(_.getAs[String]("url")).toSeq == Seq("https://c/v/unreachable.mp4"))
-    // deterministic: same url → same bytes on a re-run
-    val again = graft.io.Fetch.fetchBlobs(urls, col("video"),
-      () => new graft.io.Fetch.StubBlobFetcher(64)).orderBy("url").collect()
-    assert(rows.head.getAs[Array[Byte]]("payload").toSeq
-      == again.head.getAs[Array[Byte]]("payload").toSeq)
-    // the payload column plugs straight into the multimodal decode path
-    val decoded = graft.multimodal.Multimodal.withDecodedMeta(
-      out.filter(col("fetch_error").isNull), "payload",
-      () => new graft.multimodal.Multimodal.StubDecoder)
-    assert(decoded.select("media_meta.duration_ms").collect()
-      .forall(_.getLong(0) == 640L)) // 64 bytes × 10
-  }
-
-  test("S10 throttle: partition-local rate cap bounds fetch throughput") {
-    // 6 urls, 1 partition, 20/s cap → ≥ 5 inter-fetch gaps of 50 ms
-    val urls = (1 to 6).map(i => s"https://c/v/m$i.mp4").toDF("video")
-      .coalesce(1)
-    val t0 = System.nanoTime()
-    graft.io.Fetch.fetchBlobs(urls, col("video"),
-      () => new graft.io.Fetch.StubBlobFetcher(16),
-      maxPerSecond = Some(20.0)).count()
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(elapsedMs >= 250, s"throttle not applied: ${elapsedMs}ms for 6 fetches")
-  }
 
   test("K1 overwriteInPlace supports read-then-rewrite of same path") {
     val dir = TestSpark.tempDir("state")
@@ -152,62 +55,5 @@ class IoSpec extends AnyFunSuite {
     val after = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
     assert(after < before)
     assert(spark.read.parquet(path).count() == 10000)
-  }
-
-  test("fileInventory lists names without reading content") {
-    val dir = TestSpark.tempDir("inv")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/x.summary"), "s1")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/y.summary"), "s2")
-    val inv = Sources.fileInventory(spark, s"$dir/*.summary")
-    assert(inv.select("name").collect().map(_.getString(0)).sorted.toSeq
-      == Seq("x.summary", "y.summary"))
-  }
-
-  test("S1 full scrape parse: listing HTML → meeting rows") {
-    val html =
-      """<table>
-        |<tr class="listingRow">
-        | <td class="listItem"><b>Regular Council</b> - Wednesday, March 11, 2026 - 10:30 AM</td>
-        | <td class="listItem"><a onclick="window.open('//media.example/v1.mp4','pop')">Video</a></td>
-        | <td class="listItem"><a href="//c.example/AgendaViewer.php?id=1">Agenda</a></td>
-        | <td class="listItem"><a href="//c.example/MinutesViewer.php?id=1">Minutes</a></td>
-        |</tr>
-        |<tr class="listingRow">
-        | <td class="listItem">Budget Hearing - TBD</td>
-        | <td class="listItem">No video yet</td>
-        |</tr>
-        |</table>""".stripMargin
-    val out = graft.io.Sources.parseMeetingListing(Seq(html).toDF("html"))
-    val rows = out.collect()
-    assert(rows.length == 1) // P3: the video-less row is dropped
-    val m = rows.head
-    assert(m.getAs[String]("title") == "Regular Council")
-    assert(m.getAs[String]("date_raw") == "Wednesday, March 11, 2026")
-    assert(m.getAs[String]("time") == "10:30 AM")
-    assert(m.getAs[String]("video") == "https://media.example/v1.mp4")
-    assert(m.getAs[String]("agenda") == "https://c.example/AgendaViewer.php?id=1")
-    assert(m.getAs[String]("minutes") == "https://c.example/MinutesViewer.php?id=1")
-  }
-
-  test("J3 literal contains-theta join (bounded build side)") {
-    val probe = Seq((1L, "https://cdn/x/v1.mp4"), (2L, "https://cdn/x/v2.mp4"))
-      .toDF("id", "video")
-    val build = Seq("v1.mp4").toDF("name")
-    val out = graft.ops.Joins.containsThetaJoin(probe, build,
-      col("video"), col("name"))
-    assert(out.collect().map(_.getLong(0)).toSeq == Seq(1L))
-  }
-
-  test("S1 HTML listing-table parse") {
-    val html =
-      """<table><tr class="listingRow"><td class="listItem">Meeting A</td>
-        |<td class="listItem"><a href="//x/v.mp4">video</a></td></tr>
-        |<tr class="other"><td class="listItem">skip</td></tr>
-        |<tr class="listingRow"><td class="listItem">Meeting B</td></tr></table>""".stripMargin
-    val rows = Seq(html).toDF("html")
-      .select(explode(Sources.parseListingRows(col("html"))).as("row"))
-    assert(rows.count() == 2)
-    val cells = rows.select(explode(Sources.parseListItems(col("row"))).as("c"))
-    assert(cells.count() == 3)
   }
 }

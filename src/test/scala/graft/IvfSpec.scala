@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.vector.{Ivf, Similarity}
+import graft.vector.{Ivf, Pq, Similarity}
 
 class IvfSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -23,7 +23,8 @@ class IvfSpec extends AnyFunSuite {
 
   test("trainCentroids recovers planted clusters; assignment is pure") {
     val (df, centers) = clustered
-    val cents = Ivf.trainCentroids(df, "vec_id", "embedding", k = 3, iters = 4)
+    val cents = Pq.trainCodebooksKmeansPar(df, "vec_id", "embedding",
+      m = 1, k = 3, iters = 4).codebooks.head
     // each trained centroid sits near exactly one planted center
     val matched = centers.map { c =>
       cents.map { t =>
@@ -42,7 +43,8 @@ class IvfSpec extends AnyFunSuite {
 
   test("ivfTopK: full recall on clustered data with 1 probe of 3 cells") {
     val (df, centers) = clustered
-    val cents = Ivf.trainCentroids(df, "vec_id", "embedding", k = 3, iters = 4)
+    val cents = Pq.trainCodebooksKmeansPar(df, "vec_id", "embedding",
+      m = 1, k = 3, iters = 4).codebooks.head
     val query = centers(0).map(_ + 0.01f)
     val exact = Similarity.topK(df, "vec_id", "embedding", query, 10)
       .collect().map(_.getLong(0)).toSet
@@ -69,7 +71,8 @@ class IvfSpec extends AnyFunSuite {
     // reads nProbe directories, not the table
     val dir = s"${TestSpark.tempDir("ivfpart")}/coll"
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = Ivf.trainCentroids(emb, "vec_id", "embedding", k = 4, iters = 2)
+    val cents = Pq.trainCodebooksKmeansPar(emb, "vec_id", "embedding",
+      m = 1, k = 4, iters = 2).codebooks.head
     Ivf.assignCells(emb, col("embedding"), cents)
       .write.partitionBy("ivf_cell").parquet(dir)
     val coll = spark.read.parquet(dir)
@@ -91,7 +94,8 @@ class IvfSpec extends AnyFunSuite {
     val (df, _) = clustered
     df.cache(); df.count()
     def jobsFor(k: Int): Int = TestSpark.jobsDuring(
-      Ivf.trainCentroids(df, "vec_id", "embedding", k, iters = 2))
+      Pq.trainCodebooksKmeansPar(df, "vec_id", "embedding",
+        m = 1, k = k, iters = 2).codebooks.head)
     val j3 = jobsFor(3)
     val j12 = jobsFor(12)
     assert(j12 == j3, s"init jobs grew with k: k=3 -> $j3, k=12 -> $j12")
@@ -197,14 +201,16 @@ class IvfSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val mixed = ((0 until 60).map(i => (i.toLong, Array.fill(4)(rnd.nextFloat()))) :+
       ((60L, Array.fill(6)(rnd.nextFloat())))).toDF("vec_id", "embedding")
-    val cents = Ivf.trainCentroids(mixed, "vec_id", "embedding", k = 3, iters = 2)
+    val cents = Pq.trainCodebooksKmeansPar(mixed, "vec_id", "embedding",
+      m = 1, k = 3, iters = 2).codebooks.head
     assert(cents.length == 3 && cents.forall(_.length == 4))
   }
 
   test("empty-cell fallback: k larger than distinct points keeps previous centroid") {
     val tiny = Seq((0L, Array(0f, 0f)), (1L, Array(10f, 10f)))
       .toDF("vec_id", "embedding")
-    val cents = Ivf.trainCentroids(tiny, "vec_id", "embedding", k = 2, iters = 3)
+    val cents = Pq.trainCodebooksKmeansPar(tiny, "vec_id", "embedding",
+      m = 1, k = 2, iters = 3).codebooks.head
     assert(cents.length == 2)
     assert(cents.forall(_.forall(x => !x.isNaN)))
   }

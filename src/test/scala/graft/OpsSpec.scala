@@ -112,25 +112,6 @@ class OpsSpec extends AnyFunSuite {
     assert(graft.ops.Pinned.trackedCount == 0)
   }
 
-  test("dropNearDuplicates removes the mutated copies, keeps originals") {
-    val docs = TestSpark.spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .filter(col("doc_id") < 20)
-    val base = NearDup.withMutatedCopies(docs, "doc_id", "text")
-    val pairs = NearDup.lshCandidatePairs(
-      NearDup.minhashSignaturesFused(base, "doc_id", col("text")), "doc_id")
-    val kept = NearDup.dropNearDuplicates(base, "doc_id", pairs)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val all = base.select("doc_id").collect().map(_.getLong(0)).toSet
-    val dropped = pairs.select("doc_b").collect().map(_.getLong(0)).toSet
-    // keep-min-id policy: survivors = everything minus larger-id pair
-    // members (on this tiny-vocab corpus some ORIGINAL pairs collide
-    // too — that is correct greedy dedup, not just the mutations)
-    assert(kept == all -- dropped)
-    assert(kept.contains(0L)) // the smallest id always survives
-    assert(dropped.nonEmpty && kept.intersect(dropped).isEmpty)
-  }
-
   test("simhash is word-order invariant and content sensitive") {
     val df = Seq((1L, "alpha beta gamma delta"),
       (2L, "delta gamma beta alpha"),
@@ -272,7 +253,8 @@ class OpsSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptBy == Set(2L, 9L))
     // default policy on the same graph keeps min id
-    val keptMin = NearDup.dropNearDuplicatesFromLabels(docs, "doc_id", labels)
+    val keptMin = NearDup.dropNearDuplicatesFromLabelsBy(
+        docs, "doc_id", labels, keepBy = -col("doc_id"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptMin == Set(1L, 9L))
     // schema is preserved (policy column retained, no helper columns)
@@ -308,35 +290,20 @@ class OpsSpec extends AnyFunSuite {
     assert(all.count() == 100)
   }
 
-  test("OrderedConcat Aggregator matches the sort_array composite") {
-    val df = Seq(("f", 3L, "c"), ("f", 1L, "a"), ("f", 2L, "b"),
-      ("g", 2L, "y"), ("g", 1L, "x")).toDF("file", "id", "text").repartition(4)
-    val oc = udaf(new graft.ops.OrderedConcat(" "))
-    val viaAgg = df.groupBy("file")
-      .agg(oc(col("id"), col("text")).as("t")).orderBy("file")
-      .collect().map(_.getString(1)).toSeq
-    assert(viaAgg == Seq("a b c", "x y"))
-    val viaComposite = df.groupBy("file")
-      .agg(Chunking.orderedConcat(col("id"), col("text")).as("t"))
-      .orderBy("file").collect().map(_.getString(1)).toSeq
-    assert(viaAgg == viaComposite)
-    // order-key ties resolve by text (same rule as sort_array on struct)
-    val tied = Seq(("t", 1L, "b"), ("t", 1L, "a"), ("t", 2L, "c"))
-      .toDF("file", "id", "text").repartition(3)
-    val aggTied = tied.groupBy("file").agg(oc(col("id"), col("text"))).head.getString(1)
-    val compTied = tied.groupBy("file")
-      .agg(Chunking.orderedConcat(col("id"), col("text"))).head.getString(1)
-    assert(aggTied == "a b c" && compTied == "a b c")
-    // non-BMP tie-break: sort_array compares UTF8String bytes, where
-    // "！" (U+FF01, EF BC 81) < "😀" (U+1F600, F0 9F 98 80); Java
-    // String order says the opposite (UTF-16 code units D83D < FF01).
-    // The Aggregator must follow the byte order to equal the composite.
-    val bmp = Seq(("u", 1L, "😀"), ("u", 1L, "！"))
-      .toDF("file", "id", "text").repartition(2)
-    val aggBmp = bmp.groupBy("file").agg(oc(col("id"), col("text"))).head.getString(1)
-    val compBmp = bmp.groupBy("file")
-      .agg(Chunking.orderedConcat(col("id"), col("text"))).head.getString(1)
-    assert(aggBmp == compBmp && aggBmp == "！ 😀")
+  test("orderedConcat: order-key order; ties and non-BMP text by UTF-8 bytes") {
+    def concat(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.groupBy("file").agg(Chunking.orderedConcat(col("id"), col("text")))
+        .orderBy("file").collect().map(_.getString(1)).toSeq
+    assert(concat(Seq(("f", 3L, "c"), ("f", 1L, "a"), ("f", 2L, "b"),
+      ("g", 2L, "y"), ("g", 1L, "x")).toDF("file", "id", "text")
+      .repartition(4)) == Seq("a b c", "x y"))
+    // order-key ties resolve by text (sort_array on the struct)
+    assert(concat(Seq(("t", 1L, "b"), ("t", 1L, "a"), ("t", 2L, "c"))
+      .toDF("file", "id", "text").repartition(3)) == Seq("a b c"))
+    // sort_array compares UTF8String bytes: "！" (U+FF01, EF BC 81) <
+    // "😀" (U+1F600, F0 9F 98 80), the opposite of Java String order
+    assert(concat(Seq(("u", 1L, "😀"), ("u", 1L, "！"))
+      .toDF("file", "id", "text").repartition(2)) == Seq("！ 😀"))
   }
 
   test("chunkByTokens: sliding windows with overlap, truncated tail") {
@@ -404,8 +371,10 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(report == Map(1L -> 2L, 4L -> 3L),
       s"unexpected report: $report")
-    val kept = graft.ops.Decontaminate.decontaminate(
-        corpus, "doc_id", col("text"), bench, col("text"), n = 3, minShared = 3)
+    val flagged = graft.ops.Decontaminate.contaminationReport(
+        corpus, "doc_id", col("text"), bench, col("text"), n = 3)
+      .filter(col("n_shared") >= 3).select("doc_id")
+    val kept = corpus.join(flagged, Seq("doc_id"), "left_anti")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 2L, 3L)) // only doc 4 crosses the 3-shingle bar
   }

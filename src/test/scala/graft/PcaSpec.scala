@@ -9,8 +9,8 @@ import graft.vector.{Pca, PcaModel}
   * The q150/q151/q152 oracles check covariance, the trace identity and
   * full-rank rotation-invariance through DuckDB; these pins cover what
   * SQL can't see: orthonormality, the spectral-diagonalization
-  * property (projected covariance == diag(lambda)), whitening to
-  * identity, reconstruction, determinism, and the map-only plan.
+  * property (projected covariance == diag(lambda)), reconstruction,
+  * determinism, and the map-only plan.
   */
 class PcaSpec extends AnyFunSuite {
 
@@ -77,6 +77,12 @@ class PcaSpec extends AnyFunSuite {
     assert(math.abs(model.eigenvalues.sum - trace) < 1e-9)
   }
 
+  /** Full PCA whitening, composed from the two map-only faces: rotate
+    * into the eigenbasis, then z-score each (now uncorrelated) axis. */
+  private def whitened =
+    Pca.standardize(Pca.project(df, "embedding", model, "pca")
+      .withColumn("pca", col("pca").cast("array<float>")), "pca", "whitened")
+
   test("projected data has covariance diag(lambda); whitened has identity") {
     val proj = Pca.project(df, "embedding", model, "pca")
       .select(col("pca")).as[Seq[Double]].collect()
@@ -88,8 +94,7 @@ class PcaSpec extends AnyFunSuite {
       val want = if (a == b) model.eigenvalues(a) else 0.0
       assert(math.abs(cov - want) < 1e-9, s"proj cov($a,$b) = $cov want $want")
     }
-    val wh = Pca.whiten(df, "embedding", model)
-      .select(col("whitened")).as[Seq[Double]].collect()
+    val wh = whitened.select(col("whitened")).as[Seq[Double]].collect()
     for (a <- 0 until dim; b <- a until dim) {
       val meanA = wh.map(_(a)).sum / m
       val meanB = wh.map(_(b)).sum / m
@@ -149,54 +154,6 @@ class PcaSpec extends AnyFunSuite {
     val ragged = (synth() :+ ((99L, Seq(1f, 2f)))).toDF("vec_id", "embedding")
     val ex = intercept[Exception] { Pca.fit(ragged, "embedding") }
     assert(ex.getMessage != null)
-  }
-
-  test("spectrum: monotone cumulative share ending at 1.0; truncated fit tops out honestly") {
-    val rows = Pca.spectrum(spark, model).orderBy("component").collect()
-    assert(rows.length == dim)
-    val cums = rows.map(_.getDouble(3))
-    cums.sliding(2).foreach { case Array(a, b) => assert(b >= a - 1e-12) }
-    assert(math.abs(cums.last - 1.0) < 1e-9)
-    assert(math.abs(rows.map(_.getDouble(2)).sum - 1.0) < 1e-9)
-    // a k=2 model's shares are of TOTAL variance — its curve must end
-    // at (λ1+λ2)/trace, never a self-normalized 1.0
-    val m2 = Pca.fit(df, "embedding", 2)
-    assert(math.abs(m2.totalVariance - model.totalVariance) < 1e-12)
-    val cums2 = Pca.spectrum(spark, m2).orderBy("component").collect()
-      .map(_.getDouble(3))
-    val want = model.eigenvalues.take(2).sum / model.totalVariance
-    assert(math.abs(cums2.last - want) < 1e-9)
-    assert(want < 0.999, s"synth spectrum too flat for the pin: $want")
-  }
-
-  private def assertModelsClose(a: PcaModel, b: PcaModel, tol: Double = 1e-9): Unit = {
-    assert(a.n == b.n && a.dim == b.dim && a.k == b.k)
-    (0 until a.dim).foreach(i => assert(math.abs(a.mean(i) - b.mean(i)) < tol))
-    (0 until a.k).foreach(i =>
-      assert(math.abs(a.eigenvalues(i) - b.eigenvalues(i)) < tol))
-    for (r <- 0 until a.k; i <- 0 until a.dim)
-      assert(math.abs(a.components(r)(i) - b.components(r)(i)) < 1e-6,
-        s"component($r)($i)")
-  }
-
-  test("incremental: batch-merged moments fit equals the one-shot fit") {
-    assertModelsClose(
-      Pca.fitFromMoments(Pca.momentsDf(df, "embedding")), model)
-  }
-
-  test("updateMomentsStore: sequential folds equal one-shot; created on first use") {
-    val dir = TestSpark.tempDir("pcastore") + "/moments"
-    val batches = synth().grouped(16).toSeq
-    batches.foreach { b =>
-      Pca.updateMomentsStore(spark, dir, b.toDF("vec_id", "embedding"), "embedding")
-    }
-    val stored = spark.read.parquet(dir)
-    assert(stored.count() == 1)
-    assertModelsClose(Pca.fitFromMoments(stored), model)
-    // an empty/all-null batch folds to nothing: a no-op, not a crash
-    Pca.updateMomentsStore(spark, dir,
-      Seq((999L, null: Seq[Float])).toDF("vec_id", "embedding"), "embedding")
-    assertModelsClose(Pca.fitFromMoments(spark.read.parquet(dir)), model)
   }
 
   // ---- r18: the q150 hash-fragility pins (centered covariance) ----
@@ -293,67 +250,6 @@ class PcaSpec extends AnyFunSuite {
     assert(nz.head.isNullAt(0))
   }
 
-  test("standardizeFromMoments: the store-backed z-scoring matches the two-pass direct path") {
-    val direct = Pca.standardize(df, "embedding", "z")
-      .orderBy("vec_id").select(col("z")).as[Seq[Double]].collect()
-    val stored = Pca.standardizeFromMoments(Pca.momentsDf(df, "embedding"),
-        df, "embedding", "z")
-      .orderBy("vec_id").select(col("z")).as[Seq[Double]].collect()
-    direct.zip(stored).zipWithIndex.foreach { case ((a, b), r) =>
-      a.zip(b).foreach { case (x, y) =>
-        assert(math.abs(x - y) < 1e-6, s"row $r: $x vs $y")
-      }
-    }
-  }
-
-  test("whitening recovers ANN recall under a ROTATED corruption that standardization cannot fix") {
-    // q156 hashes the diagonal face (per-dim gain -> standardize
-    // recovers) because it is SQL-expressible end to end. This pin is
-    // the rotated face the oracle can't see: a rank-1 inflation along
-    // the mixed direction a = 1/sqrt(d)*(1..1) — y = x + 39(x.a)a —
-    // leaves every per-dim variance equally inflated, so z-scoring
-    // changes nothing (measured 0.215 -> 0.215), while full `whiten`
-    // (eigenbasis rotation + scale) restores recall against the TRUE
-    // neighbors (measured 0.57) at the identical IVF probe budget.
-    val dir = "/root/testdata/sf0.001"
-    assume(new java.io.File(s"$dir/embeddings.parquet").exists(), s"$dir absent")
-    import graft.vector.{Ivf, RecallReport}
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .where(col("embedding").isNotNull)
-    val d8 = lit(0.125) // 1/sqrt(64)
-    val corrupt = emb
-      .withColumn("__dot", aggregate(col("embedding"), lit(0.0),
-        (acc, e) => acc + e.cast("double")) * d8)
-      .select(col("vec_id"), transform(col("embedding"),
-        x => (x.cast("double") + lit(39.0) * col("__dot") * d8)
-          .cast("float")).as("y"))
-    val truth = RecallReport.exactTopK(emb, "vec_id", "embedding",
-      emb.where(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-      "qid", "qv", k = 10)
-    def meanRecall(corpus: org.apache.spark.sql.DataFrame, vc: String): Double =
-      RecallReport.ivfRecallAtK(corpus, "vec_id", vc,
-          corpus.where(col("vec_id") < 20)
-            .select(col("vec_id").as("qid"), col(vc).as("qv")),
-          "qid", "qv", k = 10,
-          cents = Ivf.seedCentroids(corpus, "vec_id", vc, 8),
-          nProbe = 2, exact = Some(truth))
-        .agg(avg(col("recall"))).head().getDouble(0)
-    val raw = meanRecall(corrupt, "y")
-    val std = meanRecall(
-      Pca.standardize(corrupt, "y", "z")
-        .withColumn("z", col("z").cast("array<float>")), "z")
-    val mdl = Pca.fit(corrupt, "y")
-    val wh = meanRecall(
-      Pca.whiten(corrupt, "y", mdl)
-        .withColumn("whitened", col("whitened").cast("array<float>")),
-      "whitened")
-    assert(wh >= raw + 0.2, f"whitened $wh%.3f vs raw $raw%.3f")
-    assert(wh >= std + 0.2, f"whitened $wh%.3f vs standardized $std%.3f")
-    assert(math.abs(std - raw) < 0.1,
-      f"z-scoring must NOT fix a rotated corruption: std $std%.3f raw $raw%.3f")
-  }
-
   test("q156 fixture: standardized IVF recall beats the corrupted-raw recall by a wide margin") {
     // the query's hash pins exact per-query values; this pin states
     // the CLAIM the query exists to make, so a testdata regeneration
@@ -373,7 +269,7 @@ class PcaSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     Seq(
       Pca.project(df, "embedding", model, "pca"),
-      Pca.whiten(df, "embedding", model),
+      whitened,
       Pca.standardize(df, "embedding")
     ).foreach { out =>
       val exchanges = out.queryExecution.executedPlan.collect {

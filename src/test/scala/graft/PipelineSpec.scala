@@ -207,8 +207,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(meta("start_time") == "10.0" && meta("end_time") == "99.5")
     assert(meta("start_id") == "1" && meta("end_id") == "100")
     assert(meta.contains("date") && meta.size == 8)
-    val hit = CouncilPipeline.searchCollection(coll, embedder,
-      "budget discussion alpha", 1).head
+    val hit = graft.vector.Similarity.topK(coll, "id", "embedding",
+      embedder.embed("budget discussion alpha"), 1).head
     assert(hit.getString(0) == "m1.mp4:1:100" && hit.getDouble(1) == 1.0)
   }
 
@@ -249,46 +249,5 @@ class PipelineSpec extends AnyFunSuite {
       .select(col("rid"), col("exact_d2"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served == inMem)
-  }
-
-  test("CDC refresh: diff drives selective re-embed + merge + delete") {
-    import graft.pipeline.IncrementalEmbed
-    val state = s"${TestSpark.tempDir("cdcembed")}/vectors"
-    val embedder = new PipelineSpec.CountingEmbedder
-
-    val prev = Seq((1L, "alpha text"), (2L, "beta text"), (3L, "gamma text"),
-      (4L, "delta text")).toDF("doc_id", "text")
-    PipelineSpec.embedCalls.set(0)
-    val s0 = IncrementalEmbed.refresh(spark, state,
-      prev.limit(0), prev, "doc_id", col("text"), embedder)
-    assert(PipelineSpec.embedCalls.get == 4) // first run embeds everything
-    assert(s0.count() == 4)
-    val beforeBeta = s0.filter(col("doc_id") === 2)
-      .head.getSeq[Float](1)
-    val beforeAlpha = s0.filter(col("doc_id") === 1)
-      .head.getSeq[Float](1)
-
-    // run 2: 1 unchanged, 2 changed, 3 removed, 5 added
-    val curr = Seq((1L, "alpha text"), (2L, "beta text v2"),
-      (4L, "delta text"), (5L, "epsilon text")).toDF("doc_id", "text")
-    PipelineSpec.embedCalls.set(0)
-    val s1 = IncrementalEmbed.refresh(spark, state,
-      prev, curr, "doc_id", col("text"), embedder)
-    // the embedder ran ONLY on the churn: changed (2) + added (5)
-    assert(PipelineSpec.embedCalls.get == 2,
-      s"embedded ${PipelineSpec.embedCalls.get} docs, expected 2")
-    // removed key is gone; survivors + churn present
-    assert(s1.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L, 4L, 5L))
-    // unchanged rows carried their vector over untouched; changed re-embedded
-    val after = s1.collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(after(1L) == beforeAlpha)
-    assert(after(2L) != beforeBeta)
-    // end state == a from-scratch embed of curr (bit-for-bit)
-    val scratch = graft.vector.Embed.withEmbedding(curr, col("text"),
-        new HashEmbedder(dim = 16))
-      .select("doc_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(after == scratch)
   }
 }

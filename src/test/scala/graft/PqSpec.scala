@@ -120,10 +120,10 @@ class PqSpec extends AnyFunSuite {
     // wiring: subspace s's codebook IS Ivf.trainCentroids on the
     // s-th dsub-slice (catches off-by-one slicing)
     for (s <- 0 until m) {
-      val direct = Ivf.trainCentroids(
+      val direct = Pq.trainCodebooksKmeansPar(
         df.select(col("vec_id"),
           slice(col("embedding"), s * dsub + 1, dsub).as("__slice")),
-        "vec_id", "__slice", k, iters = 3)
+        "vec_id", "__slice", m = 1, k = k, iters = 3).codebooks.head
       for (c <- 0 until k)
         assert(kp.codebooks(s)(c).toSeq == direct(c).toSeq,
           s"kmeansPar codebook[$s][$c] != direct trainCentroids slice")
@@ -160,7 +160,8 @@ class PqSpec extends AnyFunSuite {
     val kmeansPar = roundJobs(i =>
       Pq.trainCodebooksKmeansPar(big, "vec_id", "embedding", m, k, iters = i))
     val ivf = roundJobs(i =>
-      Ivf.trainCentroids(big, "vec_id", "embedding", k, iters = i))
+      Pq.trainCodebooksKmeansPar(big, "vec_id", "embedding",
+        m = 1, k = k, iters = i).codebooks.head)
     assert(prefix > 0 && kmeansPar == prefix && ivf == prefix,
       s"jobs for two more rounds: id-prefix $prefix, k-means‖ $kmeansPar, IVF $ivf")
   }

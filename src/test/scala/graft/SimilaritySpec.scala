@@ -69,7 +69,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("recall report rows equal the single-query ann/ivf paths; full-probe ivf is exact") {
-    import graft.vector.{Ivf, RecallReport}
+    import graft.vector.{Ivf, Pq, RecallReport}
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val qids = Seq(3L, 17L, 42L, 101L)
     val queries = emb.filter(col("vec_id").isin(qids: _*))
@@ -78,7 +78,8 @@ class SimilaritySpec extends AnyFunSuite {
     val lshRep = RecallReport.lshRecallAtK(emb, "vec_id", "embedding",
         queries, "qid", "qvec", k, nPlanes = 4)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    val cents = Ivf.trainCentroids(emb, "vec_id", "embedding", k = 4, iters = 2)
+    val cents = Pq.trainCodebooksKmeansPar(emb, "vec_id", "embedding",
+      m = 1, k = 4, iters = 2).codebooks.head
     val ivfRep = RecallReport.ivfRecallAtK(emb, "vec_id", "embedding",
         queries, "qid", "qvec", k, cents, nProbe = 1)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
@@ -133,16 +134,6 @@ class SimilaritySpec extends AnyFunSuite {
     val mean = rep.map(_.getDouble(3)).sum / rep.length
     assert(mean >= 0.8, s"mean multiprobe recall $mean < 0.8: " +
       rep.map(r => s"${r.getLong(0)}=${r.getDouble(3)}").mkString(", "))
-  }
-
-  test("filteredTopK applies the metadata predicate before scoring") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val q = emb.filter(col("vec_id") === 0).head.getSeq[Float](1).toArray
-    val top = Similarity.filteredTopK(emb, "vec_id", "embedding", q, 5,
-      col("label") === 3)
-    val labels = emb.filter(col("label") === 3)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(top.collect().forall(r => labels.contains(r.getLong(0))))
   }
 
   test("hash embedder: deterministic, normalized, content-sensitive") {

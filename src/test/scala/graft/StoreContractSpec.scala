@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ONE parameterized contract suite for every on-disk store family
-  * (r19 verdict #6): signatures, labels, NB stats, PCA moments, BPE
-  * histograms, BPE merges, PQ index. Each family previously proved its
+  * (r19 verdict #6): signatures, labels, NB stats, BPE merges, PQ
+  * index. Each family previously proved its
   * recoverSwap/marker/compact idioms in its own spec with hand-rolled
   * assertions; this suite states the shared contract ONCE and
   * instantiates it per family, so the next store inherits the proofs
@@ -24,9 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    append, an empty/quiet tick, an overwrite-save) leaves the
   *    decision view unchanged;
   *  - compaction invariance: the decision view is identical before and
-  *    after compaction, and the data-file count does not grow;
-  *  - prune correctness: the declared expectation (≡ never-ingested
-  *    rebuild, or exact row removal) holds.
+  *    after compaction, and the data-file count does not grow.
   */
 class StoreContractSpec extends AnyFunSuite {
 
@@ -46,9 +44,7 @@ class StoreContractSpec extends AnyFunSuite {
       // protocol instead, exercised via `replay`.
       crashK1: Boolean,
       replay: Option[(String, String => Unit)] = None,
-      compact: Option[String => Unit] = None,
-      // (prune op, expected snapshot AFTER prune)
-      prune: Option[(String => Unit, String => Seq[String])] = None)
+      compact: Option[String => Unit] = None)
 
   private def fmt(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -97,7 +93,7 @@ class StoreContractSpec extends AnyFunSuite {
     (i.toLong, s"lab${i % 3}", s"tok${i % 5} tok${i % 7} common word$i")
   }.toDF("doc_id", "label", "text")
 
-  // ---------- the six-plus-one family instantiations ----------
+  // ---------- the five family instantiations ----------
 
   private lazy val signatureFamily = StoreFamily(
     name = "signature store",
@@ -118,21 +114,7 @@ class StoreContractSpec extends AnyFunSuite {
         sigs(docs.where(col("doc_id") % 2 =!= 0)), "doc_id", path,
         buckets = 8))),
     compact = Some(path =>
-      graft.ops.NearDup.compactSignatureStore(spark, path)),
-    prune = Some((
-      path => graft.ops.NearDup.pruneSignatureStore(spark, path,
-        docs.where(col("doc_id") >= 30).select(col("doc_id")), "doc_id"),
-      // ≡ a store that never ingested the removed docs
-      _ => {
-        val ref = TestSpark.tempDir("sigref") + "/sigs"
-        val kept = docs.where(col("doc_id") < 30)
-        graft.ops.NearDup.appendSignatureStore(
-          sigs(kept.where(col("doc_id") % 2 === 0)), "doc_id", ref, buckets = 8)
-        graft.ops.NearDup.appendSignatureStore(
-          sigs(kept.where(col("doc_id") % 2 =!= 0)), "doc_id", ref, buckets = 8)
-        fmt(graft.ops.NearDup.probeSignatureStore(
-          spark, ref, sigs(probeDocs), "doc_id", buckets = 8))
-      })))
+      graft.ops.NearDup.compactSignatureStore(spark, path)))
 
   private lazy val labelFamily = StoreFamily(
     name = "label store",
@@ -147,19 +129,7 @@ class StoreContractSpec extends AnyFunSuite {
     replay = Some(("re-merged batch", path =>
       graft.ops.LabelStore.merge(spark, path,
         pairs.where(col("doc_a") % 2 =!= 0), buckets = 8))),
-    compact = Some(path => graft.ops.LabelStore.compact(spark, path)),
-    prune = Some((
-      path => graft.ops.LabelStore.prune(spark, path,
-        Seq(2L, 3L).toDF("node"), "node"),
-      // exact row removal: departed nodes' rows gone, everyone else's
-      // label untouched (labels are names, not pointers)
-      path => fmt(graft.ops.LabelStore.read(spark, path))
-        .filterNot(s => s.startsWith("[2,") || s.startsWith("[3,")))))
-
-  // NOTE the prune expectation above is computed from the PRUNED
-  // store's own read in the harness (see the prune test): for exact-
-  // removal families the expectation builder receives the UNPRUNED
-  // snapshot instead. Handled below via `pruneExpectsFromBefore`.
+    compact = Some(path => graft.ops.LabelStore.compact(spark, path)))
 
   private lazy val nbStatsFamily = StoreFamily(
     name = "NB stats log",
@@ -188,39 +158,6 @@ class StoreContractSpec extends AnyFunSuite {
       s"$path/ckpt").start()
     q.awaitTermination()
   }
-
-  private lazy val momentsFamily = StoreFamily(
-    name = "PCA moments store",
-    build = { path =>
-      graft.vector.Pca.updateMomentsStore(spark, path,
-        embs.where(col("vec_id") % 2 === 0), "embedding")
-      graft.vector.Pca.updateMomentsStore(spark, path,
-        embs.where(col("vec_id") % 2 =!= 0), "embedding")
-    },
-    snapshot = path =>
-      fmt(graft.io.Sinks.readStateOrBackup(spark, path).get),
-    crashK1 = true,
-    // the quiet-tick contract: an empty/all-null batch folds to
-    // NOTHING (at-least-once redelivery of real batches is the
-    // streaming sink's marker job — StreamsSpec)
-    replay = Some(("empty-batch fold", path =>
-      graft.vector.Pca.updateMomentsStore(spark, path,
-        embs.limit(0), "embedding"))))
-
-  private lazy val histogramFamily = StoreFamily(
-    name = "BPE histogram store",
-    build = { path =>
-      graft.ops.Bpe.updateHistogramStore(spark, path,
-        docs.where(col("doc_id") % 2 === 0), "text")
-      graft.ops.Bpe.updateHistogramStore(spark, path,
-        docs.where(col("doc_id") % 2 =!= 0), "text")
-    },
-    snapshot = path =>
-      fmt(graft.io.Sinks.readStateOrBackup(spark, path).get),
-    crashK1 = true,
-    replay = Some(("all-whitespace-batch fold", path =>
-      graft.ops.Bpe.updateHistogramStore(spark, path,
-        Seq((99L, "   ")).toDF("doc_id", "text"), "text"))))
 
   private lazy val mergesFamily = StoreFamily(
     name = "BPE merge store",
@@ -260,12 +197,7 @@ class StoreContractSpec extends AnyFunSuite {
     compact = Some(path => graft.vector.Pq.compactIndexStore(spark, path)))
 
   private lazy val families = Seq(signatureFamily, labelFamily,
-    nbStatsFamily, momentsFamily, histogramFamily, mergesFamily,
-    pqIndexFamily)
-
-  /** Families whose prune expectation derives from the PRE-prune
-    * snapshot (exact row removal) rather than a fresh rebuild. */
-  private val pruneExpectsFromBefore = Set("label store")
+    nbStatsFamily, mergesFamily, pqIndexFamily)
 
   // ---------- the contract, generated per family ----------
 
@@ -306,27 +238,6 @@ class StoreContractSpec extends AnyFunSuite {
           s"${f.name}: view changed across compaction")
         assert(dataFiles(path) <= filesBefore,
           s"${f.name}: compaction grew files $filesBefore -> ${dataFiles(path)}")
-      }
-    }
-
-    f.prune.foreach { case (pruneOp, expected) =>
-      test(s"${f.name}: prune matches its declared retention semantics") {
-        val path = TestSpark.tempDir("sc-prune-" +
-          f.name.replaceAll("\\W+", "-")) + "/store"
-        f.build(path)
-        val want =
-          if (pruneExpectsFromBefore(f.name)) {
-            // expectation derived from the pre-prune view: compute the
-            // filtered form of what is there now
-            val before = f.snapshot(path)
-            pruneOp(path)
-            before.filterNot(s => s.startsWith("[2,") || s.startsWith("[3,"))
-          } else {
-            pruneOp(path)
-            expected(path)
-          }
-        assert(f.snapshot(path) == want,
-          s"${f.name}: post-prune view does not match the declared semantics")
       }
     }
   }

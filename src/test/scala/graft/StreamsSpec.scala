@@ -26,8 +26,10 @@ class StreamsSpec extends AnyFunSuite {
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val clean = graft.ops.Decontaminate.decontaminate(
+        val flagged = graft.ops.Decontaminate.contaminationReport(
           batch, "doc_id", col("text"), bench, col("text"), n = 3)
+          .select("doc_id")
+        val clean = batch.join(flagged, Seq("doc_id"), "left_anti")
         graft.io.Sinks.mergeInto(batch.sparkSession, s"$dir/state",
           clean, Seq("doc_id"))
         ()

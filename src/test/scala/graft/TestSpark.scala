@@ -9,7 +9,6 @@ object TestSpark {
     val s = GraftSession.compileOnce(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
-      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh)

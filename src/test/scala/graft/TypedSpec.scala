@@ -2,29 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.enrich.Enricher
-import graft.io.{Sinks, Sources}
-import graft.model.Schemas
 
 /** Typed Dataset path: case-class encoders over the reference's
   * on-disk formats (SURVEY §1.4 "typed pipeline rows"). */
 class TypedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("Dataset[Meeting] round-trips data.jsonl with explicit schema") {
-    val dir = TestSpark.tempDir("typed")
-    val meetings = Seq(
-      Schemas.Meeting("Budget", java.sql.Timestamp.valueOf("2026-03-11 00:00:00"),
-        "10:00 AM", None, "https://c/v1.mp4", Some("https://c/a1"), None, Some("box1")),
-      Schemas.Meeting("Zoning", java.sql.Timestamp.valueOf("2026-03-12 00:00:00"),
-        "Unknown Time", None, "https://c/v2.mp4", None, None, None))
-    Sinks.writeJsonl(meetings.toDF(), s"$dir/data.jsonl")
-    val back = Sources.readJsonl(spark, s"$dir/data.jsonl", Schemas.meetingSchema)
-      .as[Schemas.Meeting]
-    assert(back.collect().sortBy(_.title).toSeq == meetings.sortBy(_.title))
-    // typed filter + map compile against fields
-    assert(back.filter(_.box_link.isDefined).count() == 1)
-  }
 
   test("Dataset[Segment] flows through typed enrichment") {
     val t = new Enricher.StubTranscriber(3)
