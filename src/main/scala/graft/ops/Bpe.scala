@@ -244,25 +244,24 @@ object Bpe {
       spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Persist the learned merge table as an on-disk store (K1 staging
-    * swap, crash-recoverable). The
+  /** Persist the learned merge table as an on-disk store: one
+    * `graft.io.Store` commit that replaces the previous table. The
     * table is numMerges rows, so the write is trivially bounded; the
     * point is restartability: a tokenize job (q162's pack composite)
     * can load the vocab a training run produced yesterday instead of
     * holding it in a closure. */
   def saveMerges(spark: SparkSession, storePath: String,
-      merges: Seq[Merge]): Unit = {
-    graft.io.Sinks.recoverSwap(spark, storePath)
-    graft.io.Sinks.overwriteInPlace(mergesDf(spark, merges), storePath)
-  }
+      merges: Seq[Merge]): Unit =
+    graft.io.Store.commit(mergesDf(spark, merges), storePath, Map.empty)(_ => true)
 
   /** Load a persisted merge table, restoring TRAINING ORDER (step
     * ascending — BPE application replays merges in the order they
     * were learned; an unordered read would tokenize differently).
     * Round-trip contract: `loadMerges(save(m)) == m` (BpeSpec). */
   def loadMerges(spark: SparkSession, storePath: String): Seq[Merge] = {
-    graft.io.Sinks.recoverSwap(spark, storePath)
-    spark.read.parquet(storePath)
+    graft.io.Store.read(spark, storePath)
+      .getOrElse(throw new java.util.NoSuchElementException(
+        s"loadMerges: no merge table at $storePath"))
       .select(col("step"), col("left_tok"), col("right_tok"),
         col("pair_count"))
       .orderBy(col("step"))

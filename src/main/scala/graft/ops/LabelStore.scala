@@ -35,28 +35,28 @@ import org.apache.spark.sql.functions._
   *  3. re-converge ONLY that subgraph: `connectedComponents` over
   *     (touched stars ∪ new pairs) — iterative work proportional to
   *     the batch and the components it touches, never the corpus;
-  *  4. merge: ONLY the affected `comp_bucket` partitions rewrite
-  *     (`Sinks.swapBuckets` — per-bucket staging renames behind an
-  *     intent manifest, r16). Affected = the touched components' old
-  *     buckets ∪ the re-converged labels' new buckets; rows of
+  *  4. merge: ONLY the affected `comp_bucket` partitions rewrite, as
+  *     one `graft.io.Store` commit. Affected = the touched components'
+  *     old buckets ∪ the re-converged labels' new buckets; rows of
   *     untouched components that merely share an affected bucket
   *     pass through within that bucket's rewrite (an anti join whose
   *     build side is the re-labeled subgraph's node set), and every
-  *     OTHER bucket directory is never read, never written —
-  *     byte-identical after the merge (spec-asserted). A crashed
-  *     merge rolls back to the previous labels
-  *     (`Sinks.recoverBucketSwap`), and re-running the same batch is
-  *     idempotent (star edges of already-merged components
-  *     re-converge to the same labels).
+  *     OTHER bucket's files are never read, never written —
+  *     byte-identical after the merge (spec-asserted). The commit's
+  *     manifest drops the affected buckets' old files and lists the
+  *     new ones, so a crashed merge reads as the previous labels, and
+  *     re-running the same batch is idempotent (star edges of
+  *     already-merged components re-converge to the same labels).
   *
   * Per-batch cost: the touched-subgraph CC plus one partition-pruned
   * lookup scan of the store and a rewrite of the affected buckets
-  * only. NOTHING in the merge is proportional to the corpus: the
-  * label table is two longs per document, and a daily batch touching
-  * k components reads and writes ≤ 2k of its bucket partitions
-  * (capped at `buckets`) regardless of how many documents the store
-  * labels — the probe pins a fixed batch's merge cost flat across a
-  * 100× corpus. */
+  * only. The label table is two longs per document, and a batch
+  * touching k components reads and writes ≤ 2k of its bucket
+  * partitions, capped at `buckets`: a nightly batch of hundreds of
+  * documents can touch every bucket (ROADMAP item 3).
+  *
+  * Manifest 0 records `buckets` and the bucket hash; a merge with
+  * another bucket count throws before any Spark job runs. */
 object LabelStore {
 
   /** Merge a batch of candidate pairs into the label store at `path`,
@@ -64,29 +64,28 @@ object LabelStore {
     * one row per node ever seen in a merged pair, labeled with the
     * min id reachable across ALL merged pairs — byte-equal to a
     * one-shot `connectedComponents` over the union of every batch
-    * (spec-asserted tiling, the signature-store treatment).
-    *
-    * `buckets` must stay constant across the store's lifetime (same
-    * contract as the signature store's `band_bucket`). */
+    * (spec-asserted tiling, the signature-store treatment). With a
+    * streaming `batch` id already recorded in the store, the call is a
+    * no-op. */
   def merge(spark: SparkSession, path: String, newPairs: DataFrame,
       colA: String = "doc_a", colB: String = "doc_b",
       buckets: Int = 64, maxIterations: Int = 20,
-      maxBroadcastSubNodes: Long = 10000000L): Unit = {
+      maxBroadcastSubNodes: Long = 10000000L,
+      batch: Option[Long] = None): Unit = {
     require(buckets >= 1, s"LabelStore.merge: buckets=$buckets")
+    val layout = Map("partitionBy" -> "comp_bucket",
+      "buckets" -> buckets.toString, "hash" -> "pmod(xxhash64(component), buckets)")
+    graft.io.Store.expect(spark, path, layout)
+    if (batch.exists(graft.io.Store.committed(spark, path, _))) return
     // A pair-less batch is a guaranteed no-op in BOTH branches — no
-    // store yet ⇒ nothing to bootstrap (and a partitioned parquet
-    // write of zero rows emits only _SUCCESS, bricking later reads on
-    // schema inference); store present ⇒ zero touched components, and
-    // without this guard the quiet tick would still pay a full
-    // pass-through rewrite of the corpus-sized label table.
+    // store yet ⇒ nothing to bootstrap (a partitioned write of zero
+    // rows would commit an epoch with no file); store present ⇒ zero
+    // touched components, and without this guard the quiet tick would
+    // still pay a full pass-through rewrite of the corpus-sized label
+    // table.
     if (newPairs.isEmpty) return
-    // recover BOTH swap flavors before reading: a crashed whole-store
-    // swap promotes its backup, a crashed bucket swap rolls back —
-    // either way the read below sees one consistent pre-merge store
-    graft.io.Sinks.recoverSwap(spark, path)
-    graft.io.Sinks.recoverBucketSwap(spark, path)
-    val existing = graft.io.Sinks.readStateOrBackup(spark, path)
-    // the CC result is localCheckpoint-pinned; the swap consumes it,
+    val existing = graft.io.Store.read(spark, path)
+    // the CC result is localCheckpoint-pinned; the commit consumes it,
     // then the finally releases its blocks (one label-table pin per
     // streaming tick otherwise)
     var pinnedCc: Option[DataFrame] = None
@@ -110,11 +109,11 @@ object LabelStore {
         // bootstrap is the one full write the store ever pays; one
         // writer task per bucket — without this, every shuffle task
         // writes a sliver file into every bucket dir it touches
-        graft.io.Sinks.overwriteInPlace(
+        graft.io.Store.commit(
           boot.withColumn("comp_bucket",
               pmod(xxhash64(col("component")), lit(buckets.toLong)))
             .repartition(buckets, col("comp_bucket")),
-          path, partitionBy = Seq("comp_bucket"))
+          path, layout, batch)(_ => true)
       case Some(storedRaw) =>
         val stored = storedRaw.select(col("node"), col("component"),
           col("comp_bucket"))
@@ -171,7 +170,7 @@ object LabelStore {
         val sub = NearDup.connectedComponents(
           star.unionByName(contracted), colA, colB, maxIterations)
         pinnedCc = Some(sub)
-        // 4. rewrite ONLY the affected buckets (r16): the touched
+        // 4. rewrite ONLY the affected buckets: the touched
         // components' old buckets plus wherever the re-converged
         // labels hash — a merged component's new min-id can land in
         // a different bucket than any of its constituents, and its
@@ -224,8 +223,9 @@ object LabelStore {
           .withColumn("comp_bucket",
             pmod(xxhash64(col("component")), lit(buckets.toLong)))
           .repartition(math.max(1, affected.length), col("comp_bucket"))
-        graft.io.Sinks.swapBuckets(spark, path, content, "comp_bucket",
-          affected)
+        val dirs = affected.map(b => s"comp_bucket=$b/").toSet
+        graft.io.Store.commit(content, path, layout, batch)(f =>
+          dirs.exists(f.startsWith))
     }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -234,42 +234,24 @@ object LabelStore {
   }
 
   /** Compact the label store: rewrite every `comp_bucket` partition
-    * into (at most) one file. A merge already funnels each bucket
-    * through one writer task, so steady-state merges keep the store
-    * at ~1 file per bucket (the r16 bucket swap REPLACES each
-    * affected dir wholesale, so partial rewrites don't fragment
-    * either) — but a store inherited from a different writer can
-    * fragment,
+    * into (at most) one file, as one commit. A merge already funnels
+    * each bucket through one writer task, and replaces each affected
+    * bucket's files wholesale, so merges keep the store at ~1 file per
+    * bucket; a store inherited from a different writer can fragment,
     * and the signature store's compaction cadence
-    * (`NearDup.compactSignatureStore`) wants a same-shaped analog
-    * here. Same K1 staging swap; GraphSpec asserts read-equivalence
-    * and the file bound. */
+    * (`NearDup.compactSignatureStore`) wants a same-shaped analog here.
+    * GraphSpec asserts read-equivalence and the file bound. */
   def compact(spark: SparkSession, path: String): Unit =
-    graft.io.Sinks.rewriteBucketed(spark, path, "comp_bucket")
+    graft.io.Store.compact(spark, path,
+      graft.io.Store.layout(spark, path).fold(1)(_("buckets").toInt))
 
-  /** The current labels: (node, component), crash-recovering through
-    * the K1 backup like any swap-managed state — and rolling back an
-    * interrupted bucket swap first, so a reader never sees a
-    * half-renamed partition set.
-    *
-    * Reading is therefore NOT pure: it may mutate the store (the
-    * rollback). The RECOVERY step is safe alongside a concurrent
-    * merge — same-JVM races serialize on the store's swap lock, and a
-    * manifest left by a LIVE writer in another process makes recovery
-    * refuse loudly rather than roll back its in-flight renames (r17;
-    * see `Sinks.recoverBucketSwap`); a refused read should simply
-    * retry after the merge completes. The lock does NOT extend to the
-    * returned DataFrame: the scan is lazy, so an action run after a
-    * later merge's bucket renames can hit moved-away part files
-    * (FileNotFound) or a torn pre/post-swap mix of buckets.
-    * Consume-before-the-next-merge — or cache/materialize first — is
-    * the reader's contract, same single-writer-era discipline as
-    * every swap-managed store here. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    graft.io.Sinks.recoverBucketSwap(spark, path)
-    graft.io.Sinks.readStateOrBackup(spark, path)
+  /** The current labels: (node, component), read from the latest
+    * manifest's files. Reading never changes the store. The scan is
+    * lazy: consume it before the next merge deletes the files it
+    * lists. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    graft.io.Store.read(spark, path)
       .getOrElse(throw new java.util.NoSuchElementException(
         s"LabelStore.read: no label store at $path"))
       .select(col("node"), col("component"))
-  }
 }

@@ -313,24 +313,28 @@ object NearDup {
     * store is the usual hash-bucketed parquet layout (`buckets`
     * sized so one bucket ≈ one task's worth of files). */
   def appendSignatureStore(sigs: DataFrame, id: String, path: String,
-      numHashes: Int = 4, rowsPerBand: Int = 2, buckets: Int = 64): Unit = {
+      numHashes: Int = 4, rowsPerBand: Int = 2, buckets: Int = 64,
+      batch: Option[Long] = None): Unit = {
     require(buckets >= 1, s"appendSignatureStore: buckets=$buckets")
-    // an append into the crash window of an interrupted rewrite would
-    // otherwise rebuild the store as just this batch (and the next
-    // rewrite would delete the backup holding the real one)
-    graft.io.Sinks.recoverSwap(sigs.sparkSession, path)
-    bandedSignatures(sigs, id, numHashes, rowsPerBand, "appendSignatureStore")
-      .select(col("__id").as(id), col("__band").as("band"),
-        pmod(xxhash64(col("__band")), lit(buckets.toLong)).as("band_bucket"))
-      // one writer task per bucket (the LabelStore discipline): an
-      // un-repartitioned append writes tasks × buckets sliver files
-      // PER TICK of the streaming sink, and probe-side scan cost is
-      // gated on file count. Callers size `buckets` so one bucket of
-      // one batch ≈ one task's rows; `Sinks.compact` handles long-run
-      // accumulation across appends.
-      .repartition(buckets, col("band_bucket"))
-      .write.mode("append").partitionBy("band_bucket").parquet(path)
+    graft.io.Store.commit(
+      bandedSignatures(sigs, id, numHashes, rowsPerBand, "appendSignatureStore")
+        .select(col("__id").as(id), col("__band").as("band"),
+          pmod(xxhash64(col("__band")), lit(buckets.toLong)).as("band_bucket"))
+        // one writer task per bucket (the LabelStore discipline): an
+        // un-repartitioned append writes tasks × buckets sliver files
+        // PER TICK of the streaming sink, and probe-side scan cost is
+        // gated on file count. Callers size `buckets` so one bucket of
+        // one batch ≈ one task's rows; `compactSignatureStore` handles
+        // long-run accumulation across appends.
+        .repartition(buckets, col("band_bucket")),
+      path, signatureLayout(numHashes, rowsPerBand, buckets), batch)(_ => false)
   }
+
+  /** The signature store's manifest 0; appends and probes state theirs. */
+  private def signatureLayout(numHashes: Int, rowsPerBand: Int, buckets: Int) =
+    Map("partitionBy" -> "band_bucket", "hash" -> "pmod(xxhash64(band), buckets)",
+      "buckets" -> s"$buckets", "numHashes" -> s"$numHashes",
+      "rowsPerBand" -> s"$rowsPerBand")
 
   /** Probe the on-disk signature store with a new batch: candidate
     * pairs with at least one new-batch side, among store ∪ batch —
@@ -340,21 +344,30 @@ object NearDup {
     * the scan via an `isin` partition filter, so the store read is a
     * strict file subset whenever the batch doesn't touch every
     * bucket (spec-asserted, the IvfSpec partition-pruning treatment).
+    * An absent or empty store probes as the batch joining only itself
+    * (`lshCandidatePairs`), the first tick of the streaming loop.
+    * A `buckets`, `numHashes` or `rowsPerBand` other than the store's
+    * throws before any Spark job runs: a probe hashed differently
+    * would prune to the wrong buckets and silently miss pairs.
     * Call `appendSignatureStore` with the same batch AFTER probing —
     * probe-then-append keeps batch-internal pairs covered by the
     * `fresh × fresh` side without double-reading them from disk. */
   def probeSignatureStore(spark: org.apache.spark.sql.SparkSession,
       path: String, newSigs: DataFrame, id: String,
       numHashes: Int = 4, rowsPerBand: Int = 2, buckets: Int = 64): DataFrame = {
-    graft.io.Sinks.recoverSwap(spark, path)
+    graft.io.Store.expect(spark, path, signatureLayout(numHashes, rowsPerBand, buckets))
     val fresh = bandedSignatures(newSigs, id, numHashes, rowsPerBand,
       "probeSignatureStore")
-    val touched = fresh
-      .select(pmod(xxhash64(col("__band")), lit(buckets.toLong))).distinct()
-      .collect().map(_.getLong(0))
-    probeJoin(fresh, spark.read.parquet(path)
-      .filter(col("band_bucket").isin(touched: _*))
-      .select(col(id).as("__id"), col("band").as("__band")))
+    graft.io.Store.read(spark, path) match {
+      case None => lshCandidatePairs(newSigs, id, numHashes, rowsPerBand)
+      case Some(stored) =>
+        val touched = fresh
+          .select(pmod(xxhash64(col("__band")), lit(buckets.toLong))).distinct()
+          .collect().map(_.getLong(0))
+        probeJoin(fresh, stored
+          .filter(col("band_bucket").isin(touched: _*))
+          .select(col(id).as("__id"), col("band").as("__band")))
+    }
   }
 
   /** Compact the on-disk signature store: rewrite every `band_bucket`
@@ -363,18 +376,19 @@ object NearDup {
     * slivers per bucket and the probe's partition-pruned scan pays
     * for every one of them — open cost, not bytes, dominates a
     * sliver-heavy bucket at any scale. Hash-repartitioning on
-    * `band_bucket` with one task per observed bucket sends ALL rows
-    * of a bucket through one writer, so each partition directory
-    * comes back as a single file; the K1 staging swap keeps a
-    * crashed compaction from losing the store, and the layout
-    * (partitioned parquet, same schema) is byte-compatible with
-    * later appends and probes — GraphSpec asserts probe-equivalence
+    * `band_bucket` with one task per bucket sends ALL rows of a
+    * bucket through one writer, so each partition directory comes
+    * back as a single file; the rewrite is one store commit, so a
+    * crashed compaction leaves the store as it was, and the layout
+    * (partitioned parquet, same schema) is byte-compatible with later
+    * appends and probes — GraphSpec asserts probe-equivalence
     * before/after and the ≤1-file-per-bucket bound. Run it on
     * whatever cadence keeps files-per-bucket bounded (weekly against
     * daily appends); it reads and writes the store once. */
   def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    graft.io.Sinks.rewriteBucketed(spark, path, "band_bucket")
+    graft.io.Store.compact(spark, path,
+      graft.io.Store.layout(spark, path).fold(1)(_("buckets").toInt))
 
   /** SimHash over the token multiset, `bits` wide (16 or 64). Word
     * hash = first bits/4 sha256 nibbles (nibble 1 most significant);

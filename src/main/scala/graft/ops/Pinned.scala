@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * no second job: [[pin]] passes checkpointed frames through. The one
   * consumer that frees a tracked result early is `LabelStore.merge`:
   * the CC labels it merges are released in its `finally`, once the
-  * bucket swap has consumed them.
+  * store commit has consumed them.
   *
   * `spark.catalog.clearCache()` does NOT cover these blocks, and
   * neither does `Dataset.unpersist()`: they are RDD-level persists,

@@ -240,8 +240,8 @@ object BpeQueries {
     },
 
     // ---- tokenize from the PERSISTED merge store ----
-    // q160's oracle verbatim: train, save the merge table through the
-    // K1 staging swap, load it back, tokenize from the LOADED rows.
+    // q160's oracle verbatim: train, save the merge table as a store
+    // commit, load it back, tokenize from the LOADED rows.
     // A hash match proves the store round-trips bit-for-bit INCLUDING
     // training order — the restartable form of the q162 composite
     // (the NB-stats / PCA-moments store discipline for the vocab).

@@ -556,11 +556,11 @@ object PqQueries {
     // seeds across the id range and runs TWO grid-snapped Lloyd rounds
     // — everything DuckDB replays (the full double-Lloyd chain rides
     // the hash) — and this report prices it against the q166 prefix
-    // model per query, the q168 discipline. (The true k-means‖ trainer
-    // `Pq.trainCodebooksKmeansPar` is the production path; its
-    // d²-sampling hashes with Spark's xxhash64, which no oracle can
-    // re-derive, so it is PqSpec-covered instead — the q58/IvfSpec
-    // split.)
+    // model per query, the q168 discipline. (The k-means‖ trainer
+    // `Pq.trainCodebooksKmeansPar` is no query's path: only specs and
+    // the ScaleSmoke dev main train with it. Its d²-sampling hashes
+    // with Spark's xxhash64, which no oracle can re-derive, so PqSpec
+    // covers it — the q58/IvfSpec split.)
     Q("q174_pq_adaptive_recall",
       s"""WITH $pqCte, $decCte,
          |$adaptiveCte,

@@ -196,9 +196,9 @@ object VectorQueries {
 
     // ---- IVF-ANN: nearest-centroid cells, probe-pruned top-k ----
     // Fixed centroids (the k=8 smallest vec_ids) keep the cell
-    // assignment SQL-reproducible; the TRAINED path (k-means‖,
-    // `Pq.trainCodebooksKmeansPar` at m = 1) is covered by IvfSpec
-    // instead. Double
+    // assignment SQL-reproducible; the k-means‖ trainer
+    // (`Pq.trainCodebooksKmeansPar` at m = 1), which no query runs,
+    // is covered by IvfSpec instead. Double
     // (not float) distance arithmetic on both sides → exact parity.
     Q("q58_ivf_ann",
       """WITH cent AS (SELECT vec_id AS cid, embedding AS cemb

@@ -148,11 +148,12 @@ object ScaleSmoke {
         .select("embedding").collect().map(_.getSeq[Float](0).toArray)
       T(s"semdedup x$scale") {
         graft.vector.SemDedup.dropSemanticDuplicates(embS, "vec_id",
-            "embedding", cents, threshold = 0.3)
+            "embedding", graft.vector.FlatQuantizer(cents), threshold = 0.3)
           .write.format("noop").mode("overwrite").save(); 0L
       }
       T(s"knn_graph x$scale") {
-        graft.vector.SemDedup.knnGraph(embS, "vec_id", "embedding", cents, 3)
+        graft.vector.SemDedup.knnGraph(embS, "vec_id", "embedding",
+          graft.vector.FlatQuantizer(cents), 3)
           .write.format("noop").mode("overwrite").save(); 0L
       }
       // exact-substring removal (q77 shape): stride-1 window explode,

@@ -167,7 +167,6 @@ object Sf10Probe {
     family("labels") { for ((corpus, tag) <- Seq((docs1, "x1"), (docs100, s"x$copies"))) {
       val lpath = s"$out/labels_$tag"
       hfs.delete(new org.apache.hadoop.fs.Path(lpath), true)
-      hfs.delete(new org.apache.hadoop.fs.Path(lpath + ".old"), true)
       val corpusPairs = NearDup.lshCandidatePairs(
         NearDup.minhashSignaturesFused(corpus, "doc_id", col("text")),
         "doc_id")
@@ -179,7 +178,7 @@ object Sf10Probe {
         graft.ops.LabelStore.merge(spark, lpath, batchPairs)
         graft.ops.LabelStore.read(spark, lpath).count()
       }
-      // r17 evidence line for the bucket-swap claim, measured with a
+      // r17 evidence line for the partial bucket rewrite, measured with a
       // ONE-PAIR batch (one stored node bridged to one new id — the
       // shape of a quiet streaming tick): the merge must (a) rewrite
       // only that component's bucket(s), leaving every other dir

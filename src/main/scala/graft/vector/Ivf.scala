@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * flow is Pq's — a seed rule, then `Pq.lloydOnce` × iters.
   * `seedCentroids` is the id-prefix rule with no rounds (the seeding
   * the oracle queries replay); `Pq.trainCodebooksKmeansPar` with
-  * m = 1 is k-means‖ seeds plus grid-snapped Lloyd rounds. Only
-  * the centroid table (k×dim doubles, driver-bounded by construction)
-  * ever leaves the executors. Assignment is a per-row O(k·dim) map
+  * m = 1 is k-means‖ seeds plus grid-snapped Lloyd rounds, reached
+  * only by specs and the ScaleSmoke dev main. Only the centroid table
+  * (k×dim doubles, driver-bounded by construction) ever leaves the
+  * executors. Assignment is a per-row O(k·dim) map
   * against broadcast centroids. At 100 TB the collection is written
   * partitioned/bucketed BY `ivf_cell`, so a probe prunes to nProbe
   * partitions' files — the same pruning story as the LSH bucket

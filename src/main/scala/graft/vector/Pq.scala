@@ -492,21 +492,27 @@ object Pq {
     * files (spec-pinned via inputFiles), the scanned rows are m small
     * ints each, and the float column never ships: at dim 64 / m 8 the
     * index is 32× smaller than the vectors it serves. Append-able per
-    * ingest batch (`mode=append` + one writer task per cell — the
-    * signature-store sliver discipline); `Sinks.recoverSwap` guards
-    * the crash window like every other store. */
+    * ingest batch (one `graft.io.Store` commit, one writer task per
+    * cell — the signature-store sliver discipline). */
   def writeIndexStore(df: DataFrame, id: String, vec: String,
-      model: PqModel, cents: Array[Array[Float]], path: String): Unit = {
-    graft.io.Sinks.recoverSwap(df.sparkSession, path)
-    encodedCellRows(df, id, vec, model, cents)
-      .write.mode("append").partitionBy("ivf_cell").parquet(path)
-  }
+      model: PqModel, cents: Array[Array[Float]], path: String): Unit =
+    graft.io.Store.commit(encodedCellRows(df, id, vec, model, cents), path,
+      indexLayout(model, cents) + ("partitionBy" -> "ivf_cell"))(_ => false)
+
+  /** What the index store's manifest 0 records beside its partition
+    * columns (`ivf_cell`, or `batch,ivf_cell` for the streaming sink):
+    * a probe or append with another cell count or codebook shape
+    * throws before any job. */
+  private[graft] def indexLayout(model: PqModel,
+      cents: Array[Array[Float]]): graft.io.Store.Layout =
+    Map("cells" -> cents.length.toString, "m" -> model.m.toString,
+      "k" -> model.k.toString)
 
   /** Compact the IVF-PQ index store: fold the accumulated per-tick
     * `batch=N` partitions (the `Streams.pqIndexSink` growth pattern —
     * one directory per micro-batch, unbounded under a daily cron) into
-    * ONE `batch=-1` epoch with one file per cell, behind the K1
-    * staging swap. The signature/label-store compaction runbook
+    * ONE `batch=-1` epoch with one file per cell, as one store commit.
+    * The signature/label-store compaction runbook
     * (`LabelStore.compact` / `NearDup.compactSignatureStore`) applied
     * to the PQ index:
     *
@@ -515,47 +521,24 @@ object Pq {
     *    reads, and `-1` keeps the directory shape uniform so later
     *    ticks append `batch=N` (N ≥ 0, monotonic from the checkpoint)
     *    next to the compacted epoch without a partition-schema clash;
-    *  - the sink's `_committed_batch_*` replay markers are carried
-    *    INTO the staged tree before the promote — a crashed stream
-    *    that replays its last batch after a compaction still skips it
-    *    (its rows are already inside `batch=-1`; losing the marker
-    *    would double-ingest that batch). No crash window can lose
-    *    them: either the old root (markers intact) or the fully
-    *    staged new root (markers copied) is live;
+    *  - the commit carries the store's recorded streaming batch id, so
+    *    a crashed stream that replays its last batch after a
+    *    compaction still skips it (its rows are already inside
+    *    `batch=-1`);
     *  - a batch-writer store with no `batch` level compacts to plain
     *    `ivf_cell=*` dirs (its append slivers merge per cell).
     *
     * Cadence: run on the prune/compact schedule of the other stores,
-    * in the single-writer era (never concurrent with a live sink —
-    * the store-wide discipline `LabelStore.read` documents). Cost is
+    * never concurrent with a live sink (one writer per store). Cost is
     * one full-store rewrite, ~k writer tasks; the store holds m bytes
     * per vector, 32× smaller than the corpus it indexes. */
   def compactIndexStore(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.io.Sinks.recoverSwap(spark, path)
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(path)),
-      s"compactIndexStore: no index store at $path")
-    val markers = fs.listStatus(new Path(path))
-      .filter(s => !s.isDirectory &&
-        s.getPath.getName.startsWith("_committed_batch_"))
-      .map(_.getPath.getName)
-    val df = spark.read.parquet(path)
-    val hasBatch = df.columns.contains("batch")
-    val out = if (hasBatch)
-      df.drop("batch").withColumn("batch", lit(-1L)) else df
-    // partition-values-only scan: bounded by the cell count k
-    val nCells = math.max(1,
-      df.select(col("ivf_cell")).distinct().count().toInt)
-    val parts = if (hasBatch) Seq("batch", "ivf_cell") else Seq("ivf_cell")
-    val staging = path + ".staging"
-    out.repartition(nCells, col("ivf_cell"))
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(staging)
-    markers.foreach(m => fs.create(new Path(staging, m), true).close())
-    graft.io.Sinks.promoteStaging(spark, path)
-  }
+      path: String): Unit =
+    graft.io.Store.compact(spark, path,
+      graft.io.Store.layout(spark, path).fold(1)(_("cells").toInt), df =>
+        if (df.columns.contains("batch"))
+          df.drop("batch").withColumn("batch", lit(-1L))
+        else df)
 
   /** ADC top-k served FROM the store: read only the query's nProbe
     * cell partitions (partition-pruned file subset), score the code
@@ -571,10 +554,12 @@ object Pq {
     require(kTop >= 1, "probeIndexStore: kTop must be >= 1")
     require(rerank <= 0 || corpus.nonEmpty,
       "probeIndexStore: rerank needs the float corpus to re-score against")
-    graft.io.Sinks.recoverSwap(spark, path)
+    graft.io.Store.expect(spark, path, indexLayout(model, cents))
     val probes = Ivf.nearestCells(query, cents, nProbe)
     val lut = adcLutFlat(query, model)
-    val scored = spark.read.parquet(path)
+    val scored = graft.io.Store.read(spark, path)
+      .getOrElse(throw new java.util.NoSuchElementException(
+        s"probeIndexStore: no index store at $path"))
       .filter(col("ivf_cell").isin(probes: _*))
       .withColumn("adc_d2",
         round(adcDist(col("pq_codes"), lut.toSeq, model.k), 6))

@@ -77,15 +77,6 @@ object SemDedup {
     * Boundary pairs are missed by construction — same recall dial as
     * `dropSemanticDuplicates` (raise k / probe neighbors for more). */
   def knnGraph(df: DataFrame, id: String, vec: String,
-      cents: Array[Array[Float]], k: Int,
-      cellCol: String): DataFrame =
-    knnGraph(df, id, vec, FlatQuantizer(cents), k, cellCol)
-
-  def knnGraph(df: DataFrame, id: String, vec: String,
-      cents: Array[Array[Float]], k: Int): DataFrame =
-    knnGraph(df, id, vec, FlatQuantizer(cents), k, "ivf_cell")
-
-  def knnGraph(df: DataFrame, id: String, vec: String,
       quant: Quantizer, k: Int,
       cellCol: String = "ivf_cell"): DataFrame = {
     require(k >= 1, "knnGraph: k must be >= 1")
@@ -111,15 +102,6 @@ object SemDedup {
     * the SemDeDup paper's "keep one per ε-ball"). Returns the
     * surviving rows WITH their cell id attached (callers typically
     * write the collection partitioned by it). */
-  def dropSemanticDuplicates(df: DataFrame, id: String, vec: String,
-      cents: Array[Array[Float]], threshold: Double,
-      cellCol: String): DataFrame =
-    dropSemanticDuplicates(df, id, vec, FlatQuantizer(cents), threshold, cellCol)
-
-  def dropSemanticDuplicates(df: DataFrame, id: String, vec: String,
-      cents: Array[Array[Float]], threshold: Double): DataFrame =
-    dropSemanticDuplicates(df, id, vec, FlatQuantizer(cents), threshold, "ivf_cell")
-
   def dropSemanticDuplicates(df: DataFrame, id: String, vec: String,
       quant: Quantizer, threshold: Double,
       cellCol: String = "ivf_cell"): DataFrame = {

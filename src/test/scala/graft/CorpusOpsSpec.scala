@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Sampling, SourceMix, TextAnalysis}
-import graft.vector.SemDedup
+import graft.vector.{FlatQuantizer, SemDedup}
 
 /** Corpus-mix + vocabulary + normalization operators (round-5 surface):
   * SemDeDup semantic dedup, source gating, weighted resampling,
@@ -43,7 +43,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       (20L, Seq(-1f, 0.2f)))      // cell 1 (farther from +x), dissimilar
       .toDF("vec_id", "embedding")
     val kept = SemDedup.dropSemanticDuplicates(df, "vec_id", "embedding",
-      cents, threshold = 0.95)
+      FlatQuantizer(cents), threshold = 0.95)
     assert(kept.select("vec_id").as[Long].collect().sorted.toSeq == Seq(10L, 12L, 20L))
     // cell ids ride along for partitioned writes
     assert(kept.columns.contains("ivf_cell"))
@@ -61,7 +61,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       cents, threshold = 0.9)
     assert(pairs.count() == 0)
     assert(SemDedup.dropSemanticDuplicates(df, "vec_id", "embedding",
-      cents, threshold = 0.9).count() == 2)
+      FlatQuantizer(cents), threshold = 0.9).count() == 2)
   }
 
   // ---- DSIR importance scores ----
@@ -518,7 +518,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       (3L, Seq(0.8f, 0.3f)),
       (4L, Seq(0f, 1f)))   // alone in cell 1
       .toDF("vec_id", "embedding")
-    val g = SemDedup.knnGraph(df, "vec_id", "embedding", cents, k = 2)
+    val g = SemDedup.knnGraph(df, "vec_id", "embedding", FlatQuantizer(cents), k = 2)
       .orderBy("vec_id", "rank").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(!g.exists(_._1 == 4L), "singleton cell has no neighbors")

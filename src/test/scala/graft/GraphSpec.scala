@@ -302,129 +302,6 @@ class GraphSpec extends AnyFunSuite {
     assert(got((1000L, 0L)), "new node must join the giant component")
   }
 
-  test("label store: a crashed bucket swap rolls back to the pre-merge labels") {
-    val path = s"${TestSpark.tempDir("labelcrash")}/labels"
-    graft.ops.LabelStore.merge(spark, path,
-      Seq((1L, 2L), (10L, 11L), (20L, 21L)).toDF("doc_a", "doc_b"),
-      buckets = 4)
-    val before = graft.ops.LabelStore.read(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // fake a crash mid-swap, both manifest cases at once:
-    //  - a hadPrior bucket moved aside to .bold whose staged rename
-    //    never ran (live dir missing — the worst window), and
-    //  - a previously-absent bucket whose staged dir DID rename in
-    //    (junk that must be removed, or the post-recovery read breaks)
-    val dir = fs.listStatus(p(path))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("comp_bucket="))
-      .head.getPath
-    fs.mkdirs(p(path + ".bold"))
-    assert(fs.rename(dir, p(path + ".bold/" + dir.getName)))
-    val junk = fs.create(p(path + "/comp_bucket=999/junk.parquet"), true)
-    junk.write(Array[Byte](1, 2, 3)); junk.close()
-    val mf = fs.create(p(path + ".bswap.tmp"), true)
-    mf.write(s"${dir.getName}\t1\ncomp_bucket=999\t0\n".getBytes("UTF-8"))
-    mf.close()
-    assert(fs.rename(p(path + ".bswap.tmp"), p(path + ".bswap")))
-    // any read (or the next merge) rolls back to the pre-swap store
-    val after = graft.ops.LabelStore.read(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(after == before)
-    assert(!fs.exists(p(path + ".bswap")) && !fs.exists(p(path + ".bold")))
-    assert(!fs.exists(p(path + "/comp_bucket=999")))
-    // recovery is idempotent and the rolled-back store keeps merging
-    graft.ops.LabelStore.merge(spark, path,
-      Seq((2L, 20L)).toDF("doc_a", "doc_b"), buckets = 4)
-    val merged = graft.ops.LabelStore.read(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(merged == Set((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L),
-      (20L, 1L), (21L, 1L)))
-  }
-
-  test("bucket swap recovery refuses a LIVE writer's manifest, rolls back a dead one") {
-    // r17 (ADVICE): recovery racing a live merge in another process
-    // must refuse — in the worst window (live dir just moved to
-    // .bold) a rollback's cleanup would delete a bucket's only copy.
-    // A dead writer's manifest (pid gone, or pid reused with a
-    // different starttime) still rolls back as before.
-    val path = s"${TestSpark.tempDir("labellive")}/labels"
-    graft.ops.LabelStore.merge(spark, path,
-      Seq((1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b"), buckets = 4)
-    val before = graft.ops.LabelStore.read(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val host = java.net.InetAddress.getLocalHost.getHostName
-    def ticksOf(pid: Long): String = {
-      val stat = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/proc/$pid/stat")), "UTF-8")
-      stat.substring(stat.lastIndexOf(')') + 1).trim.split("\\s+")(19)
-    }
-    val dir = fs.listStatus(p(path))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("comp_bucket="))
-      .head.getPath
-    def armSwap(token: String): Unit = {
-      fs.mkdirs(p(path + ".bold"))
-      assert(fs.rename(dir, p(path + ".bold/" + dir.getName)))
-      val mf = fs.create(p(path + ".bswap.tmp"), true)
-      mf.write(s"#writer\t$token\n${dir.getName}\t1\n".getBytes("UTF-8"))
-      mf.close()
-      assert(fs.rename(p(path + ".bswap.tmp"), p(path + ".bswap")))
-    }
-    // pid 1 is alive (and is not this JVM): recovery must refuse and
-    // leave the in-flight state exactly as it found it
-    armSwap(s"1@$host@${ticksOf(1L)}")
-    val ex = intercept[IllegalStateException] {
-      graft.ops.LabelStore.read(spark, path)
-    }
-    assert(ex.getMessage.contains("live writer"))
-    assert(fs.exists(p(path + ".bswap")), "refusal must not consume the manifest")
-    assert(fs.exists(p(path + ".bold/" + dir.getName)),
-      "refusal must not touch the writer's in-flight renames")
-    // same pid, WRONG starttime = pid reuse: the writer is dead — roll back
-    val mf2 = fs.create(p(path + ".bswap"), true)
-    mf2.write(s"#writer\t1@$host@${ticksOf(1L)}0\n${dir.getName}\t1\n"
-      .getBytes("UTF-8"))
-    mf2.close()
-    assert(graft.ops.LabelStore.read(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet == before)
-    assert(!fs.exists(p(path + ".bswap")) && !fs.exists(p(path + ".bold")))
-    // NONEXISTENT pid (procStartTicks reads nothing): liveness falls
-    // back to the portable ProcessHandle check — provably absent, so
-    // the writer is dead and rollback proceeds. (The ambiguous
-    // /proc-unreadable-but-alive case can't be staged on Linux; the
-    // fallback's refusal side is the pid-1 arm above, which any
-    // ProcessHandle-based check also sees as present.)
-    val deadPid = (4194300L to 4194200L by -1L)
-      .find(q => !ProcessHandle.of(q).isPresent).get
-    armSwap(s"$deadPid@$host@12345")
-    assert(graft.ops.LabelStore.read(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet == before)
-    assert(!fs.exists(p(path + ".bswap")) && !fs.exists(p(path + ".bold")))
-  }
-
-  test("swapBuckets fails loudly on staged partitions outside `affected`") {
-    // r17 (ADVICE): a miscomputed affected set must be an error, not
-    // silent row loss — staged-but-never-promoted dirs vanish at
-    // cleanup. LabelStore can't trip this by construction; a future
-    // caller could.
-    val path = s"${TestSpark.tempDir("labelorphan")}/labels"
-    graft.ops.LabelStore.merge(spark, path,
-      Seq((1L, 2L)).toDF("doc_a", "doc_b"), buckets = 4)
-    val content = Seq((1L, 1L, 0L), (2L, 1L, 3L))
-      .toDF("node", "component", "comp_bucket")
-    val ex = intercept[IllegalArgumentException] {
-      graft.io.Sinks.swapBuckets(spark, path, content, "comp_bucket",
-        affected = Seq(0L))
-    }
-    assert(ex.getMessage.contains("comp_bucket=3"))
-    // the guard fired before any rename: the store still reads clean
-    assert(graft.ops.LabelStore.read(spark, path).count() == 2)
-  }
-
   test("label store: a pair-less FIRST merge does not create a broken store") {
     // an empty partitioned parquet write emits only _SUCCESS; if the
     // first (bootstrap) merge wrote it, every later read would die on
@@ -519,7 +396,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   /** Parquet data files per partition directory under a bucketed
-    * store path (ignores _SUCCESS and the swap's sibling dirs). */
+    * store path (ignores _SUCCESS and the manifest log). */
   private def filesPerBucket(path: String): Map[String, Int] = {
     val root = new java.io.File(path)
     root.listFiles().filter(f => f.isDirectory && f.getName.contains("="))
