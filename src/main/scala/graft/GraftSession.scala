@@ -89,6 +89,45 @@ object GraftSession {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.useIdInClassName", "false")
 
+  /** Run `body` with `settings` on the live session's conf, and put
+    * each one back on exit, by success or by a throw (unset if it was
+    * unset). The one place the engine changes a running session's
+    * conf: a change leaks to every query planned on the session while
+    * it holds, so run it on a session not concurrently planning
+    * unrelated queries. */
+  private[graft] def withConf[A](spark: SparkSession,
+      settings: (String, String)*)(body: => A): A = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) =>
+      p.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  /** The session of an iterative join loop over `edges` rows
+    * (`NearDup.connectedComponents`, `Graph.pageRank`); `body` gets the
+    * loop's partition count.
+    *  - Shuffles are sized to the edge count, ~2M edges per partition
+    *    with the session default as the ceiling: a small graph must not
+    *    pay default-width exchanges × iterations, and a 100 TB graph
+    *    still gets the ceiling.
+    *  - AQE is paused: partitions are already sized, and each AQE
+    *    stage would be its own scheduled job per iteration.
+    *  - Stats-based broadcast joins are off: the loops checkpoint their
+    *    stationary sides pre-partitioned on the join key, so a keyed
+    *    join is colocated, and every broadcast exchange is its own job
+    *    per iteration (r8: ~half the CC family's jobs). */
+  private[graft] def joinLoop[A](spark: SparkSession, edges: Long)(
+      body: Int => A): A = {
+    val parts = math.max(1L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      edges / 2000000L + 1L)).toInt
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body(parts))
+  }
+
   /** Apply the engine's tuning to any builder (cluster entry point). */
   def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     compileOnce(b).config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -110,7 +149,7 @@ object GraftSession {
         shufflePartitions = cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // The CC/PageRank loops localCheckpoint every iteration; each
+    // The CC/PageRank loops checkpoint every iteration; each
     // unpersist then logs a WARN per RDD ("lineage has been truncated
     // ...") — intended behavior here, and enough spam that the
     // driver's bounded stdout tail has nearly lost the bench JSON

@@ -129,12 +129,12 @@ object Store {
       // Spark lists a path list of more than this many entries (32 by
       // default) with a Spark job; the manifest already names every
       // file, so each one costs the driver a status call instead
-      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, Int.MaxValue.toString)
-      try spark.read.option("basePath", r.toString)
-        .parquet(m.files.map(f => new Path(r, f).toString): _*)
-      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      graft.GraftSession.withConf(spark,
+          "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
+            Int.MaxValue.toString) {
+        spark.read.option("basePath", r.toString)
+          .parquet(m.files.map(f => new Path(r, f).toString): _*)
+      }
     }
   }
 

@@ -234,7 +234,7 @@ object Fusion {
     *
     * Cost shape (r18, closing the r16 tradeoff's other half): the
     * probe materializes at most maxPool+1 rows EXECUTOR-side (a
-    * limit + eager localCheckpoint — one lineage execution, the r16
+    * limit + eager checkpoint — one lineage execution, the r16
     * fix preserved) and decides overflow from the materialized count,
     * so the driver never receives a single embedding unless the pool
     * actually passes through (the r17 ADVICE low: the old probe
@@ -243,7 +243,8 @@ object Fusion {
     * collects FROM the checkpoint blocks (no lineage re-run); only an
     * overflowing pool re-executes its lineage, and that second pass
     * is the distributed prune that never collects the corpus. The
-    * probe blocks are freed either way (`Pinned.free`). */
+    * probe runs in a `Pinned.scoped` block, which frees its blocks
+    * either way. */
   def mmrRerankLarge(candidates: DataFrame, id: String, vecCol: String,
       lambda: Double = 0.7, k: Int = 10, scoreCol: String = "score",
       maxPool: Int = 10000, nPlanes: Int = 5, seed: Long = 42L): DataFrame = {
@@ -260,11 +261,10 @@ object Fusion {
     // without this a null-score row would count toward the prune
     // decision and then sort arbitrarily in the rank window)
     val ranked = rankable(candidates, scoreCol)
-    val probe = ranked
-      .select(col(id).cast("long"), col(scoreCol).cast("double"), col(vecCol))
-      .limit(maxPool + 1)
-      .localCheckpoint(true)
-    try {
+    Pinned.scoped {
+      val probe = Pinned.checkpoint(ranked
+        .select(col(id).cast("long"), col(scoreCol).cast("double"), col(vecCol))
+        .limit(maxPool + 1))
       if (probe.count() <= maxPool) {
         greedyFrame(candidates.sparkSession, parseCands(probe.collect()),
           id, scoreCol, lambda, k)
@@ -272,7 +272,7 @@ object Fusion {
         mmrRerank(prunedPage(ranked, id, vecCol, scoreCol, perCell, nPlanes,
           seed), id, vecCol, lambda, k, scoreCol, maxPool)
       }
-    } finally Pinned.free(probe)
+    }
   }
 
   /** The distributed prune stage of `mmrRerankLarge`: LSH-cell the

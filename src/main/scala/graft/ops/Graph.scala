@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import graft.GraftSession
 
 /** Iterative graph scoring over an edge list — PageRank as the
   * canonical instance. In a training-data pipeline this runs over a
@@ -14,14 +16,16 @@ import org.apache.spark.sql.functions._
   * Scale shape (same iterative-join discipline as
   * `NearDup.connectedComponents`):
   *  - the weighted edge list is computed ONCE (one out-degree agg +
-  *    one join), `localCheckpoint`ed, and re-read by every iteration —
-  *    the expensive upstream (e.g. the kNN build) never re-executes;
+  *    one join), checkpointed, and re-read by every iteration — the
+  *    expensive upstream (e.g. the kNN build) never re-executes;
   *  - each iteration is one shuffle-join (rank × edge weight) plus one
   *    hash agg on the destination — no driver-side state beyond the
   *    one node-count long;
-  *  - each iteration's rank table is `localCheckpoint`ed to truncate
-  *    lineage and the PREVIOUS iteration's blocks are explicitly
-  *    unpersisted (see `Pinned.free`);
+  *  - the loop runs in one `Pinned.scoped` block under
+  *    `GraftSession.joinLoop`'s session; each iteration's rank table
+  *    is checkpointed (`Pinned.checkpoint`) to truncate lineage and
+  *    the PREVIOUS iteration's blocks are freed at once, so the steady
+  *    state holds two rank tables;
   *  - ranks are rounded to `roundTo` decimals each iteration: floating
   *    sums are order-dependent, so an unrounded loop would drift
   *    across engines/partitionings — rounding at 1e-9 against ~1e-16
@@ -44,92 +48,53 @@ object Graph {
     * than k edges, and a singleton-cell vector is absent entirely. */
   def pageRank(edges: DataFrame, src: String = "src", dst: String = "dst",
       iterations: Int = 5, damping: Double = 0.85,
-      roundTo: Int = 9, maxBroadcastNodes: Long = 250000L): DataFrame = {
+      roundTo: Int = 9): DataFrame = Pinned.scoped {
     require(iterations >= 1, "pageRank: iterations must be >= 1")
     require(damping > 0.0 && damping < 1.0, "pageRank: damping must be in (0,1)")
     val spark = edges.sparkSession
-    // edge count rides the checkpoint's materialization job (same
-    // accumulator treatment as connectedComponents); retries can
-    // over-count, harmless — it only sizes loop partitions
-    val edgeAcc = spark.sparkContext.longAccumulator("pr_edges")
-    val eRaw = edges.select(col(src).as("src"), col(dst).as("dst"))
-    val e = eRaw.mapPartitions { rows =>
-      rows.map { r => edgeAcc.add(1L); r }
-    }(org.apache.spark.sql.Encoders.row(eRaw.schema)).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    // the edge count rides the checkpoint's own job; it sizes the loop
+    val (e, edgeCount) = Pinned.counted(
+      edges.select(col(src).as("src"), col(dst).as("dst")))
+    val nodes = Pinned.checkpoint(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     // one driver-side long — the only scalar the loop needs
     val n = nodes.count()
-    if (n == 0) {
-      // empty edge list: return the empty (node, pagerank) frame rather
-      // than silently folding 1/0 = Infinity into the rank literals.
-      // The frame must NOT lean on the checkpoints being freed below —
-      // a zero-row frame from the session, not a select over `nodes`,
-      // or the caller's first action would hit an unpersisted
-      // checkpoint block.
-      val out = edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            nodes.schema("node").dataType),
-          org.apache.spark.sql.types.StructField("pagerank",
-            org.apache.spark.sql.types.DoubleType))))
-      Pinned.free(e)
-      Pinned.free(nodes)
-      return out
-    }
-    // Loop discipline mirrors connectedComponents (see its scaladoc;
-    // r12 job audit: the old loop scheduled 56 one-task jobs for 5
-    // iterations at sf0.1 — AQE stage-jobs plus a broadcast-exchange
-    // job per round, each with its own driver latency, vs 18 jobs for
-    // the whole CC query):
-    //  - AQE paused and stats-based broadcasts disabled inside the
-    //    loop — partitions are pre-sized, and every broadcast exchange
-    //    is its own scheduled job per iteration;
-    //  - loop shuffles sized to the materialized edge count (~2M edges
-    //    per partition, session default as the ceiling), not the
-    //    session default — a small graph must not pay 32-partition
-    //    exchanges × iterations;
-    //  - the stationary sides are checkpointed pre-partitioned AND
-    //    pre-sorted on their join keys (`weighted` on src, `nodes` on
-    //    node): LogicalRDD carries physical partitioning/ordering
-    //    across a localCheckpoint, so each iteration shuffles only the
-    //    moving rank/contribution rows.
-    // Results are bit-identical: ranks round to 1e-9 every iteration
-    // precisely so partitioning-dependent float sum order cannot leak
-    // into the output (see scaladoc).
-    val edgeCount = edgeAcc.value.longValue
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(1L, math.min(defaultParts.toLong,
-      edgeCount / 2000000L + 1L)).toInt
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevAutoBcast =
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    var weighted: DataFrame = null
-    var nodesByKey: DataFrame = null
-    var ranks: DataFrame = null
-    var ok = false
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // empty edge list: return the empty (node, pagerank) frame rather
+    // than silently folding 1/0 = Infinity into the rank literals. A
+    // zero-row frame from the session, not a select over `nodes`,
+    // reads no pinned block, so the scope frees both tables.
+    if (n == 0) spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("node", nodes.schema("node").dataType),
+        StructField("pagerank", DoubleType))))
+    else GraftSession.joinLoop(spark, edgeCount) { loopParts =>
+      // Loop discipline mirrors connectedComponents (r12 job audit:
+      // the old loop scheduled 56 one-task jobs for 5 iterations at
+      // sf0.1 vs 18 for the whole CC query); `GraftSession.joinLoop`
+      // sizes, pauses AQE and disables broadcasts. The stationary
+      // sides are checkpointed pre-partitioned AND pre-sorted on their
+      // join keys (`weighted` on src, `nodesByKey` on node):
+      // LogicalRDD carries physical partitioning/ordering across a
+      // checkpoint, so each iteration shuffles only the moving
+      // rank/contribution rows. Results are bit-identical: ranks round
+      // to 1e-9 every iteration precisely so partitioning-dependent
+      // float sum order cannot leak into the output (see scaladoc).
       val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-      weighted = e.join(outDeg, "src")
+      val weighted = Pinned.checkpoint(e.join(outDeg, "src")
         .select(col("src"), col("dst"), (lit(1.0) / col("__deg")).as("__w"))
         .repartition(loopParts, col("src"))
-        .sortWithinPartitions(col("src"))
-        .localCheckpoint()
+        .sortWithinPartitions(col("src")))
       Pinned.free(e)
-      nodesByKey = nodes
+      val nodesByKey = Pinned.checkpoint(nodes
         .repartition(loopParts, col("node"))
-        .sortWithinPartitions(col("node"))
-        .localCheckpoint()
+        .sortWithinPartitions(col("node")))
       Pinned.free(nodes)
 
       val base = lit((1.0 - damping) / n)
-      ranks = nodesByKey
-        .select(col("node"), round(lit(1.0 / n), roundTo).as("rank"))
-        .localCheckpoint()
+      // a checkpoint, not a pin: this projection over nodesByKey would
+      // pass through `pin`, and the loop's first free would free the
+      // node table under it
+      var ranks = Pinned.checkpoint(nodesByKey
+        .select(col("node"), round(lit(1.0 / n), roundTo).as("rank")))
       // ONE fully-colocated keyed round (r22; replaces r15's two round
       // shapes): every table in the loop is already hash-partitioned
       // on its join key at loopParts — `weighted` and `nodesByKey` by
@@ -152,50 +117,38 @@ object Graph {
           .join(rankSrc, "src")
           .groupBy(col("dst").as("node"))
           .agg(sum(col("rank") * col("__w")).as("__in"))
-        val next = nodesByKey
+        val next = Pinned.checkpoint(nodesByKey
           .join(contrib, Seq("node"), "left")
           .select(col("node"),
             round(base + lit(damping) * coalesce(col("__in"), lit(0.0)),
-              roundTo).as("rank"))
-          .localCheckpoint()
+              roundTo).as("rank")))
         Pinned.free(ranks)
         ranks = next
       }
-      ok = true
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", defaultParts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAutoBcast)
-      // success frees the stationary tables only (the final rank pin
-      // backs the returned frame — its consumer releases it); failure
-      // must free everything still pinned. Pinned.free is
-      // unpersist-based, so double-freeing is a harmless no-op.
-      if (ok) Seq(weighted, nodesByKey).filter(_ != null)
-        .foreach(Pinned.free)
-      else Seq(e, nodes, weighted, nodesByKey, ranks).filter(_ != null)
-        .foreach(Pinned.free)
+      // Final 6dp projection via EXACT INTEGER arithmetic (r18): the
+      // ranks sit on the per-iteration 1e-9 grid, so ~1/1000 of them
+      // land exactly ON a 6dp midpoint — where Spark's BigDecimal-on-
+      // exact-binary HALF_UP and a C-style multiply-then-nearbyint
+      // round() can legitimately disagree about the SAME double (the
+      // headroom audit read dist=0 for this column; emitting the raw
+      // 9dp grid instead surfaced a different 1-row cross-engine
+      // straddle at sf0.001). Extracting the grid integer N =
+      // rint(rank·1e9) — exact, the value is within ulps of N — and
+      // half-up-rounding in integer space, floor((N+500)/1000)/1e6,
+      // is the same function of the same double on every engine:
+      // midpoint landings are decided by +500/floor, not by whose
+      // round() implementation runs. The 9dp iteration contract still
+      // absorbs sum-order noise; the residual (a pre-round sum
+      // straddling a 1e-9 boundary) is then absorbed AGAIN by the
+      // 1000-step projection unless it sits on the 6dp grid edge —
+      // the compound rarity that has kept this row green, now without
+      // the round()-implementation channel on top of it.
+      // the final rank pin backs the returned frame, so the scope
+      // leaves it to the caller's registry and frees the rest
+      ranks.select(col("node"),
+        (floor((rint(col("rank") * lit(1e9)) + lit(500.0)) / lit(1000.0))
+          / lit(1e6)).as("pagerank"))
     }
-    // Final 6dp projection via EXACT INTEGER arithmetic (r18): the
-    // ranks sit on the per-iteration 1e-9 grid, so ~1/1000 of them
-    // land exactly ON a 6dp midpoint — where Spark's BigDecimal-on-
-    // exact-binary HALF_UP and a C-style multiply-then-nearbyint
-    // round() can legitimately disagree about the SAME double (the
-    // headroom audit read dist=0 for this column; emitting the raw
-    // 9dp grid instead surfaced a different 1-row cross-engine
-    // straddle at sf0.001). Extracting the grid integer N =
-    // rint(rank·1e9) — exact, the value is within ulps of N — and
-    // half-up-rounding in integer space, floor((N+500)/1000)/1e6,
-    // is the same function of the same double on every engine:
-    // midpoint landings are decided by +500/floor, not by whose
-    // round() implementation runs. The 9dp iteration contract still
-    // absorbs sum-order noise; the residual (a pre-round sum
-    // straddling a 1e-9 boundary) is then absorbed AGAIN by the
-    // 1000-step projection unless it sits on the 6dp grid edge —
-    // the compound rarity that has kept this row green, now without
-    // the round()-implementation channel on top of it.
-    Pinned.track(ranks.select(col("node"),
-      (floor((rint(col("rank") * lit(1e9)) + lit(500.0)) / lit(1000.0))
-        / lit(1e6)).as("pagerank")))
   }
 
   /** Duplicate-cluster size distribution over a component labeling

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 
 /** Near-duplicate detection for training-data pipelines: exact hash,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine. The scale
@@ -141,7 +142,7 @@ object NearDup {
     * NOTE (construction-time execution): this and the other pinning
     * entry points (`lshCandidatePairsIncremental`,
     * `estimatedJaccardPairs`) materialize the signature table with an
-    * EAGER localCheckpoint when the plan is merely CONSTRUCTED —
+    * EAGER checkpoint (`Pinned.pin`) when the plan is merely CONSTRUCTED —
     * building the frame runs Spark jobs and pins executor blocks
     * until the consumer (or harness) calls `Pinned.releaseAll()`. */
   def lshCandidatePairs(sigs: DataFrame, id: String,
@@ -581,14 +582,14 @@ object NearDup {
     * decrease) is exactly "every label = its component's min id".
     *
     * Scale/efficiency notes:
-    *  - The symmetrized edge list is `localCheckpoint`ed ONCE up
+    *  - The symmetrized edge list is checkpointed ONCE up
     *    front: it is re-read every iteration, and recomputing its
     *    upstream per round (often a full minhash+LSH pipeline) would
     *    dominate the loop.
     *  - The loop's edge table is checkpointed HASH-PARTITIONED AND
     *    SORTED on the probe key (`dst`): LogicalRDD carries the
     *    physical outputPartitioning/outputOrdering across a
-    *    localCheckpoint, so every round's edge join is a fully
+    *    checkpoint, so every round's edge join is a fully
     *    colocated sort-merge join — the edge table is never
     *    re-shuffled, re-sorted, or broadcast after the one setup
     *    shuffle. (Stats-based broadcast joins are disabled inside the
@@ -614,111 +615,63 @@ object NearDup {
     *    fold-invariant argument) and the union-find property pin
     *    exercises both shapes.
     *  - ONE scheduled job per iteration: the changed-row count rides
-    *    the checkpoint's own materialization job via an accumulator
-    *    (a transformation-side accumulator can over-count on task
-    *    retry, but the convergence test is `== 0`, which retries
-    *    cannot flip).
-    *  - Loop shuffles are sized to the materialized edge count (and
-    *    AQE paused) rather than the session default: a small graph
-    *    must not pay 32-partition exchanges × AQE stage-jobs ×
-    *    iterations; a 100 TB graph still gets the session ceiling.
-    *  - `localCheckpoint` truncates the otherwise exponentially
-    *    growing lineage, and the previous iteration's blocks are
-    *    explicitly unpersisted as soon as the next table
-    *    materializes — steady-state footprint is two label tables.
+    *    the checkpoint's own materialization job (`Pinned.counted`;
+    *    the convergence test is `== 0`, which a task retry's
+    *    over-count cannot flip).
+    *  - The loop runs under `GraftSession.joinLoop`: shuffles sized to
+    *    the materialized edge count, AQE paused, broadcasts off.
+    *  - Each round's checkpoint truncates the otherwise exponentially
+    *    growing lineage, and the previous round's blocks are freed as
+    *    soon as the next table materializes — steady-state footprint
+    *    is two label tables. The loop runs in one `Pinned.scoped`
+    *    block, so a throw frees every table it pinned.
     * Dup clusters in real corpora are tight, so practical runs
     * converge in a handful of rounds; non-convergence within
     * `maxIterations` throws rather than silently under-merging.
     *
-    * The loop temporarily overrides `spark.sql.shuffle.partitions`
-    * and AQE on the SESSION (restored in a finally, including on the
-    * non-convergence throw) — run it on a session not concurrently
-    * planning unrelated queries, or on a cloned session.
+    * `joinLoop` overrides three settings on the SESSION and restores
+    * them on exit, also on the non-convergence throw — run it on a
+    * session not concurrently planning unrelated queries.
     *
     * Returns one row per node appearing in `pairs`:
     * (node, component = min id reachable). */
   def connectedComponents(pairs: DataFrame, colA: String = "doc_a",
       colB: String = "doc_b", maxIterations: Int = 20,
-      maxBroadcastDelta: Long = 250000L): DataFrame = {
+      maxBroadcastDelta: Long = 250000L): DataFrame = Pinned.scoped {
     val spark = pairs.sparkSession
-    // The edge count rides the checkpoint's own materialization job
-    // via an accumulator instead of a second count() action — same
-    // treatment as the in-loop change counter. Task retries can
-    // over-count, but the count only sizes loop partitions, where an
-    // over-estimate is harmless.
-    val edgeAcc = spark.sparkContext.longAccumulator("cc_edges")
-    val edgesRaw = pairs.select(col(colA).as("src"), col(colB).as("dst"))
-      .unionByName(pairs.select(col(colB).as("src"), col(colA).as("dst")))
-      .distinct()
-    val edges = edgesRaw.mapPartitions { rows =>
-      rows.map { r => edgeAcc.add(1L); r }
-    }(org.apache.spark.sql.Encoders.row(edgesRaw.schema))
-      .localCheckpoint()
-    // Size the loop's shuffles to the (materialized) edge list instead
-    // of the session default: iterative shuffles pay per-stage job
-    // overhead every round, so a tiny graph must not run 32-partition
-    // exchanges × AQE stage jobs × iterations. ~2M edges per partition
-    // keeps partitions well under executor memory at any scale; the
-    // session default is the ceiling. AQE is paused inside the loop —
-    // partitions are already right-sized, and each AQE stage would
-    // otherwise be its own scheduled job per iteration.
-    val edgeCount = edgeAcc.value.longValue
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(1L, math.min(defaultParts.toLong,
-      edgeCount / 2000000L + 1L)).toInt
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevAutoBcast =
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    var labels: DataFrame = null
-    var edgesByDst: DataFrame = null
-    // the loop's current label-table pin, hoisted so an exception path
-    // (maxIterations exceeded, any in-loop failure) can release it —
-    // otherwise each failed LabelStore.merge tick would permanently
-    // pin an edge table + a label table in the block manager
-    var checkpointed: DataFrame = null
-    var ok = false
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts)
-      // Inside the loop every join is a shuffle join ON PURPOSE: the
+    // the edge count rides the checkpoint's own job; it sizes the loop
+    val (edges, edgeCount) = Pinned.counted(
+      pairs.select(col(colA).as("src"), col(colB).as("dst"))
+        .unionByName(pairs.select(col(colB).as("src"), col(colA).as("dst")))
+        .distinct())
+    GraftSession.joinLoop(spark, edgeCount) { loopParts =>
+      // Inside the loop every join is a shuffle join ON PURPOSE
+      // (`GraftSession.joinLoop` disables stats-based broadcasts): the
       // edge side below is checkpointed pre-partitioned AND pre-sorted
       // on the join key, so the per-round sort-merge join is fully
       // colocated (zero exchange, zero sort on the edge side) and the
-      // delta side shuffles only its own — shrinking — rows. A
-      // stats-chosen broadcast join would be no faster here and costs
-      // a dedicated broadcast-exchange job per round: per-job driver
-      // latency × iterations is exactly what the CC family pays for
-      // on a real cluster (r8 profiling: ~half this family's jobs
-      // were per-round broadcast exchanges).
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // delta side shuffles only its own — shrinking — rows.
       // The loop's edge table: re-checkpointed hash-partitioned by the
       // probe key `dst` and sorted within partitions. LogicalRDD
       // carries the physical plan's outputPartitioning/outputOrdering
-      // across a localCheckpoint, so every round's edge⋈delta join
-      // reuses this ONE shuffle+sort for all iterations.
-      edgesByDst = edges.repartition(loopParts, col("dst"))
-        .sortWithinPartitions(col("dst"))
-        .localCheckpoint()
+      // across a checkpoint, so every round's edge⋈delta join reuses
+      // this ONE shuffle+sort for all iterations.
+      val edgesByDst = Pinned.checkpoint(edges.repartition(loopParts, col("dst"))
+        .sortWithinPartitions(col("dst")))
       Pinned.free(edges)
       // initialization already IS the first hash-min round: label(x) =
       // min(x, min neighbor) from one groupBy over the checkpointed
       // edges — same single shuffle a distinct-nodes init would cost,
       // one fewer loop iteration. The node count rides the checkpoint
-      // job via an accumulator (it gates the round-1 broadcast path).
-      // Task retries/speculation can only OVER-count it, which at
-      // worst pushes round 1 past the gate onto the shuffle shape —
-      // a forgone optimization, never a correctness risk (the same
-      // caveat as the edge-count accumulator above).
-      val nodeAcc = spark.sparkContext.longAccumulator("cc_nodes")
-      val initRaw = edgesByDst.groupBy(col("src"))
+      // job (it gates the round-1 broadcast path); an over-count on
+      // task retry at worst pushes round 1 onto the shuffle shape — a
+      // forgone optimization, never a correctness risk.
+      val (init, nodeCount) = Pinned.counted(edgesByDst.groupBy(col("src"))
         .agg(min(col("dst")).as("__m"))
         .select(col("src").as("node"),
-          least(col("src"), col("__m")).as("component"))
-      checkpointed = initRaw.mapPartitions { rows =>
-        rows.map { r => nodeAcc.add(1L); r }
-      }(org.apache.spark.sql.Encoders.row(initRaw.schema))
-        .localCheckpoint()
-      labels = checkpointed
+          least(col("src"), col("__m")).as("component")))
+      var checkpointed = init
+      var labels = init
       // Incremental (delta) propagation: a label can only decrease
       // when a neighbor's label decreased, or when its component
       // target's label decreased (pointer jump). So each round joins
@@ -731,7 +684,7 @@ object NearDup {
       var delta = labels
       // round 1's delta is the whole init table — gate its path by the
       // node count the init checkpoint just accumulated
-      var prevChanged = nodeAcc.value.longValue
+      var prevChanged = nodeCount
       var iter = 0
       var done = false
       while (!done) {
@@ -830,34 +783,20 @@ object NearDup {
             .agg(min(col("__cand")).as("component"),
               max(when(col("__self") === 1, col("__cand"))).as("__prev"))
         }
-        val changed = spark.sparkContext.longAccumulator("cc_changed")
-        val counted = computed.mapPartitions { rows =>
-          rows.map { r => if (r.get(1) != r.get(2)) changed.add(1L); r }
-        }(org.apache.spark.sql.Encoders.row(computed.schema))
-        val next = counted.localCheckpoint() // eager: one job, fills `changed`
+        // eager: one job, which also counts the changed rows
+        val (next, changed) = Pinned.counted(computed, r => r.get(1) != r.get(2))
         Pinned.free(checkpointed)
         checkpointed = next
         labels = next.select(col("node"), col("component"))
         delta = next.filter(col("component") =!= col("__prev"))
           .select(col("node"), col("component"))
-        prevChanged = changed.value
+        prevChanged = changed
         done = prevChanged == 0L
       }
-      ok = true
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", defaultParts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAutoBcast)
-      // success frees the edge table only (the final label pin backs
-      // the returned frame — its consumer releases it, the 4dd2f81
-      // discipline); failure must free everything still pinned.
-      // Pinned.free is unpersist-based, so re-freeing `edges`
-      // after the in-try free is a harmless no-op.
-      if (ok) Pinned.free(edgesByDst)
-      else Seq(edges, edgesByDst, checkpointed).filter(_ != null)
-        .foreach(Pinned.free)
+      // the final label pin backs the returned frame, so the scope
+      // leaves it to the caller's registry and frees the edge tables
+      labels
     }
-    Pinned.track(labels)
   }
 
   /** Apply component labels as the dedup decision, keeping the row

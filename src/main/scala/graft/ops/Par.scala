@@ -81,7 +81,7 @@ object Par {
     * classifier model trained on the raw corpus next to a clean-stage
     * frontier, two codebook trainers, a ground-truth checkpoint next
     * to a Lloyd loop — and each materialization is a blocking driver
-    * round-trip (a localCheckpoint job or a bounded collect). When the
+    * round-trip (a checkpoint job or a bounded collect). When the
     * branches share no data dependency, running them back-to-back
     * serializes pure scheduling latency; this runs `b` on a scratch
     * thread while `a` runs on the calling thread, and the later jobs
@@ -94,8 +94,10 @@ object Par {
     *    order-invariant).
     *  - PINS: `Pinned`'s registry is thread-scoped; the scratch
     *    branch's pins are drained on its exit (even on failure) and
-    *    adopted by the calling thread, so the harness's releaseAll
-    *    still frees every block the query pinned.
+    *    adopted by the calling thread's innermost `Pinned.scoped`
+    *    block, or its base registry outside one, so the enclosing
+    *    scope or the harness's releaseAll frees every block the
+    *    query pinned.
     *  - UI/scheduling thread-locals (job description/group, pool) are
     *    copied onto the scratch thread so concurrent jobs stay
     *    labelled and pooled like their query.

@@ -1,46 +1,37 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one owner of `localCheckpoint` pins: [[pin]] makes them,
-  * [[free]] releases their blocks. There are two kinds.
+/** The one owner of `localCheckpoint` pins: [[pin]], [[checkpoint]]
+  * and [[counted]] make them, [[free]] releases their blocks, and
+  * [[scoped]] bounds how long they live. No other code calls
+  * `localCheckpoint`, so a change to the pin mechanism (`persist`, a
+  * reliable checkpoint) is a change to this object alone.
   *
-  * TRACKED pins are released by the harness. [[pin]] materializes a
-  * reused intermediate once (a signature table, an NB model, a funnel
-  * frontier, an exact top-k) and registers it here; the same goes for
-  * results whose blocks back the RETURNED frame — `Graph.pageRank`'s
-  * rank table and `NearDup.connectedComponents`' labels, which
-  * [[track]] registers directly. An op cannot free these before
-  * returning: a local checkpoint truncates lineage, so its blocks must
-  * outlive the last consumer read. `Bench.runOnce` and the `Verify`
-  * loop call [[releaseAll]] after every query's result is written.
+  * Every pin is registered on the calling thread. Inside
+  * [[scoped]] it belongs to the innermost open scope, which frees it
+  * when the block exits, by success or by a throw; the iterative loops
+  * (`NearDup.connectedComponents`, `Graph.pageRank`), the label-store
+  * merge, Fusion's MMR probe and every streaming micro-batch run in
+  * one. The exception is a pin whose blocks back the DataFrame the
+  * block returns: a local checkpoint truncates lineage, so those
+  * blocks must outlive the last read of the result, and the returned
+  * frame moves to the enclosing registry instead.
   *
-  * SELF-FREED pins never reach the registry. A site that pins and is
-  * done with the frame before it returns — the CC and PageRank loop
-  * steps, Fusion's MMR probe, Bpe's histograms, and the Streams sinks
-  * (`lshDedupSink`'s signatures and pairs, `nbOnlineSink`'s merged
-  * stats and model) — calls `localCheckpoint` itself and frees the
-  * same frame with [[free]] in a `finally`, so a failure leaks
-  * nothing. Handing such a frame to an op that pins its input costs
-  * no second job: [[pin]] passes checkpointed frames through. The one
-  * consumer that frees a tracked result early is `LabelStore.merge`:
-  * the CC labels it merges are released in its `finally`, once the
-  * store commit has consumed them.
+  * Outside any scope a pin lands in the thread's base registry (a
+  * reused query intermediate: a signature table, an NB model, a funnel
+  * frontier). `Bench.runOnce` and the `Verify` loop call [[releaseAll]]
+  * after every query's result is written. A loop step may still free
+  * its previous table early with [[free]]; freeing twice is a no-op.
   *
   * `spark.catalog.clearCache()` does NOT cover these blocks, and
   * neither does `Dataset.unpersist()`: they are RDD-level persists,
   * not cache-manager entries — which is exactly how a bench suite that
   * clears the cache between passes still accumulated one pinned copy
   * of the q155 LM table per pass for the JVM lifetime (r17 ADVICE).
-  *
-  * Releasing is unpersist-based: double-release, or releasing a frame
-  * some other op already freed (LabelStore frees the CC labels it
-  * consumes), is a harmless no-op. The only misuse is releasing
-  * BEFORE the frame's last action — a lineage-truncated frame cannot
-  * recompute — which is why only result-consuming harness code calls
-  * `releaseAll`, never the ops themselves.
   *
   * The registry is THREAD-scoped (the NearDup ThreadLocal-listener
   * discipline): `releaseAll` drains only frames the CALLING thread's
@@ -56,11 +47,15 @@ object Pinned {
     ThreadLocal.withInitial[java.util.ArrayDeque[java.lang.ref.WeakReference[DataFrame]]](
       () => new java.util.ArrayDeque[java.lang.ref.WeakReference[DataFrame]]())
 
+  /** This thread's open scopes, innermost first. A scope holds its
+    * pins strongly: it frees them itself, and it is short. */
+  private val scopes =
+    ThreadLocal.withInitial[List[collection.mutable.ArrayBuffer[DataFrame]]](() => Nil)
+
   /** Materialize `df` once (eager `localCheckpoint`) and track it, so
     * every later consumer reads blocks instead of re-running its
     * lineage. Building the frame therefore runs a Spark job at plan
-    * CONSTRUCTION time, and the blocks stay pinned until the harness
-    * calls [[releaseAll]].
+    * CONSTRUCTION time.
     *
     * A frame that is already checkpoint-backed passes through
     * unchanged — also under a chain of projections and aliases (r22,
@@ -79,40 +74,85 @@ object Pinned {
       case a: SubqueryAlias => checkpointRooted(a.child)
       case _ => false
     }
-    if (checkpointRooted(df.queryExecution.logical)) df
-    else track(df.localCheckpoint(true))
+    if (checkpointRooted(df.queryExecution.logical)) df else checkpoint(df)
   }
 
-  /** Release the blocks behind a `localCheckpoint`ed frame (or any
-    * frame over one). The checkpointed plan is a `LogicalRDD` leaf
-    * whose RDD was persisted directly, so the blocks otherwise live
-    * until the ContextCleaner notices the RDD is garbage — at 100 TB
-    * label tables that lag is real memory/disk pressure across
-    * iterations. */
-  private[graft] def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  /** [[pin]] without the pass-through: always a new checkpoint. A loop
+    * step needs this — its first table can be a projection over a
+    * pinned frame (PageRank's initial ranks over the node table), and
+    * freeing a passed-through alias would free the frame under it. */
+  private[graft] def checkpoint(df: DataFrame): DataFrame =
+    track(df.localCheckpoint(true))
 
-  /** Track a checkpoint-backed result frame; returns it unchanged.
-    * The registry holds WEAK references: a thread that never drains
-    * (a test thread, a streaming micro-batch thread whose ops free
-    * their own pins) must not keep the frame reachable forever —
-    * once the caller drops it, the ContextCleaner's GC-driven
-    * unpersist path takes over exactly as it did before the registry
-    * existed. Only a live, still-referenced frame is drained by
+  /** [[checkpoint]] that also counts the rows matching `where` in the
+    * checkpoint's own job (an accumulator in a `mapPartitions`), so a
+    * loop learns its sizes and its convergence without a second
+    * action. A task retry can over-count; callers use the count only
+    * to size partitions or to test `== 0`, which a retry cannot flip. */
+  private[graft] def counted(df: DataFrame,
+      where: Row => Boolean = _ => true): (DataFrame, Long) = {
+    val n = df.sparkSession.sparkContext.longAccumulator("pinned_rows")
+    val pinned = checkpoint(df.mapPartitions { rows =>
+      rows.map { r => if (where(r)) n.add(1L); r }
+    }(Encoders.row(df.schema)))
+    (pinned, n.value.longValue)
+  }
+
+  /** The RDDs behind `df`'s checkpoints: its `LogicalRDD` leaves. */
+  private def blocks(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().collect { case lr: LogicalRDD => lr.rdd }
+
+  /** Release the blocks behind a checkpointed frame (or any frame over
+    * one). The checkpointed plan is a `LogicalRDD` leaf whose RDD was
+    * persisted directly, so the blocks otherwise live until the
+    * ContextCleaner notices the RDD is garbage — at 100 TB label
+    * tables that lag is real memory/disk pressure across iterations.
+    * Only release a frame after its last action: a lineage-truncated
+    * frame cannot recompute. */
+  private[graft] def free(df: DataFrame): Unit =
+    blocks(df).foreach(_.unpersist(blocking = false))
+
+  /** Run `body`; on exit, by success or by a throw, free every frame
+    * pinned or tracked on this thread inside it. If `body` returns a
+    * DataFrame that reads any of those blocks, the frames behind it
+    * stay pinned and the returned frame is tracked by the enclosing
+    * scope (or the base registry) instead. A block must not `return`
+    * from its enclosing method. */
+  def scoped[A](body: => A): A = {
+    val mine = collection.mutable.ArrayBuffer.empty[DataFrame]
+    scopes.set(mine :: scopes.get)
+    var out: Option[A] = None
+    try { out = Some(body); out.get }
+    finally {
+      scopes.set(scopes.get.tail)
+      val result = out.collect { case ds: Dataset[_] => ds.asInstanceOf[DataFrame] }
+      val kept = result.fold(Set.empty[Int])(blocks(_).map(_.id).toSet)
+      val (backing, done) = mine.partition(blocks(_).exists(r => kept(r.id)))
+      done.foreach(free)
+      if (backing.nonEmpty) result.foreach(track)
+    }
+  }
+
+  /** Register a checkpoint-backed frame on this thread; returns it
+    * unchanged. The base registry holds WEAK references: a thread that
+    * never drains must not keep the frame reachable forever — once the
+    * caller drops it, the ContextCleaner's GC-driven unpersist path
+    * takes over. Only a live, still-referenced frame is drained by
     * `releaseAll`. */
   private[graft] def track(df: DataFrame): DataFrame = {
-    val q = reg.get()
-    q.add(new java.lang.ref.WeakReference(df))
-    // bound the ref-queue itself for never-draining threads
-    while (q.size > 256) q.removeFirst()
+    scopes.get match {
+      case scope :: _ => scope += df
+      case Nil =>
+        val q = reg.get()
+        q.add(new java.lang.ref.WeakReference(df))
+        // bound the ref-queue itself for never-draining threads
+        while (q.size > 256) q.removeFirst()
+    }
     df
   }
 
-  /** How many still-live results this thread currently tracks (spec
-    * observability). */
+  /** How many still-live results this thread's base registry tracks
+    * (spec observability). */
   def trackedCount: Int = {
     val it = reg.get().iterator()
     var n = 0
@@ -121,13 +161,12 @@ object Pinned {
   }
 
   /** Hand this thread's tracked frames to another owner: drain the
-    * registry and return the still-live frames WITHOUT unpersisting
-    * them. `Par.concurrently` runs a plan-construction branch on a
-    * scratch thread; pins created there land in THAT thread's
-    * registry, which the harness's main-thread `releaseAll` can never
-    * see — the branch drains itself on exit and the caller `adopt`s
-    * the frames, so the "releaseAll frees everything this query
-    * pinned" invariant survives concurrency. */
+    * base registry and return the still-live frames WITHOUT
+    * unpersisting them. `Par.concurrently` runs a plan-construction
+    * branch on a scratch thread; pins created there land in THAT
+    * thread's registry, which the caller can never see — the branch
+    * drains itself on exit and the caller `adopt`s the frames into
+    * its own innermost scope or base registry. */
   private[graft] def drain(): Seq[DataFrame] = {
     val q = reg.get()
     val out = Seq.newBuilder[DataFrame]
@@ -147,13 +186,5 @@ object Pinned {
   /** Unpersist every still-live result tracked BY THIS THREAD. Call
     * only after the frames have been fully consumed
     * (written/collected). */
-  def releaseAll(): Unit = {
-    val q = reg.get()
-    var ref = q.poll()
-    while (ref != null) {
-      val df = ref.get()
-      if (df != null) free(df)
-      ref = q.poll()
-    }
-  }
+  def releaseAll(): Unit = drain().foreach(free)
 }

@@ -15,8 +15,8 @@ import graft.ops.Pinned
   * ([[lshDedupSink]]), the prequential NB classifier
   * ([[nbOnlineSink]]) and the IVF-PQ index ([[pqIndexSink]]). Every
   * store a sink writes is a `graft.io.Store`, and every commit carries
-  * the micro-batch id. Each sink frees the blocks it pins before the
-  * micro-batch returns. A plain keyed upsert per tick is
+  * the micro-batch id. Each micro-batch frees the blocks it pins
+  * before it returns. A plain keyed upsert per tick is
   * `foreachBatch` around `graft.io.Sinks.mergeInto`. No query here
   * uses a stateful streaming operator: the stores on disk are the
   * state.
@@ -38,8 +38,11 @@ object Streams {
     * AT-LEAST-ONCE: a crash after some of the body's commits replays
     * it with the same batchId, and each commit carrying that id is a
     * no-op in a store that records it, so a replay finishes only what
-    * the first attempt left undone. A body must not `return`: a
-    * non-local return from a closure throws. */
+    * the first attempt left undone. The body runs in one
+    * `Pinned.scoped` block: every block it pins is freed when it
+    * exits, by success or by a throw, so the micro-batch thread's
+    * registry, which nothing drains, never holds one. A body must not
+    * `return`: a non-local return from a closure throws. */
   private def batchSink(df: DataFrame, checkpoint: String,
       lastStore: String)(body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     df.writeStream
@@ -48,7 +51,7 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!Store.committed(batch.sparkSession, lastStore, batchId))
-          body(batch, batchId)
+          Pinned.scoped(body(batch, batchId))
         ()
       }
 
@@ -88,36 +91,27 @@ object Streams {
       val spark = batch.sparkSession
       val sigs = graft.ops.NearDup
         .minhashSignaturesFused(batch, id, col(text))
-      // localCheckpoint: sign once, reuse for probe AND append. Both
-      // pins are freed in a finally: a failed probe, write or merge
-      // must not leak a batch of blocks per retried tick.
-      val pinned = sigs.localCheckpoint(true)
-      try {
-        // the first tick probes an absent store: the batch joins itself
-        val pairs = graft.ops.NearDup.probeSignatureStore(spark, storePath,
-          pinned, id, buckets = buckets)
-        // pin only when the label merge makes pairs dual-consumer — the
-        // probe join must not run twice, but a labels-off sink has a
-        // single consumer and should not pay eager materialization +
-        // block-manager pinning per tick
-        val pinnedPairs =
-          if (labelsPath.isDefined) pairs.localCheckpoint(true) else pairs
-        try {
-          // readers of pairsPath gain a trailing `batch` provenance
-          // column (partition-discovered), pair columns unchanged
-          Store.commit(pinnedPairs.withColumn("batch", lit(batchId)),
-            pairsPath, perBatch, Some(batchId))(_ => false)
-          labelsPath.foreach { lp =>
-            graft.ops.LabelStore.merge(spark, lp, pinnedPairs,
-              buckets = buckets, batch = Some(batchId))
-          }
-        } finally {
-          // never free the unpinned `pairs`: its leaves include `pinned`
-          if (labelsPath.isDefined) Pinned.free(pinnedPairs)
-        }
-        graft.ops.NearDup.appendSignatureStore(pinned, id, storePath,
+      // pinned: sign once, reuse for probe AND append
+      val pinned = Pinned.checkpoint(sigs)
+      // the first tick probes an absent store: the batch joins itself
+      val pairs = graft.ops.NearDup.probeSignatureStore(spark, storePath,
+        pinned, id, buckets = buckets)
+      // pin only when the label merge makes pairs dual-consumer — the
+      // probe join must not run twice, but a labels-off sink has a
+      // single consumer and should not pay eager materialization +
+      // block-manager pinning per tick
+      val pinnedPairs =
+        if (labelsPath.isDefined) Pinned.checkpoint(pairs) else pairs
+      // readers of pairsPath gain a trailing `batch` provenance
+      // column (partition-discovered), pair columns unchanged
+      Store.commit(pinnedPairs.withColumn("batch", lit(batchId)),
+        pairsPath, perBatch, Some(batchId))(_ => false)
+      labelsPath.foreach { lp =>
+        graft.ops.LabelStore.merge(spark, lp, pinnedPairs,
           buckets = buckets, batch = Some(batchId))
-      } finally Pinned.free(pinned)
+      }
+      graft.ops.NearDup.appendSignatureStore(pinned, id, storePath,
+        buckets = buckets, batch = Some(batchId))
     }
 
   /** Prequential (test-then-train) online NB loop over a LABELED doc
@@ -148,22 +142,15 @@ object Streams {
       priorStats.filter(s => !s.isEmpty).foreach { s =>
         // sparse rebuild: per-tick model cost scales with the store's
         // observed (label, term) pairs, never vocab×classes (drop-in
-        // by the cross-trainer pin). The merged stats and the model
-        // are pinned HERE, not by the trainer and scorer (which pass
-        // checkpointed frames through): their tracked pins would sit
-        // in the micro-batch thread's registry, which nothing drains.
-        val merged = graft.ops.TextClassifier.mergeNbStats(s)
-          .localCheckpoint(true)
-        try {
-          val model = graft.ops.TextClassifier
-            .trainFromStatsSparse(merged, alpha).localCheckpoint(true)
-          try {
-            Store.commit(graft.ops.TextClassifier
-                .classifyNaiveBayes(batch, col(id), col(text), model)
-                .withColumn("batch", lit(batchId)),
-              predsPath, perBatch, Some(batchId))(_ => false)
-          } finally Pinned.free(model)
-        } finally Pinned.free(merged)
+        // by the cross-trainer pin). The trainer pins the merged
+        // stats and the scorer pins the model; the batch's scope
+        // frees both.
+        val model = graft.ops.TextClassifier.trainFromStatsSparse(
+          graft.ops.TextClassifier.mergeNbStats(s), alpha)
+        Store.commit(graft.ops.TextClassifier
+            .classifyNaiveBayes(batch, col(id), col(text), model)
+            .withColumn("batch", lit(batchId)),
+          predsPath, perBatch, Some(batchId))(_ => false)
       }
       Store.commit(graft.ops.TextClassifier
           .nbSufficientStats(batch, col(labelCol), col(text))

@@ -59,6 +59,17 @@ class GraphSpec extends AnyFunSuite {
     assert(math.abs(out.sum - 1.0) < 1e-5)
   }
 
+  test("pageRank over an empty edge list returns no rows and pins nothing") {
+    // the empty branch returns before the loop: the edge and node
+    // checkpoints it made must be freed, not left for the caller
+    val base = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = Graph.pageRank(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(out.collect().isEmpty)
+    assert(out.columns.toSeq == Seq("node", "pagerank"))
+    val left = TestSpark.persistedSince(base)
+    assert(left.isEmpty, s"pageRank left persisted RDDs $left")
+  }
+
   test("bloomPrefilteredAntiJoin equals the plain anti join (string keys)") {
     val rnd = new scala.util.Random(7)
     val fresh = (1 to 400).map(i => (i.toLong, s"k${rnd.nextInt(120)}"))

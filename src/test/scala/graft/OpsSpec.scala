@@ -230,6 +230,7 @@ class OpsSpec extends AnyFunSuite {
   test("connectedComponents restores session conf even when it throws") {
     val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
     val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    val bcast0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val pairs = (0L until 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     // a 100-node path cannot converge in 2 rounds → the fixpoint guard
     // must throw, and the loop's conf overrides must still roll back
@@ -238,6 +239,19 @@ class OpsSpec extends AnyFunSuite {
     }
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parts0)
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe0)
+    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == bcast0)
+  }
+
+  test("connectedComponents frees every pin when it throws") {
+    // the non-convergence throw comes after the edge tables and two
+    // label tables were pinned: none of them may stay behind
+    val base = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val pairs = (0L until 99L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    intercept[IllegalArgumentException] {
+      NearDup.connectedComponents(pairs, maxIterations = 2)
+    }
+    val left = TestSpark.persistedSince(base)
+    assert(left.isEmpty, s"connectedComponents left persisted RDDs $left")
   }
 
   test("transitive dedup keepBy policy keeps the keepBy-max survivor") {

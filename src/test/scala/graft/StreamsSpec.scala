@@ -187,10 +187,32 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
+  test("lshDedupSink frees its pins when a micro-batch throws") {
+    // a label store built with 16 buckets refuses an 8-bucket merge;
+    // the batch throws in LabelStore.merge after its signatures and
+    // pairs are pinned, and the stream fails
+    val dir = TestSpark.tempDir("lshfail")
+    graft.ops.LabelStore.merge(spark, s"$dir/labels",
+      Seq((1L, 2L)).toDF("doc_a", "doc_b"), buckets = 16)
+    val docs = (1L to 6L).map(i => (i, s"alpha beta gamma delta epsilon $i"))
+      .toDF("doc_id", "text")
+    docs.coalesce(1).write.parquet(s"$dir/in/f=1")
+    val base = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.runToCompletion(Streams.lshDedupSink(
+        Streams.fileStream(spark, s"$dir/in/*/", docs.schema),
+        "doc_id", "text", s"$dir/store", s"$dir/pairs", s"$dir/ckpt",
+        buckets = 8, labelsPath = Some(s"$dir/labels")).start())
+    }
+    val left = TestSpark.persistedSince(base)
+    assert(left.isEmpty, s"lshDedupSink left persisted RDDs $left")
+  }
+
   test("nbOnlineSink frees its merged stats and model after every tick") {
-    // the sink pins the merged stats and the model on the micro-batch
-    // thread, whose tracked-pin registry nothing drains: it must free
-    // both itself, or each scoring tick leaves two checkpoints behind
+    // the trainer and the scorer pin the merged stats and the model on
+    // the micro-batch thread, whose base registry nothing drains: the
+    // batch's scope must free both, or each scoring tick leaves two
+    // checkpoints behind
     val dir = TestSpark.tempDir("nbfree")
     val docs = Seq((1L, "news", "mayor council budget"), (2L, "spam", "win prize offer"))
       .toDF("doc_id", "label", "text")

@@ -56,6 +56,32 @@ class SurfaceSpec extends AnyFunSuite {
     }
     if (hits.nonEmpty) fail("literals naming old store files:\n" + hits.mkString("\n"))
   }
+
+  test("pins and session-conf changes go through their one owner") {
+    // `Pinned` is the only code that checkpoints, so a change to the
+    // pin mechanism lives there alone, and only its scope hands a pin
+    // to an enclosing registry; `GraftSession.withConf` is the only
+    // code that changes a live session's conf and puts it back
+    val main = new File(root, "src/main/scala")
+    val pinned = "graft/ops/Pinned.scala"
+    val confSet = "conf\\.(set|unset)\\(".r
+    val hits = scalaFiles(main).filterNot(under(_, "graft/tools")).flatMap { f =>
+      val file = main.toPath.relativize(f.toPath).toString
+        .replace(File.separatorChar, '/')
+      strip(read(f))._1.split('\n').toSeq.map(_.trim).collect {
+        case l if file != pinned && l.contains("localCheckpoint(") =>
+          s"  $file: $l (pin through Pinned)"
+        case l if file != pinned && l.contains("Pinned.track") =>
+          s"  $file: $l (return the frame from Pinned.scoped)"
+        case l if file != "graft/GraftSession.scala" &&
+            confSet.findFirstIn(l).isDefined &&
+            !confAllowlist.keys.exists(l.contains) =>
+          s"  $file: $l (use GraftSession.withConf)"
+      }
+    }
+    if (hits.nonEmpty) fail("code that bypasses Pinned or GraftSession.withConf:\n" +
+      hits.mkString("\n"))
+  }
 }
 
 object SurfaceSpec {
@@ -75,6 +101,13 @@ object SurfaceSpec {
       "parameter type of withDecodedMeta's decoder factory",
     "Bpe.Merge" -> "element type of the merge tables the BPE queries train",
     "PcaModel" -> "result type of Pca.fit, which the PCA queries call")
+
+  /** Session-conf settings allowed outside `GraftSession.withConf`,
+    * keyed by the conf key the line names. */
+  val confAllowlist: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> ("Q.t: lets every later " +
+      "testdata read see parquet TIMESTAMP(NANOS) as long nanos; it is a " +
+      "no-op for every other type, so there is nothing to restore"))
 
   final case class Decl(file: String, kind: String, owner: Option[String],
       name: String) {
